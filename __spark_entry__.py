@@ -7435,7 +7435,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     FIRST 50 entries each round.  The canonical dict below stays in stable
     historical order; the returned dict is reordered so the pinned
     ``_DRIVER_WINDOW_R14`` names come first (see the comment on that list for
-    the round-12 composition), followed by every other query in canonical
+    the round-14 composition), followed by every other query in canonical
     order.
 
     Steady-state rotation policy (round 8 closes never-checked coverage:

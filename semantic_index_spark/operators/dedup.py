@@ -457,14 +457,13 @@ def connected_components(
         # from O(diameter) to O(log diameter) rounds, the difference
         # between 20+ and ~6 rounds on chain-heavy duplicate clusters.
         lut = stepped.select(F.col("id").alias("_cid"), F.col("comp").alias("_ccomp"))
-        # LAZY pin + convergence probe as ONE action per round (r14, guide
-        # §1.2): the limit(1) count is the job that materializes the pin —
-        # a non-final round short-circuits after finding one changed row
-        # (remaining partitions materialize on demand in the next round's
-        # joins), and the CONVERGED round's full no-changed-rows scan
-        # materializes every partition, so the returned labels frame is
-        # complete before edges' pin can be released. Replaces the
-        # eager-checkpoint-then-count pair (two driver barriers per round).
+        # LAZY pin + convergence probe per round (r14, guide §1.2): the
+        # limit(1) count is the first action on the pin, so probe and pin
+        # take one action call instead of two. It saves no work: right
+        # after that first action LocalRDDCheckpointData.doCheckpoint
+        # runs a fill-in job that materializes every partition the probe
+        # skipped, so each round's pin is complete when its probe returns.
+        # Replaces the eager-checkpoint-then-count pair.
         merged = (
             stepped.join(lut, stepped.comp == lut._cid)
             .select("id", F.col("_ccomp").alias("comp"), "_old")

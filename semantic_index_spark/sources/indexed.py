@@ -12,17 +12,25 @@ commits in the same manifest publish as the data.
 
 Design:
 
-  * **Bucket-aligned shards.** The table's key must be a single
-    (integral) id column; index shard ``b`` covers exactly table bucket
-    ``b`` — both are ``pmod(xxhash64(id), n_buckets)`` (``build_hnsw``'s
-    shard hash IS ``_bucket_expr`` for a single key). The rows needed to
-    rebuild a shard are therefore exactly the rewritten bucket's rows,
-    which the merge has already computed — zero extra table reads — and
-    at cluster scale the shard is co-located with its bucket.
-  * **One staged directory, one publish.** The merge's rebuilt shard
-    graphs are written into the SAME ``_staged_<uuid>`` directory as its
-    bucket data (under ``__hnsw/shard=<b>``), and the manifest's
-    ``index.shards`` ownership map advances in the SAME manifest write —
+  * **Bucket-aligned shards.** The table's key must be a single id
+    column; index shard ``b`` covers exactly table bucket ``b`` — both
+    are ``_bucket_expr`` = ``pmod(xxhash64(id), n_buckets)``. The rows
+    needed to rebuild a shard are therefore exactly the rewritten
+    bucket's rows, which the merge has already computed — zero extra
+    table reads — and at cluster scale the shard is co-located with its
+    bucket.
+  * **One shard pass, one encoder per kind.** Attach, merge and
+    OPTIMIZE build their shards in ONE ``groupBy(bucket).applyInArrow``
+    pass (:func:`_write_shards`): each task holds one bucket's (key,
+    embedding) rows and runs ``indexed_np.write_bucket_shards`` for
+    every index the manifest carries, writing fixed-name files straight
+    into the staged directory. The SQL ``INSERT INTO`` worker runs the
+    same function, so no Spark-side encoder is kept in step with it.
+    One bucket must fit in one Python worker.
+  * **One staged directory, one publish.** The merge's rebuilt shards
+    are written into the SAME ``_staged_<uuid>`` directory as its
+    bucket data (under ``__idx_<name>/shard=<b>``), and the manifest's
+    ``indexes[*].shards`` ownership map advances in the SAME manifest write —
     one directory rename + one pointer swap covers both. A crash at ANY
     point therefore leaves the table and the index at the same version:
     a reader can never observe a merged table with a stale index or an
@@ -88,14 +96,8 @@ from semantic_index_spark.sources import versioned as VER
 _INTEGRAL = {"byte", "short", "integer", "long"}
 
 # index kind → LEGACY artifact directory (pre-multi-index manifests whose
-# single anonymous spec reads as name "__legacy__"); partition columns of
-# the staged shard write (shard first: shard b ≡ bucket b)
+# single anonymous spec reads as name "__legacy__")
 _IDX_DIRS = {"hnsw": "__hnsw", "ivfsq": "__ivfsq"}
-_IDX_PARTS = {
-    "hnsw": ["shard"],
-    "ivfsq": ["shard", "_cell"],
-    "ivfpq": ["shard", "_cell"],
-}
 
 _NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -182,44 +184,103 @@ def _resolve_index(man: dict, name: "str | None", kind: str) -> tuple:
     return next(iter(of_kind.items()))
 
 
-def _publish_index(
-    table: str, man: dict, name: str, params: dict, idx: DataFrame
-) -> int:
-    """Stage the shard artifact and publish the attach commit: shared by
-    every index kind. Conditional on the pointer AND marked as touching
-    every bucket, so a concurrent data commit conflicts (an index built
-    from pre-commit rows must not publish over it); retryable via
-    ``retry_commit``. Other indexes on the table are untouched — their
-    specs inherit through the manifest build."""
-    staged = VER._staged_path(table)
-    idx.write.mode("errorifexists").partitionBy(
-        *_IDX_PARTS[params["kind"]]
-    ).parquet(os.path.join(staged, _idx_dir(name, params)))
+def _write_shards(
+    rows: DataFrame, man: dict, specs: dict, staged: str, buckets
+) -> None:
+    """Build shards for every Spark-side verb (attach, merge,
+    OPTIMIZE) in ONE ``groupBy(bucket).applyInArrow`` pass over the table
+    rows of the rewritten ``buckets``. Each group is one bucket's (key,
+    embedding) rows; its task calls ``indexed_np.write_bucket_shards`` —
+    one ``write_index_shard_np`` per index in ``specs`` — and writes
+    straight into ``staged`` under fixed file names, so a retried task
+    overwrites its own files byte for byte. Shard ``b`` IS bucket ``b``
+    (``_bucket_expr`` on the key's manifest dtype). The SQL ``INSERT
+    INTO`` worker writes shards through the same function, so every
+    shard on disk comes from one encoder per kind. Bound: one bucket's
+    rows must fit in one Python worker — the bound HNSW shards always
+    had. The rows are first hash-partitioned on the bucket into as many
+    partitions as there are rewritten buckets: left to AQE, a merge's
+    few hundred KB would coalesce into one task that builds every
+    bucket's shards one after another."""
+    import pyarrow as pa
 
-    def build(final: int, base_man: dict, dest: str) -> dict:
-        manifest = {k: v for k, v in base_man.items() if k != "version"}
-        manifest["version"] = final
-        hdir = os.path.join(dest, _idx_dir(name, params))
-        written = {
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(hdir) if os.path.isdir(hdir) else [])
-            if d.startswith("shard=")
-        }
-        indexes = {n: dict(s) for n, s in VER._indexes(base_man).items()}
-        indexes[name] = {
-            "params": params,
-            "shards": {
-                str(b): (final if b in written else None)
-                for b in range(int(man["n_buckets"]))
-            },
-        }
+    from semantic_index_spark.sources.indexed_np import write_bucket_shards
+
+    key = man["key_cols"][0]
+    emb_cols = sorted({s["params"]["emb_col"] for s in specs.values()} - {key})
+    plan = {_idx_dir(n, s["params"]): s["params"] for n, s in specs.items()}
+    dest = os.path.abspath(staged)
+
+    def build(group, tbl):
+        bucket = int(group[0].as_py())
+        write_bucket_shards(dest, plan, bucket, tbl, key)
+        return pa.table({"shard": pa.array([bucket], pa.int64())})
+
+    rows.select(
+        key, *emb_cols,
+        VER._bucket_expr([key], int(man["n_buckets"])).alias("__bucket"),
+    ).repartition(max(len(buckets), 1), "__bucket").groupBy(
+        "__bucket"
+    ).applyInArrow(build, "shard long").collect()
+
+
+def _shard_finalizer(specs: dict, affected):
+    """The manifest half of a shard build: ``finalize(manifest, final,
+    base_man, dest)`` advances ``indexes[*].shards`` for every index in
+    ``specs`` over the ``affected`` buckets — owner ``final`` where the
+    published directory holds a ``shard=<b>`` dir, ``None`` where the
+    bucket came out empty — and inherits every other shard's owner (and
+    every other index) from ``base_man``, the manifest the commit lands
+    on, so a disjoint-bucket rebase keeps both writers' shards exactly
+    like it keeps both writers' buckets. Shared by attach, merge,
+    OPTIMIZE and the SQL ``INSERT INTO`` commit."""
+
+    def finalize(manifest: dict, final: int, base_man, dest: str) -> dict:
+        base_idxs = VER._indexes(base_man)
+        indexes = {n: dict(s) for n, s in base_idxs.items()}
+        for iname, spec in specs.items():
+            p = spec["params"]
+            hdir = os.path.join(dest, _idx_dir(iname, p))
+            written = {
+                int(d.split("=", 1)[1])
+                for d in (os.listdir(hdir) if os.path.isdir(hdir) else [])
+                if d.startswith("shard=")
+            }
+            shards = dict((base_idxs.get(iname) or spec)["shards"])
+            for b in affected:
+                shards[str(b)] = final if b in written else None
+            indexes[iname] = {"params": dict(p), "shards": shards}
         manifest.pop("index", None)  # legacy key re-keys under indexes
         manifest["indexes"] = indexes
         return manifest
 
+    return finalize
+
+
+def _publish_index(
+    table: str, man: dict, name: str, params: dict, rows: DataFrame
+) -> int:
+    """Build the new index's shards from the table ``rows`` into a staged
+    directory and publish the attach commit: shared by every index kind.
+    Conditional on the pointer AND marked as touching every bucket, so a
+    concurrent data commit conflicts (an index built from pre-commit rows
+    must not publish over it); retryable via ``retry_commit``. Other
+    indexes on the table are untouched — their specs inherit through the
+    manifest build."""
+    staged = VER._staged_path(table)
+    os.makedirs(staged)
+    specs = {name: {"params": params, "shards": {}}}
+    all_buckets = range(int(man["n_buckets"]))
+    _write_shards(rows, man, specs, staged, all_buckets)
+    finalize = _shard_finalizer(specs, all_buckets)
+
+    def build(final: int, base_man: dict, dest: str) -> dict:
+        manifest = {k: v for k, v in base_man.items() if k != "version"}
+        manifest["version"] = final
+        return finalize(manifest, final, base_man, dest)
+
     final, _ = VER._publish_bucketed(
-        table, staged, man, set(range(int(man["n_buckets"]))), build,
-        strict_meta=True,
+        table, staged, man, set(all_buckets), build, strict_meta=True,
     )
     return final
 
@@ -235,29 +296,15 @@ def attach_hnsw_index(
 ) -> int:
     """Build a bucket-aligned HNSW index over the CURRENT table state and
     commit it as table metadata: the shard graphs stage under the commit's
-    version directory (``v=<n>/__hnsw/shard=<b>``) and the manifest gains
-    ``index = {params, shards}``. Conditional on the pointer AND marked as
-    touching every bucket, so a concurrent data commit conflicts (an index
-    built from pre-commit rows must not publish over it); retryable via
-    ``retry_commit``. From this commit on, every ``merge_into_bucketed``
-    rebuilds the affected shards inside its own staged commit — the index
-    can never drift from the data."""
-    from semantic_index_spark.operators.hnsw import build_hnsw
-
+    version directory (``v=<n>/__idx_<name>/shard=<b>``) and the manifest
+    gains ``indexes[name] = {params, shards}``. Conditional on the pointer
+    AND marked as touching every bucket, so a concurrent data commit
+    conflicts (an index built from pre-commit rows must not publish over
+    it); retryable via ``retry_commit``. From this commit on, every
+    ``merge_into_bucketed`` rebuilds the affected shards inside its own
+    staged commit — the index can never drift from the data."""
     man = VER._read_manifest(table)
-    key = _check_attachable(man, table, emb_col, name)
-    rows = VER.read_bucketed(spark, table).select(
-        F.col(key).alias("vec_id"), F.col(emb_col).alias("embedding")
-    )
-    # shard hash == bucket hash: pmod(xxhash64(key), n_buckets) on the
-    # key's manifest dtype, computed by build_hnsw exactly as _bucket_expr
-    idx = build_hnsw(
-        rows,
-        n_shards=int(man["n_buckets"]),
-        m=m,
-        ef_construction=ef_construction,
-        seed=seed,
-    )
+    _check_attachable(man, table, emb_col, name)
     params = {
         "kind": "hnsw",
         "emb_col": emb_col,
@@ -265,32 +312,8 @@ def attach_hnsw_index(
         "ef_construction": int(ef_construction),
         "seed": int(seed),
     }
-    return _publish_index(table, man, name, params, idx)
-
-
-def _ivfsq_index_df(man: dict, rows: DataFrame, params: dict) -> DataFrame:
-    """The IVF-SQ8 shard artifact for a set of table rows: (vec_id, int8
-    codes, _cell, shard) — cell assignment and encoding are pure
-    functions of (embedding, frozen manifest artifacts), and shard IS the
-    row's bucket (``_bucket_expr`` on the key's manifest dtype), so a
-    merge's rewritten-bucket rows rebuild exactly their own shards."""
-    from semantic_index_spark.operators.similarity import ivf_assign, sq_codes_column
-
-    p = params
-    key = man["key_cols"][0]
-    src = rows.select(
-        F.col(key).alias("vec_id"),
-        F.col(p["emb_col"]).alias("embedding"),
-        VER._bucket_expr([key], int(man["n_buckets"])).alias("shard"),
-    )
-    # cell, codes and shard are all pure functions of the row — ONE narrow
-    # projection (r13; the former sq_encode ⋈ assigned join re-shuffled the
-    # rows by id to reunite them, guide §2.4)
-    return ivf_assign(src, p["centroids"]).select(
-        "vec_id",
-        sq_codes_column(p["model"]).alias("codes"),
-        "_cell",
-        "shard",
+    return _publish_index(
+        table, man, name, params, VER.read_bucketed(spark, table)
     )
 
 
@@ -305,7 +328,7 @@ def attach_ivfsq_index(
     """Attach a co-committed IVF-SQ8 index (round 12 — the second index
     kind, FAISS ``IVF,SQ8`` on the table-artifact contract): the current
     table state trains the int8 quantizer (``sq_train``) and fixes
-    deterministic centroids; rows land as ``__ivfsq/shard=<b>/_cell=<c>``
+    deterministic centroids; rows land as ``__idx_<name>/shard=<b>/_cell=<c>``
     byte-code partitions in the attach commit's staged directory. The
     FROZEN artifacts (centroids + per-dim lo/step) live in the manifest
     params — re-encoding after any merge uses exactly the artifacts the
@@ -316,9 +339,7 @@ def attach_ivfsq_index(
 
     man = VER._read_manifest(table)
     key = _check_attachable(man, table, emb_col, name, allow_string=True)
-    rows = VER.read_bucketed(spark, table).select(
-        F.col(key).alias(key), F.col(emb_col).alias(emb_col)
-    )
+    rows = VER.read_bucketed(spark, table).select(key, emb_col)
     first = rows.select(F.size(emb_col).alias("d")).limit(1).collect()
     if not first:
         raise ValueError(f"attach_ivfsq_index: table {table} is empty")
@@ -331,34 +352,7 @@ def attach_ivfsq_index(
         "model": model,
         "seed": int(seed),
     }
-    idx = _ivfsq_index_df(man, rows, params)
-    return _publish_index(table, man, name, params, idx)
-
-
-def _ivfpq_index_df(man: dict, rows: DataFrame, params: dict) -> DataFrame:
-    """The IVF-PQ shard artifact for a set of table rows: long-form
-    (vec_id, sub, code, _cell, shard) PQ code rows — cell assignment and
-    encoding are pure functions of (embedding, frozen manifest
-    artifacts), so a merge's rewritten-bucket rows rebuild exactly their
-    own shards, identically to the other kinds."""
-    from semantic_index_spark.operators.similarity import ivf_assign, pq_codes_array
-
-    p = params
-    key = man["key_cols"][0]
-    src = rows.select(
-        F.col(key).alias("vec_id"),
-        F.col(p["emb_col"]).alias("embedding"),
-        VER._bucket_expr([key], int(man["n_buckets"])).alias("shard"),
-    )
-    # cell, codes and shard are all pure functions of the row — ONE narrow
-    # projection + posexplode to the long form (r13; the former
-    # pq_encode ⋈ assigned join re-shuffled the rows by id, guide §2.4)
-    return ivf_assign(src, p["centroids"]).select(
-        "vec_id",
-        F.posexplode(pq_codes_array(p["codebooks"])).alias("sub", "code"),
-        "_cell",
-        "shard",
-    )
+    return _publish_index(table, man, name, params, rows)
 
 
 def attach_ivfpq_index(
@@ -393,9 +387,7 @@ def attach_ivfpq_index(
 
     man = VER._read_manifest(table)
     key = _check_attachable(man, table, emb_col, name, allow_string=True)
-    # ONE table read feeds both the trainer and the shard-artifact build
-    # (r13: the artifact build re-called read_bucketed — a second manifest
-    # walk + file listing + DV anti-join lineage for the same snapshot)
+    # ONE table read feeds both the trainer and the shard build
     tbl = VER.read_bucketed(spark, table)
     rows = tbl.select(
         F.col(key).alias("vec_id"), F.col(emb_col).alias("embedding")
@@ -416,8 +408,7 @@ def attach_ivfpq_index(
         "codebooks": codebooks,
         "seed": int(seed),
     }
-    idx = _ivfpq_index_df(man, tbl, params)
-    return _publish_index(table, man, name, params, idx)
+    return _publish_index(table, man, name, params, tbl)
 
 
 def indexed_ivfpq_topk(
@@ -528,87 +519,21 @@ def detach_index(table: str, name: "str | None" = None) -> int:
 detach_hnsw_index = detach_index
 
 
-def _stage_merge_index(spark, man: dict, result: DataFrame, affected):
+def _stage_merge_index(man: dict, result: DataFrame, affected):
     """The merge-side maintenance hook (called by ``merge_into_bucketed``
-    when the manifest carries an index): build the affected buckets'
-    replacement shard graphs from the merge's OWN rewritten-bucket rows
-    and return (stage, finalize) callbacks for ``_commit_bucketed`` —
-    stage writes the graphs into the merge's staged directory, finalize
-    advances ``index.shards`` for the affected buckets in the same
-    manifest (inheriting every other shard's owner from the manifest the
-    commit lands on, so a disjoint-bucket rebase keeps both writers'
-    shards exactly like it keeps both writers' buckets). Round 12:
-    EVERY index the manifest carries rebuilds in the same commit — one
-    shard-build per (index, affected bucket), dispatched on each spec's
-    ``params.kind`` (hnsw rebuilds shard graphs, ivfsq re-encodes against
-    that index's frozen quantizer/centroids)."""
-    key = man["key_cols"][0]
-    built: dict[str, DataFrame] = {}
-    for iname, spec in VER._indexes(man).items():
-        p = spec["params"]
-        kind = p.get("kind", "hnsw")
-        if kind == "hnsw":
-            from semantic_index_spark.operators.hnsw import build_hnsw
-
-            built[iname] = build_hnsw(
-                result.select(
-                    F.col(key).alias("vec_id"),
-                    F.col(p["emb_col"]).alias("embedding"),
-                ),
-                n_shards=int(man["n_buckets"]),
-                m=p["m"],
-                ef_construction=p["ef_construction"],
-                seed=p["seed"],
-            )
-        elif kind == "ivfpq":
-            built[iname] = _ivfpq_index_df(man, result, p)
-        else:
-            built[iname] = _ivfsq_index_df(man, result, p)
+    and ``optimize_bucketed`` when the manifest carries an index): return
+    (stage, finalize) callbacks for ``_commit_bucketed``. ``stage`` runs
+    the one grouped shard pass (:func:`_write_shards`) over the commit's
+    OWN rewritten-bucket rows, rebuilding EVERY index the manifest
+    carries into the staged directory; ``finalize`` advances each
+    index's shard map for the affected buckets in the same manifest
+    (:func:`_shard_finalizer`)."""
+    specs = VER._indexes(man)
 
     def stage(staged: str) -> None:
-        # the per-index shard writes are independent jobs over the SAME
-        # checkpointed merge result into DISJOINT staged subdirectories —
-        # submit them concurrently (Spark contexts accept multi-threaded
-        # job submission) so a 3-index table pays max(write) not Σ(write)
-        # per merge; any failure propagates before the commit publishes
-        # (r13, guide §1.2). Sequential fallback for a single index.
-        def _write(item):
-            iname, idx = item
-            p = VER._indexes(man)[iname]["params"]
-            idx.write.mode("errorifexists").partitionBy(
-                *_IDX_PARTS[p.get("kind", "hnsw")]
-            ).parquet(os.path.join(staged, _idx_dir(iname, p)))
+        _write_shards(result, man, specs, staged, affected)
 
-        items = list(built.items())
-        if len(items) == 1:
-            _write(items[0])
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(items)) as pool:
-                for _ in pool.map(_write, items):
-                    pass
-
-    def finalize(manifest: dict, final: int, base_man, dest: str) -> dict:
-        base_idxs = VER._indexes(base_man) or VER._indexes(man)
-        indexes = {}
-        for iname, spec in VER._indexes(man).items():
-            p = spec["params"]
-            hdir = os.path.join(dest, _idx_dir(iname, p))
-            written = {
-                int(d.split("=", 1)[1])
-                for d in (os.listdir(hdir) if os.path.isdir(hdir) else [])
-                if d.startswith("shard=")
-            }
-            shards = dict((base_idxs.get(iname) or spec)["shards"])
-            for b in affected:
-                shards[str(b)] = final if b in written else None
-            indexes[iname] = {"params": dict(p), "shards": shards}
-        manifest.pop("index", None)  # legacy key re-keys under indexes
-        manifest["indexes"] = indexes
-        return manifest
-
-    return stage, finalize
+    return stage, _shard_finalizer(specs, affected)
 
 
 def indexed_hnsw_topk(

@@ -1,28 +1,27 @@
-"""Spark-FREE co-committed index shard builders (round 13 — VERDICT r12
-task #4): the SQL front door's ``INSERT INTO`` commits in a Python
-worker with no SparkSession, so an indexed table's shard rebuilds must
-run on numpy/pyarrow alone. Every encoder here replicates its Spark
-expression BIT-FOR-BIT:
+"""The co-committed index shard encoders: numpy/pyarrow only, no
+SparkSession. Every table shard on disk comes from here — the Spark
+verbs (attach, merge, OPTIMIZE) run :func:`write_bucket_shards` inside one
+``groupBy(bucket).applyInArrow`` task per bucket
+(``indexed._write_shards``), and the SQL front door's ``INSERT INTO``
+commit worker calls it directly. One encoder per kind:
 
-- dots and squared distances are SEQUENTIAL per-dimension folds
-  (``acc = (acc + x_d * y_d)``), matching ``functions.vector.dot``'s
-  ``F.aggregate`` left fold — a BLAS ``matmul`` would reassociate the
-  sum and could flip a near-tie cell assignment;
-- IVF cell assignment mirrors ``ivf_assign``'s ``method="auto"`` split
-  exactly: k ≤ 16 → fold dots + first-max argmax (the ``expr`` path's
-  ``array_position(dots, array_max(dots))``), k > 16 → float64
-  ``matmul`` + argmax (the ``arrow`` path's own formula);
-- SQ8 codes run the identical clamped ``floor((v - lo)/step + 0.5)``
-  double arithmetic; PQ codes take the first-minimum (= smallest code,
-  ``min_by`` struct tie-break) over sequentially-folded subspace
-  distances;
-- HNSW shards call the SAME pure-Python ``_build_shard`` the Spark
-  path's ``applyInPandas`` task calls — one implementation, zero drift
-  (the graph is a function of the id set, not insertion order).
+- IVF cell assignment, SQ8 codes and PQ codes reproduce the standalone
+  Spark expressions (``similarity.ivf_assign`` / ``sq_encode`` /
+  ``pq_encode``) that the query rows and their DuckDB oracles use —
+  dots and squared distances are SEQUENTIAL per-dimension folds
+  (``acc = (acc + x_d * y_d)``, ``functions.vector.dot``'s
+  ``F.aggregate`` left fold; a BLAS ``matmul`` would reassociate the
+  sum and could flip a near-tie cell), ``ivf_assign``'s
+  ``method="auto"`` split is kept (k ≤ 16 → fold dots + first-max
+  argmax, k > 16 → float64 ``matmul`` + argmax), SQ8 runs the identical
+  clamped ``floor((v - lo)/step + 0.5)`` double arithmetic, and PQ takes
+  the first minimum (= smallest code) over folded subspace distances;
+- HNSW shards call the pure-Python ``hnsw._build_shard`` the standalone
+  ``build_hnsw`` task calls (the graph is a function of the id set, not
+  insertion order).
 
-Equivalence is pytest-locked: a SQL INSERT's worker-built shards must
-serve identically to a Spark-side ``merge_into_bucketed`` rebuild of
-the same rows (``test_r13_sql_insert_indexed_tables``).
+That parity with the standalone expressions is the one lockstep left;
+pytest locks it (``test_table_index_codes_match_standalone_encoders``).
 """
 
 from __future__ import annotations
@@ -112,9 +111,40 @@ def _emb_matrix(tbl, emb_col):
     columns widen exactly, matching Spark's ``cast("array<double>")``."""
     import numpy as np
 
-    col = tbl.column(emb_col)
-    rows = col.to_pylist()
-    return np.asarray(rows, dtype=np.float64)
+    col = tbl.column(emb_col).combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(col), -1)
+
+
+# dictionary pages pay off for ids, levels and codes but bloat float
+# lists (a 500-row HNSW ``embedding`` column: 257 KB dictionary-encoded,
+# 197 KB plain — Spark's writer falls back to plain there on its own)
+_HNSW_DICT_COLS = ["id", "max_level", "neighbors.list.element.list.element"]
+
+
+def _write_parquet(out, d: str, use_dictionary=True) -> None:
+    """One fixed-name file per shard leaf, so a retried task overwrites
+    it byte for byte."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(
+        out, os.path.join(d, "part-00000.parquet"),
+        use_dictionary=use_dictionary,
+    )
+
+
+def write_bucket_shards(
+    staged: str, plan: dict, bucket: int, tbl, key: str
+) -> None:
+    """Every index's shard for ONE rewritten bucket: ``plan`` maps each
+    index's artifact directory to its params, ``tbl`` is the bucket's
+    content (arrow, LOGICAL column names). Rows are sorted by key first,
+    so the files are a function of the bucket's row set, not of the
+    order a shuffle delivered it in."""
+    tbl = tbl.sort_by(key)
+    for idx_dir, params in plan.items():
+        write_index_shard_np(staged, idx_dir, bucket, params, tbl, key)
 
 
 def write_index_shard_np(
@@ -127,12 +157,11 @@ def write_index_shard_np(
 ) -> None:
     """Build ONE index's shard for ONE rewritten bucket from the merged
     bucket content (arrow table, LOGICAL column names) and write it into
-    the staged commit directory with the exact partition layout and file
-    schema the Spark-side ``partitionBy`` writers produce — readers
-    cannot tell which engine built a shard."""
+    the staged commit directory in the ``partitionBy`` layout the serves
+    read: ``shard=<b>/`` (HNSW) or ``shard=<b>/_cell=<c>/`` (IVF kinds),
+    one file per leaf."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     kind = params.get("kind", "hnsw")
     mat = _emb_matrix(tbl, params["emb_col"])
@@ -161,9 +190,10 @@ def write_index_shard_np(
                 ),
             }
         )
-        d = os.path.join(staged, idx_dir, f"shard={int(bucket)}")
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(out, os.path.join(d, "part-00000.parquet"))
+        _write_parquet(
+            out, os.path.join(staged, idx_dir, f"shard={int(bucket)}"),
+            use_dictionary=_HNSW_DICT_COLS,
+        )
         return
     cells = ivf_cells_np(mat, params["centroids"])
     if kind == "ivfsq":
@@ -179,11 +209,9 @@ def write_index_shard_np(
                     ),
                 }
             )
-            d = os.path.join(
+            _write_parquet(out, os.path.join(
                 staged, idx_dir, f"shard={int(bucket)}", f"_cell={int(c)}"
-            )
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(out, os.path.join(d, "part-00000.parquet"))
+            ))
         return
     if kind == "ivfpq":
         pqc = pq_codes_np(mat, params["codebooks"])
@@ -206,10 +234,8 @@ def write_index_shard_np(
                     "code": pa.array(code_long, pa.int32()),
                 }
             )
-            d = os.path.join(
+            _write_parquet(out, os.path.join(
                 staged, idx_dir, f"shard={int(bucket)}", f"_cell={int(c)}"
-            )
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(out, os.path.join(d, "part-00000.parquet"))
+            ))
         return
     raise ValueError(f"unknown co-committed index kind {kind!r}")

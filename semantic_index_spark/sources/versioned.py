@@ -1402,7 +1402,7 @@ def merge_into_bucketed(
         from semantic_index_spark.sources.indexed import _stage_merge_index
 
         result = result.localCheckpoint(eager=True)
-        stage_extra, finalize = _stage_merge_index(spark, man, result, affected)
+        stage_extra, finalize = _stage_merge_index(man, result, affected)
     # a rewritten bucket has its DVs folded into the data — clear them;
     # the commit is conditional on `man` and rebases over concurrent
     # commits that touched only DISJOINT buckets (_publish_bucketed)
@@ -2182,7 +2182,7 @@ def optimize_bucketed(
         # (checkpoint preserves the zorder sortWithinPartitions layout)
         rows = rows.localCheckpoint(eager=True)
         stage_extra, finalize = _stage_merge_index(
-            spark, man, rows, list(affected) + list(dv_only)
+            man, rows, list(affected) + list(dv_only)
         )
     return _commit_bucketed(
         table, rows, base, man, dv_clear=set(affected) | set(dv_only),

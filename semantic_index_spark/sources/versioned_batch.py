@@ -684,8 +684,8 @@ def _project_logical(tbl, colmap: dict, fields):
 # view schema) all point the user at the Python API verb that handles
 # them. Co-committed indexes are MAINTAINED, not refused (round 13):
 # the commit worker rebuilds each index's affected shards Spark-free
-# through ``indexed_np``'s bit-exact numpy/pure-Python builders —
-# pytest-locked shard-file-identical to a Spark-side merge's rebuild.
+# through ``indexed_np`` — the same shard encoder a Spark-side merge's
+# grouped pass runs, so both verbs write identical shard files.
 #
 # Driver-side cost note: commit() merges affected buckets (and now
 # rebuilds their shards) single-threaded in one Python worker — the
@@ -836,49 +836,28 @@ class BucketedMergeWriter(DataSourceArrowWriter):
             pq.write_table(merged, os.path.join(outd, "part-00000.parquet"))
         shutil.rmtree(os.path.join(self.staged, "__incoming"), ignore_errors=True)
         # co-committed indexes (round 13): rebuild every index's affected
-        # shards from the SAME merged bucket content, Spark-free — the
-        # numpy encoders are bit-exact twins of the Spark expressions and
-        # the HNSW builder is the identical pure-Python function the
-        # applyInPandas task runs. Shards land in the one staged commit;
-        # the finalize advances each index's shard map exactly like the
-        # merge path's _stage_merge_index finalize (disjoint-bucket
+        # shards from the SAME merged bucket content, Spark-free, through
+        # the one shard encoder the Spark verbs' grouped pass runs
+        # (indexed_np). Shards land in the one staged commit; the shared
+        # finalizer advances each index's shard map (disjoint-bucket
         # rebases keep both writers' shards).
         idxs = VER._indexes(man)
         finalize = None
         if idxs:
-            from semantic_index_spark.sources.indexed import _idx_dir
+            from semantic_index_spark.sources.indexed import (
+                _idx_dir,
+                _shard_finalizer,
+            )
             from semantic_index_spark.sources.indexed_np import (
-                write_index_shard_np,
+                write_bucket_shards,
             )
 
-            for iname, spec in idxs.items():
-                p = spec["params"]
-                for b in affected:
-                    write_index_shard_np(
-                        self.staged, _idx_dir(iname, p), b, p,
-                        logical_by_bucket[b], self.key,
-                    )
-
-            def finalize(manifest, final, base_man, dest):
-                base_idxs = VER._indexes(base_man) or idxs
-                indexes = {}
-                for iname, spec in idxs.items():
-                    p = spec["params"]
-                    hdir = os.path.join(dest, _idx_dir(iname, p))
-                    written = {
-                        int(d.split("=", 1)[1])
-                        for d in (
-                            os.listdir(hdir) if os.path.isdir(hdir) else []
-                        )
-                        if d.startswith("shard=")
-                    }
-                    shards = dict((base_idxs.get(iname) or spec)["shards"])
-                    for b in affected:
-                        shards[str(b)] = final if b in written else None
-                    indexes[iname] = {"params": dict(p), "shards": shards}
-                manifest.pop("index", None)  # legacy key re-keys
-                manifest["indexes"] = indexes
-                return manifest
+            plan = {_idx_dir(n, s["params"]): s["params"] for n, s in idxs.items()}
+            for b in affected:
+                write_bucket_shards(
+                    self.staged, plan, b, logical_by_bucket[b], self.key
+                )
+            finalize = _shard_finalizer(idxs, affected)
 
         base = {
             "key_cols": man["key_cols"],
@@ -1047,8 +1026,8 @@ class VersionedTableDataSource(DataSource):
             os.makedirs(staged)
             return PlainAppendWriter(self.table, self.version, staged)
         # co-committed indexes no longer block (round 13): the commit
-        # worker rebuilds the affected shards Spark-free via indexed_np's
-        # bit-exact numpy encoders / the shared pure-Python HNSW builder
+        # worker rebuilds the affected shards Spark-free via indexed_np,
+        # the one shard encoder every verb uses
         for blocker, present, verb in (
             ("constraints", man.get("constraints"),
              "merge_into_bucketed (CHECK constraints are SQL expressions "

@@ -4249,6 +4249,194 @@ def test_r13_sql_insert_indexed_tables(spark, tmp_path, monkeypatch):
     ] == brute
 
 
+def _indexed_table(spark, path, dtype="double"):
+    """A 4-bucket table carrying one co-committed index of each kind."""
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+
+    VER.create_bucketed(
+        spark.createDataFrame(
+            [(i, _emb(i)) for i in range(60)],
+            f"id long, embedding array<{dtype}>",
+        ),
+        path, ["id"], n_buckets=4,
+    )
+    IDX.attach_hnsw_index(spark, path, m=4, ef_construction=16)
+    IDX.attach_ivfsq_index(spark, path, n_cells=4)
+    IDX.attach_ivfpq_index(spark, path, m_sub=3, pq_k=8, n_cells=4)
+
+
+def _tree_bytes(root):
+    import os
+
+    out = {}
+    for dp, _, fns in os.walk(root):
+        for fn in fns:
+            p = os.path.join(dp, fn)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_table_index_codes_match_standalone_encoders(spark, tmp_path):
+    """Table shards are built by ``indexed_np``; the standalone query
+    rows and their DuckDB oracles encode with the Spark expressions
+    ``ivf_assign`` + ``sq_encode`` / ``pq_encode``. The two must agree
+    row for row — cell, codes and shard — after an attach AND after a
+    merge re-encodes rewritten buckets, on both sides of ``ivf_assign``'s
+    k ≤ 16 (expression fold) / k > 16 (matmul) split, over float32
+    embeddings that both sides widen to double."""
+    import numpy as np
+
+    from semantic_index_spark.operators import similarity as S
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((160, 8)).astype(np.float32)
+    t = str(tmp_path / "parity")
+    VER.create_bucketed(
+        spark.createDataFrame(
+            [(i, [float(x) for x in vecs[i]]) for i in range(150)],
+            "id long, embedding array<float>",
+        ),
+        t, ["id"], n_buckets=4,
+    )
+    IDX.attach_ivfsq_index(spark, t, n_cells=4, name="sq")
+    IDX.attach_ivfsq_index(spark, t, n_cells=20, name="sq_wide")
+    IDX.attach_ivfpq_index(spark, t, m_sub=4, pq_k=8, n_cells=4, name="pq")
+    IDX.attach_ivfpq_index(spark, t, m_sub=2, pq_k=8, n_cells=20, name="pq_wide")
+
+    def check():
+        man = VER._read_manifest(t)
+        rows = VER.read_bucketed(spark, t).selectExpr(
+            "id AS vec_id", "embedding"
+        ).withColumn("shard", VER._bucket_expr(["vec_id"], 4))
+        for name, spec in VER._indexes(man).items():
+            p = spec["params"]
+            cells = S.ivf_assign(rows, p["centroids"]).select(
+                "vec_id", "_cell", "shard"
+            )
+            if p["kind"] == "ivfsq":
+                cols = ["vec_id", "codes", "_cell", "shard"]
+                enc = S.sq_encode(rows, p["model"])
+            else:
+                cols = ["vec_id", "sub", "code", "_cell", "shard"]
+                enc = S.pq_encode(rows, p["codebooks"])
+            want = enc.join(cells, "vec_id").select(*cols)
+            got = IDX._read_index_shards(
+                spark, t, man, name=name, kind=p["kind"]
+            ).select(*cols)
+            assert sorted(tuple(r) for r in got.collect()) == sorted(
+                tuple(r) for r in want.collect()
+            ), name
+
+    check()
+    VER.merge_into_bucketed(
+        spark, t,
+        spark.createDataFrame(
+            [(i, [float(x) for x in vecs[159 - i]]) for i in range(0, 160, 8)],
+            "id long, embedding array<float>",
+        ),
+    )
+    check()
+
+
+def test_merge_emptying_bucket_clears_every_index_shard(spark, tmp_path):
+    """A merge that deletes every row of a bucket leaves no shard to
+    build: the bucket's owner AND every index's shard owner for it
+    become None in the same commit, and every serve still equals brute
+    force over what is left."""
+    import pyspark.sql.functions as F
+
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+
+    t = str(tmp_path / "empty_bucket")
+    _indexed_table(spark, t)
+    doomed = VER.read_bucketed(spark, t).filter(
+        VER._bucket_expr(["id"], 4) == F.lit(0)
+    )
+    assert doomed.count() > 0
+    v = VER.merge_into_bucketed(spark, t, doomed, when_matched="delete")
+    man = VER._read_manifest(t)
+    assert man["version"] == v and man["buckets"]["0"] is None
+    for name, spec in VER._indexes(man).items():
+        assert spec["shards"]["0"] is None, name
+        assert all(
+            spec["shards"][str(b)] is not None for b in (1, 2, 3)
+        ), name
+    live = VER.read_bucketed(spark, t)
+    q = _emb(5)
+    want = _brute_topk(spark, live, q, 5)
+    assert [
+        (r["vec_id"], r["score"])
+        for r in IDX.indexed_hnsw_topk(spark, t, q, k=5, ef=None).collect()
+    ] == want
+    for serve in (IDX.indexed_ivfsq_topk, IDX.indexed_ivfpq_topk):
+        assert [
+            (r["vec_id"], r["score"])
+            for r in serve(spark, t, q, k=5, nprobe=4, candidates=500).collect()
+        ] == want
+
+
+def test_grouped_shard_pass_is_retry_safe(spark, tmp_path):
+    """The grouped shard pass writes fixed file names from rows sorted by
+    key, so running it twice into one staged directory — as a retried
+    task would, here with the rows arriving in a different partition
+    layout — leaves byte-identical files."""
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+
+    t = str(tmp_path / "retry")
+    _indexed_table(spark, t, dtype="float")
+    man = VER._read_manifest(t)
+    rows = VER.read_bucketed(spark, t)
+    staged = str(tmp_path / "staged")
+    IDX._write_shards(rows, man, VER._indexes(man), staged, range(4))
+    first = _tree_bytes(staged)
+    assert len(first) > 0
+    IDX._write_shards(
+        rows.repartition(7), man, VER._indexes(man), staged, range(4)
+    )
+    assert _tree_bytes(staged) == first
+
+
+def test_merge_writes_one_file_per_index_leaf(spark, tmp_path):
+    """A merge writes exactly one file per (index, shard) for HNSW and
+    per (index, shard, cell) for the IVF kinds — no per-task fan-out and
+    no writer sidecars — and only for the buckets the merge rewrote."""
+    import os
+
+    from semantic_index_spark.sources import versioned as VER
+
+    t = str(tmp_path / "one_file")
+    _indexed_table(spark, t)
+    src = spark.createDataFrame(
+        [(i, _emb(i + 500)) for i in (3, 200, 201)],
+        "id long, embedding array<double>",
+    )
+    v = VER.merge_into_bucketed(spark, t, src)
+    man = VER._read_manifest(t)
+    rewritten = {b for b, owner in man["buckets"].items() if owner == v}
+    assert rewritten
+    for name, spec in VER._indexes(man).items():
+        root = os.path.join(t, f"v={v}", f"__idx_{name}")
+        shards = sorted(os.listdir(root))
+        assert shards == sorted(f"shard={b}" for b in rewritten), name
+        assert {
+            b for b, owner in spec["shards"].items() if owner == v
+        } == rewritten
+        for sd in shards:
+            leaves = [os.path.join(root, sd)]
+            if spec["params"]["kind"] != "hnsw":
+                cells = os.listdir(leaves[0])
+                assert cells and all(c.startswith("_cell=") for c in cells)
+                leaves = [os.path.join(leaves[0], c) for c in cells]
+            for leaf in leaves:
+                assert os.listdir(leaf) == ["part-00000.parquet"], leaf
+
+
 def test_r13_sql_view_broadcast_hint(spark, tmp_path):
     """Round 13 (VERDICT r12 missing #4): the Python DataSource API has
     no statistics hook, so a versioned view reports unknown size
