@@ -7360,94 +7360,59 @@ def _duck_k_core_sql(k: int, iters: int) -> str:
     )
 
 
-# The driver hash-checks the FIRST 50 queries() entries each round, so the
-# leading window is a verification contract.  queries() keeps the canonical
-# dict literal in stable historical order and reorders at return time by this
-# pinned list — re-pinning a round's window is an edit to THIS list only.
-#
-# Since round 8 closed never-checked coverage (every registry query has
-# >=1 hard driver CORRECTNESS row), the window is pure steady-state
-# rotation — never-checked new queries first, then the queries whose most
-# recent driver row is OLDEST, oldest round first, ties broken by original
-# registry order.
-_DRIVER_WINDOW_R14 = [
-    # round-14 window: no never-checked and no failed rows remain, so
-    # the 50 stalest green driver rows (oldest CORRECTNESS round first)
-    # - computed by tools/pin_window.py from CORRECTNESS_r01-r13
-    "ngram_jaccard_maxdf",  # last r7
-    "stream_hll_replay",  # last r7
-    "index_compact_demo",  # last r7
-    "jsonl_quarantine",  # last r7
-    "schema_evolution",  # last r7
-    "adamic_adar",  # last r7
-    "activity_streaks",  # last r7
-    "autocorrelation",  # last r7
-    "stratified_ate",  # last r7
-    "phrase_search",  # last r7
-    "resample_locf",  # last r7
-    "geo_neighbors",  # last r7
-    "golden_records",  # last r7
-    "dp_topk",  # last r7
-    "kmv_distinct",  # last r7
-    "kmv_overlap",  # last r7
-    "orc_roundtrip",  # last r8
-    "best_split",  # last r8
-    "sequence_support",  # last r8
-    "pq_topk",  # last r8
-    "ivfpq_topk",  # last r8
-    "mutual_nn",  # last r8
-    "ivfpq_incremental",  # last r8
-    "hidden_partition_prune",  # last r8
-    "motif_triangles",  # last r8
-    "motif_open_wedges",  # last r8
-    "motif_capped_wedges",  # last r8
-    "hidden_skipping_compose",  # last r8
-    "sq_rescore_topk",  # last r8
-    "filtered_ivf_topk",  # last r8
-    "colbert_maxsim",  # last r8
-    "zorder_skipping",  # last r8
-    "training_pipeline_e2e",  # last r8
-    "k_core",  # last r8
-    "ivfsq_topk",  # last r8
-    "personalized_pagerank",  # last r8
-    "zonemap_skipping",  # last r8
-    "ivm_agg",  # last r8
-    "sampled_quantiles",  # last r8
-    "bloom_skipping",  # last r8
-    "delete_vectors",  # last r8
-    "optimize_demo",  # last r8
-    "mrl_topk",  # last r8
-    "append_skipping",  # last r8
-    "mg_heavy_hitters",  # last r8
-    "grouped_sample_quantiles",  # last r8
-    "knn_topk",  # last r8
-    "knn_cosine",  # last r8
-    "count_records",  # last r8
-    "q1_pricing_summary",  # last r8
-]
+# The FIRST 50 queries() entries are hash-checked each round and the
+# results land in CORRECTNESS_r{N}.json beside this file, so the leading
+# window is a verification contract computed from that history.
+_DRIVER_WINDOW = 50
 
 
+def _driver_window(names: list[str], history_dir: str) -> list[str]:
+    """The next verification window over ``names`` (canonical order), from the
+    ``CORRECTNESS_r*.json`` files in ``history_dir``: names never checked
+    first, then names whose latest row failed (rows, schema or hash
+    mismatch, or an error), then the names whose latest row is oldest.
+    Ties go by the order of ``names``."""
+    import glob
+    import json
+    import re
 
+    latest: dict[str, int] = {}
+    failed: set[str] = set()
+    for path in glob.glob(os.path.join(history_dir, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            if rnd < latest.get(name, 0):
+                continue
+            latest[name] = rnd
+            ok = isinstance(row, dict) and all(
+                row.get(k) for k in ("rows_match", "schema_match", "hash_match")
+            ) and not row.get("err")
+            (failed.discard if ok else failed.add)(name)
+    order = {n: i for i, n in enumerate(names)}
+
+    def key(n: str) -> tuple[int, int, int]:
+        if n not in latest:
+            return (0, 0, order[n])
+        return (1, 0, order[n]) if n in failed else (2, latest[n], order[n])
+
+    return sorted(names, key=key)[:_DRIVER_WINDOW]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order is a verification contract: the driver hash-checks the
     FIRST 50 entries each round.  The canonical dict below stays in stable
-    historical order; the returned dict is reordered so the pinned
-    ``_DRIVER_WINDOW_R14`` names come first (see the comment on that list for
-    the round-14 composition), followed by every other query in canonical
-    order.
-
-    Steady-state rotation policy (round 8 closes never-checked coverage:
-    after it lands, every pre-r9 registry query has at least one
-    hard driver CORRECTNESS row): each subsequent round's window = the
-    queries whose most recent driver CORRECTNESS row is OLDEST, oldest
-    round first, ties broken by original registry order — keeping every
-    driver row at most ~6 rounds stale (316 queries / 50 per round).
-    ``tools/pin_window.py`` computes the next window from the
-    CORRECTNESS_r{N}.json history; paste its output over
-    ``_DRIVER_WINDOW_R14``.  EVERY new query added mid-round must be
-    appended to the canonical dict AND will be picked up by pin_window as
+    historical order; the returned dict leads with ``_driver_window`` over
+    that order and the ``CORRECTNESS_r*.json`` history beside this file,
+    followed by every other query in canonical order.  The window rotates by
+    itself when a round's results land: never-checked queries first, then
+    failed re-checks, then the stalest green rows, which keeps every
+    CORRECTNESS row at most ~6 rounds stale (316 queries / 50 per round).  A new query
+    only needs appending to the canonical dict; it leads the next window as
     never-checked.
 
     EVERY query has a hash oracle; all 316 are verified at both sf0.01 and
@@ -7775,14 +7740,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hnsw_streaming": q_hnsw_streaming,
         "hnsw_delete": q_hnsw_delete,
     }
-    missing = [n for n in _DRIVER_WINDOW_R14 if n not in reg]
-    if missing or len(_DRIVER_WINDOW_R14) != 50:
-        raise RuntimeError(
-            f"driver window pin is broken: len={len(_DRIVER_WINDOW_R14)}, "
-            f"missing={missing}"
-        )
-    ordered = {n: reg[n] for n in _DRIVER_WINDOW_R14}
-    ordered.update((n, fn) for n, fn in reg.items() if n not in ordered)
+    window = _driver_window(list(reg), os.path.dirname(os.path.abspath(__file__)))
+    ordered = {n: reg[n] for n in window}
+    ordered.update(reg)  # existing keys keep their place, the rest append
     return ordered
 
 

@@ -1,100 +1,49 @@
-"""Benchmark harness — the driver's per-round perf gate.
+"""Benchmark harness: times registry queries from ``__spark_entry__.queries()``.
 
-Runs ``entry()`` plus every declared query from ``__spark_entry__.queries()``
-at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``.
+    python bench.py                         # every query: the suite's perf gate
+    python bench.py [--repo PATH] name ...  # only the named queries
 
-Each query is executed ``$SPARK_GRAFT_BENCH_REPS`` times (default 3) and the
-MEDIAN is reported — rounds 2→3 showed ±2-3× per-query jitter on identical
-code at sf0.1, so single-shot timings cannot support round-over-round
-comparisons. Each rep is timed end-to-end (plan + execute + collect), the
-same work a user pays for.
+Both modes run :func:`time_queries` at ``$SPARK_GRAFT_SF_DIR`` (default
+sf0.1) on ``local[$SPARK_GRAFT_CPUS]``, after one ``entry()`` collect that
+warms the JVM. ``--repo`` takes the registry and package from another
+checkout, so one loop measures both sides of an A/B.
 
-Two round-6 lessons are baked in:
+Per query: ``$SPARK_GRAFT_BENCH_WARMUP`` untimed reps (default 1), then
+``$SPARK_GRAFT_BENCH_REPS`` timed reps (default 3), each timed end to end
+(build + execute + collect). When the reps spread by more than 40 % of
+their median, up to 2 extra reps are taken. A query that fails on any rep
+is an error and stays out of every median. Each ``detail`` entry holds the
+median, min, max, spread, rep count and row count, plus ``build_s`` (median
+time until the builder returns) and ``jobs`` (Spark jobs of the first timed
+rep, counted through a job group named after the query).
 
-- Queries run in CANONICAL (sorted-by-name) order, NOT registry order. The
-  registry front-loads each round's driver-verification window, so benching
-  in registry order made freshly-reordered queries pay JVM/page-cache
-  cold-start — r6's "regressions" were 1.47× on exactly the 50 reordered
-  queries vs 1.16× elsewhere, on byte-identical code. A fixed order makes
-  round-over-round per-query comparison position-independent.
-- One UNTIMED warm-up rep per query before the timed reps (set
-  ``$SPARK_GRAFT_BENCH_WARMUP=0`` to skip): the first execution pays
-  first-touch parquet footer reads, codegen compilation, and Python-worker
-  forks that later reps — and any steady-state deployment — do not.
+Two measured rules:
 
-Output contract (the driver's capture window for stdout is small — the
-round-3 artifact kept only ~520 tail bytes, so a 3 KB JSON line gets
-front-truncated into unparseable garbage):
+- Queries run in canonical (sorted-by-name) order, not registry order. The
+  registry leads with the verification window; benching in that
+  order made the freshly moved queries pay cold-start costs (1.47× against
+  1.16× elsewhere, on identical code).
+- The warm-up rep pays first-touch parquet footer reads, codegen and Python
+  worker forks that later reps do not.
 
-- ``BENCH_SUMMARY.json`` (repo root): the FULL result — per-query medians,
-  min/max across reps, errors, totals.
-- stdout, final line: ONE compact JSON summary (< 500 bytes) with the
-  headline metric and a pointer at the summary file.
-- stderr: human-readable per-query progress.
+Output, full mode:
 
-Round-over-round notes (real work vs box drift):
+- ``BENCH_SUMMARY.json`` and ``BENCH_SUMMARY_r{N}.json`` (N from
+  :func:`bench_round`): medians, per-query detail, errors, noise figures.
+- stdout, last line: one compact JSON summary under 500 bytes, because the
+  perf gate keeps only a short tail of stdout.
+- stderr: per-query progress.
 
-- r10 ``append_skipping`` 1.37 -> 2.28 s (1.66x) is REAL ADDED WORK, not
-  noise: commit e0e3f2d added null-count zone-map statistics collection
-  and object-store-safe file discovery to that path. 2.28 s absolute is
-  the accepted cost of the feature.
-- The box drifts ~10% run-to-run after hours of load (r10 measured
-  0.977x/1.083x/1.107x on identical common code); like-for-like
-  round-over-round ratios inside that band are not regressions. Run the
-  round's final bench FIRST after a quiet period.
-- r11 adds per-layout commit locks to every HNSW/IVF index mutation
-  (flock acquire/release, microseconds per mutation) — invisible at
-  bench granularity; any apparent index-row swing is drift, not locking.
-- r11 idle-box run: like-for-like on the 301 common queries = 306.5 ->
-  320.8 s (1.047x) vs r10 — WITHIN the 1.05x drift-resolution target, so
-  the r10 report's 1.136x was box drift as suspected (and
-  ``append_skipping`` swung back 2.28 -> 1.26 s on untouched code,
-  confirming its r10 number carried drift on top of the real feature
-  cost). ``hnsw_incremental`` 2.51 -> 7.96 s in-suite is CONTENTION, not
-  code: isolated A/B of r10 vs r11 code on a quiet box measures both at
-  3.1-3.6 s (lock overhead <= 0.2 s, inside noise).
-- r12 idle-box run (committed BENCH_SUMMARY_r12.json, 310 queries at the
-  time of the run): like-for-like on the 304 r11-common queries = 296.8
-  -> 270.0 s (0.910x — FASTER; the SQL source's column-pruned reads and
-  the single-eval indexed commits are real wins, the rest is favorable
-  drift). The 7 new r12 rows (sql_hidden_prune/sql_insert_merge/
-  indexed_table_ivfsq/media_decode_features/index_maintenance_advice/
-  multi_index_table/ivf_consolidate) add ~22 s of lifecycle work;
-  ``ivf_consolidate`` landed after that run and first appears in the
-  driver's own BENCH_r12.
-- r13 CLOSING run (BENCH_SUMMARY_r13.json, 316 queries, 385.9 s suite):
-  like-for-like vs the r12 committed idle run reads 1.27x, but the
-  isolated A/B protocol attributes ALL of it to CURRENT box load, not
-  code: the six most-inflated rows (cuped_adjustment 5.8x in-suite,
-  hybrid_search 4.7x, dedup_components 3.3x, stream_session_replay,
-  colbert_maxsim, contamination_check — none touched since r12) measure
-  0.90-1.10x at HEAD vs a 422326e worktree on the SAME box back-to-back
-  (tools/bench_subset.py), i.e. identical-code parity; both sides sit
-  well above their r12-era absolute numbers, so the box itself is
-  slower this session (sustained background load), uniformly. The five
-  NEW r13 rows cost 17.2 s total (stream_indexed_merge 4.7,
-  string_key_indexed_table 4.6, sql_insert_indexed_table 3.0,
-  sql_string_key_merge 2.5, vacuum_advice 2.4 — all full-lifecycle
-  rows); the r12-verdict #6 trims are real and visible through the
-  load: multi_index_table 12.1 -> 10.6 s WHILE growing a third index
-  kind + third serve, indexed_table_ivfsq 6.8 -> 4.3 s,
-  ivf_consolidate 5.3 -> 4.4 s.
-- r13 OPENING idle A/B (the r12 verdict's task #2 — tools/bench_subset.py
-  at HEAD vs ``git worktree`` of 8d2e535 on a quiet box, sequential runs):
-  the six rows the driver's BENCH_r12 flagged as 2.5-3.5x inflated all
-  measure AT OR BELOW r11 on identical protocol — map_functions 0.74 vs
-  0.89 s (0.84x), kmeans_centroids 3.27 vs 3.63 (0.90x), lsh_multiprobe
-  0.89 vs 0.94 (0.94x), logreg_gd 0.94 vs 0.99 (0.95x), mutual_nn 1.22 vs
-  1.24 (0.99x), cms_join_size 1.31 vs 1.50 (0.87x). The driver-run 1.23x
-  like-for-like was box contention, same resolution as r10/r11; no row is
-  genuinely >1.35x, no fix needed.
+Output, named queries: one JSON line ``{repo, sf_dir, queries, errors}``
+with the per-query detail, and no summary file.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -113,159 +62,138 @@ def _sf_from_dir(sf_dir: str) -> float:
     return -1.0
 
 
-def main() -> int:
+def bench_round(root: str = REPO_ROOT) -> int:
+    """The round a run belongs to: one past the highest ``BENCH_r*.json``."""
+    rounds = [
+        int(m.group(1))
+        for fn in os.listdir(root)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
+    ]
+    return max(rounds, default=0) + 1
+
+
+def time_queries(spark, registry, names, sf_dir, reps, warmup):
+    """Time each named query; returns ``(detail, errors)`` keyed by name."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    detail: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        fn = registry[name]
+        times: list[float] = []
+        builds: list[float] = []
+        rows = -1
+        jobs_before = len(tracker.getJobIdsForGroup(name))
+        t0 = time.perf_counter()
+        try:
+            for _ in range(warmup):
+                fn(spark, sf_dir).collect()
+            while len(times) < reps or (
+                3 <= len(times) < reps + 2
+                and max(times) - min(times) > 0.4 * statistics.median(times)
+            ):
+                if not times:
+                    sc.setJobGroup(name, name)
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                t_build = time.perf_counter()
+                rows = len(df.collect())
+                times.append(time.perf_counter() - t0)
+                builds.append(t_build - t0)
+                sc._jsc.clearJobGroup()
+        except Exception as e:
+            # a failed query must be visible in the parsed output, and its
+            # partial timings must not leak into any median or total
+            sc._jsc.clearJobGroup()
+            errors[name] = f"{type(e).__name__}: {e}"[:300]
+            print(f"{name:28s} ERROR after {time.perf_counter() - t0:.2f}s: {e}",
+                  file=sys.stderr)
+            continue
+        med = statistics.median(times)
+        detail[name] = {
+            "median": round(med, 3),
+            "min": round(min(times), 3),
+            "max": round(max(times), 3),
+            # rep spread relative to the median: deltas below it are noise
+            "spread_pct": round(100.0 * (max(times) - min(times)) / med, 1) if med else 0.0,
+            "reps": len(times),
+            "rows": rows,
+            "build_s": round(statistics.median(builds), 3),
+            "jobs": len(tracker.getJobIdsForGroup(name)) - jobs_before,
+        }
+        print(
+            f"{name:28s} med={med:7.2f}s  [{min(times):.2f}..{max(times):.2f}] "
+            f"build={detail[name]['build_s']:.2f}s jobs={detail[name]['jobs']} rows={rows}",
+            file=sys.stderr,
+        )
+    return detail, errors
+
+
+def _summaries(detail, errors, sf_dir, reps, warmup):
+    """(full summary, compact stdout line) of a full-suite run."""
+    medians = {k: v["median"] for k, v in detail.items()}
+    total = round(sum(medians.values()), 3)
+    # total_min: the suite without contention; spread percentiles: how far a
+    # per-query delta must move before it is more than noise
+    spreads = sorted(v["spread_pct"] for v in detail.values())
+    noise = {
+        "total_min": round(sum(v["min"] for v in detail.values()), 3),
+        "median_spread_pct": spreads[len(spreads) // 2] if spreads else 0.0,
+        "p90_spread_pct": spreads[int(len(spreads) * 0.9)] if spreads else 0.0,
+    }
+    head = {
+        "metric": "suite_seconds",
+        "value": total,
+        "unit": "sec",
+        "sf": _sf_from_dir(sf_dir),
+        "reps": reps,
+    }
+    counts = {"n_queries": len(detail) + len(errors), "n_errors": len(errors)}
+    full = {**head, "warmup": warmup, "order": "canonical-sorted", **counts,
+            "errors": errors, "noise": noise, "queries": medians, "detail": detail}
+    slowest = sorted(medians, key=medians.get, reverse=True)[:3]
+    # only the 3 slowest medians: the full map would overflow the captured
+    # stdout tail; the complete map lives in BENCH_SUMMARY.json
+    compact = {**head, **counts, "queries": {k: medians[k] for k in slowest},
+               "queries_truncated": True, "queries_file": "BENCH_SUMMARY.json"}
+    return full, compact
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="Time registry queries.")
+    ap.add_argument("--repo", default=REPO_ROOT,
+                    help="checkout whose registry and package are timed")
+    ap.add_argument("names", nargs="*", help="queries to time (default: all)")
+    args = ap.parse_args(argv)
+    repo = os.path.abspath(args.repo)
+    sys.path.insert(0, repo)
     import __spark_entry__ as entrymod
     from semantic_index_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
+    registry = entrymod.queries()
+    unknown = [n for n in args.names if n not in registry]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="semantic-index-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
+    entrymod.entry(spark).collect()  # JVM JIT, footer reads, first-job overhead
 
-    # Warm-up: JVM JIT, parquet footer reads, first-job scheduling overhead.
-    entrymod.entry(spark).collect()
-
-    warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
-
-    detail: dict[str, dict] = {}
-    errors: dict[str, str] = {}
-    registry = entrymod.queries()
-    for name in sorted(registry):  # canonical order — see module docstring
-        fn = registry[name]
-        times: list[float] = []
-        rows = -1
-        for rep in range(-warmup, reps):
-            t0 = time.perf_counter()
-            try:
-                rows = len(fn(spark, sf_dir).collect())
-                if rep >= 0:  # negative reps are untimed warm-up
-                    times.append(time.perf_counter() - t0)
-            except Exception as e:  # a broken query must not hide the others —
-                # but it must be VISIBLE in the parsed output, not just stderr:
-                # a near-zero elapsed time for a crashed query would read as a
-                # speedup.
-                errors[name] = f"{type(e).__name__}: {e}"[:300]
-                print(
-                    f"{name:28s} ERROR after {time.perf_counter() - t0:.2f}s: {e}",
-                    file=sys.stderr,
-                )
-                break
-        if name in errors:
-            # a query that errored on ANY rep is an error, full stop — its
-            # surviving partial-rep timings must not leak into the medians
-            # or the suite total (a half-timed query would skew comparisons)
-            continue
-        # Adaptive re-measure (r10 — the r9 verdict flagged 8 rows whose
-        # >40 % min-max spread made their 3-rep medians noise-dominated):
-        # when the spread crosses the noise threshold, buy up to 2 extra
-        # reps so the median is taken over 5 samples instead of 3 — a
-        # single contention outlier then cannot drag it. Only noisy rows
-        # pay; a clean 3-rep row costs nothing extra.
-        extra = 0
-        while (
-            len(times) >= 3
-            and extra < 2
-            and (max(times) - min(times)) > 0.4 * statistics.median(times)
-        ):
-            t0 = time.perf_counter()
-            try:
-                rows = len(fn(spark, sf_dir).collect())
-                times.append(time.perf_counter() - t0)
-            except Exception as e:
-                errors[name] = f"{type(e).__name__}: {e}"[:300]
-                break
-            extra += 1
-        if name in errors:
-            continue
-        if times:
-            med = statistics.median(times)
-            detail[name] = {
-                "median": round(med, 3),
-                "min": round(min(times), 3),
-                "max": round(max(times), 3),
-                # per-query noise floor: rep spread relative to the median.
-                # Round-over-round deltas SMALLER than this are contention
-                # noise (shared local[32] JVM), not plan changes — compare
-                # medians only past this floor, or compare the mins.
-                "spread_pct": round(100.0 * (max(times) - min(times)) / med, 1) if med else 0.0,
-                "reps": len(times),
-                "rows": rows,
-            }
-            print(
-                f"{name:28s} med={med:7.2f}s  "
-                f"[{min(times):.2f}..{max(times):.2f}] rows={rows}",
-                file=sys.stderr,
-            )
-
-    medians = {k: v["median"] for k, v in detail.items()}
-    total = round(sum(medians.values()), 3)
-    # Contention-free floor + suite-level noise estimate: total_min is the
-    # sum of per-query BEST reps (what the suite costs without scheduler /
-    # GC contention); spread percentiles say how trustworthy per-query
-    # round-over-round deltas are (r5 closing runs differed 207.5 vs
-    # 171.5 s minutes apart on identical code — that gap is the noise this
-    # block quantifies).
-    total_min = round(sum(v["min"] for v in detail.values()), 3)
-    spreads = sorted(v["spread_pct"] for v in detail.values())
-    noise = {
-        "total_min": total_min,
-        "median_spread_pct": spreads[len(spreads) // 2] if spreads else 0.0,
-        "p90_spread_pct": spreads[int(len(spreads) * 0.9)] if spreads else 0.0,
-    }
-    sf = _sf_from_dir(sf_dir)
-    full = {
-        "metric": "suite_seconds",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "reps": reps,
-        "warmup": warmup,
-        "order": "canonical-sorted",
-        "n_queries": len(detail) + len(errors),
-        "n_errors": len(errors),
-        "errors": errors,
-        "noise": noise,
-        "queries": medians,
-        "detail": detail,
-    }
-    with open(os.path.join(REPO_ROOT, "BENCH_SUMMARY.json"), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    # ALSO persist per-round (keyed off the driver's BENCH_r* artifacts:
-    # this run belongs to the round after the last recorded one) — round 3's
-    # per-query medians survived only in a truncated driver stdout tail, so
-    # round-over-round comparisons need a durable full copy per round.
-    import re as _re
-
-    rounds = [
-        int(m.group(1))
-        for fn in os.listdir(REPO_ROOT)
-        if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-    ]
-    cur_round = (max(rounds) + 1) if rounds else 1
-    with open(
-        os.path.join(REPO_ROOT, f"BENCH_SUMMARY_r{cur_round:02d}.json"), "w"
-    ) as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-
-    slowest = sorted(medians, key=medians.get, reverse=True)[:3]
-    compact = {
-        "metric": "suite_seconds",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "reps": reps,
-        "n_queries": len(detail) + len(errors),
-        "n_errors": len(errors),
-        # keep the contract's "queries" key but only the 3 slowest medians —
-        # the full ~96-entry map is ~3 KB and the driver's stdout capture
-        # window is ~520 bytes; the complete map lives in BENCH_SUMMARY.json
-        "queries": {k: medians[k] for k in slowest},
-        "queries_truncated": True,
-        "queries_file": "BENCH_SUMMARY.json",
-    }
-    # exactly one compact machine-parseable line on stdout, nothing after it
-    print(json.dumps(compact, separators=(",", ":")))
+    names = args.names or sorted(registry)  # canonical order: see docstring
+    detail, errors = time_queries(spark, registry, names, sf_dir, reps, warmup)
+    if args.names:
+        line = {"repo": repo, "sf_dir": sf_dir, "queries": detail, "errors": errors}
+    else:
+        full, line = _summaries(detail, errors, sf_dir, reps, warmup)
+        for fn in ("BENCH_SUMMARY.json", f"BENCH_SUMMARY_r{bench_round():02d}.json"):
+            with open(os.path.join(REPO_ROOT, fn), "w") as f:
+                json.dump(full, f, indent=1, sort_keys=True)
+    # exactly one machine-parseable line on stdout, nothing after it
+    print(json.dumps(line, separators=(",", ":")))
     sys.stdout.flush()
     spark.stop()
     return 1 if errors else 0

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 
 from semantic_index_spark.functions import text as T
 from semantic_index_spark.functions import vector as V
+from semantic_index_spark.session import release_pin
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -426,9 +427,8 @@ def connected_components(
     # pin the edge list ONCE — without this every iteration would
     # re-derive the (possibly expensive) pair-generation lineage. LAZY
     # pin (r14): materializes inside the first round's convergence job
-    # instead of an up-front count action, and the storage is released by
-    # the ContextCleaner when the RDD is GC'd (the old cache()+count()+
-    # unpersist() needed the explicit pair).
+    # instead of an up-front count action. Released after the loop: by
+    # then the last round's pin holds every label.
     edges = fwd.unionByName(rev).localCheckpoint(eager=False)
     # localCheckpoint truncates the logical plan each round: the iterative
     # lineage would otherwise grow linearly and re-analyze quadratically.
@@ -439,6 +439,7 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .localCheckpoint(eager=False)
     )
+    pin = labels
     for _ in range(max_iter):
         # min label among (self, neighbors' labels)
         prop = (
@@ -470,9 +471,14 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         changed = merged.filter(F.col("comp") != F.col("_old")).limit(1).count()
+        # the probe filled this round's pin in, so the one it supersedes is
+        # dead; DataFrame.unpersist() would not free a localCheckpoint pin
+        release_pin(pin)
+        pin = merged
         labels = merged.select("id", "comp")
         if changed == 0:
             break
+    release_pin(edges)
     return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component"))
 
 

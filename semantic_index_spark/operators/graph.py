@@ -99,7 +99,14 @@ def pagerank(
         # lineage stays O(1) — but the whole recurrence now runs inside
         # the CALLER'S single action instead of paying one driver-blocking
         # job round-trip per iteration (guide §1.2; at 100 TB each eager
-        # checkpoint was a full cluster barrier).
+        # checkpoint was a full cluster barrier). Caveat: until doCheckpoint
+        # finalizes the pin, a block lost or evicted in between is silently
+        # recomputed from its shuffle lineage, whose float sums may come out
+        # in a different order, so the dangling agg and the contribution
+        # join could each see slightly different ranks. An eager pin froze
+        # one copy. Disk-backed local mode makes this effectively
+        # unreachable; on a cluster it is the same exposure as executor
+        # loss, where local checkpoints are gone too.
         ranks = ranks.localCheckpoint(eager=False)
         # mass that dangling nodes spread uniformly this step: 1-row agg,
         # broadcast into the closure of the next plan via crossJoin
@@ -343,8 +350,9 @@ def label_propagation(
     in-neighbors, ties broken by the SMALLEST label; a node with no
     in-neighbors keeps its label. Pass a symmetrized edge list for the
     undirected algorithm; ``assume_distinct=True`` skips the internal
-    edge dedup when the caller already materialized a distinct edge list
-    (one corpus shuffle saved — see ``q_modularity``). Fixed ``iters`` keeps the recurrence
+    edge dedup and pin when the caller already materialized a distinct
+    edge list (one corpus shuffle and one stored copy saved — see
+    ``q_modularity``). Fixed ``iters`` keeps the recurrence
     oracle-unrollable as plain CTEs (same contract as :func:`pagerank`).
     [absent in reference — north-star extension]
 
@@ -355,12 +363,12 @@ def label_propagation(
     per round so lineage stays O(1) deep. Returns (node, label)."""
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if not assume_distinct:
-        e = e.distinct()
-    # lazy pin (r14): one materialization shared by every round's join +
-    # the node derivation, released by the ContextCleaner when the RDD is
-    # GC'd (the old cache()+unpersist() pair freed nothing once the rounds
-    # went lazy — unpersist ran before the caller's action populated it)
-    e = e.localCheckpoint(eager=False)
+        # lazy pin (r14): one materialization shared by every round's join
+        # + the node derivation, released by the ContextCleaner when the
+        # RDD is GC'd (an unpersist here would run before the caller's
+        # action populated it). With assume_distinct the caller has pinned
+        # the list already, and a second pin would store a second copy.
+        e = e.distinct().localCheckpoint(eager=False)
     nodes = e.select(F.col("_s").alias("node")).union(e.select("_d")).distinct()
     lbl = nodes.withColumn("label", F.col("node")).localCheckpoint(eager=False)
     for _ in range(iters):

@@ -63,6 +63,17 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def release_pin(df) -> None:
+    """Free the blocks of a ``localCheckpoint`` pin. ``DataFrame.unpersist()``
+    is a no-op on such a frame: its blocks belong to the RDD inside the
+    ``LogicalRDD`` leaf, so this unpersists that RDD (non-blocking). ``df``
+    must be the frame ``localCheckpoint`` returned, not a projection of it.
+    Release a pin only once everything that reads it is materialized: once
+    the pin is filled in its lineage is cut, so a later read of a released
+    block fails ("checkpoint block not found") instead of recomputing it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 # Resolved-relation cache: the unexecuted DataFrame handle per
 # (session, sf_dir, table). A path-based ``spark.read.parquet`` builds a
 # fresh InMemoryFileIndex and re-reads the parquet footer on EVERY call

@@ -3,12 +3,13 @@
 
 These tests are pure-Python (no SparkSession) — they guard the contract the
 round-7 ADVICE flagged (a duplicate dict key silently shrinking the registry)
-and the window pin that CORRECTNESS verification depends on.
+and the verification window that CORRECTNESS checks depend on.
 """
 
 from __future__ import annotations
 
 import ast
+import json
 import os
 
 import __spark_entry__ as entrymod
@@ -46,12 +47,37 @@ def test_oracle_sql_dict_literal_has_no_duplicate_keys():
     assert not dupes, f"duplicate keys in oracle_sql() source: {dupes}"
 
 
-def test_driver_window_is_pinned_and_leads_registry():
-    window = entrymod._DRIVER_WINDOW_R14
+def test_driver_window_leads_registry():
+    canonical = _dict_literal_string_keys("queries")
+    window = entrymod._driver_window(canonical, os.path.dirname(ENTRY_PATH))
     assert len(window) == 50
     assert len(set(window)) == 50
     names = list(entrymod.queries().keys())
     assert names[:50] == window
+    assert sorted(names) == sorted(canonical)
+
+
+def test_driver_window_rotation_policy(tmp_path):
+    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+
+    def write(rnd, rows):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+    write(1, {"n1": green, "n2": green, "n3": {**green, "err": "boom"}, "n4": green,
+              "n6": green, "n8": green})
+    write(2, {"n2": {**green, "hash_match": False}, "n4": green, "n6": green})
+    write(3, {"n3": green, "n6": "timeout"})
+    # not a round file: ignored
+    (tmp_path / "CORRECTNESS_r03_c8.json").write_text(json.dumps({"n5": green}))
+    names = [f"n{i}" for i in range(1, 9)]
+    # never checked (n5, n7), then latest row failed (n2 in r2, n6 in r3),
+    # then stalest: r1 (n1, n8 in canonical order), r2 (n4), r3 (n3)
+    expected = ["n5", "n7", "n2", "n6", "n1", "n8", "n4", "n3"]
+    assert entrymod._driver_window(names, str(tmp_path)) == expected
+    # canonical order breaks every tie
+    assert entrymod._driver_window(names[::-1], str(tmp_path)) == [
+        "n7", "n5", "n6", "n2", "n8", "n1", "n4", "n3"]
+    assert entrymod._driver_window(names, str(tmp_path / "none")) == names
 
 
 def test_every_query_has_an_oracle():

@@ -7,6 +7,10 @@ BENCH_r{N}.json whose "tail" fragment embeds per-query timings. Prints
 queries whose ratio new/old exceeds the threshold (default 1.5) either way
 — with single-shot jitter of ±2-3× at sf0.1, treat single-rep inputs as
 indicative only; medians (reps >= 3) are the comparable form.
+
+When both inputs carry per-query Spark job counts (``detail.*.jobs`` in a
+summary, or ``queries.*.jobs`` in a ``bench.py name ...`` line), every query
+whose count changed is listed too: job counts do not move with noise.
 """
 
 from __future__ import annotations
@@ -16,12 +20,24 @@ import re
 import sys
 
 
-def load_timings(path: str) -> dict[str, float]:
+def _load(path: str) -> tuple[str, dict]:
     raw = open(path).read()
     try:
-        d = json.loads(raw)
+        return raw, json.loads(raw)
     except json.JSONDecodeError:
-        d = {}
+        return raw, {}
+
+
+def load_jobs(path: str) -> dict[str, int]:
+    d = _load(path)[1]
+    block = d.get("detail") or d.get("queries") if isinstance(d, dict) else None
+    if not isinstance(block, dict):
+        return {}
+    return {k: v["jobs"] for k, v in block.items() if isinstance(v, dict) and "jobs" in v}
+
+
+def load_timings(path: str) -> dict[str, float]:
+    raw, d = _load(path)
     if isinstance(d, dict) and isinstance(d.get("queries"), dict) and d["queries"]:
         q = d["queries"]
         # full summary: {"queries": {name: median}} or detail {"median": ...}
@@ -57,6 +73,12 @@ def main() -> int:
         print(f"  SLOWER {ratio:5.2f}x  {k:30s} {old[k]:7.2f}s -> {new[k]:7.2f}s")
     if not flagged:
         print(f"no query regressed beyond {threshold}x (+0.25s floor)")
+    old_jobs, new_jobs = load_jobs(sys.argv[1]), load_jobs(sys.argv[2])
+    if old_jobs and new_jobs:
+        moved = [k for k in sorted(set(old_jobs) & set(new_jobs)) if old_jobs[k] != new_jobs[k]]
+        print(f"{len(moved)} queries changed job count")
+        for k in moved:
+            print(f"  JOBS {old_jobs[k]:4d} -> {new_jobs[k]:4d}  {k}")
     return 0
 
 

@@ -1,5 +1,6 @@
 """Capture .explain('formatted') for the IVF-PQ / IVF-SQ encode paths
-(the r13 projection-encode optimization) into plans/r13/.
+(the r13 projection-encode optimization) into plans/r<round>/, the round
+being ``bench.bench_round()`` like ``capture_query_plans.py``.
 
 Reconstructs exactly the DataFrame `write_ivfpq_index` / `write_ivfsq_index`
 stage before writing: cell assignment + code computation over the sf
@@ -17,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
 
+from bench import bench_round
 from semantic_index_spark.session import get_spark
 from semantic_index_spark.operators import similarity as S
 
@@ -77,7 +79,8 @@ def main() -> int:
             F.col("_cell"),
         )
     )
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans",
+                           f"r{bench_round():02d}")
     os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, f"ivfpq_encode_{suffix}.txt"), "w") as f:
         f.write(plan_of(pq_rows))

@@ -1,12 +1,11 @@
 """Dump .explain('formatted') for named registry queries into plans/<round>/.
 
-The round directory defaults to r14 and can be overridden with
-``$SPARK_GRAFT_PLAN_DIR`` (e.g. r15 next optimization round).
+The round is ``bench.bench_round()``: one past the highest ``BENCH_r*.json``.
 
 Usage:
     python tools/capture_query_plans.py <repo_root> <suffix> name [name ...]
 
-Writes plans/r13/<name>_<suffix>.txt under THIS repo (cwd's checkout), while
+Writes plans/r<round>/<name>_<suffix>.txt under THIS repo, while
 building the DataFrames from the registry at <repo_root> — so a prior-commit
 worktree produces the `before` files and the working tree the `after` files.
 """
@@ -19,7 +18,13 @@ import sys
 from contextlib import redirect_stdout
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def main() -> int:
+    sys.path.insert(0, ROOT)
+    from bench import bench_round
+
     repo = os.path.abspath(sys.argv[1])
     suffix = sys.argv[2]
     names = sys.argv[3:]
@@ -31,8 +36,7 @@ def main() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     spark = get_spark(app_name="plan-capture", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
-    plan_dir = os.environ.get("SPARK_GRAFT_PLAN_DIR", "r14")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", plan_dir)
+    out_dir = os.path.join(ROOT, "plans", f"r{bench_round():02d}")
     os.makedirs(out_dir, exist_ok=True)
     registry = entrymod.queries()
     for name in names:
