@@ -11533,29 +11533,41 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(sm) / count(*) / 1e6, 6) AS mean_silhouette
             FROM m GROUP BY cell
         """,
-        # greedy cooldown chain as a list_reduce fold (acc = kept list)
+        # greedy cooldown chain as a recursive walk over each user's
+        # ordered distinct seconds (a list_reduce fold with a growing list
+        # accumulator returned another user's chain on DuckDB 1.0.0)
         "throttle_dedup": """
-            WITH g AS (
-                SELECT user_id, count(*)::BIGINT AS n_events,
-                       list_sort(list_distinct(list(floor(epoch(ts))::BIGINT)))
-                           AS xs
+            WITH RECURSIVE r AS (
+                SELECT user_id, x,
+                       row_number() OVER (PARTITION BY user_id ORDER BY x) AS i
+                FROM (SELECT DISTINCT user_id, floor(epoch(ts))::BIGINT AS x
+                      FROM events)
+            ),
+            walk AS (
+                SELECT user_id, i, x AS first_kept, x AS last_kept,
+                       1::BIGINT AS n_kept
+                FROM r WHERE i = 1
+                UNION ALL
+                SELECT w.user_id, r.i, w.first_kept,
+                       CASE WHEN r.x >= w.last_kept + 1800
+                            THEN r.x ELSE w.last_kept END,
+                       w.n_kept + CASE WHEN r.x >= w.last_kept + 1800
+                                       THEN 1 ELSE 0 END
+                FROM walk w JOIN r ON r.user_id = w.user_id AND r.i = w.i + 1
+            ),
+            g AS (
+                SELECT user_id, count(*)::BIGINT AS n_events
                 FROM events GROUP BY 1
             ),
-            k AS (
-                SELECT user_id, n_events, len(xs)::BIGINT AS n_distinct_seconds,
-                       list_reduce(
-                           list_prepend([xs[1]],
-                                        list_transform(xs[2:], x -> [x])),
-                           (acc, x) -> CASE WHEN x[1] >= acc[-1] + 1800
-                                       THEN list_append(acc, x[1])
-                                       ELSE acc END
-                       ) AS kept
-                FROM g
+            d AS (
+                SELECT user_id, count(*)::BIGINT AS n_distinct_seconds
+                FROM r GROUP BY 1
             )
-            SELECT user_id, n_events, n_distinct_seconds,
-                   len(kept)::BIGINT AS n_kept,
-                   kept[1] AS first_kept_tse, kept[-1] AS last_kept_tse
-            FROM k
+            SELECT g.user_id, g.n_events, d.n_distinct_seconds, w.n_kept,
+                   w.first_kept AS first_kept_tse, w.last_kept AS last_kept_tse
+            FROM g JOIN d ON d.user_id = g.user_id
+            JOIN walk w ON w.user_id = g.user_id
+                       AND w.i = d.n_distinct_seconds
         """,
         # Holt fold with the identical expression order — exact-cents
         # daily inputs make the smoothed doubles bit-identical

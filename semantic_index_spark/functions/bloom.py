@@ -62,19 +62,6 @@ def bloom_bits(df: DataFrame, col: str, m: int = 1 << 16, k: int = 4) -> DataFra
     )
 
 
-def bloom_merge(*blooms: DataFrame) -> DataFrame:
-    """OR together filters built with the same (m, k): union the sparse bit
-    sets. ``bloom_merge(bits(A), bits(B)) == bits(A ∪ B)`` exactly — the
-    property that lets a 100 TB pipeline build per-day / per-source filters
-    independently and fold them into one corpus-wide filter."""
-    if not blooms:
-        raise ValueError("bloom_merge: need at least one bloom")
-    out = blooms[0]
-    for b in blooms[1:]:
-        out = out.unionByName(b)
-    return out.distinct()
-
-
 def bloom_contains(
     bloom: DataFrame, df: DataFrame, col: str, m: int = 1 << 16, k: int = 4
 ) -> DataFrame:

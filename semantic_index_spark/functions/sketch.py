@@ -24,7 +24,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 from semantic_index_spark.functions.text import md5_bigint
 
@@ -192,7 +192,7 @@ def cms_sketch(df: DataFrame, col: str, depth: int = 4, width: int = 2048) -> Da
     map-side (partial count agg), so the shuffle is bounded by
     ``depth·width`` keys per map task regardless of input size — sketch
     state is O(depth·width) at any scale. Counters from different
-    partitions / days / sources merge by ``+`` (``cms_merge``), which is
+    partitions / days / sources merge by ``+`` per (r, b), which is
     what makes this the 100 TB path for "how often does each of these
     terms occur" when the full vocabulary groupBy is too wide to keep."""
     if depth < 1 or width < 2:
@@ -207,18 +207,6 @@ def cms_sketch(df: DataFrame, col: str, depth: int = 4, width: int = 2048) -> Da
         .groupBy("r", "b")
         .agg(F.count("*").alias("n"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Union counter rows from independently-built sketches (same depth /
-    width) into one sketch by summing per (r, b) — the CMS merge property:
-    ``cms_merge(sketch(A), sketch(B)) == sketch(A ∪ B)`` exactly."""
-    if not sketches:
-        raise ValueError("cms_merge: need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("r", "b").agg(F.sum("n").alias("n"))
 
 
 def cms_lookup(
@@ -616,23 +604,6 @@ def hashrank_sample(
             F.row_number().over(Window.orderBy("h")).cast("int").alias("rank"),
             "h",
             *payload_cols,
-        )
-    )
-
-
-def merge_hashrank_samples(a: DataFrame, b: DataFrame, k: int = 512) -> DataFrame:
-    """Merge two hash-rank samples: union, re-rank by hash, keep the
-    bottom k — exactly the sample of the union (duplicate hashes from
-    overlapping inputs collapse first, so merging a sample with itself is
-    idempotent)."""
-    uni = a.unionByName(b).dropDuplicates(["h"])
-    return (
-        uni.orderBy("h")
-        .limit(k)
-        .drop("rank")
-        .select(
-            F.row_number().over(Window.orderBy("h")).cast("int").alias("rank"),
-            "*",
         )
     )
 

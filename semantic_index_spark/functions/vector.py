@@ -9,19 +9,12 @@ Catalyst can prune the scan to exactly (id, embedding).
 All folds accumulate in DOUBLE (cast per element) in array order, which is
 the same left-to-right order DuckDB's ``list_sum(list_transform(...))``
 uses — required for the driver's hash-compare oracle.
-
-For throughput-critical batch scoring (many query vectors at once) use
-:func:`scores_matrix_udf`, an Arrow-batched pandas_udf that drops to a
-single BLAS ``matmul`` per batch — the Spark analogue of the reference's
-SIMD inner loop, but vectorized across rows *and* dims.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -125,13 +118,6 @@ def l2_distance(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def normalize(a: Column | str) -> Column:
-    """Unit-normalize an array column (returns array<double>)."""
-    a = _to_col(a)
-    n = l2_norm(a)
-    return F.transform(a, lambda x: x.cast("double") / n)
-
-
 def hyperplane_signature(a: Column | str, planes: Sequence[Sequence[float]]) -> Column:
     """Random-hyperplane LSH signature: one sign bit per plane, packed into a
     BIGINT. Deterministic given the planes, SQL-expressible (same formula
@@ -193,26 +179,3 @@ def quantized_dot_literal(qz: Column | str, query: Sequence[float]) -> Column:
         lambda a, x: a + x,
     )
     return qz["scale"] * acc
-
-
-def scores_matrix_udf(dim: int):
-    """Arrow-batched pandas_udf: dot product of an embedding column against a
-    broadcast numpy query vector, computed as one BLAS matvec per Arrow batch.
-
-    ~10-100× faster than row-at-a-time Python and competitive with the
-    JVM fold for wide vectors; the query vector is closed over (broadcast
-    with the serialized UDF), so no join/shuffle is introduced.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    def make(q: "np.ndarray"):
-        qv = np.asarray(q, dtype=np.float64)
-
-        @pandas_udf("double")
-        def score(emb: pd.Series) -> pd.Series:
-            mat = np.vstack(emb.to_numpy())  # (batch, dim) float32
-            return pd.Series(mat.astype(np.float64) @ qv)
-
-        return score
-
-    return make

@@ -902,7 +902,7 @@ def hnsw_maintenance_status(
     spark: SparkSession, path: str, compact_threshold: float = 0.2
 ) -> dict:
     """VACUUM-style DRY-RUN advisor for a persisted HNSW layout — the
-    graph twin of the versioned store's ``maintenance_status`` (round 12,
+    graph twin of the versioned store's :func:`vacuum_report` (round 12,
     completing the create/append/delete/compact/recover lifecycle with an
     inspection verb): report what :func:`compact_hnsw_index` WOULD do
     without mutating anything. Returns ``{n_nodes, n_tombstones,

@@ -1,13 +1,13 @@
-"""Distributed linear algebra over embedding columns: covariance + PCA.
+"""Distributed linear algebra over embedding columns: covariance and
+random projection.
 
 [absent in reference — north-star extension] The standard embedding
 pipeline steps the reference's brute-force scan never needs but a 100 TB
 corpus does: estimate the d×d covariance of an `array<float>` column in
-ONE pass, take the top-k principal components on the driver (d×d is tiny —
-64×64 here, 4096 doubles even at 100 TB of rows), and project the corpus
-onto them with pure JVM expressions. Dim-reduced embeddings cut ANN
-storage/compute ~d/k× with bounded recall loss — the classic pre-step for
-IVF/LSH retrieval (see operators.similarity) and SemDeDup-style clustering.
+ONE pass, and cut dimensions with a fixed random projection. Dim-reduced
+embeddings cut ANN storage/compute ~d/k× with bounded recall loss — the
+classic pre-step for IVF/LSH retrieval (see operators.similarity) and
+SemDeDup-style clustering.
 
 Scale shape: `mapInPandas` computes per-PARTITION Gram partials (one d×d
 numpy matrix per partition, BLAS `X.T @ X` over Arrow batches — never a
@@ -15,19 +15,14 @@ per-row explode of d² pairs), so the shuffle carries ≤ partitions·(d²+d+1)
 tiny rows into a groupBy over ≤ d²+d+1 keys. Partials are `+`-mergeable —
 the same incremental property as the HLL/CMS/histogram sketches, so
 per-day covariances fold into a corpus covariance without re-scanning
-history. Only the d×d result ever reaches the driver (like k-means'
-k·d centroid collect); eigendecomposition is O(d³) driver-side numpy.
-Projection is k literal-vector dot products — whole-stage codegen, no
-Python, no join.
+history. Projection is k literal-vector dot products — whole-stage
+codegen, no Python, no join.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from semantic_index_spark.session import collect_bounded
-from pyspark.sql import Column, DataFrame
-
-from semantic_index_spark.functions.vector import dot_literal
+from pyspark.sql import DataFrame
 
 _ENTRY_SCHEMA = "i int, j int, v double"
 
@@ -83,82 +78,6 @@ def covariance_entries(df: DataFrame, col: str, dim: int) -> DataFrame:
         .mapInPandas(_partials, _ENTRY_SCHEMA)
     )
     return entries.groupBy("i", "j").agg(F.sum("v").alias("v"))
-
-
-def covariance_matrix(df: DataFrame, col: str, dim: int):
-    """Assemble (n, mean[d], cov[d][d]) from the one-pass entries.
-    cov = Σee'/n − μμ' (population covariance). The collect is ≤ d²+d+1
-    rows — the d×d summary, never the data (documented driver edge, same
-    contract as the k-means centroid collect)."""
-    import numpy as np
-
-    rows = collect_bounded(
-        covariance_entries(df, col, dim),
-        dim * dim + dim + 1,
-        "covariance_matrix entries (d\u00b2+d+1 summary rows)",
-    )
-    n = 0.0
-    s = np.zeros(dim)
-    gram = np.zeros((dim, dim))
-    for r in rows:
-        if r["i"] == -1:
-            n = r["v"]
-        elif r["j"] == -1:
-            s[r["i"]] = r["v"]
-        else:
-            gram[r["i"]][r["j"]] = r["v"]
-            gram[r["j"]][r["i"]] = r["v"]
-    if n == 0:
-        raise ValueError("covariance_matrix: empty input")
-    mean = s / n
-    cov = gram / n - np.outer(mean, mean)
-    return int(n), mean, cov
-
-
-def pca_components(df: DataFrame, col: str, dim: int, k: int):
-    """Top-k principal components of ``df[col]`` and their explained-
-    variance ratios. Deterministic: numpy ``eigh`` on the symmetric d×d
-    covariance, eigenvectors sign-fixed so each component's largest-
-    magnitude coordinate is positive (eigh's sign is otherwise arbitrary
-    and would make downstream projections run-dependent).
-
-    Returns (components: list[k][d], explained_ratio: list[k], mean[d])."""
-    import numpy as np
-
-    if not 1 <= k <= dim:
-        raise ValueError(f"pca_components: need 1 <= k <= dim, got k={k}")
-    _, mean, cov = covariance_matrix(df, col, dim)
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    comps = []
-    for idx in order:
-        v = vecs[:, idx]
-        if v[int(np.argmax(np.abs(v)))] < 0:
-            v = -v
-        comps.append([float(x) for x in v])
-    total = float(np.sum(np.clip(vals, 0.0, None))) or 1.0
-    ratios = [max(float(vals[i]), 0.0) / total for i in order]
-    return comps, ratios, [float(x) for x in mean]
-
-
-def pca_project(
-    df: DataFrame,
-    col: str,
-    components: list[list[float]],
-    mean: list[float] | None = None,
-    out: str = "pc",
-) -> Column | DataFrame:
-    """Append the k-dim projection of ``df[col]`` onto ``components``:
-    pc_i = (x − mean)·c_i, computed as k literal-vector dot products —
-    pure JVM codegen (the components ride the expression tree like the
-    flagship query vector), no Python, no join, no shuffle."""
-    cols = []
-    for c in components:
-        p = dot_literal(col, c)
-        if mean is not None:
-            p = p - F.lit(float(sum(m * ci for m, ci in zip(mean, c))))
-        cols.append(p)
-    return df.withColumn(out, F.array(*cols))
 
 
 def random_projection(

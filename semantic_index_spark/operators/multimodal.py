@@ -1,23 +1,22 @@
 """Multimodal column plumbing — images/audio/video as opaque binary columns.
 
 [absent in reference — north-star extension] Pattern: a multimodal row is
-``(id, media: binary, meta: struct)``. Decode / feature-extract / resize /
+``(id, media: binary, meta: struct)``. Decode / feature-extract /
 frame-sample run as Arrow-batched ``mapInPandas`` stages so each executor
 processes columnar batches of blobs without ever collecting to the driver.
 
 The codec layer (round 12 — previously a stub): a REAL pure-numpy decoder
 ships for the uncompressed formats a container without image libraries can
 still handle exactly — binary NetPBM (P5 grayscale / P6 RGB) and 24-bit
-uncompressed BMP — with nearest-neighbor resize and PPM/PGM re-encode
-(:func:`decode_image` / :func:`image_decoder` / :func:`image_resizer`),
-so ``extract_features`` and ``resize_media`` run real pixels end-to-end.
+uncompressed BMP — with PPM/PGM re-encode
+(:func:`decode_image` / :func:`image_decoder`),
+so ``extract_features`` runs real pixels end-to-end.
 Compressed formats (PNG/JPEG) go through PIL WHEN INSTALLED
 (:func:`pil_decode`, capability-gated — absent PIL raises a clear
-ImportError and the pytest skips with reason, the transformWithState
-precedent); ``fake_decode`` remains for plumbing-only tests. At 100 TB the
-blobs dominate I/O: keep media in its own parquet column (columnar pruning
-skips it unless selected) and repartition by size before the decode stage
-so batches are even.
+ImportError and the pytest skips with reason); ``fake_decode`` remains
+for plumbing-only tests. At 100 TB the blobs dominate I/O: keep media in
+its own parquet column (columnar pruning skips it unless selected) and
+repartition by size before the decode stage so batches are even.
 """
 
 from __future__ import annotations
@@ -160,44 +159,6 @@ def sample_frames(
             F.octet_length(frame).alias("n_bytes"),
         )
     )
-
-
-def fake_resize(blob: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for an image resize codec: stride-samples the
-    byte stream to width·height bytes (pads with zeros). Replace with a
-    real codec wrapper (PIL/opencv) via ``resizer=`` in production."""
-    target = max(width * height, 1)
-    if not blob:
-        return bytes(target)
-    if len(blob) >= target:
-        stride = len(blob) / target
-        return bytes(blob[int(i * stride)] for i in range(target))
-    return bytes(blob) + bytes(target - len(blob))
-
-
-def resize_media(
-    df: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize stage over a media DataFrame via Arrow-batched mapInPandas —
-    same plumbing contract as :func:`extract_features`: schema preserved,
-    blobs replaced, width/height metadata updated. ``resizer`` defaults to
-    the STUB (`fake_resize`); inject a real codec in production."""
-    fn = resizer or fake_resize
-
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = pdf.copy()
-            out["media"] = [fn(b if b is not None else b"", width, height) for b in pdf["media"]]
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return df.mapInPandas(_run, schema=df.schema)
 
 
 def media_stats(df: DataFrame) -> DataFrame:
@@ -442,32 +403,6 @@ def image_decoder(blob: bytes) -> dict:
         "checksum": hashlib.md5(blob).hexdigest(),
         "feat_mean": f"{float(img['pixels'].mean()):.4f}",
     }
-
-
-def resize_nearest(pixels, width: int, height: int):
-    """Nearest-neighbor resample to (height, width) — pure numpy fancy
-    indexing (the `PIL.Image.NEAREST` grid: index = floor((i+0.5)*in/out),
-    deterministic and exact)."""
-    import numpy as np
-
-    h, w = pixels.shape[0], pixels.shape[1]
-    rows = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int), h - 1)
-    cols = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int), w - 1)
-    return pixels[rows][:, cols]
-
-
-def image_resizer(blob: bytes, width: int, height: int) -> bytes:
-    """A REAL ``resizer=`` for :func:`resize_media`: decode (numpy path,
-    PIL fallback), nearest-neighbor resample, re-encode as binary
-    PGM/PPM (1- and 3-channel outputs; BMP/PIL inputs re-encode to PNM —
-    the one declared format change)."""
-    if not blob:
-        return blob
-    try:
-        img = decode_image(blob)
-    except ValueError:
-        img = pil_decode(blob)
-    return encode_pnm(resize_nearest(img["pixels"], width, height))
 
 
 def make_test_image(seed: int, width: int = 8, height: int = 6, channels: int = 3) -> bytes:

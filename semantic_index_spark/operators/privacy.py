@@ -84,18 +84,6 @@ def dp_noisy_counts(
     )
 
 
-def laplace_scale(epsilon: float, sensitivity: float = 1.0) -> float:
-    """The noise scale b = Δ/ε — exposed for budget planning tests."""
-    if epsilon <= 0:
-        raise ValueError("epsilon must be positive")
-    return sensitivity / epsilon
-
-
-def expected_abs_error(epsilon: float, sensitivity: float = 1.0) -> float:
-    """E|Lap(b)| = b — what utility an ε buys, for release planning."""
-    return laplace_scale(epsilon, sensitivity)
-
-
 def _py_laplace_noise(key: str, epsilon: float, seed: str = "dp:") -> float:
     """Python reference of the deterministic noise draw (tests)."""
     import hashlib

@@ -519,9 +519,9 @@ def array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time SLIDING windows (2h window, 1h slide) in batch form —
-    the same ``F.window(ts, window, slide)`` operator the streaming
-    ``sliding_avg`` builder uses, so the batch oracle certifies the
-    streaming semantics. Each event lands in window/slide = 2 windows;
+    the same ``F.window(ts, window, slide)`` operator a streaming
+    aggregation uses, so the batch oracle certifies the streaming
+    semantics. Each event lands in window/slide = 2 windows;
     Spark expands that assignment JVM-side (the oracle replays it as an
     explicit 2-element unnest of epoch-aligned starts)."""
     ev = load_table(spark, sf_dir, "events")
@@ -618,8 +618,8 @@ def batch_sessionization(spark: SparkSession, sf_dir: str, gap_s: int = 1800) ->
 
 
 def session_window_agg(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> DataFrame:
-    """Native ``F.session_window`` in BATCH — the same operator the streaming
-    builder uses (streaming/ingest.py:session_windows), so the session-window
+    """Native ``F.session_window`` in BATCH — the same operator a streaming
+    aggregation uses, so the session-window
     category keeps an oracle-checked batch row even when streaming infra
     flakes. Spark merges two events into one session when the later event
     starts at or before the earlier session's end (ts + gap, INCLUSIVE — a

@@ -1125,7 +1125,7 @@ def append_ivfpq_index(
     union (pytest-asserted). Dynamic overwrite keyed by the epoch makes a
     REPLAYED batch overwrite its own partitions instead of duplicating —
     the idempotent-sink upgrade from at-least-once foreachBatch to
-    exactly-once (same recipe as streaming.ingest.idempotent_parquet_sink).
+    exactly-once.
     Re-training codebooks or centroids is the one rebuild event, exactly
     as for :func:`append_ivf_index`."""
     write_ivfpq_index(

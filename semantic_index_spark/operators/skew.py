@@ -13,7 +13,7 @@ corpus through one reducer.
     DuckDB oracle checks. AQE's skew handling covers *join* skew; aggregate
     skew on a 3-distinct-value key still funnels to 3 reducers without
     salting.
-  * ``hash_sample`` / ``hash_split`` — md5-bucket sampling: membership is a
+  * ``hash_split`` — md5-bucket sampling: membership is a
     pure function of the key, so samples are reproducible across runs,
     engines (mirrored in SQL), and growing corpora — the property random()
     sampling lacks and training pipelines need for stable train/test
@@ -54,12 +54,6 @@ def salted_agg(
 
 def _bucket(key: Column | str, buckets: int = 10000) -> Column:
     return F.pmod(md5_bigint(F.col(key) if isinstance(key, str) else key, salt="smp:"), F.lit(buckets))
-
-
-def hash_sample(df: DataFrame, key_col: str, fraction: float, buckets: int = 10000) -> DataFrame:
-    """Deterministic ~``fraction`` sample: keep rows whose md5 bucket falls
-    below fraction·buckets. Same key → same verdict, forever."""
-    return df.filter(_bucket(key_col, buckets) < int(round(fraction * buckets)))
 
 
 def hash_split(
@@ -251,7 +245,7 @@ def weighted_mix(
     up, crawl down) in a training mix.
 
     copies = floor(w) + 1{u < frac(w)} with u = the same md5 bucket
-    ``hash_sample`` uses, so the fractional keep-set is reproducible
+    ``hash_split`` uses, so the fractional keep-set is reproducible
     across runs/engines and nests: the rows kept at w=0.1 are a subset of
     those kept at w=0.2. Shuffle-free — a map-side filter + bounded
     sequence-explode; ``copy_idx`` (1..copies) keeps replicas addressable
@@ -373,12 +367,10 @@ def bloom_filtered_join(
     its result).
 
     This is the manual form of Spark's conf-driven runtime bloom
-    (``spark.sql.optimizer.runtime.bloomFilter.enabled``, surfaced in
-    plans/tuning.py) for when you want the filter to survive a
+    (``spark.sql.optimizer.runtime.bloomFilter.enabled``) for when you want the filter to survive a
     materialization boundary — e.g. screen once, write the survivors, run
     several joins against them — or to ship the filter to another job as
-    a parquet table (:func:`...functions.bloom.bloom_merge` folds daily
-    filters)."""
+    a parquet table."""
     if how not in ("inner", "left_semi", "semi"):
         raise ValueError(
             f"bloom_filtered_join: no-false-negative screening preserves only "

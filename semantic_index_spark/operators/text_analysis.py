@@ -12,7 +12,6 @@ doc_id); nothing is ever broadcast except the single-row corpus count.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas_udf can resolve postponed hints
 import pyspark.sql.functions as F
 from semantic_index_spark.session import collect_bounded
 from pyspark.sql import DataFrame, Window
@@ -744,124 +743,6 @@ def zipf_fit(
         F.count("*").cast("bigint").alias("n_types"),
         F.round(slope, 6).alias("zipf_slope"),
         F.round(r, 6).alias("zipf_r"),
-    )
-
-
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 50,
-    text_col: str = "text",
-    min_count: int = 1,
-    end_mark: str = "</w>",
-    max_word_types: int = 1_000_000,
-) -> list[tuple[str, str]]:
-    """Train a byte-pair-encoding merge list (Sennrich et al. 2016) the way
-    production tokenizer trainers do it: ONE distributed word-count pass
-    collapses the corpus to its (word, count) vocabulary — the only
-    corpus-sized work — and the merge loop then runs driver-side over that
-    vocabulary-sized table (HF `tokenizers` trains from exactly this
-    word-frequency summary). ``min_count`` is the open-vocabulary guard:
-    at 100 TB the distinct-word table is the thing you bound, not the
-    corpus. Deterministic: ties on pair frequency break lexicographically.
-    Returns the ordered merge list for :func:`bpe_encode`.
-
-    Completes the tokenizer story: :func:`bpe_pair_counts` is one merge
-    iteration's statistic at corpus scale; this is the full training loop;
-    ``bpe_encode`` applies the result. [absent in reference]"""
-    counts = collect_bounded(
-        docs.select(F.explode(T.tokens(text_col)).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= min_count),
-        max_word_types,
-        "bpe_train word-type vocabulary (raise min_count or max_word_types)",
-    )
-    vocab: dict[tuple[str, ...], int] = {
-        tuple(list(r["w"]) + [end_mark]): int(r["n"]) for r in counts
-    }
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pair_counts: dict[tuple[str, str], int] = {}
-        for syms, n in vocab.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + n
-        if not pair_counts:
-            break
-        # deterministic argmax: max count, lexicographically smallest pair
-        best = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < 2:
-            break  # nothing repeats: further merges are noise
-        pair = best[0]
-        merged = pair[0] + pair[1]
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, n in vocab.items():
-            out = []
-            i = 0
-            while i < len(syms):
-                if i < len(syms) - 1 and (syms[i], syms[i + 1]) == pair:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + n
-        vocab = new_vocab
-        merges.append(pair)
-    return merges
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    end_mark: str = "</w>",
-) -> DataFrame:
-    """Apply a trained BPE merge list to the corpus: per word, start from
-    characters (+ word-end marker) and apply merges in PRIORITY order
-    (lowest merge rank first — the standard encoder, so encoding is
-    independent of scan order). Executor-side in an Arrow-batched
-    pandas_udf; the merge table rides the closure (broadcast with the
-    serialized UDF — tokenizer-sized, kilobytes). Returns
-    (id, n_bpe_tokens, bpe_tokens: array<string>)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rank = {tuple(m): i for i, m in enumerate(merges)}
-
-    def _encode_word(word: str) -> list[str]:
-        syms = list(word) + [end_mark]
-        while len(syms) > 1:
-            best_i, best_r = -1, None
-            for i in range(len(syms) - 1):
-                r = rank.get((syms[i], syms[i + 1]))
-                if r is not None and (best_r is None or r < best_r):
-                    best_i, best_r = i, r
-            if best_r is None:
-                break
-            syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        return syms
-
-    @pandas_udf("array<string>")
-    def _encode(texts: pd.Series) -> pd.Series:
-        import re
-
-        out = []
-        for t in texts:
-            toks = []
-            for w in re.split(r"\s+", (t or "").strip().lower()):
-                if w:
-                    toks.extend(_encode_word(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    return docs.select(
-        F.col(id_col),
-        _encode(F.col(text_col)).alias("bpe_tokens"),
-    ).select(
-        id_col, F.size("bpe_tokens").alias("n_bpe_tokens"), "bpe_tokens"
     )
 
 

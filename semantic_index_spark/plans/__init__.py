@@ -1,3 +1,3 @@
-from semantic_index_spark.plans import explain, tuning
+from semantic_index_spark.plans import explain
 
-__all__ = ["explain", "tuning"]
+__all__ = ["explain"]

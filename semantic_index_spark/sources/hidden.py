@@ -285,10 +285,6 @@ def _read_meta(table: str) -> dict:
         return json.load(f)
 
 
-def _read_spec(table: str) -> list[dict]:
-    return _read_meta(table)["spec"]
-
-
 def expire_hidden(
     table: str, keep_last: int = 2, orphan_ttl_seconds: float = 24 * 3600.0
 ) -> list[int]:

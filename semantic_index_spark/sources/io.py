@@ -41,30 +41,13 @@ def read_parquet(
     return reader.parquet(path)
 
 
-def write_parquet_snapshot(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """Write-then-swap Parquet snapshot: atomic replacement of ``path``.
-    ``partition_by`` enables partition pruning for downstream readers
-    (e.g. partition the corpus by source/date at 100 TB)."""
-    tmp = path + ".__tmp__"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files (write-then-swap, same
-    atomicity as ``write_parquet_snapshot``). Returns the new file count.
+    ``ceil(total_bytes / target_file_bytes)`` files (write-then-swap). Returns the new file count.
 
     Streaming sinks, micro-batch appends, and over-parallel writers leave
     thousands of KB-sized files; at 100 TB the resulting footer reads +
@@ -125,17 +108,6 @@ def compact_parquet(
     return len(_data_files())
 
 
-def read_json(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """JSON / JSONL scan (reference-compat ingest: its store file is a JSON
-    array — Spark reads it with multiLine when needed)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.json(path)
-
-
 def read_reference_json_array(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Read the reference's exact persistence format — ONE file containing a
     JSON ARRAY of records (`SemanticDatabase.cs:524-525` serializes
@@ -155,7 +127,7 @@ def write_reference_json_array(df: DataFrame, path: str) -> None:
     The format is single-file and non-splittable BY DESIGN (`README.md:2`);
     rows stream through the driver via ``toLocalIterator`` one partition at
     a time — an explicit compat export for reference-sized stores, never
-    the primary sink (that is :func:`write_parquet_snapshot`)."""
+    the primary sink (that is parquet)."""
     import json
 
     tmp = path + ".__tmpfile__"
@@ -202,53 +174,6 @@ def load_reference_json_array(spark: SparkSession, path: str) -> DataFrame:
         ]
     )
     return spark.createDataFrame(rows, schema)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType | None = None, header: bool = True
-) -> DataFrame:
-    """CSV ingest for raw text corpora."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed (hash-clustered) table write: rows are hash-partitioned
-    into ``num_buckets`` files by ``bucket_cols`` at WRITE time, so every
-    later equi-join or aggregation on those columns between same-bucketed
-    tables needs NO shuffle — Catalyst sees the clustering and drops the
-    Exchange. This is the 100 TB lever for repeated fact-fact joins
-    (pay the shuffle once at ingest, never again); tests assert the
-    Exchange-free join plan."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(name)
-
-
-def write_single_json_file(df: DataFrame, path: str) -> None:
-    """Reference-compatible single-file JSONL export (`README.md:2`
-    "single-file"). ``coalesce(1)`` serializes the write — an explicit
-    export for small results, never the primary store (SURVEY.md §7)."""
-    tmp = path + ".__tmpdir__"
-    df.coalesce(1).write.mode("overwrite").json(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    elif os.path.exists(path):
-        os.remove(path)
-    shutil.move(os.path.join(tmp, part), path)
-    shutil.rmtree(tmp)
 
 
 def zorder_key(

@@ -528,104 +528,6 @@ def _reclaim_staged(table: str, ttl_seconds: float) -> None:
             continue  # vanished underneath us — its writer finished
 
 
-def merge_into(
-    spark: SparkSession,
-    table: str,
-    source: DataFrame,
-    key_cols: list[str],
-    op_col: str | None = None,
-    when_matched: str = "update",
-    insert_not_matched: bool = True,
-    schema_evolution: bool = False,
-) -> int:
-    """Delta-style ``MERGE INTO`` against the committed latest snapshot:
-    source rows update matching target keys, insert unmatched keys, and
-    (CDC form) delete via per-row tombstones. Commits the merged state as
-    the next immutable version and returns its number — time travel to
-    the pre-merge state stays one ``read_version`` away.
-
-    Two source shapes:
-      * ``op_col=None``: every source row applies ``when_matched``
-        ("update" or "delete") to its match; unmatched rows insert when
-        ``insert_not_matched`` (MERGE WHEN [NOT] MATCHED).
-      * ``op_col="op"``: per-row "upsert"/"delete" verbs — the CDC-feed
-        MERGE (Delta's whenMatchedDelete(condition) family). A delete for
-        an absent key is a no-op, tombstones never insert.
-
-    Source keys must be UNIQUE — like Delta, a key matched by two source
-    rows raises (nondeterministic merge); pre-compact the feed with
-    ``relational.cdc_apply``-style last-writer-wins first.
-
-    ``schema_evolution=True`` widens the table when the source carries
-    ADDED columns (Delta's mergeSchema-on-MERGE): the new version's
-    schema is target columns + added columns, surviving pre-merge rows
-    surface NULL for them, and time travel reads every historical version
-    under its own (narrower) schema. It also TYPE-widens (Delta
-    typeWidening, round 11): a source column carried under a wider type
-    on the :data:`_WIDEN_CHAINS` lattice (int→bigint, float→double, …)
-    promotes the whole column — surviving rows upcast losslessly, and
-    time travel reads each historical version under its own narrower
-    type. Without the flag, added or widened columns are an error —
-    never a silent drop or coercion. Sources must always carry every
-    existing column; columns are never removed by MERGE; key columns
-    never widen.
-
-    Execution: the relational expansion of MERGE — untouched target rows
-    survive via ONE left-anti equi-join on the key, surviving source
-    rows append — all hash equi-joins on the merge key (broadcast when
-    the batch is small, AQE decides), never a nested loop, and the
-    target is never rewritten in place. This form rewrites the WHOLE
-    snapshot per merge (copy-on-write at table granularity); for the
-    100 TB shape where a merge touches a sliver of the table, use
-    ``merge_into_bucketed`` which rewrites only the key-buckets the
-    source touches."""
-    import pyspark.sql.functions as F
-
-    if when_matched not in ("update", "delete"):
-        raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
-    tv = current_version(table)
-    target = read_version(spark, table, tv)
-    keys = list(key_cols)
-    dup = (
-        source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge_into: source has multiple rows for key {tuple(dup[0][k] for k in keys)}; "
-            "MERGE requires unique source keys (compact the feed first)"
-        )
-    added, widened = _evolve_cols(
-        source, target.schema.fields, [op_col] if op_col else [],
-        schema_evolution, "merge_into", key_cols=keys,
-    )
-    # every column's FINAL type: target's, promoted where the source
-    # widened, plus the added fields' own
-    final_types = {f.name: f.dataType for f in target.schema.fields}
-    final_types.update(widened)
-    for f in added:
-        final_types[f.name] = f.dataType
-    if op_col is None:
-        src = source.withColumn("__op", F.lit(when_matched))
-    else:
-        src = source.withColumnRenamed(op_col, "__op")
-    kept = target.join(src.select(*keys), keys, "left_anti")
-    for c, dt in widened.items():  # survivors upcast into the widened type
-        kept = kept.withColumn(c, F.col(c).cast(dt))
-    for f in added:  # pre-merge survivors surface NULL for added columns
-        kept = kept.withColumn(f.name, F.lit(None).cast(f.dataType))
-    out_cols = target.columns + [f.name for f in added]
-    # narrower source columns upcast into the table's type; widened and
-    # equal-typed columns cast is a no-op
-    upserts = src.filter(F.col("__op") != "delete").drop("__op").select(
-        *[F.col(c).cast(final_types[c]).alias(c) for c in out_cols]
-    )
-    if not insert_not_matched:
-        upserts = upserts.join(target.select(*keys), keys, "left_semi")
-    # conditional on the version the merge PLANNED against, not the one at
-    # commit time — a concurrent commit in between must fail this merge
-    return commit_version(kept.unionByName(upserts), table, expected_version=tv)
-
-
 # --- bucketed incremental table: merge rewrites only touched key-buckets ---
 
 def _manifest_path(table: str, version: int) -> str:
@@ -1236,9 +1138,9 @@ def merge_into_bucketed(
 ) -> int:
     """``MERGE INTO`` a bucketed table rewriting ONLY the buckets the
     source touches — the incremental copy-on-write real table formats do
-    at file granularity. Semantics are identical to ``merge_into`` (same
-    op_col / when_matched / insert contract, same unique-source-key
-    rule); the difference is pure I/O scaling: a batch touching k of
+    at file granularity. ``op_col`` / ``when_matched`` /
+    ``insert_not_matched`` follow SQL MERGE, and source keys must be
+    unique. I/O scales with the touched buckets: a batch touching k of
     n_buckets buckets reads and rewrites k buckets — at 100 TB with a
     1 % daily feed that is the difference between a 1 TB job and a
     100 TB job. Untouched buckets keep their old owning version in the
@@ -1262,7 +1164,7 @@ def merge_into_bucketed(
     never evolve — the bucket hash is type-sensitive."""
     import pyspark.sql.functions as F
 
-    from semantic_index_spark.session import collect_bounded
+    from semantic_index_spark.session import collect_bounded, release_pin
 
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
@@ -1330,86 +1232,93 @@ def merge_into_bucketed(
     else:
         src = source.withColumnRenamed(op_col, "__op")
     src = src.withColumn("__bucket", _bucket_expr(keys, n_buckets)).localCheckpoint(eager=True)
-    # ONE bounded aggregation over the checkpointed source yields BOTH the
-    # affected-bucket list and the unique-source-key validation (r13: the
-    # dup check was previously a SEPARATE action over the raw source
-    # lineage — i.e. the whole source plan ran twice per merge). NULL-safe:
-    # count_distinct skips NULL keys, so a count mismatch only FLAGS a
-    # possible dup — the groupBy recheck (failure path only) decides, with
-    # the same key-tuple error as before.
-    stats = collect_bounded(
-        src.groupBy("__bucket").agg(
-            F.count("*").alias("_n"),
-            F.count_distinct(*[F.col(k) for k in keys]).alias("_nd"),
-        ),
-        n_buckets,
-        "merge_into_bucketed bucket stats",
-    )
-    affected = sorted(r["__bucket"] for r in stats)
-    if any(r["_n"] != r["_nd"] for r in stats):
-        dup = src.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
-        if dup:
-            raise ValueError(
-                f"merge_into_bucketed: source has multiple rows for key "
-                f"{tuple(dup[0][k] for k in keys)}; MERGE requires unique source keys"
-            )
-    tgt_paths = [
-        os.path.join(table, f"v={man['buckets'][str(b)]}", f"__bucket={b}")
-        for b in affected
-        if man["buckets"].get(str(b)) is not None
-    ]
-    if tgt_paths:
-        # outstanding deletion vectors must apply BEFORE the rewrite, or
-        # the rewrite would resurrect DV-deleted rows into the new bucket
-        target = _apply_dv(
-            spark, _read_bucket_files(spark, man, tgt_paths), table, man, set(affected)
-        ).withColumn("__bucket", _bucket_expr(keys, n_buckets))
-        kept = target.join(src.select(*keys), keys, "left_anti")
-        for c, dt in widened.items():  # survivors upcast into the widened type
-            kept = kept.withColumn(c, F.col(c).cast(dt))
-        for f in added:  # rewritten buckets' survivors get typed NULLs
-            kept = kept.withColumn(f.name, F.lit(None).cast(f.dataType))
-    else:
-        kept = None
-    out_cols = data_cols + [f.name for f in added]
-    upserts = src.filter(F.col("__op") != "delete").select(*out_cols, "__bucket")
-    if not insert_not_matched:
-        if kept is None:
-            upserts = upserts.limit(0)
+    pins = [src]
+    try:
+        # ONE bounded aggregation over the checkpointed source yields BOTH the
+        # affected-bucket list and the unique-source-key validation (r13: the
+        # dup check was previously a SEPARATE action over the raw source
+        # lineage — i.e. the whole source plan ran twice per merge). NULL-safe:
+        # count_distinct skips NULL keys, so a count mismatch only FLAGS a
+        # possible dup — the groupBy recheck (failure path only) decides, with
+        # the same key-tuple error as before.
+        stats = collect_bounded(
+            src.groupBy("__bucket").agg(
+                F.count("*").alias("_n"),
+                F.count_distinct(*[F.col(k) for k in keys]).alias("_nd"),
+            ),
+            n_buckets,
+            "merge_into_bucketed bucket stats",
+        )
+        affected = sorted(r["__bucket"] for r in stats)
+        if any(r["_n"] != r["_nd"] for r in stats):
+            dup = src.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
+            if dup:
+                raise ValueError(
+                    f"merge_into_bucketed: source has multiple rows for key "
+                    f"{tuple(dup[0][k] for k in keys)}; MERGE requires unique source keys"
+                )
+        tgt_paths = [
+            os.path.join(table, f"v={man['buckets'][str(b)]}", f"__bucket={b}")
+            for b in affected
+            if man["buckets"].get(str(b)) is not None
+        ]
+        if tgt_paths:
+            # outstanding deletion vectors must apply BEFORE the rewrite, or
+            # the rewrite would resurrect DV-deleted rows into the new bucket
+            target = _apply_dv(
+                spark, _read_bucket_files(spark, man, tgt_paths), table, man, set(affected)
+            ).withColumn("__bucket", _bucket_expr(keys, n_buckets))
+            kept = target.join(src.select(*keys), keys, "left_anti")
+            for c, dt in widened.items():  # survivors upcast into the widened type
+                kept = kept.withColumn(c, F.col(c).cast(dt))
+            for f in added:  # rewritten buckets' survivors get typed NULLs
+                kept = kept.withColumn(f.name, F.lit(None).cast(f.dataType))
         else:
-            upserts = upserts.join(target.select(*keys), keys, "left_semi")
-    result = upserts if kept is None else kept.select(*out_cols, "__bucket").unionByName(upserts)
-    # CHECK constraints: only the incoming rows can introduce a violation
-    # (kept rows passed when they were written; add_constraint validated
-    # the whole table), so enforcement is O(batch), not O(table)
-    _check_constraints(upserts, man.get("constraints"), "merge_into_bucketed")
-    base = {
-        "key_cols": keys,
-        "n_buckets": n_buckets,
-        "schema": json.dumps(new_schema),
-        "__affected": affected,
-        "meta": dict(meta) if meta else {},
-    }
-    stage_extra = finalize = None
-    if _indexes(man):
-        # co-committed indexes (sources/indexed.py): every index's affected
-        # shards' replacements ride THIS commit's staged directory and
-        # manifest — table and indexes can never publish separately.
-        # Materialize `result` FIRST: it feeds two consumers (the staged
-        # data write and the shard build), and a lazy plan evaluated
-        # twice could publish index shards disagreeing with the bucket
-        # data if any input were non-deterministic (round 12)
-        from semantic_index_spark.sources.indexed import _stage_merge_index
+            kept = None
+        out_cols = data_cols + [f.name for f in added]
+        upserts = src.filter(F.col("__op") != "delete").select(*out_cols, "__bucket")
+        if not insert_not_matched:
+            if kept is None:
+                upserts = upserts.limit(0)
+            else:
+                upserts = upserts.join(target.select(*keys), keys, "left_semi")
+        result = upserts if kept is None else kept.select(*out_cols, "__bucket").unionByName(upserts)
+        # CHECK constraints: only the incoming rows can introduce a violation
+        # (kept rows passed when they were written; add_constraint validated
+        # the whole table), so enforcement is O(batch), not O(table)
+        _check_constraints(upserts, man.get("constraints"), "merge_into_bucketed")
+        base = {
+            "key_cols": keys,
+            "n_buckets": n_buckets,
+            "schema": json.dumps(new_schema),
+            "__affected": affected,
+            "meta": dict(meta) if meta else {},
+        }
+        stage_extra = finalize = None
+        if _indexes(man):
+            # co-committed indexes (sources/indexed.py): every index's affected
+            # shards' replacements ride THIS commit's staged directory and
+            # manifest — table and indexes can never publish separately.
+            # Materialize `result` FIRST: it feeds two consumers (the staged
+            # data write and the shard build), and a lazy plan evaluated
+            # twice could publish index shards disagreeing with the bucket
+            # data if any input were non-deterministic (round 12)
+            from semantic_index_spark.sources.indexed import _stage_merge_index
 
-        result = result.localCheckpoint(eager=True)
-        stage_extra, finalize = _stage_merge_index(man, result, affected)
-    # a rewritten bucket has its DVs folded into the data — clear them;
-    # the commit is conditional on `man` and rebases over concurrent
-    # commits that touched only DISJOINT buckets (_publish_bucketed)
-    return _commit_bucketed(
-        table, result, base, man, dv_clear=affected,
-        stage_extra=stage_extra, finalize_manifest=finalize,
-    )
+            result = result.localCheckpoint(eager=True)
+            pins.append(result)
+            stage_extra, finalize = _stage_merge_index(man, result, affected)
+        # a rewritten bucket has its DVs folded into the data — clear them;
+        # the commit is conditional on `man` and rebases over concurrent
+        # commits that touched only DISJOINT buckets (_publish_bucketed)
+        return _commit_bucketed(
+            table, result, base, man, dv_clear=affected,
+            stage_extra=stage_extra, finalize_manifest=finalize,
+        )
+    finally:
+        # nothing reads the pins once the commit returned or raised
+        for pin in pins:
+            release_pin(pin)
 
 
 def delete_bucketed(
@@ -1572,7 +1481,7 @@ def vacuum_report(
     orphan_ttl_seconds: float = 24 * 3600.0,
 ) -> dict:
     """Dry-run VACUUM advisor (round 13 — advisor symmetry with
-    ``maintenance_status`` / ``hnsw_maintenance_status`` /
+    ``hnsw_maintenance_status`` /
     ``ivf_maintenance_status``): report exactly what
     :func:`expire_bucketed` WOULD reclaim, mutating nothing — the
     numbers a retention daemon alerts on before acting. Returns::
@@ -1961,82 +1870,6 @@ def rename_column(table: str, old: str, new: str) -> int:
     return final
 
 
-def table_history(table: str) -> list[dict]:
-    """``DESCRIBE HISTORY``: one dict per retained commit, newest first —
-    version, commit wall-time (from the side ledger; None for versions
-    recorded before timestamp tracking), whether the version is still
-    readable (not expired), and for bucketed tables the commit's shape
-    (buckets owned, DV lists touched, schema width, caller ``meta``).
-    Pure driver-side metadata reads — no Spark job, O(retained
-    versions)."""
-    cur = current_version(table)
-    if cur is None:
-        return []
-    try:
-        with open(_commit_ts_path(table)) as f:
-            ts_map = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        ts_map = {}
-    out = []
-    for v in range(cur, -1, -1):
-        entry: dict = {
-            "version": v,
-            "timestamp": ts_map.get(str(v)),
-            "readable": os.path.isdir(os.path.join(table, f"v={v}"))
-            or os.path.exists(_manifest_path(table, v)),
-        }
-        if os.path.exists(_manifest_path(table, v)):
-            man = _read_manifest(table, v)
-            owned = sorted(
-                int(b) for b, o in man["buckets"].items() if o == v
-            )
-            entry.update(
-                {
-                    "buckets_written": owned,
-                    "dv_buckets": sorted(
-                        int(b) for b, vs in man.get("dv", {}).items() if v in vs
-                    ),
-                    "n_columns": len(json.loads(man["schema"])["fields"]),
-                    "meta": man.get("meta", {}),
-                }
-            )
-        out.append(entry)
-    return out
-
-
-def maintenance_status(table: str, small_file_bytes: int = 8 * 1024 * 1024) -> dict:
-    """The OPTIMIZE advisor: per-bucket file counts, small-file counts,
-    and outstanding deletion-vector backlog for the current version of a
-    bucketed table — the numbers an auto-compaction policy triggers on
-    (Delta's optimize-candidates heuristics). Driver-side listing only;
-    at object-store scale this is the manifest walk a maintenance daemon
-    already does. Returns ``{bucket: {files, small_files, bytes,
-    dv_versions}}`` plus a ``candidates`` list (buckets with DVs or >1
-    file, the ones :func:`optimize_bucketed` would visit)."""
-    man = _read_manifest(table, None)
-    stats: dict = {}
-    for b, owner in man["buckets"].items():
-        if owner is None:
-            continue
-        bdir = os.path.join(table, f"v={owner}", f"__bucket={b}")
-        files = [
-            f
-            for f in (os.listdir(bdir) if os.path.isdir(bdir) else [])
-            if f.endswith(".parquet")
-        ]
-        sizes = [os.path.getsize(os.path.join(bdir, f)) for f in files]
-        stats[int(b)] = {
-            "files": len(files),
-            "small_files": sum(1 for s in sizes if s < small_file_bytes),
-            "bytes": sum(sizes),
-            "dv_versions": len(man.get("dv", {}).get(b, [])),
-        }
-    candidates = sorted(
-        b for b, s in stats.items() if s["dv_versions"] > 0 or s["files"] > 1
-    )
-    return {"buckets": stats, "candidates": candidates}
-
-
 def maintain_group_agg(
     base: DataFrame,
     changes: DataFrame,
@@ -2128,6 +1961,8 @@ def optimize_bucketed(
     change: same contract, same bit-identical logical table."""
     import pyspark.sql.functions as F
 
+    from semantic_index_spark.session import release_pin
+
     man = _read_manifest(table)
     keys, n_buckets = man["key_cols"], man["n_buckets"]
     if buckets is None:
@@ -2168,7 +2003,7 @@ def optimize_bucketed(
         rows = spark.createDataFrame(
             [], StructType.fromJson(json.loads(man["schema"]))
         ).withColumn("__bucket", F.lit(0).cast("bigint"))
-    stage_extra = finalize = None
+    stage_extra = finalize = pin = None
     if _indexes(man):
         # co-committed indexes: OPTIMIZE is the compaction half of the DV
         # trade for the index too — the rewritten buckets' shard graphs
@@ -2180,11 +2015,15 @@ def optimize_bucketed(
 
         # one evaluation feeds both the data write and the shard build
         # (checkpoint preserves the zorder sortWithinPartitions layout)
-        rows = rows.localCheckpoint(eager=True)
+        rows = pin = rows.localCheckpoint(eager=True)
         stage_extra, finalize = _stage_merge_index(
             man, rows, list(affected) + list(dv_only)
         )
-    return _commit_bucketed(
-        table, rows, base, man, dv_clear=set(affected) | set(dv_only),
-        stage_extra=stage_extra, finalize_manifest=finalize,
-    )
+    try:
+        return _commit_bucketed(
+            table, rows, base, man, dv_clear=set(affected) | set(dv_only),
+            stage_extra=stage_extra, finalize_manifest=finalize,
+        )
+    finally:
+        if pin is not None:
+            release_pin(pin)

@@ -3,8 +3,8 @@
 Maps the reference's async-stream ingest —
 ``AddRangeAsync(IAsyncEnumerable<T>)`` consumes an unbounded item stream
 (`SemanticDatabase.cs:213-221`) — onto ``readStream`` → ``foreachBatch``
-upsert, and adds the event-time operators (watermarks, tumbling/sliding/
-session windows, stateful dedup) the reference lacks
+upsert, and adds the event-time operators (watermarks, stream-stream
+joins, stateful dedup) the reference lacks
 [absent in reference — north-star extension].
 
 All builders operate on any streaming DataFrame; tests drive them with the
@@ -58,50 +58,6 @@ def stream_events(spark, path: str, schema) -> DataFrame:
     return stream
 
 
-def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time window counts with a watermark bounding state:
-    late rows beyond the watermark are dropped, state for closed windows is
-    evicted — the only way windowed aggregation state stays O(open windows)
-    instead of O(stream length) at scale."""
-    return (
-        ensure_event_time(events).withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def sliding_avg(events: DataFrame, window: str = "2 hours", slide: str = "1 hour") -> DataFrame:
-    """Sliding window average event value."""
-    return (
-        ensure_event_time(events).withWatermark("ts", "4 hours")
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.round(F.avg("value"), 6).alias("avg_value"))
-        .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "avg_value")
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per user: a session closes after `gap` of inactivity.
-    State is per-open-session; the watermark closes and evicts sessions."""
-    return (
-        ensure_event_time(events).withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("session_start"),
-            F.unix_timestamp(F.col("w.end")).alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
 def dedup_within_watermark(events: DataFrame, keys: list[str], watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup with bounded state —
     ``dropDuplicatesWithinWatermark`` keeps keys only within the watermark
@@ -140,29 +96,6 @@ def stream_upsert_into_index(stream_df: DataFrame, index, checkpoint: str) -> Da
     return stream_df.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint)
 
 
-def idempotent_parquet_sink(path: str):
-    """Exactly-once parquet append via ``foreachBatch``: each micro-batch
-    lands under ``batch_id=<epoch>`` with DYNAMIC partition overwrite, so a
-    replayed epoch (post-crash restart re-delivers the last uncommitted
-    batch) OVERWRITES its own partition instead of appending duplicates —
-    foreachBatch alone is at-least-once; (deterministic batch content,
-    idempotent write) upgrades it to exactly-once. The standard recipe for
-    non-transactional sinks; on a table format (Delta/Iceberg) the txn
-    commit replaces the partition trick. Returns the callback for
-    ``writeStream.foreachBatch(...)``."""
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    return _apply
-
-
 def stream_stream_join(
     left: DataFrame,
     right: DataFrame,
@@ -187,20 +120,6 @@ def stream_stream_join(
             f"AND r.{right_ts} >= l.{left_ts} - INTERVAL {within}"
         ),
     )
-
-
-def stream_static_enrich(
-    events: DataFrame, dim: DataFrame, on: str = "user_id", how: str = "left"
-) -> DataFrame:
-    """Stream-static enrichment: each micro-batch of events joins a STATIC
-    dimension (user/account/document attributes). Stateless — nothing is
-    buffered across batches, no watermark needed — and the dim side is
-    explicitly broadcast, so at cluster scale every executor holds the dim
-    hash table once and the stream never shuffles. For dims too big to
-    broadcast, pre-bucket both sides on the key instead (sources/io.py:
-    ``write_bucketed_table``). [absent in reference — north-star extension]
-    """
-    return events.join(F.broadcast(dim), on=on, how=how)
 
 
 def stateful_user_totals(events: DataFrame) -> DataFrame:
@@ -288,47 +207,6 @@ def incremental_hll_sink(path: str, col: str, p: int = 12):
     )
 
 
-def incremental_kmv_sink(path: str, col: str, by: str, k: int = 256):
-    """Per-group KMV bottom-k sketch maintenance across micro-batches:
-    sketches merge by re-ranking the union of hashes and keeping each
-    group's k smallest (the KMV mergeability contract, pytest-proven
-    equal to the one-shot sketch), so the table at ``path`` always
-    supports exact-below-k distinct counts AND coordinated-sample
-    intersection estimates over everything ever streamed — the set
-    operation the HLL sink cannot serve."""
-    from pyspark.sql import Window
-
-    from semantic_index_spark.functions import sketch as SKT
-
-    def _rerank(u):
-        w = Window.partitionBy(by).orderBy("h")
-        return (
-            u.select(by, "h")
-            .distinct()
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select(by, "rank", "h")
-        )
-
-    return incremental_sketch_sink(
-        path,
-        lambda b: SKT.kmv_sketch_by(b, col, by, k),
-        _rerank,
-    )
-
-
-def incremental_cms_sink(path: str, col: str, depth: int = 4, width: int = 2048):
-    """CMS counter maintenance across micro-batches: counters ``+``-merge,
-    so point queries against the table reflect everything ever streamed."""
-    from semantic_index_spark.functions import sketch as SKT
-
-    return incremental_sketch_sink(
-        path,
-        lambda b: SKT.cms_sketch(b, col, depth, width),
-        lambda u: u.groupBy("r", "b").agg(F.sum("n").alias("n")),
-    )
-
-
 def incremental_histogram_sink(path: str, col: str, lo: float, hi: float, bins: int = 64):
     """Fixed-bin histogram maintenance across micro-batches: bin counts
     ``+``-merge, so the ≤bins-row table at ``path`` always equals the
@@ -347,20 +225,6 @@ def incremental_histogram_sink(path: str, col: str, lo: float, hi: float, bins: 
         lambda u: u.groupBy("bin", "bin_lo")
         .agg(F.sum("n").cast("bigint").alias("n"))
         .select("bin", "n", "bin_lo"),
-    )
-
-
-def bloom_sink(path: str, col: str, m: int = 1 << 16, k: int = 4):
-    """Bloom bit-set maintenance across micro-batches: sparse bit rows
-    OR-merge by ``union distinct``, so the filter at ``path`` always
-    covers everything ever streamed — the live corpus-membership screen
-    for the day-2 ingest path (operators get it with one broadcast read)."""
-    from semantic_index_spark.functions import bloom as B
-
-    return incremental_sketch_sink(
-        path,
-        lambda b: B.bloom_bits(b, col, m, k),
-        lambda u: u.select("bit").distinct(),
     )
 
 
@@ -499,108 +363,6 @@ def read_moments(spark, path: str) -> DataFrame:
     )
 
 
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually run here: its
-    state-server protocol imports google.protobuf descriptors at query
-    start (see stateful_processor_api_client), so a missing/broken
-    protobuf crashes the streaming Python runner — detect it up front."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_user_stats_tws(events: DataFrame) -> DataFrame:
-    """Per-user running stats via ``transformWithStateInPandas`` — Spark
-    4's processor-based stateful API (the successor to
-    ``applyInPandasWithState``): typed state handles created in ``init``,
-    per-key Arrow-batched ``handleInputRows``, explicit ``close``. Same
-    semantics as :func:`stateful_user_totals` (cumulative count + value
-    total per user, update-mode emission) so the two APIs are directly
-    comparable — and the parity test pins them to each other.
-
-    Scale posture is identical: O(1) ValueState per key, keys hash-
-    partitioned across executors, each micro-batch touches only its own
-    keys. Prefer this API for new work: timers, TTL state, list/map state
-    and state schema evolution only exist here.
-
-    Runtime requirements: the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass = ...RocksDBState
-    StoreProvider``) and the ``protobuf`` package — the processor talks
-    to the JVM state server over a protobuf protocol.
-    :func:`tws_available` reports whether this environment can run it;
-    the parity test skips (with the reason) when it can't."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", DoubleType())]
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, float(total)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        UserStats(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def checksum_sink(path: str, cols: list[str], by: str):
-    """Streaming corpus-integrity maintenance: per-slice
-    (n_rows, XOR-checksum) accumulated across micro-batches. XOR and ``+``
-    are both mergeable, so the ≤|slices|-row table at ``path`` always
-    equals the one-shot :func:`...operators.pipeline.table_checksum` of
-    everything ever streamed — a landing-zone ingest can certify "what we
-    hold equals what the producer sent" slice by slice without ever
-    re-reading history. Same O(state) epoch cost as the sketch sinks.
-
-    XOR caveat inherited from the batch operator (even duplication
-    cancels): pair with ``dedup_within_watermark`` upstream, and the
-    row count catches pure duplication."""
-    from semantic_index_spark.operators.pipeline import table_checksum
-
-    return incremental_sketch_sink(
-        path,
-        lambda b: table_checksum(b, cols, by=by),
-        lambda u: u.groupBy(by).agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            F.bit_xor("checksum").alias("checksum"),
-        ),
-    )
-
-
 def merge_stream_sink(table: str, op_col: str | None = None):
     """Streaming MERGE INTO the bucketed versioned table — the
     Delta-streaming-upsert shape: each micro-batch applies
@@ -612,8 +374,7 @@ def merge_stream_sink(table: str, op_col: str | None = None):
     epoch (restart between commit and checkpoint ack) is SKIPPED when the
     latest manifest already carries an equal-or-newer epoch. That is the
     same idempotency contract real table formats implement with txn ids;
-    the partition-overwrite trick (``idempotent_parquet_sink``) is the
-    non-transactional fallback. A concurrent NON-stream writer committing
+    a per-epoch partition overwrite is the non-transactional fallback. A concurrent NON-stream writer committing
     mid-merge surfaces as an optimistic-commit conflict (r9); the sink
     re-plans and retries (``versioned.retry_commit``), re-checking the
     epoch guard each attempt so a retry never double-applies. Returns
@@ -655,7 +416,7 @@ def incremental_ivfpq_sink(
     served index always equals a from-scratch encode of everything ever
     streamed; dynamic partition overwrite keyed by the epoch makes a
     re-delivered batch overwrite itself — exactly-once without a
-    transaction log, the ``idempotent_parquet_sink`` recipe. Probe
+    transaction log. Probe
     queries (``similarity.ivfpq_topk_indexed``) keep planning-time cell
     pruning throughout; codebook/centroid re-training remains the one
     rebuild event. Returns the ``foreachBatch`` callback."""
@@ -693,7 +454,7 @@ def incremental_ivfsq_sink(
     served index always equals a from-scratch encode of everything ever
     streamed; dynamic partition overwrite keyed by the epoch makes a
     re-delivered batch overwrite itself — exactly-once without a
-    transaction log, the ``idempotent_parquet_sink`` recipe. Probe
+    transaction log. Probe
     queries (``similarity.ivfsq_topk_indexed``) keep planning-time cell
     pruning throughout; quantizer/centroid re-training remains the one
     rebuild event. Returns the ``foreachBatch`` callback."""

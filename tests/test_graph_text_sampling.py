@@ -537,15 +537,6 @@ def test_dp_noisy_counts_matches_python_reference_and_clamps(spark):
         assert got[key] >= 0
 
 
-def test_dp_expected_error_scales_inversely_with_epsilon(spark):
-    from semantic_index_spark.operators import privacy as PV
-
-    assert PV.expected_abs_error(1.0) == 1.0
-    assert PV.expected_abs_error(0.1) == 10.0
-    with pytest.raises(ValueError):
-        PV.laplace_scale(0.0)
-
-
 # ------------------------------------------------------------- stats
 
 
@@ -860,41 +851,6 @@ def test_observed_profile_matches_direct_aggregate(spark):
     assert row["n_rows"] == 4
     assert row["n_null"] == 2
     assert row["sum_value"] == 12.51  # HALF_UP at 2 decimals
-
-
-def test_bpe_train_and_encode_hand_example(spark):
-    """Classic BPE on a tiny corpus: 'low' x2 + 'lowest' -> first merges
-    fuse the frequent 'lo'/'low' units; encoding round-trips the words."""
-    from semantic_index_spark.operators import text_analysis as TA2
-
-    docs = spark.createDataFrame(
-        [(0, "low low lowest"), (1, "low lower")],
-        "doc_id long, text string",
-    )
-    merges = TA2.bpe_train(docs, n_merges=3)
-    assert merges[0] == ("l", "o")  # 'lo' appears in every word: count 5
-    assert len(merges) == 3
-    enc = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in TA2.bpe_encode(docs, merges).collect()
-    }
-    # round-trip: concatenating a word's symbols restores word + end mark
-    text0 = "low low lowest"
-    joined = "".join("".join(s for s in enc[0]))
-    assert joined == "".join(w + "</w>" for w in text0.split())
-    # the fully-merged frequent word became few symbols
-    assert enc[1][0].startswith("low")
-
-
-def test_bpe_encode_priority_order_not_scan_order(spark):
-    """Merges must apply by RANK (training order), not left-to-right scan:
-    with merges [(b,c), (a,b)] the word 'abc' must become 'a'+'bc' (rank-0
-    merge wins), never 'ab'+'c'."""
-    from semantic_index_spark.operators import text_analysis as TA2
-
-    docs = spark.createDataFrame([(0, "abc")], "doc_id long, text string")
-    out = TA2.bpe_encode(docs, [("b", "c"), ("a", "b")]).collect()[0]
-    assert out["bpe_tokens"] == ["a", "bc", "</w>"]
 
 
 def test_khop_frontier_hand_graph(spark):

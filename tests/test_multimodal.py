@@ -71,16 +71,6 @@ def test_sample_frames_slices_and_strides(spark):
     assert rows[(1, 0)]["n_bytes"] == 0
 
 
-def test_resize_media_updates_blob_and_metadata(media):
-    out = M.resize_media(media, width=8, height=4).collect()
-    for r in out:
-        assert len(r["media"]) == 32  # 8*4 bytes from the fake codec
-        assert r["width"] == 8 and r["height"] == 4
-    # deterministic: same input -> same bytes
-    again = M.resize_media(media, width=8, height=4).collect()
-    assert sorted(bytes(r["media"]) for r in out) == sorted(bytes(r["media"]) for r in again)
-
-
 def test_metadata_agg_prunes_blob_column(spark, sf_dir, tmp_path):
     """Scale property: a metadata-only aggregate over a media PARQUET table
     must never read the blob column (columnar pruning is the reason media
@@ -177,22 +167,6 @@ def test_r12_decode_image_exact_and_round_trip():
     assert (d["pixels"] == px).all()
     with pytest.raises(ValueError, match="unsupported image format"):
         M.decode_image(b"\x89PNG\r\n\x1a\n")
-
-
-def test_r12_resize_media_real_codec(spark):
-    """resize_media with the REAL resizer: every output blob decodes to the
-    requested geometry and equals the local nearest-neighbor resample of
-    the input pixels — the Spark stage is bit-identical to the local
-    codec."""
-    media = _real_media(spark)
-    out = {r["media_id"]: r for r in M.resize_media(media, 4, 3, resizer=M.image_resizer).collect()}
-    for r in media.collect():
-        o = out[r["media_id"]]
-        assert (o["width"], o["height"]) == (4, 3)
-        img = M.decode_image(bytes(o["media"]))
-        assert (img["width"], img["height"]) == (4, 3)
-        want = M.resize_nearest(M.decode_image(bytes(r["media"]))["pixels"], 4, 3)
-        assert (img["pixels"] == want).all()
 
 
 def test_r12_extract_features_real_decoder(spark):

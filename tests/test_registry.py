@@ -1,9 +1,11 @@
 """Registry-contract tests: the driver hash-checks the FIRST 50 entries of
 ``queries()`` each round, so registry shape and ordering are load-bearing.
 
-These tests are pure-Python (no SparkSession) — they guard the contract the
-round-7 ADVICE flagged (a duplicate dict key silently shrinking the registry)
-and the verification window that CORRECTNESS checks depend on.
+Most of these tests are pure-Python (no SparkSession) — they guard the
+contract the round-7 ADVICE flagged (a duplicate dict key silently shrinking
+the registry), the verification window that CORRECTNESS checks depend on,
+and that every package definition is reachable from a caller. The fold
+oracles run against Spark at the test scale factor.
 """
 
 from __future__ import annotations
@@ -11,10 +13,14 @@ from __future__ import annotations
 import ast
 import json
 import os
+import pathlib
+
+import pytest
 
 import __spark_entry__ as entrymod
 
-ENTRY_PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+ENTRY_PATH = str(REPO / "__spark_entry__.py")
 
 
 def _dict_literal_string_keys(func_name: str) -> list[str]:
@@ -85,3 +91,116 @@ def test_every_query_has_an_oracle():
     oracles = set(entrymod.oracle_sql())
     missing = sorted(qs - oracles)
     assert not missing, f"queries without a DuckDB oracle: {missing}"
+
+
+@pytest.mark.parametrize("name", ["throttle_dedup", "holt_winters"])
+def test_fold_oracles_match(spark, sf_dir, name):
+    """The two per-key left-fold rows hash-match their DuckDB oracles."""
+    from tools.check_oracles import check_one, connect
+
+    assert check_one(spark, connect(sf_dir), name, sf_dir) == []
+
+
+# Package definitions no caller reaches, each with the reason it stays.
+KEEP = {
+    # reference-parity surface (SURVEY.md §1-2)
+    "OpenAIStyleEmbedder": "the reference's OpenAI embedding client, minus the network call",
+    "read_reference_json_array": "distributed reader of the reference's JSON-array file format",
+    # references and helpers that tests use to check live code
+    "plan_contains": "the plan predicate the assert_* helpers share",
+    "assert_pushed_filter": "plan assertion helper for the operator tests",
+    "assert_broadcast_join": "plan assertion helper for the operator tests",
+    "assert_top_k": "plan assertion helper for the operator tests",
+    "scan_read_schema": "plan assertion helper for the column-pruning tests",
+    "hll_standard_error": "analytic error bound the HLL accuracy tests compare against",
+    "bloom_fp_rate": "analytic false-positive rate the Bloom tests compare against",
+    "_py_laplace_noise": "Python reference of the DP noise draw",
+    "kmeans_inertia": "objective the k-means tests check convergence with",
+    "dequantize_int8": "inverse of quantize_int8 for the round-trip error tests",
+    "fake_decode": "stand-in decoder for the media pipeline tests",
+    "stream_events": "the streaming source every streaming test reads",
+    # mutating and recovery verbs of the live table and index formats
+    "add_constraint": "CHECK constraints on versioned tables (OCC-committed)",
+    "drop_constraint": "inverse of add_constraint",
+    "restore_version": "RESTORE TABLE to an earlier version",
+    "expire_versions": "retention of the plain versioned store",
+    "expire_hidden": "retention of the hidden-partitioned store",
+    "detach_index": "inverse of the attach_*_index verbs",
+    "detach_hnsw_index": "inverse of attach_hnsw_index",
+    "recover_hnsw_layout": "crash recovery of a standalone HNSW layout",
+    "recover_ivf_layout": "crash recovery of a standalone IVF layout",
+}
+
+# Callers: the registry, the benchmarks, the tools and the examples.
+TRAFFIC = [
+    REPO / "__spark_entry__.py", REPO / "bench.py",
+    *sorted((REPO / "tools").glob("*.py")),
+    *sorted((REPO / "examples").glob("*.py")),
+    *sorted((REPO / "perfbench").glob("*.py")),
+]
+
+
+def _identifiers(node) -> set[str]:
+    """Names, attribute names and import names under ``node``. Comments and
+    strings do not count, so a docstring mention keeps nothing alive."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+            if n.asname:
+                out.add(n.asname)
+        elif isinstance(n, ast.ImportFrom) and n.module:
+            out.update(n.module.split("."))
+    return out
+
+
+def unreachable_definitions() -> dict[str, list[str]]:
+    """Top-level package ``def``/``class``/assignment names that no caller
+    reaches, with their locations. Reachable = named in a caller or in a
+    package module-level statement (imports excluded), closed over the
+    bodies of reachable definitions by name. No package name is dispatched
+    through ``getattr`` or ``importlib``, so names are enough."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set()
+    for f in TRAFFIC:
+        roots |= _identifiers(ast.parse(f.read_text()))
+    for f in sorted((REPO / "semantic_index_spark").rglob("*.py")):
+        where = str(f.relative_to(REPO))
+        for st in ast.parse(f.read_text()).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(st.name, []).append((where, st))
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            defs.setdefault(n.id, []).append((where, st))
+            elif not isinstance(st, (ast.Import, ast.ImportFrom)):
+                roots |= _identifiers(st)
+    seen: set[str] = set()
+    todo = [n for n in roots if n in defs]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, node in defs[name]:
+            todo.extend(n for n in _identifiers(node) if n in defs and n not in seen)
+    return {
+        name: [f"{where}:{node.lineno}" for where, node in sites]
+        for name, sites in sorted(defs.items())
+        if name not in seen and not (name.startswith("__") and name.endswith("__"))
+    }
+
+
+def test_unreachable_package_code_is_only_keep():
+    """Dead package surface cannot build up: every definition no query,
+    benchmark, tool or example reaches is in KEEP with its reason, and every
+    KEEP name still exists and is still unreached."""
+    dead = unreachable_definitions()
+    assert set(dead) - set(KEEP) == set(), {n: dead[n] for n in set(dead) - set(KEEP)}
+    assert set(KEEP) - set(dead) == set(), "KEEP names that are gone or now reached"

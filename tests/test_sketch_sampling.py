@@ -75,26 +75,10 @@ def test_cms_never_undercounts_and_is_tight_when_sparse(spark):
     assert sum(1 for p in probes if est[p] == (100 if p != "absent" else 0)) == len(probes)
 
 
-def test_cms_merge_equals_whole(spark):
-    """CMS merge property: summing per-(r,b) counters of two halves equals
-    the sketch of the union — the incremental/partitioned build path."""
-    a = spark.range(0, 3000).select((F.col("id") % 37).cast("string").alias("k"))
-    b = spark.range(0, 5000).select((F.col("id") % 53).cast("string").alias("k"))
-    whole = SKT.cms_sketch(a.union(b), "k", depth=3, width=512)
-    merged = SKT.cms_merge(
-        SKT.cms_sketch(a, "k", depth=3, width=512),
-        SKT.cms_sketch(b, "k", depth=3, width=512),
-    )
-    assert whole.exceptAll(merged).count() == 0
-    assert merged.exceptAll(whole).count() == 0
-
-
 def test_cms_rejects_bad_shape(spark):
     df = spark.range(10)
     with pytest.raises(ValueError):
         SKT.cms_sketch(df, "id", depth=0)
-    with pytest.raises(ValueError):
-        SKT.cms_merge()
 
 
 # -------------------------------------------------------- global ranking
@@ -545,20 +529,6 @@ def test_bloom_fp_rate_near_analytic(spark):
     assert fp / 4000 < max(5 * expected, 0.02), (fp, expected)
 
 
-def test_bloom_merge_equals_union_build(spark):
-    from semantic_index_spark.functions import bloom as B
-
-    a = spark.range(500).select(F.concat(F.lit("a"), F.col("id")).alias("k"))
-    b = spark.range(500).select(F.concat(F.lit("b"), F.col("id")).alias("k"))
-    merged = B.bloom_merge(
-        B.bloom_bits(a, "k", m=4096, k=3), B.bloom_bits(b, "k", m=4096, k=3)
-    )
-    direct = B.bloom_bits(a.union(b), "k", m=4096, k=3)
-    assert sorted(r["bit"] for r in merged.collect()) == sorted(
-        r["bit"] for r in direct.collect()
-    )
-
-
 def test_bloom_definitely_new_screen(spark):
     from semantic_index_spark.functions import bloom as B
 
@@ -582,8 +552,6 @@ def test_bloom_null_and_validation(spark):
     assert rows["x"] is True and rows[None] is None
     with pytest.raises(ValueError):
         B.bloom_bits(df, "k", m=1, k=2)
-    with pytest.raises(ValueError):
-        B.bloom_merge()
 
 
 # ------------------------------------------------------- PSI drift monitor
@@ -749,21 +717,6 @@ def test_kmv_sketch_merge_by_rerank(spark):
 
 
 # ------------------------------------------------------- hash-rank sampling
-
-
-def test_hashrank_sample_merge_equals_union_sample(spark):
-    from semantic_index_spark.functions import sketch as SKT
-
-    df = spark.createDataFrame([(i, float(i * 3)) for i in range(400)], "id bigint, v double")
-    a, b = df.filter("id < 250"), df.filter("id >= 150")  # overlapping!
-    sa = SKT.hashrank_sample(a, "id", ["v"], k=64)
-    sb = SKT.hashrank_sample(b, "id", ["v"], k=64)
-    merged = SKT.merge_hashrank_samples(sa, sb, k=64)
-    direct = SKT.hashrank_sample(df, "id", ["v"], k=64)
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, direct.collect()))
-    # idempotent: merging a sample with itself is the sample
-    self_merged = SKT.merge_hashrank_samples(sa, sa, k=64)
-    assert sorted(map(tuple, self_merged.collect())) == sorted(map(tuple, sa.collect()))
 
 
 def test_hashrank_sample_exact_below_k(spark):

@@ -48,77 +48,6 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_tumbling_counts_matches_batch(spark, events_dir, events_batch):
-    out = _run_to_memory(
-        I.tumbling_counts(_stream(spark, events_dir, events_batch)),
-        "t_tumbling", "complete", spark,
-    )
-    expected = (
-        events_batch.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type", "n_events", "sum_value",
-        )
-    )
-    assert _rows(out) == _rows(expected)
-
-
-def test_sliding_avg_matches_batch(spark, events_dir, events_batch):
-    out = _run_to_memory(
-        I.sliding_avg(_stream(spark, events_dir, events_batch)),
-        "t_sliding", "complete", spark,
-    )
-    expected = (
-        events_batch.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(F.round(F.avg("value"), 6).alias("avg_value"))
-        .select(F.unix_timestamp("w.start").alias("window_start"), "avg_value")
-    )
-    assert _rows(out) == _rows(expected)
-
-
-def test_session_windows_close_after_gap(spark, events_dir, events_batch):
-    out = _run_to_memory(
-        I.session_windows(_stream(spark, events_dir, events_batch)),
-        "t_session", "complete", spark,
-    )
-    rows = out.collect()
-    assert rows, "session windows must be produced"
-    # every session spans >= one event and closes after the 30-minute gap
-    for r in rows:
-        assert r["session_end"] > r["session_start"]
-        assert r["n_events"] >= 1
-    # per-user session event counts add up to the user's event total
-    got = {r["user_id"]: 0 for r in rows}
-    for r in rows:
-        got[r["user_id"]] += r["n_events"]
-    expected = dict(
-        (r["user_id"], r["n"]) for r in events_batch.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    )
-    assert got == expected
-
-
-def test_session_windows_stream_matches_batch_operator(spark, events_dir, events_batch, sf_dir):
-    """The STREAMING session_windows builder and the BATCH session_window_agg
-    operator use the same F.session_window with the same 30-minute gap —
-    drained with availableNow they must produce identical sessions."""
-    from semantic_index_spark.operators.relational import session_window_agg
-
-    out = _run_to_memory(
-        I.session_windows(_stream(spark, events_dir, events_batch)),
-        "t_session_parity", "complete", spark,
-    )
-    got = sorted(
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in out.collect()
-    )
-    want = sorted(
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in session_window_agg(spark, sf_dir).collect()
-    )
-    assert got == want
-
-
 def test_dedup_within_watermark_matches_batch_dedup(spark, events_dir, events_batch):
     keys = ["user_id", "event_type"]
     out = _run_to_memory(
@@ -193,29 +122,6 @@ def test_stream_stream_join_matches_batch(spark, events_dir, events_batch):
     assert _rows(out) == _rows(expected)
 
 
-def test_stream_static_enrich_matches_batch(spark, events_dir, events_batch):
-    """Stream-static broadcast enrichment: each micro-batch left-joins a
-    static dim; result set == the same join in batch, dim attrs attached and
-    unmatched stream rows preserved (left join)."""
-    dim = (
-        events_batch.select("user_id").distinct()
-        .filter(F.col("user_id") % 2 == 0)
-        .withColumn("cohort", F.when(F.col("user_id") % 4 == 0, "a").otherwise("b"))
-    )
-    out = _run_to_memory(
-        I.stream_static_enrich(
-            _stream(spark, events_dir, events_batch), dim
-        ).select("event_id", "user_id", "cohort"),
-        "t_enrich", "append", spark,
-    )
-    expected = events_batch.join(dim, on="user_id", how="left").select(
-        "event_id", "user_id", "cohort"
-    )
-    assert _rows(out) == _rows(expected)
-    # odd user_ids are absent from the dim → left join keeps them, cohort NULL
-    assert out.filter(F.col("cohort").isNull()).count() > 0
-
-
 def test_stateful_user_totals_matches_batch(spark, events_dir, events_batch):
     """applyInPandasWithState: explicit per-key state across micro-batches.
     The LAST update emitted per user must equal the batch groupBy totals."""
@@ -285,7 +191,7 @@ def test_ntz_event_time_normalized(spark, events_dir, events_batch):
     # builders normalize on their own even when handed a raw NTZ stream
     raw = spark.readStream.schema(events_batch.schema).parquet(events_dir)
     assert isinstance(raw.schema["ts"].dataType, TimestampNTZType)
-    I.tumbling_counts(raw)  # would raise AnalysisException before the fix
+    I.dedup_within_watermark(raw, ["event_id"])  # would raise AnalysisException before the fix
     # batch frames pass through ensure_event_time unchanged in meaning
     assert isinstance(
         I.ensure_event_time(events_batch).schema["ts"].dataType, TimestampType
@@ -314,32 +220,6 @@ def test_streaming_hll_registers_match_batch(spark, events_dir, events_batch):
     est_stream = SKT.hll_estimate(out).collect()[0][0]
     est_batch = SKT.hll_count_distinct(events_batch, "user_id").collect()[0][0]
     assert est_stream == est_batch
-
-
-def test_idempotent_sink_replayed_epoch_no_duplicates(spark, events_dir, events_batch, tmp_path):
-    """A replayed micro-batch (same epoch id) must overwrite its own
-    batch_id partition, not append — the exactly-once contract."""
-    out = str(tmp_path / "sink")
-    sink = I.idempotent_parquet_sink(out)
-    q = (
-        _stream(spark, events_dir, events_batch)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_events = events_batch.count()
-    first = spark.read.parquet(out)
-    assert first.count() == n_events
-    batch_ids = [r[0] for r in first.select("batch_id").distinct().collect()]
-    # simulate the crash-replay: re-deliver an already-committed epoch
-    sink(events_batch.limit(50), batch_ids[0])
-    replayed = spark.read.parquet(out)
-    assert replayed.filter(F.col("batch_id") == batch_ids[0]).count() == 50
-    assert replayed.filter(F.col("batch_id") != batch_ids[0]).count() == (
-        first.filter(F.col("batch_id") != batch_ids[0]).count()
-    )
 
 
 def test_incremental_hll_sink_equals_oneshot_batch_sketch(spark, events_dir, events_batch, tmp_path):
@@ -374,39 +254,6 @@ def test_incremental_hll_sink_equals_oneshot_batch_sketch(spark, events_dir, eve
     assert est_stream == est_batch
 
 
-def test_incremental_cms_sink_counts_match_batch(spark, events_dir, events_batch, tmp_path):
-    """Streaming CMS maintenance: counter table after the drain equals the
-    one-shot batch sketch, so point estimates match exactly."""
-    from semantic_index_spark.functions import sketch as SKT
-
-    sketch_path = str(tmp_path / "cms_table")
-    ckpt = str(tmp_path / "ckpt_cms")
-    multi = str(tmp_path / "events_multi")
-    events_batch.repartition(4).write.parquet(multi)
-    stream = (
-        spark.readStream.schema(events_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(multi)
-    )
-    writer = stream.writeStream.foreachBatch(
-        I.incremental_cms_sink(sketch_path, "event_type", depth=3, width=256)
-    ).option("checkpointLocation", ckpt)
-    I.run_batch_like(writer)
-
-    got = spark.read.parquet(sketch_path)
-    want = SKT.cms_sketch(events_batch, "event_type", depth=3, width=256)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    probes = [r["event_type"] for r in events_batch.select("event_type").distinct().collect()]
-    est = {r["value"]: r["est"] for r in SKT.cms_lookup(got, probes, 3, 256).collect()}
-    exact = {
-        r["event_type"]: r["n"]
-        for r in events_batch.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    for k, n in exact.items():
-        assert est[k] >= n  # CMS never under-counts
-
-
 def test_incremental_histogram_sink_enables_streaming_psi(spark, events_dir, events_batch, tmp_path):
     """Streaming histogram maintenance: the bin table after a multi-batch
     drain equals the one-shot batch histogram — so PSI of a fresh batch
@@ -435,35 +282,6 @@ def test_incremental_histogram_sink_enables_streaming_psi(spark, events_dir, eve
     # shaped batch) == 0 exactly when the batch is the same data
     psi = SKT.psi_drift(events_batch, events_batch, "value", 0.0, 500.0, bins=50)
     assert psi.collect()[0]["psi"] == 0.0
-
-
-def test_bloom_sink_membership_covers_all_streamed(spark, events_dir, events_batch, tmp_path):
-    """Streaming Bloom maintenance: after the drain, every streamed key
-    probes maybe_member=true (no false negatives across the epochs' OR-
-    merge), matching the one-shot batch filter bit-for-bit."""
-    from semantic_index_spark.functions import bloom as B
-
-    bloom_path = str(tmp_path / "bloom_table")
-    ckpt = str(tmp_path / "ckpt_bloom")
-    multi = str(tmp_path / "events_multi")
-    events_batch.repartition(4).write.parquet(multi)
-    stream = (
-        spark.readStream.schema(events_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(multi)
-    )
-    writer = stream.writeStream.foreachBatch(
-        I.bloom_sink(bloom_path, "user_id", m=1 << 14, k=3)
-    ).option("checkpointLocation", ckpt)
-    I.run_batch_like(writer)
-
-    got = spark.read.parquet(bloom_path)
-    want = B.bloom_bits(events_batch.select("user_id"), "user_id", m=1 << 14, k=3)
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    probed = B.bloom_contains(
-        got, events_batch.select("user_id").distinct(), "user_id", m=1 << 14, k=3
-    )
-    assert probed.where(~F.col("maybe_member")).count() == 0
 
 
 def test_decayed_sum_sink_matches_batch_operator(spark, events_dir, events_batch, tmp_path):
@@ -562,62 +380,6 @@ def test_moments_sink_matches_batch_stats(spark, events_dir, events_batch, tmp_p
         assert got[k][0] == want[k][0]
         assert abs(got[k][1] - want[k][1]) < 1e-6
         assert abs(got[k][2] - want[k][2]) < 1e-6
-
-
-@pytest.mark.skipif(
-    not I.tws_available(),
-    reason="transformWithStateInPandas needs google.protobuf (state-server "
-    "protocol), absent in this environment — operator is capability-gated",
-)
-def test_stateful_tws_matches_batch_and_legacy_api(spark, events_dir, events_batch):
-    """transformWithStateInPandas (Spark 4 processor API): final per-user
-    state equals the batch groupBy totals — and therefore equals the
-    applyInPandasWithState implementation it succeeds."""
-    out = _run_to_memory(
-        I.stateful_user_stats_tws(_stream(spark, events_dir, events_batch)),
-        "t_tws", "update", spark,
-    )
-    final = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in out.orderBy("n_events").collect()
-    }
-    expected = {
-        r["user_id"]: (r["n"], round(r["tv"], 6))
-        for r in events_batch.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert set(final) == set(expected)
-    for uid, (n, tv) in expected.items():
-        assert final[uid][0] == n
-        assert abs(final[uid][1] - tv) < 1e-6
-
-
-def test_checksum_sink_equals_oneshot_batch_checksum(spark, events_dir, events_batch, tmp_path):
-    """Streaming checksum maintenance: after draining forced multi-file
-    micro-batches, the per-slice (n_rows, checksum) table must EQUAL the
-    one-shot batch table_checksum of all data — XOR/+ mergeability end
-    to end."""
-    from semantic_index_spark.operators.pipeline import table_checksum
-
-    ck_path = str(tmp_path / "ck_table")
-    ckpt = str(tmp_path / "ckpt_ck")
-    multi = str(tmp_path / "events_multi_ck")
-    events_batch.repartition(4).write.parquet(multi)
-    stream = (
-        spark.readStream.schema(events_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(multi)
-    )
-    writer = stream.writeStream.foreachBatch(
-        I.checksum_sink(ck_path, ["event_id", "user_id", "value"], by="event_type")
-    ).option("checkpointLocation", ckpt)
-    I.run_batch_like(writer)
-
-    got = spark.read.parquet(ck_path)
-    want = table_checksum(events_batch, ["event_id", "user_id", "value"], by="event_type")
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
 
 
 def test_stream_static_enrich_replay_equals_batch_join(spark):
@@ -744,83 +506,6 @@ def test_merge_stream_sink_retries_on_commit_conflict(spark, tmp_path, monkeypat
     v = VER.current_version(tbl)
     sink(batch, 7)
     assert VER.current_version(tbl) == v
-
-
-def test_incremental_kmv_sink_equals_oneshot_batch_sketch(spark, events_dir, events_batch, tmp_path):
-    """Streaming KMV maintenance: after the forced multi-micro-batch drain,
-    the per-group bottom-k table must EQUAL the one-shot batch sketch of
-    all data (the re-rank merge property, end to end), and so must the
-    distinct estimates."""
-    from semantic_index_spark.functions import sketch as SKT
-
-    sketch_path = str(tmp_path / "kmv_table")
-    ckpt = str(tmp_path / "ckpt_kmv")
-    multi = str(tmp_path / "events_kmv_multi")
-    events_batch.repartition(4).write.parquet(multi)
-    stream = (
-        spark.readStream.schema(events_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(multi)
-    )
-    writer = stream.writeStream.foreachBatch(
-        I.incremental_kmv_sink(sketch_path, "user_id", "event_type", k=32)
-    ).option("checkpointLocation", ckpt)
-    I.run_batch_like(writer)
-
-    got = spark.read.parquet(sketch_path)
-    want = SKT.kmv_sketch_by(events_batch, "user_id", "event_type", k=32)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    est_s = {r["event_type"]: r["approx_distinct"]
-             for r in SKT.kmv_estimates(got, "event_type", k=32).collect()}
-    est_b = {r["event_type"]: r["approx_distinct"]
-             for r in SKT.kmv_estimates(want, "event_type", k=32).collect()}
-    assert est_s == est_b
-
-
-def test_session_windows_append_mode_emits_watermark_closed_sessions(
-    spark, events_dir, events_batch
-):
-    """The PRODUCTION session-window story (bounded state): append mode +
-    watermark emits a session only once the watermark passes its end, and
-    evicts its state. Drained with availableNow, the emitted set must be
-    EXACTLY the batch sessionization restricted to watermark-closed
-    sessions — the trailing still-open sessions (those within 2h of the
-    max event time) are the documented append-mode gap that keeps
-    complete-mode as the exact-parity replay form (see
-    q_stream_session_replay's docstring)."""
-    out = _run_to_memory(
-        I.session_windows(_stream(spark, events_dir, events_batch)),
-        "t_session_append", "append", spark,
-    )
-    got = sorted(
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in out.collect()
-    )
-    b = (
-        I.ensure_event_time(events_batch)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.unix_timestamp("w.start").alias("session_start"),
-            F.unix_timestamp("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-    wm = (
-        I.ensure_event_time(events_batch)
-        .agg(F.max(F.unix_timestamp("ts")))
-        .first()[0]
-        - 2 * 3600  # session_windows' 2h watermark delay
-    )
-    closed = sorted(
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in b.filter(F.col("session_end") <= wm).collect()
-    )
-    assert got == closed
-    # the gap is real: some trailing sessions stay open and unemitted
-    assert len(got) < b.count()
 
 
 def test_merge_stream_sink_restart_recovers_from_checkpoint(spark, tmp_path):

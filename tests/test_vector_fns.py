@@ -41,11 +41,6 @@ def test_l2_distance_self_zero(emb):
     assert row["d"] == 0.0
 
 
-def test_normalize_unit(emb):
-    row = emb.limit(1).select(V.l2_norm(V.normalize("embedding")).alias("n")).collect()[0]
-    assert math.isclose(row["n"], 1.0, rel_tol=1e-9)
-
-
 def test_topk_matches_numpy_bruteforce(emb):
     q = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     got = [r["vec_id"] for r in S.topk(emb, q, k=5).collect()]
@@ -110,18 +105,6 @@ def test_lsh_topk_recall_of_self(emb):
     assert got[0]["vec_id"] == 42  # exact self-match survives bucketing
 
 
-def test_scores_matrix_udf_matches_fold(emb):
-    q = np.array(emb.filter(F.col("vec_id") == 1).collect()[0]["embedding"], dtype=np.float64)
-    udf_score = V.scores_matrix_udf(64)(q)
-    both = emb.select(
-        "vec_id",
-        F.round(udf_score(F.col("embedding")), 6).alias("fast"),
-        F.round(V.dot_literal("embedding", [float(x) for x in q]), 6).alias("ref"),
-    ).collect()
-    for r in both:
-        assert math.isclose(r["fast"], r["ref"], abs_tol=2e-6)
-
-
 # --------------------------------------------------- covariance / PCA
 
 
@@ -158,45 +141,6 @@ def test_covariance_entries_merge_property(spark):
     assert merged.keys() == direct.keys()
     for k in direct:
         assert abs(merged[k] - direct[k]) < 1e-6, k
-
-
-def test_pca_finds_dominant_direction(spark):
-    import numpy as np
-
-    from semantic_index_spark.operators import linalg as L
-
-    df = _toy_embeddings(spark, n=400, d=8)
-    comps, ratios, mean = L.pca_components(df, "embedding", dim=8, k=3)
-    # dominant direction ≈ (e0+e1)/√2
-    truth = np.zeros(8); truth[0] = truth[1] = 1.0; truth /= np.sqrt(2)
-    assert abs(float(np.dot(comps[0], truth))) > 0.99
-    assert ratios[0] > 0.9 and ratios == sorted(ratios, reverse=True)
-    # orthonormal components
-    for a in range(3):
-        for b in range(3):
-            got = float(np.dot(comps[a], comps[b]))
-            assert abs(got - (1.0 if a == b else 0.0)) < 1e-6
-    # sign convention: largest-|coord| positive → deterministic across runs
-    for c in comps:
-        assert c[int(np.argmax(np.abs(c)))] > 0
-
-
-def test_pca_project_is_centered_and_variance_ordered(spark):
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from semantic_index_spark.operators import linalg as L
-    from semantic_index_spark.plans import explain as E
-
-    df = _toy_embeddings(spark, n=300, d=8)
-    comps, _, mean = L.pca_components(df, "embedding", dim=8, k=2)
-    proj = L.pca_project(df, "embedding", comps, mean=mean)
-    rows = np.array([r["pc"] for r in proj.select("pc").collect()])
-    assert abs(rows[:, 0].mean()) < 1e-6 and abs(rows[:, 1].mean()) < 1e-6
-    assert rows[:, 0].var() > rows[:, 1].var()
-    # projection is JVM-only: no Python eval in the plan
-    plan = E.formatted_plan(proj)
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_covariance_dim_mismatch_raises(spark):

@@ -5,10 +5,14 @@ name, rows sorted, floats rounded at compare time is NOT done here — the
 queries themselves must round).
 
 Usage: python tools/check_oracles.py [name-substring ...]
+
+``check_one(spark, connect(sf_dir), name, sf_dir)`` runs the same compare
+for one query and returns its problems, for use from tests.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 import os
@@ -79,66 +83,87 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+def connect(sf_dir: str):
+    """An in-memory DuckDB connection with one view per table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+@functools.cache
+def _registry():
+    return entrymod.queries(), entrymod.oracle_sql()
+
+
+def compare(spark, con, name: str, sf_dir: str) -> tuple[list[str] | None, int]:
+    """Run query ``name`` on Spark and its oracle on ``con``. Returns the
+    problems found and the Spark row count; problems is None when the query
+    has no oracle (rows-only)."""
+    qs, oracles = _registry()
+    try:
+        sdf = qs[name](spark, sf_dir)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:
+        return [f"spark error: {e}"], 0
+    if name not in oracles:
+        return None, len(s_rows)
+    try:
+        type_problems = oracle_type_problems(con, oracles[name])
+        res = con.execute(oracles[name])
+        d_cols = [d[0] for d in res.description]
+        d_rows = res.fetchall()
+    except Exception as e:
+        return [f"duckdb error: {e}"], len(s_rows)
+    problems = list(type_problems)
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"schema spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    if not problems:
+        hs, hd = table_hash(s_cols, s_rows), table_hash(d_cols, d_rows)
+        if hs != hd:
+            problems.append(f"valuehash {hs} != {hd}")
+            order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
+            order_d = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
+            set_s = {"|".join(norm_cell(r[i]) for i in order_s) for r in s_rows}
+            set_d = {"|".join(norm_cell(r[i]) for i in order_d) for r in d_rows}
+            only_s = list(set_s - set_d)[:3]
+            only_d = list(set_d - set_s)[:3]
+            if only_s:
+                problems.append(f"spark-only: {only_s}")
+            if only_d:
+                problems.append(f"duck-only: {only_d}")
+    return problems, len(s_rows)
+
+
+def check_one(spark, con, name: str, sf_dir: str) -> list[str]:
+    """The problems of one registry query against its oracle; empty = ok."""
+    problems, _ = compare(spark, con, name, sf_dir)
+    return ["no oracle"] if problems is None else problems
+
+
 def main() -> int:
     filters = [a for a in sys.argv[1:] if not a.startswith("-")]
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = connect(SF_DIR)
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    names = [n for n in qs if not filters or any(f in n for f in filters)]
+    names = [n for n in _registry()[0] if not filters or any(f in n for f in filters)]
     n_pass = n_fail = n_weak = 0
     for name in names:
         t0 = time.time()
-        try:
-            sdf = qs[name](spark, SF_DIR)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL  {name:28s} spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"WEAK  {name:28s} rows={len(s_rows)} (no oracle, rows-only)")
-            n_weak += 1
-            continue
-        try:
-            type_problems = oracle_type_problems(con, oracles[name])
-            res = con.execute(oracles[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL  {name:28s} duckdb error: {e}")
-            n_fail += 1
-            continue
-        problems = list(type_problems)
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"schema spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        if not problems:
-            hs, hd = table_hash(s_cols, s_rows), table_hash(d_cols, d_rows)
-            if hs != hd:
-                problems.append(f"valuehash {hs} != {hd}")
-                order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-                order_d = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
-                set_s = {"|".join(norm_cell(r[i]) for i in order_s) for r in s_rows}
-                set_d = {"|".join(norm_cell(r[i]) for i in order_d) for r in d_rows}
-                only_s = list(set_s - set_d)[:3]
-                only_d = list(set_d - set_s)[:3]
-                if only_s:
-                    problems.append(f"spark-only: {only_s}")
-                if only_d:
-                    problems.append(f"duck-only: {only_d}")
+        problems, n_rows = compare(spark, con, name, SF_DIR)
         dt = time.time() - t0
-        if problems:
+        if problems is None:
+            print(f"WEAK  {name:28s} rows={n_rows} (no oracle, rows-only)")
+            n_weak += 1
+        elif problems:
             print(f"FAIL  {name:28s} {'; '.join(problems)}")
             n_fail += 1
         else:
-            print(f"ok    {name:28s} rows={len(s_rows):6d} {dt:5.1f}s")
+            print(f"ok    {name:28s} rows={n_rows:6d} {dt:5.1f}s")
             n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail, {n_weak} weak (rows-only)")
     spark.stop()
