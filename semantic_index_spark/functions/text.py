@@ -156,10 +156,16 @@ def pii_counts(text: Column | str) -> Column:
 def shingles(text: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles → array<string> (distinct not applied here).
     Built with sequence+transform so it stays JVM-side; documents shorter
-    than n words yield a single shingle of the whole text."""
-    toks = tokens(text)
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), k - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    than n words yield a single shingle of the whole text. The token array
+    is bound through a one-element ``transform`` so the regex split runs
+    once per document — captured as an outer expression it would be
+    re-evaluated for every shingle (O(w²) per w-word document)."""
+
+    def _windows(toks):
+        k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(0), k - 1),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        )
+
+    return F.transform(F.array(tokens(text)), _windows)[0]

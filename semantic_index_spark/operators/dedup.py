@@ -611,14 +611,18 @@ def duplicate_spans(
     matters at corpus scale."""
     if n < 1 or min_docs < 2:
         raise ValueError(f"duplicate_spans: need n >= 1, min_docs >= 2, got {n}, {min_docs}")
-    toks = T.tokens(text_col)
-    windows = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.md5(F.array_join(F.slice(toks, i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    # tokens bound once per document (one-element transform), not once
+    # per window
+    windows = F.transform(
+        F.array(T.tokens(text_col)),
+        lambda toks: F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - n + 1),
+                lambda i: F.md5(F.array_join(F.slice(toks, i, n), " ")),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )[0]
     spans = ensure_parallelism(docs).select(
         F.col(id_col), F.explode(windows).alias("h")
     )

@@ -9,9 +9,12 @@ similarity join, and the LSH-bucketed approximate path that survives 100 TB.
 Physical-plan notes:
   * ``topk`` compiles to pruned-scan → project → TakeOrderedAndProject:
     per-partition bounded top-k, O(N·d + N log k), zero shuffles.
-  * ``topk_multi`` broadcasts the query set (small side) and window-ranks
-    per query — ONE pass over the big table for Q queries instead of Q
-    passes.
+  * ``topk_multi`` broadcasts the query set (small side) and scores each
+    Arrow batch with one matmul in a ``mapInArrow`` kernel — ONE pass over
+    the big table for Q queries instead of Q passes. NumPy selection
+    (``np.partition``, then ``np.lexsort`` on (query, score DESC, id ASC)
+    over the k-th score's ties) keeps at most Q·k rows per partition, so
+    only those shuffle into the per-query window rank.
   * ``lsh_topk`` probes only matching hyperplane buckets: candidate set
     shrinks ~2^bits-fold; the equi-join on the signature is
     hash-partitioned, so no cross product ever materializes.
@@ -79,7 +82,11 @@ def topk_multi(
        matrix (Q small by contract) ships via ``SparkContext.broadcast``
        — serialized ONCE per executor, not once per task closure — and is
        scored against each Arrow batch with one BLAS matmul inside
-       ``mapInPandas``; each partition emits at most Q·k rows.
+       ``mapInArrow``. ``np.partition`` finds each query's k-th best
+       score in the batch; every row scoring at least that (ties with the
+       k-th included) joins the partition's running candidates, which
+       ``np.lexsort`` orders and cuts back to k per query. The work is
+       linear in the batch, and each partition emits at most Q·k rows.
     2. **Merge**: a window over the ≤ partitions·Q·k survivors ranks per
        query. Only this tiny set ever shuffles — never the N·Q scored rows
        (a ``Window.partitionBy(q_id)`` over the full scored table would
@@ -87,10 +94,13 @@ def topk_multi(
 
     Both phases order by (round(score, 6) DESC, id ASC) so the pruning
     total-order equals the final ranking total-order — local pruning can
-    never drop a row the global rank would have kept.
+    never drop a row the global rank would have kept. Keeping the k-th
+    score's ties until the lexsort is what makes that hold when equal
+    scores straddle the cut.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     q_rows = collect_bounded(
@@ -111,8 +121,9 @@ def topk_multi(
         return spark.createDataFrame([], out_schema).withColumn(
             "rank", F.lit(1).cast("int")
         ).limit(0)
-    q_ids = [r[0] for r in q_rows]
+    q_ids = np.array([r[0] for r in q_rows], dtype=object)
     q_mat = np.asarray([[float(x) for x in r[1]] for r in q_rows], dtype=np.float64)
+    arrow_schema = to_arrow_schema(out_schema)
     # broadcast lifetime rides the returned plan: the closure below holds the
     # only reference, so once the caller releases the DataFrame, Python GC
     # drops the Broadcast and ContextCleaner evicts the executor blocks —
@@ -120,37 +131,49 @@ def topk_multi(
     # query set rather than re-calling per request.
     bc = big.sparkSession.sparkContext.broadcast((q_ids, q_mat))
 
+    def _first_k(q, ids, score):
+        """The first k rows of each query under (score DESC, id ASC)."""
+        order = np.lexsort((ids, -score, q))
+        q, ids, score = q[order], ids[order], score[order]
+        keep = np.arange(len(q)) - np.searchsorted(q, q) < k
+        return q[keep], ids[keep], score[keep]
+
     def _local_topk(batches):
         b_ids, b_mat = bc.value
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
+        cand_q, cand_ids, cand_score = np.empty(0, np.int64), None, np.empty(0)
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
                 continue
-            emb = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
+            flat = rb.column(emb_col).flatten().to_numpy(zero_copy_only=False)
+            emb = flat.reshape(n, -1).astype(np.float64)
+            ids = rb.column(id_col).to_numpy(zero_copy_only=False)
             scores = _round_half_up6(emb @ b_mat.T)  # (n, Q)
-            parts = [] if best is None else [best]
-            for qi, qid in enumerate(b_ids):
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            q_id_col: qid,
-                            id_col: pdf[id_col].to_numpy(),
-                            "score": scores[:, qi],
-                        }
-                    )
-                )
-            best = (
-                pd.concat(parts, ignore_index=True)
-                .sort_values(["score", id_col], ascending=[False, True])
-                .groupby(q_id_col, sort=False)
-                .head(k)
+            if n > k:
+                kth = -np.partition(-scores, k - 1, axis=0)[k - 1]  # (Q,)
+                # a NaN k-th score (under k finite scores) keeps every row
+                rows, cols = np.nonzero((scores >= kth) | np.isnan(kth))
+            else:
+                rows, cols = np.indices(scores.shape).reshape(2, -1)
+            new_ids = ids[rows]
+            cand_q, cand_ids, cand_score = _first_k(
+                np.concatenate([cand_q, cols]),
+                new_ids if cand_ids is None else np.concatenate([cand_ids, new_ids]),
+                np.concatenate([cand_score, scores[rows, cols]]),
             )
-        if best is not None:
-            yield best
+        if cand_ids is not None:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(b_ids[cand_q], arrow_schema.field(0).type),
+                    pa.array(cand_ids, arrow_schema.field(1).type),
+                    pa.array(cand_score, pa.float64()),
+                ],
+                schema=arrow_schema,
+            )
 
     from semantic_index_spark.operators.dedup import ensure_parallelism
 
-    partial = ensure_parallelism(big.select(id_col, emb_col)).mapInPandas(
+    partial = ensure_parallelism(big.select(id_col, emb_col)).mapInArrow(
         _local_topk, schema=out_schema
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc(id_col))
@@ -1217,9 +1240,9 @@ def mrl_truncate(
     prefixes of the vector are themselves valid embeddings. Serving at
     dims=d/4 cuts vector IO and dot-product FLOPs 4× against a modest
     recall loss (measure it with :func:`ann_recall` against the full-dim
-    top-k). Pure JVM expressions: slice + one aggregate-fold norm —
-    no Python in the corpus path. [absent in reference — north-star
-    extension; public MRL paper semantics]"""
+    top-k). Pure JVM expressions: slice + one aggregate-fold norm per
+    vector — no Python in the corpus path. [absent in reference —
+    north-star extension; public MRL paper semantics]"""
     if dims < 1:
         raise ValueError("mrl_truncate: dims must be >= 1")
     sliced = F.slice(F.col(emb_col), 1, dims)
@@ -1231,12 +1254,17 @@ def mrl_truncate(
                 lambda acc, x: acc + x.cast("double") * x.cast("double"),
             )
         )
+        # bind the O(d) norm fold once per vector; inlined into the
+        # per-element lambda it would run d times
         sliced = F.transform(
-            sliced,
-            lambda x: F.when(norm > 0, x.cast("double") / norm).otherwise(
-                F.lit(0.0)
+            F.array(norm),
+            lambda nm: F.transform(
+                sliced,
+                lambda x: F.when(nm > 0, x.cast("double") / nm).otherwise(
+                    F.lit(0.0)
+                ),
             ),
-        )
+        )[0]
     return df.withColumn(emb_col, sliced.cast("array<double>"))
 
 

@@ -11,6 +11,7 @@ are what you'd set on a 1000-executor cluster, where
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -61,6 +62,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Describe the Spark jobs started inside the block as ``text`` (the
+    description the status store and the UI show per job), then restore
+    the caller's description, so a materialization point's jobs carry its
+    name instead of the enclosing call's."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
 
 
 def release_pin(df) -> None:

@@ -1164,7 +1164,10 @@ def merge_into_bucketed(
     never evolve — the bucket hash is type-sensitive."""
     import pyspark.sql.functions as F
 
-    from semantic_index_spark.session import collect_bounded, release_pin
+    from semantic_index_spark.session import collect_bounded, job_description, release_pin
+
+    def described(what: str):
+        return job_description(spark, f"merge_into_bucketed: {what}")
 
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
@@ -1231,7 +1234,10 @@ def merge_into_bucketed(
         src = source.withColumn("__op", F.lit(when_matched))
     else:
         src = source.withColumnRenamed(op_col, "__op")
-    src = src.withColumn("__bucket", _bucket_expr(keys, n_buckets)).localCheckpoint(eager=True)
+    with described("pin source"):
+        src = src.withColumn("__bucket", _bucket_expr(keys, n_buckets)).localCheckpoint(
+            eager=True
+        )
     pins = [src]
     try:
         # ONE bounded aggregation over the checkpointed source yields BOTH the
@@ -1241,17 +1247,19 @@ def merge_into_bucketed(
         # count_distinct skips NULL keys, so a count mismatch only FLAGS a
         # possible dup — the groupBy recheck (failure path only) decides, with
         # the same key-tuple error as before.
-        stats = collect_bounded(
-            src.groupBy("__bucket").agg(
-                F.count("*").alias("_n"),
-                F.count_distinct(*[F.col(k) for k in keys]).alias("_nd"),
-            ),
-            n_buckets,
-            "merge_into_bucketed bucket stats",
-        )
+        with described("bucket stats"):
+            stats = collect_bounded(
+                src.groupBy("__bucket").agg(
+                    F.count("*").alias("_n"),
+                    F.count_distinct(*[F.col(k) for k in keys]).alias("_nd"),
+                ),
+                n_buckets,
+                "merge_into_bucketed bucket stats",
+            )
         affected = sorted(r["__bucket"] for r in stats)
         if any(r["_n"] != r["_nd"] for r in stats):
-            dup = src.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
+            with described("duplicate-key check"):
+                dup = src.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
             if dup:
                 raise ValueError(
                     f"merge_into_bucketed: source has multiple rows for key "
@@ -1265,9 +1273,10 @@ def merge_into_bucketed(
         if tgt_paths:
             # outstanding deletion vectors must apply BEFORE the rewrite, or
             # the rewrite would resurrect DV-deleted rows into the new bucket
-            target = _apply_dv(
-                spark, _read_bucket_files(spark, man, tgt_paths), table, man, set(affected)
-            ).withColumn("__bucket", _bucket_expr(keys, n_buckets))
+            with described("read target buckets"):
+                target = _apply_dv(
+                    spark, _read_bucket_files(spark, man, tgt_paths), table, man, set(affected)
+                ).withColumn("__bucket", _bucket_expr(keys, n_buckets))
             kept = target.join(src.select(*keys), keys, "left_anti")
             for c, dt in widened.items():  # survivors upcast into the widened type
                 kept = kept.withColumn(c, F.col(c).cast(dt))
@@ -1286,7 +1295,8 @@ def merge_into_bucketed(
         # CHECK constraints: only the incoming rows can introduce a violation
         # (kept rows passed when they were written; add_constraint validated
         # the whole table), so enforcement is O(batch), not O(table)
-        _check_constraints(upserts, man.get("constraints"), "merge_into_bucketed")
+        with described("check constraints"):
+            _check_constraints(upserts, man.get("constraints"), "merge_into_bucketed")
         base = {
             "key_cols": keys,
             "n_buckets": n_buckets,
@@ -1305,16 +1315,23 @@ def merge_into_bucketed(
             # data if any input were non-deterministic (round 12)
             from semantic_index_spark.sources.indexed import _stage_merge_index
 
-            result = result.localCheckpoint(eager=True)
+            with described("pin result"):
+                result = result.localCheckpoint(eager=True)
             pins.append(result)
-            stage_extra, finalize = _stage_merge_index(man, result, affected)
+            stage_index, finalize = _stage_merge_index(man, result, affected)
+
+            def stage_extra(staged: str) -> None:
+                with described("index shard pass"):
+                    stage_index(staged)
+
         # a rewritten bucket has its DVs folded into the data — clear them;
         # the commit is conditional on `man` and rebases over concurrent
         # commits that touched only DISJOINT buckets (_publish_bucketed)
-        return _commit_bucketed(
-            table, result, base, man, dv_clear=affected,
-            stage_extra=stage_extra, finalize_manifest=finalize,
-        )
+        with described("commit"):
+            return _commit_bucketed(
+                table, result, base, man, dv_clear=affected,
+                stage_extra=stage_extra, finalize_manifest=finalize,
+            )
     finally:
         # nothing reads the pins once the commit returned or raised
         for pin in pins:

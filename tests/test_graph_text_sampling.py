@@ -877,14 +877,14 @@ def test_khop_frontier_stops_when_frontier_empties(spark):
     assert {(r["node"], r["hop"]) for r in got} == {("a", 0), ("b", 1)}
 
 
-def test_randomized_looking_queries_are_run_deterministic(spark):
+def test_randomized_looking_queries_are_run_deterministic(spark, sf_dir):
     """The md5-derived 'randomness' contract: every sampling / noise /
     bootstrap query must produce BIT-IDENTICAL results on a re-run in the
     same session — retries, speculative re-execution, and cross-engine
     oracles all depend on it."""
     import __spark_entry__ as entry
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     qs = entry.queries()
     for name in (
         "weighted_sample",

@@ -582,12 +582,11 @@ def test_staged_orphans_invisible_and_age_reclaimed(spark, tmp_path):
     assert _no_staged(t)
 
 
-def test_orc_roundtrip_aggregate_matches_parquet(spark):
+def test_orc_roundtrip_aggregate_matches_parquet(spark, sf_dir):
     import pyspark.sql.functions as F
 
     import __spark_entry__ as entrymod
 
-    sf_dir = "/root/testdata/sf0.001"
     got = entrymod.q_orc_roundtrip(spark, sf_dir)
     li = spark.read.parquet(sf_dir + "/lineitem.parquet")
     want = li.groupBy("l_returnflag").agg(

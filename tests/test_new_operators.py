@@ -941,13 +941,13 @@ def test_semantic_cluster_dedup_matches_bruteforce(spark):
     assert dropped, "test fixture should produce at least one drop"
 
 
-def test_semantic_cluster_dedup_plan_is_cell_hash_join(spark):
+def test_semantic_cluster_dedup_plan_is_cell_hash_join(spark, sf_dir):
     """The pair generation must plan as a hash/sort-merge equi-join on the
     cell id — never a cartesian product or broadcast nested loop."""
     from semantic_index_spark.operators.dedup import semantic_cluster_dedup
     from semantic_index_spark.operators.similarity import make_centroids
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(sf_dir + "/embeddings.parquet")
     out = semantic_cluster_dedup(emb, make_centroids(8, 64, seed=11), threshold=0.3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan

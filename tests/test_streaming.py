@@ -382,12 +382,11 @@ def test_moments_sink_matches_batch_stats(spark, events_dir, events_batch, tmp_p
         assert abs(got[k][2] - want[k][2]) < 1e-6
 
 
-def test_stream_static_enrich_replay_equals_batch_join(spark):
+def test_stream_static_enrich_replay_equals_batch_join(spark, sf_dir):
     import pyspark.sql.functions as F
 
     import __spark_entry__ as entrymod
 
-    sf_dir = "/root/testdata/sf0.001"
     got = entrymod.q_stream_static_enrich_replay(spark, sf_dir)
     ev = spark.read.parquet(sf_dir + "/events.parquet").select(
         "user_id",
@@ -409,11 +408,10 @@ def test_stream_static_enrich_replay_equals_batch_join(spark):
     assert want.exceptAll(got).count() == 0
 
 
-def test_stream_session_replay_equals_batch_session_window(spark):
+def test_stream_session_replay_equals_batch_session_window(spark, sf_dir):
     import __spark_entry__ as entrymod
     from semantic_index_spark.operators import relational as R
 
-    sf_dir = "/root/testdata/sf0.001"
     got = entrymod.q_stream_session_replay(spark, sf_dir)
     want = R.session_window_agg(spark, sf_dir)
     assert got.exceptAll(want).count() == 0

@@ -89,11 +89,11 @@ def test_topk_multi_ranks_per_query(emb):
     for q_id, rs in by_q.items():
         best = sorted(rs, key=lambda r: r["rank"])[0]
         assert best["vec_id"] == q_id  # self is nearest under dot of unit-ish vecs
-    # scale property: partial top-k runs inside MapInPandas (narrow); the
+    # scale property: partial top-k runs inside MapInArrow (narrow); the
     # only shuffle is the final merge over <= partitions*Q*k rows — never a
     # join or a full N*Q window shuffle.
     plan = E.formatted_plan(out)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
