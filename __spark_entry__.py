@@ -16,8 +16,12 @@ the compare.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -53,31 +57,60 @@ JACCARD_THRESHOLD = 0.2
 NEARDUP_COS = 0.25
 
 
-# Session-scoped shared artifact: the banded MinHash-LSH candidate pairs over
-# `documents` are consumed by five registry queries (minhash_lsh_pairs,
-# leakage_safe_split, dup_degree, cross_source_dup, lsh_dedup_quality) with
-# identical parameters. A real pipeline computes the pair artifact ONCE and
-# derives every downstream view from it (dedup.py:136 documents the persisted
-# `banded_signatures` contract); recomputing per-query was the round-6 bench's
-# single biggest avoidable cost. Keyed by Spark applicationId so a fresh
-# session (driver restart, new bench run) never sees a stale plan, and
-# localCheckpoint(eager) so the five consumers share ONE materialization
-# instead of five full shingle→minhash→band scans.
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+@contextlib.contextmanager
+def _scratch(prefix: str):
+    """A fresh temporary directory for one builder call, removed (with
+    everything written under it) when the block exits."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
+# Session memo for artifacts several registry rows share: built once per
+# (Spark applicationId, sf_dir, name) and reused. Keying by applicationId
+# means a fresh session (driver restart, new bench run) never sees a stale
+# plan or path. Frames are pinned with localCheckpoint(eager) by their
+# builders so every consumer shares ONE materialization; on-disk artifacts
+# live under a _session_root that is removed at interpreter exit.
+_SESSION_MEMO: dict[tuple[str, str, str], object] = {}
+
+
+def _session_memo(spark: SparkSession, sf_dir: str, name: str, build: Callable):
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _SESSION_MEMO:
+        _SESSION_MEMO[key] = build()
+    return _SESSION_MEMO[key]
+
+
+def _session_root(name: str) -> str:
+    """A temporary directory that outlives the builder call (it backs a
+    session memo) and is removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix=f"{name}_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+# The banded MinHash-LSH candidate pairs over `documents` are consumed by
+# five registry queries (minhash_lsh_pairs, leakage_safe_split, dup_degree,
+# cross_source_dup, lsh_dedup_quality) with identical parameters. A real
+# pipeline computes the pair artifact ONCE and derives every downstream view
+# from it (dedup.py:136 documents the persisted `banded_signatures`
+# contract); recomputing per-query was the round-6 bench's single biggest
+# avoidable cost.
 def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LSH_PAIRS_CACHE.get(key)
-    if df is None:
-        df = D.minhash_lsh_pairs(
+    return _session_memo(
+        spark,
+        sf_dir,
+        "lsh_pairs",
+        lambda: D.minhash_lsh_pairs(
             load_table(spark, sf_dir, "documents"),
             num_hashes=MINHASH_N,
             bands=MINHASH_N,  # 1 row per band
             shingle_n=SHINGLE_N,
-        ).localCheckpoint(eager=True)
-        _LSH_PAIRS_CACHE[key] = df
-    return df
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _duck_dot(a: str, b: str) -> str:
@@ -285,16 +318,12 @@ def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guaranteed base layer — provably visits every node, so the result is
     # the exact top-k and the brute-force oracle hash-matches; real-beam
     # recall is pytest-covered (tests/test_new_operators.py).
-    import tempfile
-
     from semantic_index_spark.operators import hnsw as H
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 5).select("embedding").collect()[0][0]
-    import shutil
 
-    tmp = tempfile.mkdtemp(prefix="hnsw_idx_")
-    try:
+    with _scratch("hnsw_idx_") as tmp:
         path = tmp + "/idx"
         H.write_hnsw_index(
             H.build_hnsw(emb, n_shards=4, m=8, ef_construction=32),
@@ -306,8 +335,6 @@ def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -320,17 +347,13 @@ def q_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # append == rebuild exactly (pytest); the exhaustive serve proves the
     # appended index covers the WHOLE corpus, so the brute-force oracle
     # hash-matches.
-    import tempfile
-
     from semantic_index_spark.operators import hnsw as H
 
     emb = load_table(spark, sf_dir, "embeddings")
     cut = emb.agg(F.expr("percentile(vec_id, 0.66)").alias("c")).collect()[0]["c"]
     q = emb.filter(F.col("vec_id") == 9).select("embedding").collect()[0][0]
-    import shutil
 
-    tmp = tempfile.mkdtemp(prefix="hnsw_inc_")
-    try:
+    with _scratch("hnsw_inc_") as tmp:
         path = tmp + "/idx"
         H.write_hnsw_index(
             H.build_hnsw(emb.filter(F.col("vec_id") <= cut), n_shards=4, m=8, ef_construction=32),
@@ -343,8 +366,6 @@ def q_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -386,8 +407,6 @@ def q_hnsw_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (exactly-once for a stateful structure; a double-insert would crash
     # on duplicate ids, a lost batch would break the oracle hash). The
     # exhaustive serve proves the final graph covers the whole corpus.
-    import tempfile
-
     from semantic_index_spark.operators import hnsw as H
     from semantic_index_spark.streaming.ingest import incremental_hnsw_sink
 
@@ -399,10 +418,8 @@ def q_hnsw_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     cut, hi = cuts["c"], cuts["h"]
     q = emb.filter(F.col("vec_id") == 11).select("embedding").collect()[0][0]
-    import shutil
 
-    tmp = tempfile.mkdtemp(prefix="hnsw_stream_")
-    try:
+    with _scratch("hnsw_stream_") as tmp:
         path = tmp + "/idx"
         H.write_hnsw_index(
             H.build_hnsw(emb.filter(F.col("vec_id") <= cut), n_shards=4, m=8, ef_construction=32),
@@ -420,8 +437,6 @@ def q_hnsw_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -433,9 +448,6 @@ def q_hnsw_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Output = the exhaustive serve BOTH before and after compaction,
     # stage-tagged — a leaked deleted row, a lost survivor, or a
     # compaction that changed results breaks the hash.
-    import shutil
-    import tempfile
-
     from semantic_index_spark.operators import hnsw as H
 
     # a 500-vector slice: the row's point is the tombstone/compaction
@@ -444,8 +456,7 @@ def q_hnsw_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows already build on the full corpus)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     q = emb.filter(F.col("vec_id") == 4).select("embedding").collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="hnsw_dv_")
-    try:
+    with _scratch("hnsw_dv_") as tmp:
         path = tmp + "/idx"
         H.write_hnsw_index(
             H.build_hnsw(emb, n_shards=4, m=8, ef_construction=16),
@@ -467,8 +478,6 @@ def q_hnsw_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = before.unionByName(after).orderBy("stage", F.desc("score"), "vec_id")
         out = out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1869,20 +1878,19 @@ LIFT_MIN_SUPPORT = 2
 # shared_lsh_pairs): three registry queries (triangle_count,
 # motif_triangles, motif_open_wedges) consume the identical edge list —
 # compute it once per (applicationId, sf_dir) and localCheckpoint it.
-_COPURCHASE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _session_memo(
+        spark, sf_dir, "copurchase", lambda: _build_copurchase_edges(spark, sf_dir)
+    )
+
+
+def _build_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part–part "bought together" edges: distinct part pairs sharing an
     # order, canonical src<dst. ONE groupBy shuffle collects each order's
     # part set, the ordered pairs explode in-JVM (baskets are small — the
     # same Σ|basket|² shape as association_lift, with mining.py's
     # max_basket as the cap lever if baskets ever grow), then one distinct
     # — vs a lineitem self-join this halves the shuffles
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COPURCHASE_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("_ps")
@@ -1896,14 +1904,12 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    edges = (
+    return (
         baskets.select(F.explode(pairs).alias("_e"))
         .select("_e.src", "_e.dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _COPURCHASE_CACHE[key] = edges
-    return edges
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3389,15 +3395,12 @@ def q_blocked_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import contextlib
-
-
 @contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
+def _stream_shuffle_partitions(spark: SparkSession):
     """Temporarily tune the session for a stateful streaming replay; the
     session values are restored after. Two knobs:
 
-    * shuffle partitions lowered to ``n``: the state store pays a
+    * shuffle partitions lowered to 8: the state store pays a
       per-partition-per-epoch checkpoint cost (files + fsync), so 32 state
       partitions for a few thousand rows is almost pure overhead. Each
       replay starts a FRESH checkpoint, so the partition count is free to
@@ -3414,7 +3417,7 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
       pipeline whose final results ARE watermark-gated (append-mode
       windowed aggregation) must keep the default instead."""
     keys = {
-        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     }
     old = {k: spark.conf.get(k) for k in keys}
@@ -3429,9 +3432,7 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
 
 def _write_one_file_parquet(df: DataFrame, scratch: str, dest: str) -> None:
     """Materialize ``df`` as exactly ONE parquet file at ``dest`` — each
-    file is one micro-batch for a maxFilesPerTrigger=1 file stream."""
-    import shutil
-
+    file is one micro-batch for a ``_file_stream``."""
     df.coalesce(1).write.mode("overwrite").parquet(scratch)
     part = next(f for f in os.listdir(scratch) if f.startswith("part-"))
     shutil.move(os.path.join(scratch, part), dest)
@@ -3445,32 +3446,27 @@ def _write_one_file_parquet(df: DataFrame, scratch: str, dest: str) -> None:
 # bench cost without exercising anything the stream itself doesn't. Sources
 # are written once per (applicationId, sf_dir, tag) and reused; checkpoint
 # dirs and any MUTATED outputs (merge tables, sketch tables, index state)
-# remain strictly per-run. Roots are removed at interpreter exit.
-_REPLAY_SRC_CACHE: dict[tuple[str, str, str], str] = {}
-
-
+# remain strictly per-run.
 def _replay_sources(
     spark: SparkSession,
     sf_dir: str,
     tag: str,
     batches: "list[tuple[str, DataFrame]]",
 ) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    root = _REPLAY_SRC_CACHE.get(key)
-    if root is not None and os.path.isdir(root):
+    def write() -> str:
+        root = _session_root(f"replay_src_{tag}")
+        for rel, df in batches:
+            dest = os.path.join(root, rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            _write_one_file_parquet(df, os.path.join(root, "_scratch"), dest)
         return root
-    root = tempfile.mkdtemp(prefix=f"replay_src_{tag}_")
-    for rel, df in batches:
-        dest = os.path.join(root, rel)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        _write_one_file_parquet(df, os.path.join(root, "_scratch"), dest)
-    _REPLAY_SRC_CACHE[key] = root
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
+
+    return _session_memo(spark, sf_dir, f"replay_src_{tag}", write)
+
+
+def _file_stream(spark: SparkSession, schema: str, path: str) -> DataFrame:
+    """Parquet files under ``path`` as a stream, one file per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
 
 
 def q_versioned_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3485,17 +3481,14 @@ def q_versioned_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     version tags, so a dropped commit, a double-read, or a mis-tagged
     version breaks the hash. Restart/bucketed/DV/schema-evolution feed
     semantics are pytest-locked (tests/test_streaming.py)."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.sources.versioned_stream import register_versioned_feed
+    from semantic_index_spark.streaming import ingest as SI
 
     c = load_table(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     base = c.select(F.col("c_custkey").alias("id"), cents.alias("cents"))
-    tmp = tempfile.mkdtemp(prefix="vfeed_")
-    try:
+    with _scratch("vfeed_") as tmp:
         table = os.path.join(tmp, "t")
         VER.commit_version(base.filter(F.col("id") <= 100), table)
         VER.commit_version(
@@ -3512,25 +3505,20 @@ def q_versioned_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         register_versioned_feed(spark)
         sink, ckpt = os.path.join(tmp, "sink"), os.path.join(tmp, "ckpt")
-        q = (
+        SI.run_batch_like(
             spark.readStream.format("versioned_feed")
             .option("table", table)
             .load()
-            .writeStream.trigger(availableNow=True)
-            .format("parquet")
+            .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .start()
         )
-        q.awaitTermination(120)
         out = (
             spark.read.parquet(sink)
             .select("id", "cents", F.col("_version").alias("version"))
             .orderBy("version", "id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -3544,9 +3532,6 @@ def q_streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the upsert's remove-then-add dedup is what makes the final state one
     row per distinct item (ALLOW would duplicate them — the oracle's
     DISTINCT would catch it)."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.index import SemanticIndex
     from semantic_index_spark.streaming import ingest as SI
 
@@ -3576,14 +3561,9 @@ def q_streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="upsert_replay_")
-    try:
+    with _scratch("upsert_replay_") as tmp:
         idx = SemanticIndex(spark)
-        stream = (
-            spark.readStream.schema("item string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, "item string", src)
         writer = SI.stream_upsert_into_index(
             stream, idx, checkpoint=os.path.join(tmp, "ckpt")
         )
@@ -3593,8 +3573,6 @@ def q_streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # was localCheckpointed inside foreachBatch, but the extra pin makes
         # the returned plan self-contained)
         final = idx.records.select("item").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -3609,9 +3587,6 @@ def q_stream_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger in the manifest). Batch key sets are DISJOINT so the final
     state is independent of file-arrival order; the oracle applies the
     same changes relationally in one expression."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.streaming import ingest as SI
 
@@ -3636,27 +3611,17 @@ def q_stream_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "feed",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_merge_")
-    try:
+    with _scratch("stream_merge_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
-        stream = (
-            spark.readStream.schema("doc_id bigint, n_chars bigint, op string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, "doc_id bigint, n_chars bigint, op string", src)
         sink = SI.merge_stream_sink(tbl, op_col="op")
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 stream.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         final = VER.read_bucketed(spark, tbl).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -3676,9 +3641,6 @@ def q_stream_indexed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     either epoch breaks the hash. Per-epoch consistency and replayed-
     epoch skipping are pytest-locked
     (``test_merge_stream_sink_maintains_cocommitted_index``)."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.streaming import ingest as SI
@@ -3704,33 +3666,23 @@ def q_stream_indexed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "feed",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_idx_merge_")
-    try:
+    with _scratch("stream_idx_merge_") as tmp:
         tbl = os.path.join(tmp, "vec_tbl")
         VER.create_bucketed(base, tbl, ["id"], n_buckets=4)
         IDX.attach_ivfsq_index(spark, tbl, n_cells=4)
-        stream = (
-            spark.readStream.schema("id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, "id bigint, embedding array<float>", src)
         sink = SI.merge_stream_sink(tbl)
         with _stream_shuffle_partitions(spark):
-            sq = (
+            SI.run_batch_like(
                 stream.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            sq.awaitTermination()
         out = (
             IDX.indexed_ivfsq_topk(spark, tbl, q, k=KNN_K, nprobe=4,
                                    candidates=600)
             .orderBy(F.desc("score"), "vec_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -3742,9 +3694,6 @@ def q_stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mergeability means stream == one-shot batch sketch, and both engines
     run the identical md5-register formula, so even the APPROXIMATE value
     hash-matches the oracle's SQL replay."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.streaming import ingest as SI
 
     ev = load_table(spark, sf_dir, "events")
@@ -3763,27 +3712,17 @@ def q_stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="hll_replay_")
-    try:
+    with _scratch("hll_replay_") as tmp:
         sketch_path = os.path.join(tmp, "sketch")
-        stream = (
-            spark.readStream.schema("user_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, "user_id bigint", src)
         cb = SI.incremental_hll_sink(sketch_path, "user_id", p=HLL_P)
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 stream.writeStream.foreachBatch(cb)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         regs = spark.read.parquet(sketch_path)
         final = SKT.hll_estimate(regs, p=HLL_P).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -3833,9 +3772,6 @@ def q_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     __QUARANTINED__ row counting the bad lines; the oracle derives both
     directly from the rule — a dropped or silently-vanished corrupt line
     breaks the row."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from semantic_index_spark.sources import io as IO
@@ -3851,8 +3787,7 @@ def q_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('","n_chars":'), F.col("n_chars").cast("string"), F.lit("}"),
         )
     ).alias("value")
-    tmp = tempfile.mkdtemp(prefix="jsonl_q_")
-    try:
+    with _scratch("jsonl_q_") as tmp:
         path = os.path.join(tmp, "dump")
         d.select(line).write.text(path)
         schema = StructType(
@@ -3873,8 +3808,6 @@ def q_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("bigint").alias("total_chars"),
         )
         out = good_agg.unionByName(bad_agg).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -3886,9 +3819,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     files surface NULL quality) and aggregates per language — null-aware
     counts prove old rows really read as NULL rather than 0 or dropped.
     The oracle derives the same split from the doc_id rule."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import io as IO
 
     d = load_table(spark, sf_dir, "documents")
@@ -3896,8 +3826,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_batch = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "lang", "n_chars", (F.col("n_chars") % 100).cast("bigint").alias("quality")
     )
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with _scratch("schema_evo_") as tmp:
         path = os.path.join(tmp, "corpus")
         old_batch.write.parquet(path)
         new_batch.write.mode("append").parquet(path)
@@ -3911,8 +3840,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -3924,8 +3851,6 @@ def q_stateful_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink), then keep each user's LAST emission — which must equal
     the batch groupBy. Values are pre-scaled to integral cents so the
     cross-batch float accumulation is exact and hash-comparable."""
-    import shutil
-    import tempfile
     import uuid
 
     from semantic_index_spark.streaming import ingest as SI
@@ -3948,25 +3873,17 @@ def q_stateful_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="stateful_replay_")
     name = "stateful_totals_" + uuid.uuid4().hex[:12]
-    try:
-        stream = (
-            spark.readStream.schema("user_id bigint, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _scratch("stateful_replay_") as tmp:
+        stream = _file_stream(spark, "user_id bigint, value double", src)
         out = SI.stateful_user_totals(stream)
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 out.writeStream.outputMode("update")
                 .format("memory")
                 .queryName(name)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         # n_events is strictly monotone per user across its emissions, so
         # max(struct) picks the final (count, total) pair atomically
         final = (
@@ -3980,8 +3897,6 @@ def q_stateful_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -4073,8 +3988,6 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator exists for), with a far-horizon watermark so no dedup state
     expires. The memory sink must hold every event exactly once; a broken
     dedup inflates the per-type counts and fails the hash."""
-    import shutil
-    import tempfile
     import uuid
 
     from semantic_index_spark.streaming import ingest as SI
@@ -4101,25 +4014,21 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_")
     name = "stream_dedup_" + uuid.uuid4().hex[:12]
-    try:
-        stream = spark.readStream.schema(
-            "event_id bigint, ts timestamp, event_type string, value double"
-        ).option("maxFilesPerTrigger", 1).parquet(src)
+    with _scratch("stream_dedup_") as tmp:
+        stream = _file_stream(
+            spark, "event_id bigint, ts timestamp, event_type string, value double", src
+        )
         deduped = SI.dedup_within_watermark(
             stream, ["event_id"], watermark="100000 hours"
         )
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 deduped.writeStream.outputMode("append")
                 .format("memory")
                 .queryName(name)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         final = (
             spark.table(name)
             .groupBy("event_type")
@@ -4129,8 +4038,6 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -4146,9 +4053,9 @@ def q_stream_static_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     type) counts and exact value cents. Events without a matching
     customer keep a NULL segment (left join) — dropping them would hide
     referential gaps (see fk_integrity)."""
-    import shutil
-    import tempfile
     import uuid
+
+    from semantic_index_spark.streaming import ingest as SI
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -4172,24 +4079,22 @@ def q_stream_static_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_enrich_")
     name = "stream_enrich_" + uuid.uuid4().hex[:12]
-    try:
-        stream = spark.readStream.schema(
+    with _scratch("stream_enrich_") as tmp:
+        stream = _file_stream(
+            spark,
             "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value_cents bigint"
-        ).option("maxFilesPerTrigger", 1).parquet(src)
+            "event_type string, value_cents bigint",
+            src,
+        )
         enriched = stream.join(F.broadcast(cust), "user_id", "left")
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 enriched.writeStream.outputMode("append")
                 .format("memory")
                 .queryName(name)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         final = (
             spark.table(name)
             .groupBy("c_mktsegment", "event_type")
@@ -4199,8 +4104,6 @@ def q_stream_static_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -4353,9 +4256,9 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the production eviction story; it can never emit the trailing
     open sessions, which would break exact batch parity — the bounded-
     state variant is exercised by events_tumbling/sliding_windows.)"""
-    import shutil
-    import tempfile
     import uuid
+
+    from semantic_index_spark.streaming import ingest as SI
 
     gap_s = 1800
     ev = load_table(spark, sf_dir, "events").select(
@@ -4376,12 +4279,11 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_session_")
     name = "stream_session_" + uuid.uuid4().hex[:12]
-    try:
-        stream = spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, value double"
-        ).option("maxFilesPerTrigger", 1).parquet(src)
+    with _scratch("stream_session_") as tmp:
+        stream = _file_stream(
+            spark, "event_id bigint, ts timestamp, user_id bigint, value double", src
+        )
         agg = stream.groupBy(
             F.session_window("ts", f"{gap_s} seconds").alias("w"),
             "user_id",
@@ -4390,15 +4292,12 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 agg.writeStream.outputMode("complete")
                 .format("memory")
                 .queryName(name)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         final = (
             spark.table(name)
             .select(
@@ -4410,8 +4309,6 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -4425,12 +4322,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type mapping, nulls, partition-column re-derivation) breaks the
     hash. Money sums in exact cents — the round-trip must preserve the
     doubles BIT-exactly for these to match."""
-    import shutil
-    import tempfile
-
     li = load_table(spark, sf_dir, "lineitem")
-    tmp = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
+    with _scratch("orc_rt_") as tmp:
         dest = os.path.join(tmp, "lineitem_orc")
         li.write.partitionBy("l_returnflag").orc(dest)
         back = spark.read.orc(dest)
@@ -4446,8 +4339,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -4457,8 +4348,6 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams, joined per user where the view happened within 1 hour before
     the purchase; far-horizon watermark → no state eviction, so the
     emitted set equals the batch join exactly."""
-    import shutil
-    import tempfile
     import uuid
 
     from semantic_index_spark.streaming import ingest as SI
@@ -4488,12 +4377,11 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lsrc = os.path.join(root, "purchases")
     rsrc = os.path.join(root, "views")
-    tmp = tempfile.mkdtemp(prefix="stream_join_")
     name = "stream_join_" + uuid.uuid4().hex[:12]
-    try:
+    with _scratch("stream_join_") as tmp:
         schema = "event_id bigint, ts timestamp, user_id bigint"
-        left = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(lsrc)
-        right = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(rsrc)
+        left = _file_stream(spark, schema, lsrc)
+        right = _file_stream(spark, schema, rsrc)
         joined = SI.stream_stream_join(
             left, right, on="user_id", within="1 hour", watermark="100000 hours"
         ).select(
@@ -4502,18 +4390,13 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r.event_id").alias("view_id"),
         )
         with _stream_shuffle_partitions(spark):
-            q = (
+            SI.run_batch_like(
                 joined.writeStream.outputMode("append")
                 .format("memory")
                 .queryName(name)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
         final = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -4626,9 +4509,6 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     change set relationally from the parquet original: updates = matched
     upserts with a differing payload, deletes = matched tombstones,
     inserts = unmatched upserts."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -4640,14 +4520,11 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    tmp = tempfile.mkdtemp(prefix="cdf_ver_")
-    try:
+    with _scratch("cdf_ver_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
         VER.merge_into_bucketed(spark, tbl, src, op_col="op")
         out = VER.diff_bucketed(spark, tbl, 0, 1).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -4742,9 +4619,6 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (NOT EXISTS anti-join + union) from the parquet original, so any
     divergence in merge semantics, bucket routing, or manifest
     bookkeeping breaks the row count or the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -4756,8 +4630,7 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    tmp = tempfile.mkdtemp(prefix="merge_ver_")
-    try:
+    with _scratch("merge_ver_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
         VER.merge_into_bucketed(spark, tbl, src, op_col="op")
@@ -4783,8 +4656,6 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -4801,9 +4672,6 @@ def q_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     that narrower read, proving it). The oracle derives the exact
     NULL-backfilled merged state relationally, so a wrong backfill, a
     dropped untouched bucket, or a leaked column into v0 breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents")
@@ -4816,8 +4684,7 @@ def q_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    tmp = tempfile.mkdtemp(prefix="merge_evo_")
-    try:
+    with _scratch("merge_evo_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
         VER.merge_into_bucketed(spark, tbl, src, op_col="op", schema_evolution=True)
@@ -4850,8 +4717,6 @@ def q_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -4871,9 +4736,6 @@ def q_sql_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both snapshots. SQL point-lookup bucket pruning
     (pushFilters + the Spark-bit-exact python xxhash64) is pytest-locked
     (``test_versioned_table_sql_front_door``)."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.sources import versioned_batch as VB
 
@@ -4882,41 +4744,40 @@ def q_sql_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("id"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
     )
-    tmp = tempfile.mkdtemp(prefix="sql_front_door_")
-    try:
-        t = os.path.join(tmp, "tbl")
-        VER.create_bucketed(base, t, ["id"], n_buckets=8)
-        src = base.filter(F.col("id") % 7 == 0).select(
-            "id", (F.col("cents") + 55).alias("cents")
-        ).unionByName(
-            base.filter(F.col("id") <= 10).select(
-                (F.col("id") + 9000).alias("id"), "cents"
+    with _scratch("sql_front_door_") as tmp:
+        try:
+            t = os.path.join(tmp, "tbl")
+            VER.create_bucketed(base, t, ["id"], n_buckets=8)
+            src = base.filter(F.col("id") % 7 == 0).select(
+                "id", (F.col("cents") + 55).alias("cents")
+            ).unionByName(
+                base.filter(F.col("id") <= 10).select(
+                    (F.col("id") + 9000).alias("id"), "cents"
+                )
             )
-        )
-        VER.merge_into_bucketed(spark, t, src)
-        VER.delete_bucketed(
-            spark, t, base.filter(F.col("id") % 11 == 0).select("id")
-        )
-        VER.rename_column(t, "cents", "balance_cents")
-        VB.sql_view(spark, "sqlfd_reg_cur", t)
-        VB.sql_view(spark, "sqlfd_reg_v0", t, version=0)
-        out = spark.sql(
-            """
-            SELECT COALESCE(c.id, o.id) AS id,
-                   c.balance_cents,
-                   o.cents AS old_cents,
-                   CASE WHEN c.id IS NULL THEN 'deleted'
-                        WHEN o.id IS NULL THEN 'inserted'
-                        WHEN c.balance_cents <> o.cents THEN 'changed'
-                        ELSE 'same' END AS status
-            FROM sqlfd_reg_cur c FULL OUTER JOIN sqlfd_reg_v0 o ON c.id = o.id
-            ORDER BY id
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView("sqlfd_reg_cur")
-        spark.catalog.dropTempView("sqlfd_reg_v0")
-        shutil.rmtree(tmp, ignore_errors=True)
+            VER.merge_into_bucketed(spark, t, src)
+            VER.delete_bucketed(
+                spark, t, base.filter(F.col("id") % 11 == 0).select("id")
+            )
+            VER.rename_column(t, "cents", "balance_cents")
+            VB.sql_view(spark, "sqlfd_reg_cur", t)
+            VB.sql_view(spark, "sqlfd_reg_v0", t, version=0)
+            out = spark.sql(
+                """
+                SELECT COALESCE(c.id, o.id) AS id,
+                       c.balance_cents,
+                       o.cents AS old_cents,
+                       CASE WHEN c.id IS NULL THEN 'deleted'
+                            WHEN o.id IS NULL THEN 'inserted'
+                            WHEN c.balance_cents <> o.cents THEN 'changed'
+                            ELSE 'same' END AS status
+                FROM sqlfd_reg_cur c FULL OUTER JOIN sqlfd_reg_v0 o ON c.id = o.id
+                ORDER BY id
+                """
+            ).localCheckpoint(eager=True)
+        finally:
+            spark.catalog.dropTempView("sqlfd_reg_cur")
+            spark.catalog.dropTempView("sqlfd_reg_v0")
     return out
 
 
@@ -4936,17 +4797,13 @@ def q_indexed_table_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     that version's own shards. The brute-force oracle recomputes both
     states relationally — a stale shard, a leaked insert into the as-of
     serve, or a DV that failed to tombstone breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
     base = emb.select(F.col("vec_id").alias("id"), "embedding")
     q = emb.filter(F.col("vec_id") == 3).collect()[0]["embedding"]
-    tmp = tempfile.mkdtemp(prefix="indexed_ann_")
-    try:
+    with _scratch("indexed_ann_") as tmp:
         t = os.path.join(tmp, "tbl")
         VER.create_bucketed(base, t, ["id"], n_buckets=8)
         v_attach = IDX.attach_hnsw_index(spark, t, m=8, ef_construction=32)
@@ -4974,8 +4831,6 @@ def q_indexed_table_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("stage", F.desc("score"), "vec_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -4996,9 +4851,6 @@ def q_merge_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. The oracle derives the same merged state relationally;
     a wrong upcast, a dropped untouched bucket, or a leaked wide value
     into v0 breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents")
@@ -5012,8 +4864,7 @@ def q_merge_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") + F.lit(3_000_000_000)).alias("n_chars"),
         ((F.col("n_chars") / F.lit(4)) + F.lit(1000000.25)).alias("score"),
     )
-    tmp = tempfile.mkdtemp(prefix="merge_widen_")
-    try:
+    with _scratch("merge_widen_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
         VER.merge_into_bucketed(spark, tbl, src, schema_evolution=True)
@@ -5042,8 +4893,6 @@ def q_merge_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5062,9 +4911,6 @@ def q_restore_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     'inserted' for DV'd keys (they come back), 'updated' for merged keys
     (payload reverts), NULL for untouched — a wrong diff or a clone that
     read stale buckets breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     c = load_table(spark, sf_dir, "customer")
@@ -5073,8 +4919,7 @@ def q_restore_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_name").alias("name"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
     )
-    tmp = tempfile.mkdtemp(prefix="restore_clone_")
-    try:
+    with _scratch("restore_clone_") as tmp:
         tbl = os.path.join(tmp, "cust_tbl")
         VER.create_bucketed(base, tbl, ["id"], n_buckets=16)  # v0
         upd = base.filter(F.col("id") % 7 == 0).select(
@@ -5103,8 +4948,6 @@ def q_restore_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5118,9 +4961,6 @@ def q_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     all under the new logical name — the oracle recomputes the state
     relationally, so a broken physical→logical alias (NULLs), a lost
     mapping on any commit path, or a mis-keyed DV breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     c = load_table(spark, sf_dir, "customer")
@@ -5129,8 +4969,7 @@ def q_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         F.col("c_name").alias("name"),
     )
-    tmp = tempfile.mkdtemp(prefix="rename_col_")
-    try:
+    with _scratch("rename_col_") as tmp:
         tbl = os.path.join(tmp, "cust_tbl")
         VER.create_bucketed(base, tbl, ["id"], n_buckets=8)  # v0
         VER.rename_column(tbl, "cents", "pennies")  # v1: metadata-only
@@ -5147,8 +4986,6 @@ def q_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5163,9 +5000,6 @@ def q_table_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generated expression inline, so a wrong compute, a silently
     dropped constraint (the DV-shedding regression class), or a leaked
     rejected batch breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     c = load_table(spark, sf_dir, "customer")
@@ -5173,8 +5007,7 @@ def q_table_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("id"),
         F.abs(F.round(F.col("c_acctbal") * 100).cast("long")).alias("cents"),
     )
-    tmp = tempfile.mkdtemp(prefix="tbl_meta_")
-    try:
+    with _scratch("tbl_meta_") as tmp:
         tbl = os.path.join(tmp, "t")
         VER.create_bucketed(
             base, tbl, ["id"], n_buckets=8,
@@ -5211,8 +5044,6 @@ def q_table_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5225,9 +5056,6 @@ def q_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-drop version — proving the drop is metadata-only (the data
     still exists at v1) AND the current schema is narrow. The oracle
     recomputes both relationally."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     c = load_table(spark, sf_dir, "customer")
@@ -5236,8 +5064,7 @@ def q_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         F.col("c_name").alias("name"),
     )
-    tmp = tempfile.mkdtemp(prefix="drop_col_")
-    try:
+    with _scratch("drop_col_") as tmp:
         tbl = os.path.join(tmp, "t")
         VER.create_bucketed(base, tbl, ["id"], n_buckets=8)  # v0
         VER.merge_into_bucketed(
@@ -5264,8 +5091,6 @@ def q_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5280,9 +5105,6 @@ def q_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     files. The output is the per-source aggregate of each read, tagged,
     so a wrong skip (dropped file) breaks counts/sums against the oracle,
     which replays the two predicates relationally on the raw table."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import skipping as Z
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -5290,8 +5112,7 @@ def q_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.when(F.col("lang") != "en", F.col("lang")).alias("lang_nn"),
     )
-    tmp = tempfile.mkdtemp(prefix="null_skip_")
-    try:
+    with _scratch("null_skip_") as tmp:
         tbl = os.path.join(tmp, "docs_zm")
         Z.write_skipping(
             d, tbl, stats_cols=["doc_id", "lang_nn"], n_files=8, cluster_by="lang_nn"
@@ -5314,8 +5135,6 @@ def q_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("which", "source")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5331,8 +5150,6 @@ def q_time_travel_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output depends on commit ORDER alone, which is why this query can
     carry a hard oracle: the oracle rebuilds the three cumulative
     snapshot states relationally."""
-    import shutil
-    import tempfile
     import time as _time
 
     from semantic_index_spark.sources import versioned as VER
@@ -5345,8 +5162,7 @@ def q_time_travel_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         # DuckDB)
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
     )
-    tmp = tempfile.mkdtemp(prefix="ts_travel_")
-    try:
+    with _scratch("ts_travel_") as tmp:
         tbl = os.path.join(tmp, "orders_tbl")
         instants = []
         # commit k = priorities 1..k+1 — strictly growing snapshots
@@ -5369,8 +5185,6 @@ def q_time_travel_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, "snapshot int, n_orders bigint, rev_cents bigint"
         ).orderBy("snapshot")
         out = out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5548,18 +5362,13 @@ PQ_M, PQ_K, PQ_ITERS, PQ_QVEC, PQ_TOPN = 4, 16, 2, 3, 10
 # by applicationId so a fresh driver never sees stale artifacts; the codes
 # DataFrame is localCheckpoint(eager)ed so consumers share one
 # materialization, and the codebooks are plain driver-held floats.
-_PQ_ARTIFACT_CACHE: dict[tuple[str, str], tuple[DataFrame, list]] = {}
-
-
 def shared_pq_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_ARTIFACT_CACHE.get(key)
-    if hit is None:
+    def build() -> tuple[DataFrame, list]:
         emb = load_table(spark, sf_dir, "embeddings")
         codes, cb = S.pq_train_encode(emb, m_sub=PQ_M, k=PQ_K, iters=PQ_ITERS)
-        hit = (codes.localCheckpoint(eager=True), cb)
-        _PQ_ARTIFACT_CACHE[key] = hit
-    return hit
+        return codes.localCheckpoint(eager=True), cb
+
+    return _session_memo(spark, sf_dir, "pq_artifacts", build)
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5661,9 +5470,6 @@ def q_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and encoding are pure functions of (embedding, frozen
     artifacts), the served top-k must be row-identical to the ad-hoc
     path — the oracle is ivfpq_topk's unrolled PQ replay verbatim."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.streaming import ingest as SI
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5687,63 +5493,43 @@ def q_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="ivfpq_inc_")
-    try:
+    with _scratch("ivfpq_inc_") as tmp:
         idx = os.path.join(tmp, "index")
         S.write_ivfpq_index(base, cb, CENTROIDS, idx)
-        stream = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, "vec_id bigint, embedding array<float>", src)
         sink = SI.incremental_ivfpq_sink(idx, cb, CENTROIDS)
         with _stream_shuffle_partitions(spark):
-            sq = (
+            SI.run_batch_like(
                 stream.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            sq.awaitTermination()
         final = S.ivfpq_topk_indexed(
             spark, idx, cb, CENTROIDS, qv, k_results=PQ_TOPN, nprobe=IVF_NPROBE
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
-
-# Session-scoped hidden-partitioned copy of `events` (same once-per-session
-# contract as _replay_sources): the table layout is a pure function of the
-# source table and the fixed spec, so bench reps and the driver's
-# oracle-compare reuse one build. Removed at interpreter exit.
-_HIDDEN_TBL_CACHE: dict[tuple[str, str], str] = {}
 
 HP_LO, HP_HI = "2024-01-10", "2024-01-13"
 HP_USERS = list(range(1, 21))
 
 
+# Session-memoized hidden-partitioned copy of `events` (same once-per-session
+# contract as _replay_sources): the table layout is a pure function of the
+# source table and the fixed spec, so bench reps and the driver's
+# oracle-compare reuse one build.
 def _hidden_events_table(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import hidden as H
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _HIDDEN_TBL_CACHE.get(key)
-    if tbl is not None and os.path.isdir(tbl):
+    def write() -> str:
+        tbl = os.path.join(_session_root("hidden_events"), "events_hidden")
+        H.create_hidden(
+            load_table(spark, sf_dir, "events"),
+            tbl,
+            [("day", "ts"), ("bucket", "user_id", 8)],
+        )
         return tbl
-    root = tempfile.mkdtemp(prefix="hidden_events_")
-    tbl = os.path.join(root, "events_hidden")
-    H.create_hidden(
-        load_table(spark, sf_dir, "events"),
-        tbl,
-        [("day", "ts"), ("bucket", "user_id", 8)],
-    )
-    _HIDDEN_TBL_CACHE[key] = tbl
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tbl
+
+    return _session_memo(spark, sf_dir, "hidden_events", write)
 
 
 def q_hidden_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5773,40 +5559,30 @@ def q_hidden_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped zone-mapped copy of `lineitem`, range-clustered by ship
-# date (same once-per-session contract as _hidden_events_table).
-_ZONEMAP_TBL_CACHE: dict[tuple[str, str], str] = {}
-
 ZM_LO, ZM_HI = "1996-01-01", "1996-07-01"
 
 
+# Session-memoized zone-mapped copy of `lineitem`, range-clustered by ship
+# date (same once-per-session contract as _hidden_events_table).
 def _zonemap_lineitem_table(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import skipping as Z
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _ZONEMAP_TBL_CACHE.get(key)
-    if tbl is not None and os.path.isdir(tbl):
+    def write() -> str:
+        tbl = os.path.join(_session_root("zonemap_li"), "lineitem_zm")
+        Z.write_skipping(
+            load_table(spark, sf_dir, "lineitem"),
+            tbl,
+            ["l_shipdate", "l_orderkey"],
+            n_files=32,
+            cluster_by="l_shipdate",
+            # point-lookup skipping on a column the clustering does NOT help:
+            # partkeys are spread uniformly across every ship-date file, so
+            # only the per-file bloom bitmaps can rule files out
+            bloom_cols=["l_partkey"],
+        )
         return tbl
-    root = tempfile.mkdtemp(prefix="zonemap_li_")
-    tbl = os.path.join(root, "lineitem_zm")
-    Z.write_skipping(
-        load_table(spark, sf_dir, "lineitem"),
-        tbl,
-        ["l_shipdate", "l_orderkey"],
-        n_files=32,
-        cluster_by="l_shipdate",
-        # point-lookup skipping on a column the clustering does NOT help:
-        # partkeys are spread uniformly across every ship-date file, so
-        # only the per-file bloom bitmaps can rule files out
-        bloom_cols=["l_partkey"],
-    )
-    _ZONEMAP_TBL_CACHE[key] = tbl
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tbl
+
+    return _session_memo(spark, sf_dir, "zonemap_li", write)
 
 
 def q_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5844,9 +5620,6 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-merge state, which is exactly what the oracle computes
     relationally; the view reads the change set (merge-batch-sized), not
     the table."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -5859,8 +5632,7 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("upsert"))
         .alias("op"),
     )
-    tmp = tempfile.mkdtemp(prefix="ivm_agg_")
-    try:
+    with _scratch("ivm_agg_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
         base = (
@@ -5883,8 +5655,6 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5942,14 +5712,10 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-asserted), readers anti-join the accumulated DV keys, and the
     next merge folds them in. The oracle applies the same two key
     predicates relationally; per-lang rollup keeps the compare bounded."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="dv_demo_")
-    try:
+    with _scratch("dv_demo_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(d, tbl, ["doc_id"], n_buckets=16)
         VER.delete_bucketed(spark, tbl, d.filter(F.col("doc_id") % 9 == 0).select("doc_id"))
@@ -5963,8 +5729,6 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6074,14 +5838,10 @@ def q_append_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     append boundary, so correct results REQUIRE candidates from both the
     original and appended files; the oracle is the plain window predicate
     on the raw table."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import skipping as Z
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="append_zm_")
-    try:
+    with _scratch("append_zm_") as tmp:
         tbl = os.path.join(tmp, "events_zm")
         Z.write_skipping(
             ev.filter(F.col("ts") < AS_CUT), tbl, ["ts"], n_files=8, cluster_by="ts"
@@ -6098,8 +5858,6 @@ def q_append_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6128,14 +5886,10 @@ def q_optimize_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the POST-optimize table but is just the delete predicate on the
     base), and time travel to the pre-optimize DV state still works
     (pytest). Delta OPTIMIZE / Iceberg rewrite_data_files semantics."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="opt_demo_")
-    try:
+    with _scratch("opt_demo_") as tmp:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(d, tbl, ["doc_id"], n_buckets=16)
         VER.delete_bucketed(spark, tbl, d.filter(F.col("doc_id") % 11 == 0).select("doc_id"))
@@ -6150,8 +5904,6 @@ def q_optimize_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6230,40 +5982,30 @@ def q_motif_capped_wedges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped composed hidden×skipping copy of `events`: day(ts)
-# partition DIRECTORIES + per-file value/user_id zone maps with rows
-# value-clustered inside every day dir (same once-per-session contract as
-# _hidden_events_table / _zonemap_lineitem_table).
-_HIDDEN_SKIP_TBL_CACHE: dict[tuple[str, str], str] = {}
-
 HSK_TS_LO, HSK_TS_HI = "2024-01-08", "2024-01-12"
 HSK_VAL_LO, HSK_VAL_HI = 50.0, 150.0
 
 
+# Session-memoized composed hidden×skipping copy of `events`: day(ts)
+# partition DIRECTORIES + per-file value/user_id zone maps with rows
+# value-clustered inside every day dir (same once-per-session contract as
+# _hidden_events_table / _zonemap_lineitem_table).
 def _hidden_skip_events_table(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import hidden as H
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _HIDDEN_SKIP_TBL_CACHE.get(key)
-    if tbl is not None and os.path.isdir(tbl):
+    def write() -> str:
+        tbl = os.path.join(_session_root("hidden_skip_events"), "events_hidden_skip")
+        H.create_hidden_skipping(
+            load_table(spark, sf_dir, "events"),
+            tbl,
+            [("day", "ts")],
+            stats_cols=["value", "user_id"],
+            n_files=32,
+            cluster_by="value",
+        )
         return tbl
-    root = tempfile.mkdtemp(prefix="hidden_skip_events_")
-    tbl = os.path.join(root, "events_hidden_skip")
-    H.create_hidden_skipping(
-        load_table(spark, sf_dir, "events"),
-        tbl,
-        [("day", "ts")],
-        stats_cols=["value", "user_id"],
-        n_files=32,
-        cluster_by="value",
-    )
-    _HIDDEN_SKIP_TBL_CACHE[key] = tbl
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tbl
+
+    return _session_memo(spark, sf_dir, "hidden_skip_events", write)
 
 
 def q_hidden_skipping_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6313,17 +6055,13 @@ def q_indexed_table_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both states — a stale code shard, a leaked insert
     into the as-of serve, or an undropped DV candidate breaks the
     hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 350)
     base = emb.select(F.col("vec_id").alias("id"), "embedding")
     q = emb.filter(F.col("vec_id") == 11).collect()[0]["embedding"]
-    tmp = tempfile.mkdtemp(prefix="indexed_ivfsq_")
-    try:
+    with _scratch("indexed_ivfsq_") as tmp:
         t = os.path.join(tmp, "tbl")
         # r13 trim (VERDICT r12 #6): 4 buckets / 4 cells — commit count
         # and job fan-out halve, every lifecycle contract intact
@@ -6353,8 +6091,6 @@ def q_indexed_table_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("stage", F.desc("score"), "vec_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6370,9 +6106,6 @@ def q_string_key_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nprobe = all cells, candidate slack) must equal brute force over
     string ids. HNSW refuses string keys by design (graph node ids are
     longs) — that boundary is pytest-locked, not registry-tested."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
 
@@ -6385,8 +6118,7 @@ def q_string_key_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("num"),
     )
     q = emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]
-    tmp = tempfile.mkdtemp(prefix="strkey_idx_")
-    try:
+    with _scratch("strkey_idx_") as tmp:
         t = os.path.join(tmp, "tbl")
         VER.create_bucketed(base.drop("num"), t, ["k"], n_buckets=4)
         IDX.attach_ivfsq_index(spark, t, n_cells=4)
@@ -6413,8 +6145,6 @@ def q_string_key_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("score"), "vec_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6432,17 +6162,13 @@ def q_multi_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifting from the table (or from the others) breaks the hash.
     (r13 also trims the lifecycle per VERDICT r12 #6: 4 buckets / 4
     cells / 200-vector slice — every contract intact.)"""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     base = emb.select(F.col("vec_id").alias("id"), "embedding")
     q = emb.filter(F.col("vec_id") == 21).collect()[0]["embedding"]
-    tmp = tempfile.mkdtemp(prefix="multi_index_")
-    try:
+    with _scratch("multi_index_") as tmp:
         t = os.path.join(tmp, "tbl")
         VER.create_bucketed(base, t, ["id"], n_buckets=4)
         IDX.attach_hnsw_index(spark, t, m=4, ef_construction=16)
@@ -6480,8 +6206,6 @@ def q_multi_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("index_name", F.desc("score"), "vec_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6495,16 +6219,12 @@ def q_index_maintenance_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones, no recommendation, replay ledger intact). The advisor
     mutates nothing — the serve before/after it is pytest-locked; counts
     and the recommendation replay relationally in the oracle."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.operators import hnsw as H
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") < 240)
     epoch = emb.filter((F.col("vec_id") >= 240) & (F.col("vec_id") < 280))
-    tmp = tempfile.mkdtemp(prefix="idx_advice_")
-    try:
+    with _scratch("idx_advice_") as tmp:
         path = os.path.join(tmp, "hnsw")
         H.write_hnsw_index(
             H.build_hnsw(base, n_shards=4, m=8, ef_construction=32),
@@ -6530,8 +6250,6 @@ def q_index_maintenance_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stage string, n_nodes bigint, n_tombstones bigint, "
             "recommend_compact int, n_applied_epochs bigint",
         ).orderBy("stage").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6575,9 +6293,6 @@ def q_sql_insert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rebound post-insert: view READS pin the version at first resolution
     — snapshot isolation — while writes re-resolve latest at execution).
     The oracle replays seed → delete → upsert relationally."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.sources import versioned_batch as VB
 
@@ -6586,36 +6301,35 @@ def q_sql_insert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("id"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
     )
-    tmp = tempfile.mkdtemp(prefix="sql_insert_merge_")
-    try:
-        t = os.path.join(tmp, "tbl")
-        VER.create_bucketed(base, t, ["id"], n_buckets=8)
-        VER.delete_bucketed(
-            spark, t, base.filter(F.col("id") % 9 == 0).select("id")
-        )
-        VB.sql_view(spark, "sql_insert_merge_v", t)
-        spark.sql(
-            "INSERT INTO sql_insert_merge_v "
-            "SELECT id, id * 31 % 9973 AS cents FROM range(200, 320)"
-        )
-        # reads through a USING view are pinned at first resolution
-        # (snapshot isolation); REBIND to read the post-insert version
-        VB.sql_view(spark, "sql_insert_merge_v", t)
-        out = spark.sql(
-            "SELECT id, cents FROM sql_insert_merge_v ORDER BY id"
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView("sql_insert_merge_v")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _scratch("sql_insert_merge_") as tmp:
+        try:
+            t = os.path.join(tmp, "tbl")
+            VER.create_bucketed(base, t, ["id"], n_buckets=8)
+            VER.delete_bucketed(
+                spark, t, base.filter(F.col("id") % 9 == 0).select("id")
+            )
+            VB.sql_view(spark, "sql_insert_merge_v", t)
+            spark.sql(
+                "INSERT INTO sql_insert_merge_v "
+                "SELECT id, id * 31 % 9973 AS cents FROM range(200, 320)"
+            )
+            # reads through a USING view are pinned at first resolution
+            # (snapshot isolation); REBIND to read the post-insert version
+            VB.sql_view(spark, "sql_insert_merge_v", t)
+            out = spark.sql(
+                "SELECT id, cents FROM sql_insert_merge_v ORDER BY id"
+            ).localCheckpoint(eager=True)
+        finally:
+            spark.catalog.dropTempView("sql_insert_merge_v")
     return out
 
 
 def q_sql_string_key_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRING-keyed (doc-id) SQL front door (r13 — the r12 verdict's #1
     missing item: ``versioned_batch.py`` grows a bit-exact XXH64 string
-    lane, scalar for the pushed-filter prune and masked-numpy
-    ``_xxh64_bytes_np`` for the writer's batch routing, both
-    pytest-locked value-for-value against Spark's ``xxhash64(string)``).
+    lane, the masked-numpy ``_xxh64_bytes_np`` that both the writer's
+    batch routing and the pushed-filter prune use, pytest-locked
+    value-for-value against Spark's ``xxhash64(string)``).
     Documents ≤ 250 seed an 8-bucket table keyed on the string doc id, a
     deletion-vector DELETE removes every 7th key, then ONE pure-SQL
     ``INSERT INTO <view>`` upserts 120 string keys through the identical
@@ -6623,9 +6337,6 @@ def q_sql_string_key_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``IN (<string>, ...)`` read prunes to the keys' buckets. The oracle
     replays seed → delete → upsert relationally over the same derived
     string keys."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.sources import versioned_batch as VB
 
@@ -6637,27 +6348,26 @@ def q_sql_string_key_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").alias("val"),
         F.col("doc_id").alias("num"),
     )
-    tmp = tempfile.mkdtemp(prefix="sql_string_key_merge_")
-    try:
-        t = os.path.join(tmp, "tbl")
-        VER.create_bucketed(base.drop("num"), t, ["k"], n_buckets=8)
-        VER.delete_bucketed(
-            spark, t, base.filter(F.col("num") % 7 == 0).select("k")
-        )
-        VB.sql_view(spark, "sql_strkey_v", t)
-        spark.sql(
-            "INSERT INTO sql_strkey_v "
-            "SELECT concat('doc-', lpad(cast(id AS string), 8, '0')) AS k, "
-            "id * 37 % 7919 AS val FROM range(200, 320)"
-        )
-        # view reads pin at first resolution — rebind for the new version
-        VB.sql_view(spark, "sql_strkey_v", t)
-        out = spark.sql(
-            "SELECT k, val FROM sql_strkey_v ORDER BY k"
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView("sql_strkey_v")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _scratch("sql_string_key_merge_") as tmp:
+        try:
+            t = os.path.join(tmp, "tbl")
+            VER.create_bucketed(base.drop("num"), t, ["k"], n_buckets=8)
+            VER.delete_bucketed(
+                spark, t, base.filter(F.col("num") % 7 == 0).select("k")
+            )
+            VB.sql_view(spark, "sql_strkey_v", t)
+            spark.sql(
+                "INSERT INTO sql_strkey_v "
+                "SELECT concat('doc-', lpad(cast(id AS string), 8, '0')) AS k, "
+                "id * 37 % 7919 AS val FROM range(200, 320)"
+            )
+            # view reads pin at first resolution — rebind for the new version
+            VB.sql_view(spark, "sql_strkey_v", t)
+            out = spark.sql(
+                "SELECT k, val FROM sql_strkey_v ORDER BY k"
+            ).localCheckpoint(eager=True)
+        finally:
+            spark.catalog.dropTempView("sql_strkey_v")
     return out
 
 
@@ -6674,17 +6384,13 @@ def q_vacuum_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, a kept version wrongly listed, or a mutation by the "dry
     run" all break the hash. The oracle replays statuses and counts
     relationally."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import versioned as VER
 
     d = load_table(spark, sf_dir, "documents")
     base = d.filter(F.col("doc_id") < 150).select(
         F.col("doc_id").alias("id"), F.col("n_chars").alias("val")
     )
-    tmp = tempfile.mkdtemp(prefix="vacuum_advice_")
-    try:
+    with _scratch("vacuum_advice_") as tmp:
         t = os.path.join(tmp, "tbl")
         VER.create_bucketed(base, t, ["id"], n_buckets=4)
         VER.merge_into_bucketed(
@@ -6714,8 +6420,6 @@ def q_vacuum_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.createDataFrame(
             rows, "status string, version int, n_rows bigint"
         ).orderBy("status", "version").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -6731,9 +6435,6 @@ def q_sql_insert_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``INSERT INTO <view>`` upserts 12 vectors (4 updates rescale, 8 new
     ids), then the exhaustive-exact serve must equal brute force over
     the post-insert table — a stale or drifted shard breaks the hash."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
     from semantic_index_spark.sources import versioned_batch as VB
@@ -6741,29 +6442,28 @@ def q_sql_insert_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 120)
     base = emb.select(F.col("vec_id").alias("id"), "embedding")
     q = emb.filter(F.col("vec_id") == 9).collect()[0]["embedding"]
-    tmp = tempfile.mkdtemp(prefix="sql_ins_idx_")
-    try:
-        t = os.path.join(tmp, "tbl")
-        VER.create_bucketed(base, t, ["id"], n_buckets=4)
-        IDX.attach_ivfsq_index(spark, t, n_cells=4)
-        VB.sql_view(spark, "sql_ins_idx_v", t)
-        spark.sql(
-            "INSERT INTO sql_ins_idx_v "
-            "SELECT id, transform(embedding, x -> cast(x * 0.5 AS float)) "
-            "FROM sql_ins_idx_v WHERE id % 30 = 0 "
-            "UNION ALL "
-            "SELECT id + 5000 AS id, embedding "
-            "FROM sql_ins_idx_v WHERE id < 8"
-        )
-        out = (
-            IDX.indexed_ivfsq_topk(spark, t, q, k=KNN_K, nprobe=4,
-                                   candidates=600)
-            .orderBy(F.desc("score"), "vec_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.catalog.dropTempView("sql_ins_idx_v")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _scratch("sql_ins_idx_") as tmp:
+        try:
+            t = os.path.join(tmp, "tbl")
+            VER.create_bucketed(base, t, ["id"], n_buckets=4)
+            IDX.attach_ivfsq_index(spark, t, n_cells=4)
+            VB.sql_view(spark, "sql_ins_idx_v", t)
+            spark.sql(
+                "INSERT INTO sql_ins_idx_v "
+                "SELECT id, transform(embedding, x -> cast(x * 0.5 AS float)) "
+                "FROM sql_ins_idx_v WHERE id % 30 = 0 "
+                "UNION ALL "
+                "SELECT id + 5000 AS id, embedding "
+                "FROM sql_ins_idx_v WHERE id < 8"
+            )
+            out = (
+                IDX.indexed_ivfsq_topk(spark, t, q, k=KNN_K, nprobe=4,
+                                       candidates=600)
+                .orderBy(F.desc("score"), "vec_id")
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            spark.catalog.dropTempView("sql_ins_idx_v")
     return out
 
 
@@ -6812,16 +6512,10 @@ SQ_CANDIDATES = 50
 # Session-cached frozen SQ8 quantizer (per-dim lo/step), same train-once
 # contract as shared_pq_artifacts: training is a rare offline event, every
 # query serves against the frozen model.
-_SQ_MODEL_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _sq_model(spark: SparkSession, sf_dir: str) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    m = _SQ_MODEL_CACHE.get(key)
-    if m is None:
-        m = S.sq_train(load_table(spark, sf_dir, "embeddings"))
-        _SQ_MODEL_CACHE[key] = m
-    return m
+    return _session_memo(
+        spark, sf_dir, "sq_model", lambda: S.sq_train(load_table(spark, sf_dir, "embeddings"))
+    )
 
 
 def q_sq_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6848,24 +6542,13 @@ FILT_LABEL = 3
 
 # Session-cached on-disk IVF-flat index layout (cell-partitioned parquet),
 # payload columns included — the serving artifact for filtered search.
-_IVF_IDX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _ivf_index_table(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _IVF_IDX_CACHE.get(key)
-    if tbl is not None and os.path.isdir(tbl):
+    def write() -> str:
+        tbl = os.path.join(_session_root("ivf_flat_idx"), "embeddings_ivf")
+        S.write_ivf_index(load_table(spark, sf_dir, "embeddings"), CENTROIDS, tbl)
         return tbl
-    root = tempfile.mkdtemp(prefix="ivf_flat_idx_")
-    tbl = os.path.join(root, "embeddings_ivf")
-    S.write_ivf_index(load_table(spark, sf_dir, "embeddings"), CENTROIDS, tbl)
-    _IVF_IDX_CACHE[key] = tbl
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tbl
+
+    return _session_memo(spark, sf_dir, "ivf_flat_idx", write)
 
 
 def q_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6922,38 +6605,27 @@ ZSK_V_LO, ZSK_V_HI = 100.0, 250.0
 # Session-cached Z-order-clustered zone-map copy of `events`: the Morton
 # key over (user_id, value) makes the per-file stats selective in BOTH
 # dimensions at once (Delta/Iceberg OPTIMIZE ZORDER BY).
-_ZORDER_TBL_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _zorder_events_table(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from semantic_index_spark.sources import skipping as Z
     from semantic_index_spark.sources.io import zorder_key
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _ZORDER_TBL_CACHE.get(key)
-    if tbl is not None and os.path.isdir(tbl):
+    def write() -> str:
+        tbl = os.path.join(_session_root("zorder_events"), "events_zorder")
+        ev = load_table(spark, sf_dir, "events")
+        # key domains from one tiny agg so the 8-bit cells stay selective at
+        # every SF (out-of-domain values would clamp to edge cells)
+        b = ev.agg(
+            F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
+        ).first()
+        zk = zorder_key(
+            [("user_id", float(b[0]), float(b[1]) + 1.0),
+             ("value", float(b[2]), float(b[3]) + 1.0)],
+            bits=8,
+        )
+        Z.write_skipping(ev, tbl, ["user_id", "value"], n_files=32, cluster_by=zk)
         return tbl
-    root = tempfile.mkdtemp(prefix="zorder_events_")
-    tbl = os.path.join(root, "events_zorder")
-    ev = load_table(spark, sf_dir, "events")
-    # key domains from one tiny agg so the 8-bit cells stay selective at
-    # every SF (out-of-domain values would clamp to edge cells)
-    b = ev.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).first()
-    zk = zorder_key(
-        [("user_id", float(b[0]), float(b[1]) + 1.0),
-         ("value", float(b[2]), float(b[3]) + 1.0)],
-        bits=8,
-    )
-    Z.write_skipping(ev, tbl, ["user_id", "value"], n_files=32, cluster_by=zk)
-    _ZORDER_TBL_CACHE[key] = tbl
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tbl
+
+    return _session_memo(spark, sf_dir, "zorder_events", write)
 
 
 def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7104,27 +6776,16 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Session-cached on-disk IVF-SQ8 layout: cell-partitioned byte codes only.
-_IVFSQ_IDX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _ivfsq_index_table(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _IVFSQ_IDX_CACHE.get(key)
-    if tbl is not None and os.path.isdir(tbl):
+    def write() -> str:
+        tbl = os.path.join(_session_root("ivfsq_idx"), "embeddings_ivfsq")
+        S.write_ivfsq_index(
+            load_table(spark, sf_dir, "embeddings"), CENTROIDS,
+            _sq_model(spark, sf_dir), tbl,
+        )
         return tbl
-    root = tempfile.mkdtemp(prefix="ivfsq_idx_")
-    tbl = os.path.join(root, "embeddings_ivfsq")
-    S.write_ivfsq_index(
-        load_table(spark, sf_dir, "embeddings"), CENTROIDS,
-        _sq_model(spark, sf_dir), tbl,
-    )
-    _IVFSQ_IDX_CACHE[key] = tbl
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tbl
+
+    return _session_memo(spark, sf_dir, "ivfsq_idx", write)
 
 
 def q_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7161,9 +6822,6 @@ def q_ivfsq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions of (embedding, frozen artifacts), so the served top-k must
     be row-identical to the ad-hoc path — the oracle is ivfsq_topk's
     composed probe+SQ replay verbatim."""
-    import shutil
-    import tempfile
-
     from semantic_index_spark.streaming import ingest as SI
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -7190,30 +6848,20 @@ def q_ivfsq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "src",
     )
-    tmp = tempfile.mkdtemp(prefix="ivfsq_inc_")
-    try:
+    with _scratch("ivfsq_inc_") as tmp:
         idx = os.path.join(tmp, "index")
         S.write_ivfsq_index(base, CENTROIDS, model, idx)
-        stream = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, "vec_id bigint, embedding array<float>", src)
         sink = SI.incremental_ivfsq_sink(idx, CENTROIDS, model)
         with _stream_shuffle_partitions(spark):
-            sq = (
+            SI.run_batch_like(
                 stream.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
             )
-            sq.awaitTermination()
         final = S.ivfsq_topk_indexed(
             spark, idx, emb, model, qv, CENTROIDS,
             k=KNN_K, nprobe=IVF_NPROBE, candidates=SQ_CANDIDATES,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 
@@ -7230,9 +6878,6 @@ def q_ivf_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle IS ivfsq_incremental's composed probe+SQ replay,
     shared verbatim — a dropped row, a duplicate from the replayed
     epoch, or a re-encode drift breaks the identical hash."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     model = _sq_model(spark, sf_dir)
     qv = [
@@ -7240,8 +6885,7 @@ def q_ivf_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     ]
     base = emb.filter(F.col("vec_id") % 3 != 2).select("vec_id", "embedding")
-    tmp = tempfile.mkdtemp(prefix="ivf_consolidate_")
-    try:
+    with _scratch("ivf_consolidate_") as tmp:
         idx = os.path.join(tmp, "index")
         S.write_ivfsq_index(base, CENTROIDS, model, idx)
         for b in range(2):
@@ -7266,8 +6910,6 @@ def q_ivf_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, idx, emb, model, qv, CENTROIDS,
             k=KNN_K, nprobe=IVF_NPROBE, candidates=SQ_CANDIDATES,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return final
 
 

@@ -98,98 +98,6 @@ _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
 
 
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _fmix(h: int) -> int:
-    h ^= h >> 33
-    h = (h * _P2) & _M64
-    h ^= h >> 29
-    h = (h * _P3) & _M64
-    h ^= h >> 32
-    return h
-
-
-def xxhash64_long(v: int, seed: int = 42) -> int:
-    """Spark ``xxhash64(CAST(v AS BIGINT))``, bit-exact (signed result)."""
-    v &= _M64
-    h = (seed + _P5 + 8) & _M64
-    h ^= (_rotl((v * _P2) & _M64, 31) * _P1) & _M64
-    h = (_rotl(h, 27) * _P1 + _P4) & _M64
-    h = _fmix(h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def xxhash64_int(v: int, seed: int = 42) -> int:
-    """Spark ``xxhash64(CAST(v AS INT))`` — ints hash through the 4-byte
-    path, which is why the store refuses to widen key columns."""
-    h = (seed + _P5 + 4) & _M64
-    h ^= ((v & 0xFFFFFFFF) * _P1) & _M64
-    h = (_rotl(h, 23) * _P2 + _P3) & _M64
-    h = _fmix(h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def xxhash64_bytes(data: bytes, seed: int = 42) -> int:
-    """Spark ``xxhash64`` of a byte sequence — the full XXH64 algorithm
-    (32-byte stripes, 8/4/1-byte tail), bit-exact with Spark's
-    ``XxHash64`` over ``UTF8String``/``BinaryType`` input (pytest-locked
-    value-for-value against ``F.xxhash64`` on a unicode/empty/long-string
-    panel). This is the string-key lane (round 13): with it, string
-    doc-id keys get the same bucket-placement agreement between the SQL
-    writer, pushed-filter pruning, and Spark's ``_bucket_expr`` that
-    integral keys have."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M64
-        v2 = (seed + _P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P1) & _M64
-        lanes = [v1, v2, v3, v4]
-        while i <= n - 32:
-            for j in range(4):
-                k = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
-                lanes[j] = (
-                    _rotl((lanes[j] + k * _P2) & _M64, 31) * _P1
-                ) & _M64
-            i += 32
-        v1, v2, v3, v4 = lanes
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        for v in lanes:
-            h ^= (_rotl((v * _P2) & _M64, 31) * _P1) & _M64
-            h = (h * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        k = int.from_bytes(data[i : i + 8], "little")
-        h ^= (_rotl((k * _P2) & _M64, 31) * _P1) & _M64
-        h = (_rotl(h, 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _P1) & _M64
-        h = (_rotl(h, 23) * _P2 + _P3) & _M64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P5) & _M64
-        h = (_rotl(h, 11) * _P1) & _M64
-        i += 1
-    h = _fmix(h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def xxhash64_string(s: str, seed: int = 42) -> int:
-    """Spark ``xxhash64(<string col>)`` — XXH64 over the UTF-8 bytes."""
-    return xxhash64_bytes(s.encode("utf-8"), seed)
-
-
-_KEY_HASH = {
-    "integer": xxhash64_int,
-    "long": xxhash64_long,
-    "string": xxhash64_string,
-}
 # the Python literal type a pushed =/IN filter value must have for the
 # driver-side bucket computation to provably agree with Spark's own
 # evaluation of the same predicate (bool is an int subclass: excluded)
@@ -197,8 +105,8 @@ _KEY_PYTYPES = {"integer": int, "long": int, "string": str}
 
 
 def _bucket_of(value, dtype: str, n_buckets: int) -> int:
-    h = _KEY_HASH[dtype](value if dtype == "string" else int(value))
-    return ((h % n_buckets) + n_buckets) % n_buckets
+    """The bucket of one pushed-filter literal (the scan-side prune)."""
+    return int(buckets_np([value], dtype, n_buckets)[0])
 
 
 def _xxh64_bytes_np(bufs: "list[bytes]"):
@@ -206,13 +114,15 @@ def _xxh64_bytes_np(bufs: "list[bytes]"):
     strings — every lane of the algorithm runs as masked numpy passes
     over a zero-padded (n, width) byte matrix, so hashing a batch costs
     a handful of array ops instead of n Python-level hashes. Bit-exact
-    with the scalar :func:`xxhash64_bytes` (pytest-locked on a
+    with Spark's ``xxhash64`` over ``UTF8String``/``BinaryType`` input
+    (pytest-locked value-for-value against ``F.xxhash64`` on a
     length-boundary panel: 0..33, 63..65, multi-stripe, unicode).
 
     Shape notes: stripes/words/tail are selected per row by integer
     arithmetic on the length vector (stripes = len//32; after them
     rem = len - 32*stripes splits as rem//8 words + an optional 4-byte
-    word + rem%4 single bytes — exactly the scalar control flow). Rows
+    word + rem%4 single bytes — XXH64's 32-byte stripes and 8/4/1-byte
+    tail). Rows
     are processed in chunks so the padded matrix stays bounded even if
     one key is pathologically long."""
     import numpy as np
@@ -316,20 +226,18 @@ def _xxh64_bytes_np(bufs: "list[bytes]"):
     return out
 
 
-def buckets_np(values, dtype: str, n_buckets: int):
-    """Vectorized bucket assignment: ``pmod(xxhash64(v), n_buckets)`` over
-    a whole int64 array with numpy uint64 wraparound arithmetic —
-    bit-identical to the scalar :func:`_bucket_of` (pytest-locked on a
-    sign/width boundary panel). This is what lets the SQL writer's
-    executor tasks route a batch to buckets in O(n) numpy instead of a
-    per-row Python loop. Round 13 adds the ``string`` lane (UTF-8 keys
-    through the masked-numpy :func:`_xxh64_bytes_np`), opening the SQL
-    door and bucket pruning to string doc-id corpora."""
+def xxhash64_np(values, dtype: str):
+    """Spark ``xxhash64`` (seed 42, signed int64) of a whole key array
+    with numpy uint64 wraparound arithmetic. ``integer`` keys hash
+    through XXH64's 4-byte path, which is why the store refuses to widen
+    key columns; ``string`` keys hash their UTF-8 bytes through the
+    masked-numpy :func:`_xxh64_bytes_np` (round 13's string lane).
+    Bit-exact with ``F.xxhash64`` (pytest-locked on sign/width and
+    string-length boundary panels)."""
     import numpy as np
 
     if dtype == "string":
-        h = _xxh64_bytes_np([s.encode("utf-8") for s in values])
-        return (h.view(np.int64) % n_buckets + n_buckets) % n_buckets
+        return _xxh64_bytes_np([s.encode("utf-8") for s in values]).view(np.int64)
     v = np.asarray(values, dtype=np.int64).view(np.uint64)
     with np.errstate(over="ignore"):
         P1, P2, P3 = np.uint64(_P1), np.uint64(_P2), np.uint64(_P3)
@@ -350,7 +258,15 @@ def buckets_np(values, dtype: str, n_buckets: int):
         h ^= h >> np.uint64(29)
         h *= P3
         h ^= h >> np.uint64(32)
-    return (h.view(np.int64) % n_buckets + n_buckets) % n_buckets
+    return h.view(np.int64)
+
+
+def buckets_np(values, dtype: str, n_buckets: int):
+    """Vectorized bucket assignment ``pmod(xxhash64(v), n_buckets)``:
+    what lets the SQL writer's executor tasks route a batch to buckets in
+    O(n) numpy instead of a per-row Python loop, and what the pushed-filter
+    prune (:func:`_bucket_of`) evaluates per literal."""
+    return (xxhash64_np(values, dtype) % n_buckets + n_buckets) % n_buckets
 
 
 # ---- SQL filter → (col, op, value) triples --------------------------------
@@ -472,7 +388,7 @@ class VersionedTableReader(DataSourceReader):
             key = man["key_cols"][0]
             fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
             dtype = fields.get(key, {}).get("type")
-            if dtype in _KEY_HASH:
+            if dtype in _KEY_PYTYPES:
                 n = int(man["n_buckets"])
                 pytype = _KEY_PYTYPES[dtype]
                 for f in filters:
@@ -1041,7 +957,7 @@ class VersionedTableDataSource(DataSource):
                 )
         keys = man["key_cols"]
         fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
-        if len(keys) != 1 or fields[keys[0]].get("type") not in _KEY_HASH:
+        if len(keys) != 1 or fields[keys[0]].get("type") not in _KEY_PYTYPES:
             raise ValueError(
                 "INSERT INTO supports single integral- or string-key "
                 f"bucketed tables (got keys {keys}) — use merge_into_bucketed"

@@ -2793,22 +2793,22 @@ def test_versioned_table_sql_front_door(spark, tmp_path):
         "SELECT id, val FROM sqlfd_cur WHERE id IN (1, 2, 3) ORDER BY id"
     ).collect()
     assert [(r["id"], r["val"]) for r in got] == [(1, 3), (2, 6), (3, 9)]
-    # the pure-python bucket hash MUST bit-match Spark's xxhash64 — the
-    # prune would otherwise silently drop matching rows
+    # the numpy bucket hash MUST bit-match Spark's xxhash64 (all 64 bits)
+    # — the prune would otherwise silently drop matching rows
     import pyspark.sql.functions as F
 
     panel = [0, 1, 5, -1, -7, 123456789, 2**31 - 1, -(2**31), 2**62, -(2**62)]
     rows = spark.createDataFrame([(v,) for v in panel], "x long").select(
         "x", F.xxhash64("x").alias("h")
     ).collect()
-    for r in rows:
-        assert VB.xxhash64_long(r["x"]) == r["h"], r
+    got = VB.xxhash64_np([r["x"] for r in rows], "long")
+    assert [int(h) for h in got] == [r["h"] for r in rows]
     int_panel = [v for v in panel if -(2**31) <= v < 2**31]
     rows = spark.createDataFrame([(v,) for v in int_panel], "x int").select(
         "x", F.xxhash64("x").alias("h")
     ).collect()
-    for r in rows:
-        assert VB.xxhash64_int(r["x"]) == r["h"], r
+    got = VB.xxhash64_np([r["x"] for r in rows], "integer")
+    assert [int(h) for h in got] == [r["h"] for r in rows]
     # plain snapshot tables work too (no manifest path)
     tp = str(tmp_path / "plain")
     VER.commit_version(spark.range(0, 10).selectExpr("id", "id * 2 AS d"), tp)
@@ -3589,11 +3589,10 @@ def test_r12_sql_insert_maintains_index(spark, tmp_path):
 
 def test_r13_string_xxhash64_bit_exact(spark):
     """Round 13 string-key lane, the load-bearing invariant: the
-    pure-Python AND the masked-numpy XXH64 over UTF-8 strings must
-    bit-match Spark's ``xxhash64(<string>)`` — the SQL writer's bucket
-    placement and the pushed-filter prune would otherwise disagree with
-    ``_bucket_expr`` and silently lose rows."""
-    import numpy as np
+    masked-numpy XXH64 over UTF-8 strings must bit-match Spark's
+    ``xxhash64(<string>)`` — the SQL writer's bucket placement and the
+    pushed-filter prune would otherwise disagree with ``_bucket_expr``
+    and silently lose rows."""
     import pyspark.sql.functions as F
 
     from semantic_index_spark.sources import versioned_batch as VB
@@ -3608,11 +3607,8 @@ def test_r13_string_xxhash64_bit_exact(spark):
         "s", F.xxhash64("s").alias("h")
     ).collect()
     expect = {r["s"]: r["h"] for r in rows}
-    # scalar (the pushFilters prune path)
-    for s in panel:
-        assert VB.xxhash64_string(s) == expect[s], s
-    # vectorized (the SQL writer's batch routing path)
-    got = VB._xxh64_bytes_np([s.encode("utf-8") for s in panel]).view(np.int64)
+    # all 64 bits (the SQL writer's batch routing and the prune share it)
+    got = VB.xxhash64_np(panel, "string")
     assert [int(x) for x in got] == [expect[s] for s in panel]
     # bucket assignment agrees with Spark's _bucket_expr end-to-end
     sp = spark.createDataFrame([(s,) for s in panel], "s string").selectExpr(

@@ -4,8 +4,8 @@
 Most of these tests are pure-Python (no SparkSession) — they guard the
 contract the round-7 ADVICE flagged (a duplicate dict key silently shrinking
 the registry), the verification window that CORRECTNESS checks depend on,
-and that every package definition is reachable from a caller. The fold
-oracles run against Spark at the test scale factor.
+and that every package definition is reachable from a caller. Every row's
+oracle runs against Spark at the test scale factor.
 """
 
 from __future__ import annotations
@@ -93,12 +93,37 @@ def test_every_query_has_an_oracle():
     assert not missing, f"queries without a DuckDB oracle: {missing}"
 
 
-@pytest.mark.parametrize("name", ["throttle_dedup", "holt_winters"])
-def test_fold_oracles_match(spark, sf_dir, name):
-    """The two per-key left-fold rows hash-match their DuckDB oracles."""
-    from tools.check_oracles import check_one, connect
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    from tools.check_oracles import connect
 
-    assert check_one(spark, connect(sf_dir), name, sf_dir) == []
+    return connect(sf_dir)
+
+
+@pytest.mark.parametrize("name", list(entrymod.queries()))
+def test_oracle_matches(spark, duck, sf_dir, name):
+    """Every registry row hash-matches its DuckDB oracle at the test scale
+    factor (the compare of ``tools/check_oracles.py``)."""
+    from tools.check_oracles import check_one
+
+    assert check_one(spark, duck, name, sf_dir) == []
+
+
+def test_tool_name_lists_name_registry_rows():
+    """The hand-written per-query tables of the audit and scaling tools
+    name only registry rows, so a rename fails here rather than at audit
+    time."""
+    from tools import plan_audit, scaling_probe
+
+    names = set(entrymod.queries())
+    lists = {
+        "plan_audit.AUDITS": plan_audit.AUDITS,
+        "scaling_probe.PANEL": scaling_probe.PANEL,
+        "scaling_probe.EXPLICIT_CEILINGS": scaling_probe.EXPLICIT_CEILINGS,
+        "scaling_probe.GATE_OVERRIDES": scaling_probe.GATE_OVERRIDES,
+    }
+    stale = {k: sorted(set(v) - names) for k, v in lists.items() if set(v) - names}
+    assert not stale, f"names that are not queries() rows: {stale}"
 
 
 # Package definitions no caller reaches, each with the reason it stays.

@@ -27,7 +27,7 @@ AUDITS = {
     "q5_local_supplier_volume": {"expect": ["BroadcastHashJoin"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     "embedding_neardup": {"forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     "minhash_lsh_pairs": {"forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
-    "knn_multi": {"expect": ["MapInPandas"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
+    "knn_multi": {"expect": ["MapInArrow"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     "asof_join": {"expect": ["Window"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "Join"]},
     "ivf_topk": {"expect": ["TakeOrderedAndProject"], "forbid": ["Join"]},
     "quantized_knn": {"expect": ["TakeOrderedAndProject"], "forbid": ["Join"]},
@@ -661,7 +661,7 @@ AUDITS = {
     # mutual NN: the O(n^2) scoring lives inside the Arrow-batched BLAS
     # pass; the relational plan must show only the partial-topk +
     # mutuality equi-join — never a pair cross product.
-    "mutual_nn": {"expect": ["MapInPandas", "Window"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
+    "mutual_nn": {"expect": ["MapInArrow", "Window"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     # gapped-subsequence support: corpus collapses to (user, type) rows
     # first; the pair join is user-keyed, type-cardinality bounded.
     "sequence_support": {"expect": ["HashAggregate"], "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},

@@ -1,8 +1,10 @@
 #!/bin/sh
-# Full verification sweep: unit/integration tests, oracle parity at TWO
-# scale factors, and physical-plan audits. The sf0.1 oracle pass exists
-# because parity bugs can be scale-dependent: round 4 caught an inclusive
-# session-merge boundary and a float rounding tie that sf0.01 never hits.
+# Full verification sweep: unit/integration tests (which already run every
+# oracle at sf0.001, tests/test_registry.py::test_oracle_matches), oracle
+# parity at the two larger scale factors, and physical-plan audits. The
+# sf0.1 oracle pass exists because parity bugs can be scale-dependent:
+# round 4 caught an inclusive session-merge boundary and a float rounding
+# tie that sf0.01 never hits.
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
