@@ -40,7 +40,7 @@ from semantic_index_spark.operators import similarity as S
 from semantic_index_spark.operators import skew as SK
 from semantic_index_spark.operators import text_analysis as TA
 from semantic_index_spark.operators import timeseries as TS
-from semantic_index_spark.session import load_table
+from semantic_index_spark.session import load_table, pin, pinned
 
 # ---------------------------------------------------------------- constants
 
@@ -71,16 +71,19 @@ def _scratch(prefix: str):
 # Session memo for artifacts several registry rows share: built once per
 # (Spark applicationId, sf_dir, name) and reused. Keying by applicationId
 # means a fresh session (driver restart, new bench run) never sees a stale
-# plan or path. Frames are pinned with localCheckpoint(eager) by their
-# builders so every consumer shares ONE materialization; on-disk artifacts
-# live under a _session_root that is removed at interpreter exit.
+# plan or path. Frames are pinned eagerly by their builders so every
+# consumer shares ONE materialization, and the pins made while building
+# belong to the memo, not to the scope of the query that asked first;
+# on-disk artifacts live under a _session_root removed at interpreter exit.
 _SESSION_MEMO: dict[tuple[str, str, str], object] = {}
 
 
 def _session_memo(spark: SparkSession, sf_dir: str, name: str, build: Callable):
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if key not in _SESSION_MEMO:
-        _SESSION_MEMO[key] = build()
+        with pinned() as pins:
+            _SESSION_MEMO[key] = build()
+            pins.clear()
     return _SESSION_MEMO[key]
 
 
@@ -109,7 +112,7 @@ def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=MINHASH_N,
             bands=MINHASH_N,  # 1 row per band
             shingle_n=SHINGLE_N,
-        ).localCheckpoint(eager=True),
+        ).transform(pin, "lsh_pairs", "eager"),
     )
 
 
@@ -332,9 +335,7 @@ def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             m=8,
             ef_construction=32,
         )
-        out = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).localCheckpoint(
-            eager=True
-        )
+        out = pin(H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None), "hnsw_topk", "eager")
     return out
 
 
@@ -363,8 +364,8 @@ def q_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ef_construction=32,
         )
         H.append_hnsw_index(emb.filter(F.col("vec_id") > cut), path)
-        out = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).localCheckpoint(
-            eager=True
+        out = pin(
+            H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None), "hnsw_incremental", "eager"
         )
     return out
 
@@ -434,8 +435,8 @@ def q_hnsw_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink(b0, 0)
         sink(b0, 0)  # replayed epoch: ledger-skipped
         sink(b1, 1)
-        out = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).localCheckpoint(
-            eager=True
+        out = pin(
+            H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None), "hnsw_streaming", "eager"
         )
     return out
 
@@ -471,13 +472,13 @@ def q_hnsw_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         before = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).withColumn(
             "stage", F.lit("tombstoned")
         )
-        before = before.localCheckpoint(eager=True)
+        before = pin(before, "hnsw_delete: before", "eager")
         H.compact_hnsw_index(spark, path)
         after = H.hnsw_topk_indexed(spark, path, q, k=KNN_K, ef=None).withColumn(
             "stage", F.lit("compacted")
         )
         out = before.unionByName(after).orderBy("stage", F.desc("score"), "vec_id")
-        out = out.localCheckpoint(eager=True)
+        out = pin(out, "hnsw_delete: out", "eager")
     return out
 
 
@@ -1128,14 +1129,12 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-global-threshold property is visible per domain.
     from semantic_index_spark.operators import pipeline as P
 
-    # lazy pin (r14, guide §1.2): five subtrees of the final plan read
-    # (source, quality) — the filter's internal histogram, the kept join
-    # side, the threshold readout, and the two per-source counts — and
-    # quality_score is the regex/token-heavy part. Pinning makes them
-    # share ONE evaluation of the scoring pass instead of five.
+    # five subtrees of the final plan (the filter's histogram, the kept
+    # join side, the threshold readout, the two per-source counts) share
+    # ONE evaluation of the regex/token-heavy scoring pass through a pin
     d = load_table(spark, sf_dir, "documents").select(
         "source", T.quality_score("text").alias("quality")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "quality_filter: d")
     kept = P.quantile_threshold_filter(d, "quality", "source", QUAL_Q, 0.0, 1.0, QUAL_BINS)
     thr = SKT.histogram_quantiles_by(d, "quality", "source", 0.0, 1.0, [QUAL_Q], QUAL_BINS).select(
         "source", F.col("approx_value").alias("threshold")
@@ -1877,7 +1876,7 @@ LIFT_MIN_SUPPORT = 2
 # Session-scoped co-purchase edge artifact (same contract as
 # shared_lsh_pairs): three registry queries (triangle_count,
 # motif_triangles, motif_open_wedges) consume the identical edge list —
-# compute it once per (applicationId, sf_dir) and localCheckpoint it.
+# compute it once per (applicationId, sf_dir) and pin it.
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _session_memo(
         spark, sf_dir, "copurchase", lambda: _build_copurchase_edges(spark, sf_dir)
@@ -1908,7 +1907,7 @@ def _build_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         baskets.select(F.explode(pairs).alias("_e"))
         .select("_e.src", "_e.dst")
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin, "copurchase_edges", "eager")
     )
 
 
@@ -3517,7 +3516,7 @@ def q_versioned_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(sink)
             .select("id", "cents", F.col("_version").alias("version"))
             .orderBy("version", "id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "versioned_feed: out", "eager")
         )
     return out
 
@@ -3570,9 +3569,9 @@ def q_streaming_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         with _stream_shuffle_partitions(spark):
             SI.run_batch_like(writer)
         # pin the final state before the source files vanish (every batch
-        # was localCheckpointed inside foreachBatch, but the extra pin makes
+        # was pinned inside foreachBatch, but the extra pin makes
         # the returned plan self-contained)
-        final = idx.records.select("item").localCheckpoint(eager=True)
+        final = pin(idx.records.select("item"), "streaming_upsert_replay: final", "eager")
     return final
 
 
@@ -3621,7 +3620,7 @@ def q_stream_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stream.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             )
-        final = VER.read_bucketed(spark, tbl).localCheckpoint(eager=True)
+        final = pin(VER.read_bucketed(spark, tbl), "stream_merge_replay: final", "eager")
     return final
 
 
@@ -3681,7 +3680,7 @@ def q_stream_indexed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             IDX.indexed_ivfsq_topk(spark, tbl, q, k=KNN_K, nprobe=4,
                                    candidates=600)
             .orderBy(F.desc("score"), "vec_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "stream_indexed_merge: out", "eager")
         )
     return out
 
@@ -3722,7 +3721,7 @@ def q_stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             )
         regs = spark.read.parquet(sketch_path)
-        final = SKT.hll_estimate(regs, p=HLL_P).localCheckpoint(eager=True)
+        final = pin(SKT.hll_estimate(regs, p=HLL_P), "stream_hll_replay: final", "eager")
     return final
 
 
@@ -3759,7 +3758,7 @@ def q_index_compact_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     idx.remove_range(removals)
     idx.compact()
-    return idx.records.select("item").localCheckpoint(eager=True)
+    return pin(idx.records.select("item"), "index_compact_demo: result", "eager")
 
 
 
@@ -3807,7 +3806,7 @@ def q_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_docs"),
             F.lit(0).cast("bigint").alias("total_chars"),
         )
-        out = good_agg.unionByName(bad_agg).localCheckpoint(eager=True)
+        out = pin(good_agg.unionByName(bad_agg), "jsonl_quarantine: out", "eager")
     return out
 
 
@@ -3838,7 +3837,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("quality").cast("bigint").alias("n_with_quality"),
                 F.coalesce(F.sum("quality"), F.lit(0)).cast("bigint").alias("quality_sum"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "schema_evolution: out", "eager")
         )
     return out
 
@@ -3895,7 +3894,7 @@ def q_stateful_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("s.n_events").alias("n_events"),
                 F.col("s.total_value").alias("total_cents"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "stateful_totals_replay: final", "eager")
         )
     return final
 
@@ -4036,7 +4035,7 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").cast("bigint").alias("n_events"),
                 F.round(F.sum("value"), 6).alias("total_cents"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "stream_dedup_replay: final", "eager")
         )
     return final
 
@@ -4102,7 +4101,7 @@ def q_stream_static_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.count("*").cast("bigint").alias("n_events"),
                 F.sum("value_cents").cast("bigint").alias("sum_value_cents"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "stream_static_enrich_replay: final", "eager")
         )
     return final
 
@@ -4307,7 +4306,7 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
                 "sum_value",
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "stream_session_replay: final", "eager")
         )
     return final
 
@@ -4337,7 +4336,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("l_quantity").cast("bigint").alias("total_qty"),
                 F.count_distinct("l_partkey").cast("bigint").alias("n_parts"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "orc_roundtrip: final", "eager")
         )
     return final
 
@@ -4396,7 +4395,7 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .queryName(name)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             )
-        final = spark.table(name).localCheckpoint(eager=True)
+        final = pin(spark.table(name), "stream_join_replay: final", "eager")
     return final
 
 
@@ -4524,7 +4523,7 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = os.path.join(tmp, "docs_tbl")
         VER.create_bucketed(target, tbl, ["doc_id"], n_buckets=16)
         VER.merge_into_bucketed(spark, tbl, src, op_col="op")
-        out = VER.diff_bucketed(spark, tbl, 0, 1).localCheckpoint(eager=True)
+        out = pin(VER.diff_bucketed(spark, tbl, 0, 1), "table_changes: out", "eager")
     return out
 
 
@@ -4546,14 +4545,12 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"),
     )
     # materialize the distinct symmetric edge list ONCE: LP's rounds, the
-    # modularity joins, and the 2m count all read this checkpoint instead
-    # of re-running the co-purchase join + distinct three times. LAZY
-    # (r14): modularity()'s own 2m count is the action that materializes
-    # it — no separate checkpoint job up front
+    # modularity joins, and the 2m count all read this pin instead of
+    # re-running the co-purchase join + distinct three times
     edges = (
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin, "modularity: edges")
     )
     labels = G.label_propagation(edges, iters=LP_ITERS, assume_distinct=True)
     return G.modularity(edges, labels)
@@ -4654,7 +4651,7 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.lit("kept"))
                 .alias("action"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "merge_versioned: out", "eager")
         )
     return out
 
@@ -4715,7 +4712,7 @@ def q_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("action"),
             )
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "merge_schema_evolution: out", "eager")
         )
     return out
 
@@ -4774,7 +4771,7 @@ def q_sql_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
                 FROM sqlfd_reg_cur c FULL OUTER JOIN sqlfd_reg_v0 o ON c.id = o.id
                 ORDER BY id
                 """
-            ).localCheckpoint(eager=True)
+            ).transform(pin, "sql_front_door: out", "eager")
         finally:
             spark.catalog.dropTempView("sqlfd_reg_cur")
             spark.catalog.dropTempView("sqlfd_reg_v0")
@@ -4829,7 +4826,7 @@ def q_indexed_table_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             post.unionByName(asof)
             .orderBy("stage", F.desc("score"), "vec_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "indexed_table_ann: out", "eager")
         )
     return out
 
@@ -4891,7 +4888,7 @@ def q_merge_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("action"),
             )
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "merge_type_widening: out", "eager")
         )
     return out
 
@@ -4946,7 +4943,7 @@ def q_restore_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(feed, "id", "left")
             .select("id", "name", "cents", F.col("_action").alias("action"))
             .orderBy("id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "restore_clone: out", "eager")
         )
     return out
 
@@ -4984,7 +4981,7 @@ def q_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             VER.read_bucketed(spark, tbl)
             .select("id", "pennies", "name")
             .orderBy("id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "rename_column: out", "eager")
         )
     return out
 
@@ -5042,7 +5039,7 @@ def q_table_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             VER.read_bucketed(spark, tbl)
             .orderBy("id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "table_metadata: out", "eager")
         )
     return out
 
@@ -5089,7 +5086,7 @@ def q_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(old, "id")
             .select("id", "cents", "dropped_name")
             .orderBy("id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "drop_column: out", "eager")
         )
     return out
 
@@ -5133,7 +5130,7 @@ def q_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             _agg("is_not_null", "nonnull")
             .unionByName(_agg("is_null", "null"))
             .orderBy("which", "source")
-            .localCheckpoint(eager=True)
+            .transform(pin, "null_skipping: out", "eager")
         )
     return out
 
@@ -5184,7 +5181,7 @@ def q_time_travel_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.createDataFrame(
             rows, "snapshot int, n_orders bigint, rev_cents bigint"
         ).orderBy("snapshot")
-        out = out.localCheckpoint(eager=True)
+        out = pin(out, "time_travel_as_of: out", "eager")
     return out
 
 
@@ -5360,13 +5357,13 @@ PQ_M, PQ_K, PQ_ITERS, PQ_QVEC, PQ_TOPN = 4, 16, 2, 3, 10
 # pipeline trains once and serves many; recomputing the Lloyd's rounds per
 # bench query was the r7 verdict's remaining recompute-shape finding. Keyed
 # by applicationId so a fresh driver never sees stale artifacts; the codes
-# DataFrame is localCheckpoint(eager)ed so consumers share one
-# materialization, and the codebooks are plain driver-held floats.
+# DataFrame is pinned eagerly so consumers share one materialization, and
+# the codebooks are plain driver-held floats.
 def shared_pq_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     def build() -> tuple[DataFrame, list]:
         emb = load_table(spark, sf_dir, "embeddings")
         codes, cb = S.pq_train_encode(emb, m_sub=PQ_M, k=PQ_K, iters=PQ_ITERS)
-        return codes.localCheckpoint(eager=True), cb
+        return pin(codes, "pq_codes", "eager"), cb
 
     return _session_memo(spark, sf_dir, "pq_artifacts", build)
 
@@ -5505,7 +5502,7 @@ def q_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         final = S.ivfpq_topk_indexed(
             spark, idx, cb, CENTROIDS, qv, k_results=PQ_TOPN, nprobe=IVF_NPROBE
-        ).localCheckpoint(eager=True)
+        ).transform(pin, "ivfpq_incremental: final", "eager")
     return final
 
 
@@ -5642,7 +5639,7 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").cast("bigint").alias("n_rows"),
                 F.sum("n_chars").cast("bigint").alias("sum_value"),
             )
-            .localCheckpoint(eager=True)  # the view as of v0, pinned
+            .transform(pin, "ivm_agg: base", "eager")  # the view as of v0, pinned
         )
         VER.merge_into_bucketed(spark, tbl, src, op_col="op")
         changes = VER.diff_bucketed(spark, tbl, 0, 1)
@@ -5653,7 +5650,7 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_rows",
                 F.col("sum_value").cast("bigint").alias("sum_chars"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "ivm_agg: out", "eager")
         )
     return out
 
@@ -5675,8 +5672,8 @@ def q_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "_rk", F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
     )
-    s = SKT.hashrank_sample(li, "_rk", ["l_extendedprice"], k=SQ_K).localCheckpoint(
-        eager=True
+    s = pin(
+        SKT.hashrank_sample(li, "_rk", ["l_extendedprice"], k=SQ_K), "sampled_quantiles", "eager"
     )
     return SKT.sample_quantiles(s, "l_extendedprice", SQ_PS)
 
@@ -5727,7 +5724,7 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").cast("bigint").alias("n_rows"),
                 F.sum("n_chars").cast("bigint").alias("sum_chars"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "delete_vectors: out", "eager")
         )
     return out
 
@@ -5856,7 +5853,7 @@ def q_append_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").cast("bigint").alias("n_events"),
                 F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("value_cents"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "append_skipping: out", "eager")
         )
     return out
 
@@ -5902,7 +5899,7 @@ def q_optimize_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").cast("bigint").alias("n_rows"),
                 F.sum("n_chars").cast("bigint").alias("sum_chars"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, "optimize_demo: out", "eager")
         )
     return out
 
@@ -6089,7 +6086,7 @@ def q_indexed_table_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             post.unionByName(asof)
             .orderBy("stage", F.desc("score"), "vec_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "indexed_table_ivfsq: out", "eager")
         )
     return out
 
@@ -6143,7 +6140,7 @@ def q_string_key_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             IDX.indexed_ivfsq_topk(spark, t, q, k=KNN_K, nprobe=4, candidates=500)
             .orderBy(F.desc("score"), "vec_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "string_key_indexed_table: out", "eager")
         )
     return out
 
@@ -6204,7 +6201,7 @@ def q_multi_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             g.unionByName(s).unionByName(pq)
             .orderBy("index_name", F.desc("score"), "vec_id")
-            .localCheckpoint(eager=True)
+            .transform(pin, "multi_index_table: out", "eager")
         )
     return out
 
@@ -6249,7 +6246,7 @@ def q_index_maintenance_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows,
             "stage string, n_nodes bigint, n_tombstones bigint, "
             "recommend_compact int, n_applied_epochs bigint",
-        ).orderBy("stage").localCheckpoint(eager=True)
+        ).orderBy("stage").transform(pin, "index_maintenance_advice: out", "eager")
     return out
 
 
@@ -6318,7 +6315,7 @@ def q_sql_insert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             VB.sql_view(spark, "sql_insert_merge_v", t)
             out = spark.sql(
                 "SELECT id, cents FROM sql_insert_merge_v ORDER BY id"
-            ).localCheckpoint(eager=True)
+            ).transform(pin, "sql_insert_merge: out", "eager")
         finally:
             spark.catalog.dropTempView("sql_insert_merge_v")
     return out
@@ -6365,7 +6362,7 @@ def q_sql_string_key_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             VB.sql_view(spark, "sql_strkey_v", t)
             out = spark.sql(
                 "SELECT k, val FROM sql_strkey_v ORDER BY k"
-            ).localCheckpoint(eager=True)
+            ).transform(pin, "sql_string_key_merge: out", "eager")
         finally:
             spark.catalog.dropTempView("sql_strkey_v")
     return out
@@ -6419,7 +6416,7 @@ def q_vacuum_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert rep["reclaimable_bytes"] > 0 and not rep["staged_orphans"]
         out = spark.createDataFrame(
             rows, "status string, version int, n_rows bigint"
-        ).orderBy("status", "version").localCheckpoint(eager=True)
+        ).orderBy("status", "version").transform(pin, "vacuum_advice: out", "eager")
     return out
 
 
@@ -6460,7 +6457,7 @@ def q_sql_insert_indexed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 IDX.indexed_ivfsq_topk(spark, t, q, k=KNN_K, nprobe=4,
                                        candidates=600)
                 .orderBy(F.desc("score"), "vec_id")
-                .localCheckpoint(eager=True)
+                .transform(pin, "sql_insert_indexed_table: out", "eager")
             )
         finally:
             spark.catalog.dropTempView("sql_ins_idx_v")
@@ -6498,7 +6495,7 @@ def q_sql_hidden_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY day, event_type
             ORDER BY day, event_type
             """
-        ).localCheckpoint(eager=True)
+        ).transform(pin, "sql_hidden_prune: out", "eager")
     finally:
         spark.catalog.dropTempView("sql_hidden_prune_v")
     return out
@@ -6692,10 +6689,10 @@ def q_training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each stage feeds MULTIPLE consumers (the next stage + its own
     # summary count), so pin the lineage once per stage — the
     # recomputed-lineage class that cost pagerank/triangle_count 2-3x
-    quality = train.join(passed, "doc_id", "left_semi").localCheckpoint(eager=True)
+    quality = pin(train.join(passed, "doc_id", "left_semi"), "e2e: quality", "eager")
 
     winners = D.exact_dedup(quality).select("doc_id")
-    deduped = quality.join(winners, "doc_id", "left_semi").localCheckpoint(eager=True)
+    deduped = pin(quality.join(winners, "doc_id", "left_semi"), "e2e: deduped", "eager")
 
     bench_h = (
         bench.select(F.explode(T.shingles("text", E2E_DECONTAM_N)).alias("_sh"))
@@ -6711,9 +6708,7 @@ def q_training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    clean = deduped.join(contaminated, "doc_id", "left_anti").localCheckpoint(
-        eager=True
-    )
+    clean = pin(deduped.join(contaminated, "doc_id", "left_anti"), "e2e: clean", "eager")
 
     packed = P.pack_sequences(clean, budget=PACK_BUDGET)
 
@@ -6861,7 +6856,7 @@ def q_ivfsq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = S.ivfsq_topk_indexed(
             spark, idx, emb, model, qv, CENTROIDS,
             k=KNN_K, nprobe=IVF_NPROBE, candidates=SQ_CANDIDATES,
-        ).localCheckpoint(eager=True)
+        ).transform(pin, "ivfsq_incremental: final", "eager")
     return final
 
 
@@ -6909,7 +6904,7 @@ def q_ivf_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = S.ivfsq_topk_indexed(
             spark, idx, emb, model, qv, CENTROIDS,
             k=KNN_K, nprobe=IVF_NPROBE, candidates=SQ_CANDIDATES,
-        ).localCheckpoint(eager=True)
+        ).transform(pin, "ivf_consolidate: final", "eager")
     return final
 
 

@@ -10,7 +10,9 @@ checkout, so one loop measures both sides of an A/B.
 
 Per query: ``$SPARK_GRAFT_BENCH_WARMUP`` untimed reps (default 1), then
 ``$SPARK_GRAFT_BENCH_REPS`` timed reps (default 3), each timed end to end
-(build + execute + collect). When the reps spread by more than 40 % of
+(build + execute + collect). Every rep runs in its own
+``session.pinned()`` scope, so it frees what it pinned and no rep reads a
+frame an earlier rep cached. When the reps spread by more than 40 % of
 their median, up to 2 extra reps are taken. A query that fails on any rep
 is an error and stays out of every median. Each ``detail`` entry holds the
 median, min, max, spread, rep count and row count, plus ``build_s`` (median
@@ -41,6 +43,7 @@ with the per-query detail, and no summary file.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import re
@@ -74,6 +77,10 @@ def bench_round(root: str = REPO_ROOT) -> int:
 
 def time_queries(spark, registry, names, sf_dir, reps, warmup):
     """Time each named query; returns ``(detail, errors)`` keyed by name."""
+    try:
+        from semantic_index_spark.session import pinned
+    except ImportError:  # a ``--repo`` checkout older than the pin scope
+        pinned = contextlib.nullcontext
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     detail: dict[str, dict] = {}
@@ -87,7 +94,8 @@ def time_queries(spark, registry, names, sf_dir, reps, warmup):
         t0 = time.perf_counter()
         try:
             for _ in range(warmup):
-                fn(spark, sf_dir).collect()
+                with pinned():
+                    fn(spark, sf_dir).collect()
             while len(times) < reps or (
                 3 <= len(times) < reps + 2
                 and max(times) - min(times) > 0.4 * statistics.median(times)
@@ -95,9 +103,10 @@ def time_queries(spark, registry, names, sf_dir, reps, warmup):
                 if not times:
                     sc.setJobGroup(name, name)
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                t_build = time.perf_counter()
-                rows = len(df.collect())
+                with pinned():
+                    df = fn(spark, sf_dir)
+                    t_build = time.perf_counter()
+                    rows = len(df.collect())
                 times.append(time.perf_counter() - t0)
                 builds.append(t_build - t0)
                 sc._jsc.clearJobGroup()

@@ -33,6 +33,7 @@ from pyspark.sql.types import ArrayType, FloatType, StringType, StructField, Str
 from semantic_index_spark.duplicate_handling import DuplicateHandling, DuplicateItemError
 from semantic_index_spark.embedder import DeterministicEmbedder, Embedder, embed_udf
 from semantic_index_spark.functions import vector as V
+from semantic_index_spark.session import pin
 
 RECORD_SCHEMA = StructType(
     [
@@ -244,11 +245,11 @@ class SemanticIndex:
         """Bound the logical plan after long mutation chains: every
         add/remove layers another join/union onto the lineage, and
         analysis time grows with it. ``compact`` materializes the current
-        snapshot (localCheckpoint) and restarts the lineage from it — the
+        snapshot (an eager pin) and restarts the lineage from it — the
         in-memory analogue of ``save()``'s plan truncation. Call it every
         few hundred mutations in driver-resident workflows; persisted
         workflows get the same effect from ``save()``."""
-        self._df = self._df.localCheckpoint(eager=True)
+        self._df = pin(self._df, "SemanticIndex.compact", "eager")
 
     def refresh_embeddings(self) -> None:
         """Re-embed every item (`SemanticDatabase.cs:385-417`) as one

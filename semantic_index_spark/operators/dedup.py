@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 
 from semantic_index_spark.functions import text as T
 from semantic_index_spark.functions import vector as V
-from semantic_index_spark.session import release_pin
+from semantic_index_spark.session import pin, release_pin
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -425,21 +425,17 @@ def connected_components(
     fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     rev = pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     # pin the edge list ONCE — without this every iteration would
-    # re-derive the (possibly expensive) pair-generation lineage. LAZY
-    # pin (r14): materializes inside the first round's convergence job
-    # instead of an up-front count action. Released after the loop: by
-    # then the last round's pin holds every label.
-    edges = fwd.unionByName(rev).localCheckpoint(eager=False)
-    # localCheckpoint truncates the logical plan each round: the iterative
-    # lineage would otherwise grow linearly and re-analyze quadratically.
-    # (On a cluster with fault-tolerance needs, use checkpoint() to durable
-    # storage instead.)
-    labels = (
+    # re-derive the (possibly expensive) pair-generation lineage; it fills
+    # inside the first round's convergence job. Released after the loop:
+    # by then the last round's pin holds every label.
+    edges = pin(fwd.unionByName(rev), "connected_components: edges")
+    # a pin truncates the logical plan each round: the iterative lineage
+    # would otherwise grow linearly and re-analyze quadratically.
+    labels = prev = (
         vertices.select(F.col(id_col).alias("id"))
         .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "connected_components: labels")
     )
-    pin = labels
     for _ in range(max_iter):
         # min label among (self, neighbors' labels)
         prop = (
@@ -458,23 +454,18 @@ def connected_components(
         # from O(diameter) to O(log diameter) rounds, the difference
         # between 20+ and ~6 rounds on chain-heavy duplicate clusters.
         lut = stepped.select(F.col("id").alias("_cid"), F.col("comp").alias("_ccomp"))
-        # LAZY pin + convergence probe per round (r14, guide §1.2): the
-        # limit(1) count is the first action on the pin, so probe and pin
-        # take one action call instead of two. It saves no work: right
-        # after that first action LocalRDDCheckpointData.doCheckpoint
-        # runs a fill-in job that materializes every partition the probe
-        # skipped, so each round's pin is complete when its probe returns.
-        # Replaces the eager-checkpoint-then-count pair.
+        # lazy pin + convergence probe per round: the probe is the pin's
+        # first action, and its fill-in job completes the pin before the
+        # probe returns
         merged = (
             stepped.join(lut, stepped.comp == lut._cid)
             .select("id", F.col("_ccomp").alias("comp"), "_old")
-            .localCheckpoint(eager=False)
+            .transform(pin, "connected_components: labels")
         )
         changed = merged.filter(F.col("comp") != F.col("_old")).limit(1).count()
-        # the probe filled this round's pin in, so the one it supersedes is
-        # dead; DataFrame.unpersist() would not free a localCheckpoint pin
-        release_pin(pin)
-        pin = merged
+        # the probe filled this round's pin, so the one it supersedes is dead
+        release_pin(prev)
+        prev = merged
         labels = merged.select("id", "comp")
         if changed == 0:
             break
@@ -559,7 +550,7 @@ def semantic_cluster_dedup(
     base = (
         ivf_assign(ensure_parallelism(df.select(id_col, emb_col)), centroids, emb_col)
         .withColumn("nrm", V.l2_norm(emb_col))
-        .localCheckpoint(eager=True)
+        .transform(pin, "semantic_cluster_dedup: base", "eager")
     )
     a, b = base.alias("a"), base.alias("b")
     cond = (F.col("a._cell") == F.col("b._cell")) & (

@@ -10,7 +10,7 @@ Scale shape: classic distributed PageRank — the edge list is the big
 table and it is shuffled ONCE per iteration on the source key; the rank
 vector is |nodes| rows (orders of magnitude smaller than edges) and
 co-partitions with the edge shuffle. Nothing ever collects to the driver;
-lineage is cut per iteration with ``localCheckpoint`` so the plan does not
+lineage is cut per iteration with ``session.pin`` so the plan does not
 grow O(iterations) deep (the same discipline as
 :func:`..operators.dedup.dedup_components`).
 """
@@ -22,6 +22,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from semantic_index_spark.session import pin
+
 
 def pagerank(
     edges: DataFrame,
@@ -29,7 +31,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 2,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -52,31 +53,29 @@ def pagerank(
     Scale: per iteration, one hash-shuffle of the edge list on ``src``
     (joining the |N|-row rank vector) and one groupBy on ``dst`` with
     map-side partial sums; the dangling term is a 1-row aggregate
-    broadcast back. Edges and degrees are computed once and cached.
-    The |N|-row rank vector is localCheckpointed at the top of every
-    iteration: its three consumers (dangling agg, contribution join, next
-    select) then share one materialization instead of re-deriving the
-    prior iteration's lineage each, and lineage/AQE replanning depth
-    stays O(1). ``checkpoint_every`` is kept for API compatibility; the
-    per-iteration checkpoint supersedes it.
+    broadcast back. Edges and degrees are computed once and pinned.
+    The |N|-row rank vector is pinned at the top of every iteration: its
+    three consumers (dangling agg, contribution join, next select) then
+    share one materialization instead of re-deriving the prior
+    iteration's lineage each, and lineage/AQE replanning depth stays O(1).
     """
     if iterations < 0:
         raise ValueError("pagerank: iterations must be >= 0")
-    # pre-partition the edge list on the join key ONCE: the cached
+    # pre-partition the edge list on the join key ONCE: the pinned
     # partitioning satisfies every iteration's join distribution, so only
     # the |N|-row rank vector shuffles per iteration, never the edges
     e = (
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
         .distinct()
         .repartition("_src")
+        .transform(pin, "pagerank: edges", "partitioned")
     )
-    e.cache()
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
         .distinct()
+        .transform(pin, "pagerank: nodes")
     )
-    nodes.cache()
     n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.withColumn("rank", F.lit(0.0))
@@ -85,29 +84,25 @@ def pagerank(
     # the edge list ships one small table, not two
     base = nodes.join(outdeg, nodes["node"] == outdeg["_src"], "left").select(
         "node", F.coalesce(F.col("_deg"), F.lit(0)).alias("_deg")
-    )
-    base.cache()
+    ).transform(pin, "pagerank: degrees")
     ranks = base.withColumn("rank", F.lit(1.0 / n_nodes))
 
     for it in range(iterations):
         # pin the rank vector ONCE per iteration: three consumers (the
         # dangling agg, the contribution join, the next select) would
         # otherwise each re-derive the whole prior-iteration lineage —
-        # ~3× redundant work per step. LAZY checkpoint (r14): the plan is
-        # truncated to a LogicalRDD at build time and the RDD persists on
-        # first compute, so consumers still share one materialization and
-        # lineage stays O(1) — but the whole recurrence now runs inside
-        # the CALLER'S single action instead of paying one driver-blocking
-        # job round-trip per iteration (guide §1.2; at 100 TB each eager
-        # checkpoint was a full cluster barrier). Caveat: until doCheckpoint
-        # finalizes the pin, a block lost or evicted in between is silently
+        # ~3× redundant work per step. Lazy, so the whole recurrence runs
+        # inside the CALLER'S single action instead of paying one
+        # driver-blocking job round-trip per iteration (guide §1.2; at
+        # 100 TB each eager pin was a full cluster barrier). Caveat: until
+        # doCheckpoint finalizes the pin, a block lost or evicted in between is silently
         # recomputed from its shuffle lineage, whose float sums may come out
         # in a different order, so the dangling agg and the contribution
         # join could each see slightly different ranks. An eager pin froze
         # one copy. Disk-backed local mode makes this effectively
         # unreachable; on a cluster it is the same exposure as executor
         # loss, where local checkpoints are gone too.
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = pin(ranks, "pagerank: ranks")
         # mass that dangling nodes spread uniformly this step: 1-row agg,
         # broadcast into the closure of the next plan via crossJoin
         dangling = ranks.filter(F.col("_deg") == 0).agg(
@@ -171,7 +166,7 @@ def triangle_count(
             .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
             .distinct()
         )
-    e.cache()
+    e = pin(e, "triangle_count: edges")
     deg = (
         e.select(F.col("a").alias("v"))
         .union(e.select(F.col("b").alias("v")))
@@ -195,11 +190,10 @@ def triangle_count(
             .alias("e")
         )
         .select("e.u", "e.w")
+        # TWO consumers below (the adjacency build and the per-edge probe)
+        # would otherwise each recompute the orientation's degree joins
+        .transform(pin, "triangle_count: oriented")
     )
-    # TWO consumers below (the adjacency build and the per-edge probe)
-    # would otherwise each recompute the orientation's degree joins —
-    # cache the oriented edge list once
-    oriented.cache()
     # adjacency-intersection ("compact-forward") counting: per edge
     # (u, w), triangles closed through it = |N⁺(u) ∩ N⁺(w)|. Under the
     # orientation each triangle is counted exactly once — at its edge
@@ -258,7 +252,7 @@ def adamic_adar(
             .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
             .distinct()
         )
-    e.cache()
+    e = pin(e, "adamic_adar: edges")
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy(F.col("a").alias("z")).agg(F.count("*").alias("dz"))
     centers = deg.filter((F.col("dz") >= 2) & (F.col("dz") <= max_degree))
@@ -309,7 +303,7 @@ def khop_frontier(
     Per round: ONE hash equi-join of the (small, shrinking-or-bounded)
     frontier into the edge list, a distinct, and an anti-join against the
     visited set — never a k-way self-join, never a cross product. The
-    frontier is localCheckpointed per round so lineage depth stays O(1)
+    frontier is pinned per round so lineage depth stays O(1)
     per hop (same discipline as :func:`pagerank` and the connected-
     components closure). Fixed ``k`` keeps it deterministic and lets the
     oracle unroll the rounds as CTEs. Returns (node, hop).
@@ -317,10 +311,9 @@ def khop_frontier(
     if k < 0:
         raise ValueError("khop_frontier: k must be >= 0")
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    e.cache()
-    frontier = seeds.select(F.col(node_col).alias(node_col)).distinct().localCheckpoint(
-        eager=True
-    )
+    e = pin(e, "khop_frontier: edges")
+    frontier = seeds.select(F.col(node_col).alias(node_col)).distinct()
+    frontier = pin(frontier, "khop_frontier: seeds", "eager")
     visited = frontier.withColumn("hop", F.lit(0).cast("int"))
     for h in range(1, k + 1):
         nxt = (
@@ -328,7 +321,7 @@ def khop_frontier(
             .select(F.col("_d").alias(node_col))
             .distinct()
             .join(visited.select(node_col), node_col, "left_anti")
-            .localCheckpoint(eager=True)
+            .transform(pin, "khop_frontier: nxt", "eager")
         )
         if nxt.isEmpty():
             break
@@ -359,18 +352,16 @@ def label_propagation(
     Scale shape: per round ONE hash equi-join of the |nodes|-row label
     vector into the edge list (shuffled on the source key), a partial-agg
     (node, label) count, and a per-node argmax window — the window key is
-    the node id (high cardinality, never a funnel). Labels localCheckpoint
+    the node id (high cardinality, never a funnel). Labels are pinned
     per round so lineage stays O(1) deep. Returns (node, label)."""
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if not assume_distinct:
-        # lazy pin (r14): one materialization shared by every round's join
-        # + the node derivation, released by the ContextCleaner when the
-        # RDD is GC'd (an unpersist here would run before the caller's
-        # action populated it). With assume_distinct the caller has pinned
-        # the list already, and a second pin would store a second copy.
-        e = e.distinct().localCheckpoint(eager=False)
+        # one materialization shared by every round's join + the node
+        # derivation. With assume_distinct the caller has pinned the list
+        # already, and a second pin would store a second copy.
+        e = pin(e.distinct(), "label_propagation: edges")
     nodes = e.select(F.col("_s").alias("node")).union(e.select("_d")).distinct()
-    lbl = nodes.withColumn("label", F.col("node")).localCheckpoint(eager=False)
+    lbl = pin(nodes.withColumn("label", F.col("node")), "label_propagation: labels")
     for _ in range(iters):
         nb = e.join(lbl, e["_s"] == lbl["node"]).select(
             F.col("_d").alias("node"), "label"
@@ -392,10 +383,9 @@ def label_propagation(
         lbl = (
             lbl.join(new, "node", "left")
             .select("node", F.coalesce("_new", "label").alias("label"))
-            # lazy: the two consumers (next round's join + the final
-            # result) share one materialization inside the caller's single
-            # action — no per-round driver barrier (guide §1.2)
-            .localCheckpoint(eager=False)
+            # the two consumers (next round's join + the final result)
+            # share one materialization inside the caller's single action
+            .transform(pin, "label_propagation: labels")
         )
     return lbl
 
@@ -420,22 +410,20 @@ def shortest_paths(
     Scale shape: per round ONE hash equi-join of the |reached|-row
     distance vector into the edge list (shuffled on the source key) and
     one min-groupBy over (node) — the classic distributed Bellman-Ford;
-    the distance vector localCheckpoints per round so lineage stays O(1)
+    the distance vector is pinned per round so lineage stays O(1)
     deep. Parallel edges collapse to their min weight up front."""
     e = (
         edges.groupBy(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .agg(F.min(F.col(weight)).cast("bigint").alias("_w"))
-        # lazy pin (r14): every round's relaxation join reads ONE
-        # materialization of the min-collapsed edge list; storage is
-        # released when the RDD is GC'd (the old cache()+unpersist()
-        # freed nothing once the rounds went lazy)
-        .localCheckpoint(eager=False)
+        # every round's relaxation join reads ONE materialization of the
+        # min-collapsed edge list
+        .transform(pin, "shortest_paths: edges")
     )
     dist = (
         sources.select(F.col(node_col).alias(node_col))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "shortest_paths: dist")
     )
     for _ in range(rounds):
         relaxed = e.join(dist, e["_s"] == dist[node_col]).select(
@@ -445,9 +433,9 @@ def shortest_paths(
             dist.unionByName(relaxed)
             .groupBy(node_col)
             .agg(F.min("dist").alias("dist"))
-            # lazy: next round + final result share one materialization
-            # inside the caller's single action — no per-round barrier
-            .localCheckpoint(eager=False)
+            # next round + final result share one materialization
+            # inside the caller's single action
+            .transform(pin, "shortest_paths: dist")
         )
     return dist
 
@@ -604,13 +592,13 @@ def find_motifs(
             .agg(F.count("*").alias("_deg"))
         )
         hubs = deg.filter(F.col("_deg") > max_degree).select("_v")
-        # the capped edge list feeds one join per pattern term — lazily
-        # checkpoint it so the degree agg + anti-joins run once, not once
-        # per term (the multi-consumer lineage-recompute class from r6)
+        # the capped edge list feeds one join per pattern term — pin it so
+        # the degree agg + anti-joins run once, not once per term (the
+        # multi-consumer lineage-recompute class from r6)
         edges = (
             edges.join(hubs.withColumnRenamed("_v", src), src, "left_anti")
             .join(hubs.withColumnRenamed("_v", dst), dst, "left_anti")
-            .localCheckpoint(eager=False)
+            .transform(pin, "find_motifs: edges")
         )
 
     edge_cols = [c for c in edges.columns]
@@ -699,8 +687,8 @@ def k_core(
     Scale shape per round: one union + partial-agg degree count (map-side
     combinable, keyed on the vertex id) and two LEFT SEMI hash joins of
     the edge list against the |survivors|-row vertex set — never a
-    product, never a window over the corpus. The edge frame
-    localCheckpoints each round so lineage stays O(1) deep; peeling
+    product, never a window over the corpus. The edge frame is pinned
+    each round so lineage stays O(1) deep; peeling
     monotonically shrinks it, so later rounds get cheaper. Returns the
     k-core's (node, degree)."""
     if k < 1:
@@ -711,11 +699,9 @@ def k_core(
     )
     if not assume_canonical:
         e = e.filter(F.col("_a") != F.col("_b")).distinct()
-    # lazy (r14): the whole peeling cascade folds into the CALLER'S single
-    # action — each round's frame still materializes exactly once (its two
-    # degree reads + two semi-joins share the persisted RDD) but the
-    # driver no longer pays one blocking job round-trip per round
-    e = e.localCheckpoint(eager=False)
+    # the whole peeling cascade folds into the CALLER'S single action;
+    # each round's two degree reads + two semi-joins share one pin
+    e = pin(e, "k_core: edges")
 
     def _deg(ed):
         return (
@@ -730,7 +716,7 @@ def k_core(
         e = (
             e.join(keep.withColumnRenamed("node", "_a"), "_a", "left_semi")
             .join(keep.withColumnRenamed("node", "_b"), "_b", "left_semi")
-            .localCheckpoint(eager=False)
+            .transform(pin, "k_core: edges")
         )
     return _deg(e)
 
@@ -758,8 +744,8 @@ def personalized_pagerank(
     graph node (pytest-asserted; absent seeds leak their share, which the
     caller should treat as a data bug). Fixed ``iterations`` keeps the
     recurrence oracle-unrollable — same contract, same per-iteration
-    localCheckpoint and scale shape as :func:`pagerank` (the |N|-row rank
-    vector shuffles per round, the cached edge partitioning never moves;
+    pin and scale shape as :func:`pagerank` (the |N|-row rank vector
+    shuffles per round, the pinned edge partitioning never moves;
     the seed set is driver-side knowledge compiled into the plan).
     [absent in reference — north-star extension]"""
     if not seeds:
@@ -771,8 +757,8 @@ def personalized_pagerank(
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
         .distinct()
         .repartition("_src")
+        .transform(pin, "personalized_pagerank: edges", "partitioned")
     )
-    e.cache()
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -789,14 +775,14 @@ def personalized_pagerank(
             .otherwise(F.lit(0.0))
             .alias("_p"),
         )
+        .transform(pin, "personalized_pagerank: degrees")
     )
-    base.cache()
     ranks = base.withColumn("rank", F.col("_p"))
 
     for _ in range(iterations):
         # lazy per-iteration pin — same single-materialization sharing as
         # :func:`pagerank`, without one driver round-trip per iteration
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = pin(ranks, "personalized_pagerank: ranks")
         dangling = ranks.filter(F.col("_deg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
         )
@@ -855,7 +841,7 @@ def deterministic_walks(
     distinct vertex) is the scale lever: each step is ONE hash equi-join
     of the |starts|-row frontier against the out-edge list (candidate
     rows ≤ Σ outdeg(frontier)) followed by a per-walk min_by — never a
-    product, never a corpus window; the frontier localCheckpoints each
+    product, never a corpus window; the frontier is pinned each
     step so lineage stays O(1) deep. Walks reaching a sink vertex simply
     end (inner join drops them; their emitted prefix survives).
     ``both_directions=True`` walks the undirected view of a canonical
@@ -866,11 +852,9 @@ def deterministic_walks(
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if both_directions:
         e = e.unionAll(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
-    # lazy (r14): the walk recurrence folds into the caller's single
-    # action — the symmetrized edge list still materializes once and every
-    # step's join reads the persisted RDD, but the driver no longer pays
-    # one blocking job per step (guide §1.2)
-    e = e.filter(F.col("_s") != F.col("_d")).distinct().localCheckpoint(eager=False)
+    # the walk recurrence folds into the caller's single action, and every
+    # step's join reads one materialization of the symmetrized edge list
+    e = pin(e.filter(F.col("_s") != F.col("_d")).distinct(), "deterministic_walks: edges")
     if starts is None:
         # every vertex gets a walk — a sink's walk is just its step-0 row
         starts = (
@@ -880,7 +864,7 @@ def deterministic_walks(
         )
     cur = starts.select(
         F.col("node").alias("walk_id"), F.col("node").alias("node")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "deterministic_walks: frontier")
     out = cur.select("walk_id", F.lit(0).cast("int").alias("step"), "node")
     for t in range(1, length + 1):
         ranked = cur.join(e, cur["node"] == e["_s"]).select(
@@ -907,9 +891,9 @@ def deterministic_walks(
         cur = (
             ranked.groupBy("walk_id")
             .agg(F.min_by("_d", "_h").alias("node"))
-            # lazy: the two consumers (next step's join + the emitted
-            # step rows) share one materialization — no per-step barrier
-            .localCheckpoint(eager=False)
+            # the two consumers (next step's join + the emitted step
+            # rows) share one materialization
+            .transform(pin, "deterministic_walks: frontier")
         )
         out = out.unionByName(
             cur.select("walk_id", F.lit(t).cast("int").alias("step"), "node")

@@ -57,6 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from semantic_index_spark.session import collect_bounded, pin
+
 _INDEX_SCHEMA = StructType(
     [
         StructField("shard", IntegerType()),
@@ -585,8 +587,6 @@ def read_tombstones(spark: SparkSession, path: str, max_ids: int = 10_000_000) -
     """The layout's deleted-id set (empty if none were ever deleted)."""
     import os
 
-    from semantic_index_spark.session import collect_bounded
-
     d = _tombstone_dir(path)
     if not os.path.isdir(d):
         return set()
@@ -665,7 +665,7 @@ def compact_hnsw_index(spark: SparkSession, path: str) -> int:
             spark.read.parquet(tomb)
             .select("id")
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(pin, "compact_hnsw_index: dead")
         )
         n_dead = dead.count()
         if not n_dead:
@@ -679,7 +679,7 @@ def compact_hnsw_index(spark: SparkSession, path: str) -> int:
             spark.read.parquet(path)
             .join(dead, "id", "left_anti")
             .select(F.col("id").alias("vec_id"), "embedding")
-            .localCheckpoint(eager=False)
+            .transform(pin, "compact_hnsw_index: live")
         )
         rebuilt = build_hnsw(
             live,
@@ -805,8 +805,6 @@ def hnsw_topk_filtered(
     import numpy as np
     import pandas as pd
 
-    from semantic_index_spark.session import collect_bounded
-
     rows = collect_bounded(
         allowed.select(id_col).distinct(), max_allowed, "hnsw_topk_filtered allowed set"
     )
@@ -855,8 +853,6 @@ def hnsw_topk_multi(
         StructField,
         StructType,
     )
-
-    from semantic_index_spark.session import collect_bounded
 
     q_rows = collect_bounded(
         queries.select(q_id_col, q_emb_col), max_queries, "hnsw_topk_multi query set"

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 
 from semantic_index_spark.embedder import Embedder, embed_udf
 from semantic_index_spark.functions import text as T
+from semantic_index_spark.session import pin
 
 
 def embed_incremental(
@@ -157,7 +158,7 @@ def pack_sequences(
     corpus shuffle), per-partition running sums via a window keyed on the
     partition id (never unpartitioned), per-partition totals → exclusive
     offsets on |partitions| rows, broadcast back. The sorted/numbered rows
-    are pinned with ``localCheckpoint`` so the totals branch and the join
+    are pinned (``session.pin``) so the totals branch and the join
     branch see the same range placement."""
     from pyspark.sql import Window
 
@@ -176,7 +177,7 @@ def pack_sequences(
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright(F.col("_mid"), 33))
         .drop("_mid")
-        .localCheckpoint(eager=True)
+        .transform(pin, "pack_sequences: local", "eager")
     )
     totals = local.groupBy("_pid").agg(F.sum("n_tokens").alias("_tot"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
@@ -409,7 +410,7 @@ def budget_select(
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright(F.col("_mid"), 33))
         .drop("_mid")
-        .localCheckpoint(eager=True)
+        .transform(pin, "budget_select: local", "eager")
     )
     totals = local.groupBy("_pid").agg(F.sum("n_tokens").alias("_tot"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)

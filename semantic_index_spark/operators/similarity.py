@@ -27,7 +27,7 @@ from collections.abc import Sequence
 
 import pandas as pd  # module-level so pandas_udf can resolve postponed hints
 import pyspark.sql.functions as F
-from semantic_index_spark.session import collect_bounded
+from semantic_index_spark.session import collect_bounded, pin
 from pyspark.sql import DataFrame, Window
 
 from semantic_index_spark.functions import vector as V
@@ -681,7 +681,7 @@ def greedy_kcenter(
         F.col(id_col),
         F.col(emb_col),
         V.l2_distance(F.col(emb_col), F.lit(center).cast("array<double>")).alias("_d"),
-    ).localCheckpoint(eager=True)
+    ).transform(pin, "greedy_kcenter: cur", "eager")
     for r in range(1, k):
         far = collect_bounded(
             cur.orderBy(F.desc("_d"), F.col(id_col)).limit(1),
@@ -700,7 +700,7 @@ def greedy_kcenter(
                 F.col("_d"),
                 V.l2_distance(F.col(emb_col), F.lit(c).cast("array<double>")),
             ).alias("_d"),
-        ).localCheckpoint(eager=True)
+        ).transform(pin, "greedy_kcenter: cur", "eager")
     spark = df.sparkSession
     # HALF_UP rounding (not Python's banker's round) so the radius matches
     # the DuckDB oracle's round() exactly; id type derived from the input

@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from semantic_index_spark.functions.text import md5_bigint
+from semantic_index_spark.session import pin
 
 
 def salted_agg(
@@ -162,8 +163,8 @@ def global_ranks(
     only the (offset, local) split differs — but the sizes branch and the
     rank branch must see the SAME placement, and range boundaries come
     from RDD-id-seeded sampling, so the sorted/numbered rows are pinned
-    with a ``localCheckpoint`` before fanning out (a global total order is
-    a materialization-scale op regardless; the checkpoint makes the second
+    with ``session.pin`` before fanning out (a global total order is
+    a materialization-scale op regardless; the pin makes the second
     pass read it instead of re-shuffling). The offsets prefix-sum does use
     a 1-partition window, on |partitions| rows — O(thousands) at any data
     scale, never O(corpus)."""
@@ -178,7 +179,7 @@ def global_ranks(
         .withColumn("_pid", F.shiftright(F.col("_mid"), 33))
         .withColumn("_lrn", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1))
         .drop("_mid")
-        .localCheckpoint(eager=True)
+        .transform(pin, "global_ranks: local", "eager")
     )
     sizes = local.groupBy("_pid").agg(F.count("*").alias("_n"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)

@@ -10,7 +10,7 @@ single-pass / window shapes with exact cross-engine oracles.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from semantic_index_spark.session import collect_bounded
+from semantic_index_spark.session import collect_bounded, pin, pinned
 from pyspark.sql import DataFrame, Window
 
 from semantic_index_spark.functions.text import md5_bigint
@@ -196,11 +196,11 @@ def logistic_regression_gd(
     feats = [F.lit(1.0).alias("_x0")] + [
         F.col(c).cast("double").alias(f"_x{j+1}") for j, c in enumerate(feature_cols)
     ]
-    base = df.select(*feats, F.col(label_col).cast("double").alias("_y"))
-    base.cache()
     d = len(feature_cols) + 1
     w = [0.0] * d
-    try:
+    with pinned():
+        base = df.select(*feats, F.col(label_col).cast("double").alias("_y"))
+        base = pin(base, "logistic_regression_gd: rows")
         n = base.count()
         # empty input: the mean gradient is undefined — stay total (like
         # the other driver-loop operators) and return the zero init
@@ -219,8 +219,6 @@ def logistic_regression_gd(
                 "logistic_regression_gd gradient (d+1 sums, one row)",
             )[0]
             w = [w[j] - lr * grads[f"g{j}"] / n for j in range(d)]
-    finally:
-        base.unpersist()
     names = ["__intercept__"] + list(feature_cols)
     spark = df.sparkSession
     return spark.createDataFrame(

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from semantic_index_spark.session import pin
+
 
 def asof_join(
     left: DataFrame,
@@ -291,7 +293,7 @@ def mad_outliers(
     Two grouped percentile passes (median, then median absolute deviation)
     whose |groups|-row results BROADCAST back onto the stream — the data
     shuffles only by the group key, twice, and never sorts globally; the
-    deviation frame is pinned with ``localCheckpoint`` so the MAD pass and
+    deviation frame is pinned (``session.pin``) so the MAD pass and
     the final flagging read it once instead of re-deriving the lineage. At
     100 TB swap the exact ``percentile`` for ``approx_percentile`` (KLL
     sketch, mergeable partials) — same plan shape, bounded memory; the
@@ -310,7 +312,7 @@ def mad_outliers(
     dev = (
         df.join(F.broadcast(med), by)
         .withColumn("_absdev", F.abs(F.col(value_col) - F.col("group_median")))
-        .localCheckpoint(eager=True)
+        .transform(pin, "mad_outliers: dev", "eager")
     )
     mad = dev.groupBy(by).agg(
         F.expr("percentile(_absdev, 0.5D)").alias("group_mad")
@@ -1002,8 +1004,8 @@ def autocorrelation(
         df.select(F.col(group_col).alias("grp"), F.to_date(ts_col).alias("d"))
         .groupBy("grp", "d")
         .agg(F.count("*").cast("bigint").alias("x"))
+        .transform(pin, "autocorrelation: daily")
     )
-    daily.cache()
     totals = daily.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s"),

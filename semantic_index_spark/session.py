@@ -11,6 +11,7 @@ are what you'd set on a 1000-executor cluster, where
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -79,15 +80,93 @@ def job_description(spark: SparkSession, text: str):
         sc.setJobDescription(prev)
 
 
+def _checkpoint_rdd(df):
+    # the RDD in a checkpoint pin's LogicalRDD leaf holds the pin's blocks
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
 def release_pin(df) -> None:
-    """Free the blocks of a ``localCheckpoint`` pin. ``DataFrame.unpersist()``
-    is a no-op on such a frame: its blocks belong to the RDD inside the
-    ``LogicalRDD`` leaf, so this unpersists that RDD (non-blocking). ``df``
-    must be the frame ``localCheckpoint`` returned, not a projection of it.
-    Release a pin only once everything that reads it is materialized: once
-    the pin is filled in its lineage is cut, so a later read of a released
-    block fails ("checkpoint block not found") instead of recomputing it."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    """Free the blocks of a ``lazy`` or ``eager`` pin now, before its scope
+    ends (non-blocking). Only for a pin that dies early, such as the
+    superseded round of a loop; :func:`pinned` releases the rest."""
+    _checkpoint_rdd(df).unpersist(False)
+
+
+_SCOPES = threading.local()
+
+
+def _scopes() -> list:
+    return _SCOPES.__dict__.setdefault("stack", [])
+
+
+def pin(df, name: str, mode: str = "lazy"):
+    """Materialize ``df`` once for every reader that follows, and return the
+    pinned frame. Every materialization in the package and the registry
+    goes through here. While a :func:`pinned` scope is open on this thread,
+    the pin belongs to the innermost one and is freed when it exits.
+    Outside any scope the ContextCleaner frees a checkpoint pin once the
+    frame is garbage-collected, and a ``partitioned`` pin stays in Spark's
+    CacheManager for the rest of the session.
+
+    ``mode``:
+
+    - ``lazy``: ``localCheckpoint(eager=False)``. The plan is cut to a
+      ``LogicalRDD`` now and the blocks fill during the first action that
+      reads them, so a lazy pin pays off when one action uses it: the
+      whole recurrence of an iterative operator runs inside the caller's
+      single action, with no driver round trip per round. ``isEmpty`` (or
+      any probe) on a lazy pin costs an extra job: the probe computes the
+      partitions it needs and ``doCheckpoint`` then runs a second job that
+      fills the rest.
+    - ``eager``: ``localCheckpoint(eager=True)``. The blocks fill now, in a
+      job described as ``name``; for a frame that several actions read or
+      that a driver-side loop probes.
+    - ``partitioned``: ``cache()``. A checkpoint pin loses the frame's
+      partitioning: measured on Spark 4.1.2, a join on ``_src`` against a
+      ``repartition("_src")`` frame reads a cached frame with no Exchange
+      on that side, while a lazy or an eager ``localCheckpoint`` of the
+      same frame adds an ``Exchange hashpartitioning``. Only for an edge
+      list that every round joins on its partitioning key.
+
+    The pinned RDD is named ``name``, so a storage census lists it. A
+    checkpoint pin keeps its blocks until it is released, and
+    ``DataFrame.unpersist()`` does not free it; release it only once every
+    frame that reads it is materialized, because its lineage is cut and a
+    later read of a released block fails ("checkpoint block not found")
+    instead of recomputing it."""
+    if mode == "partitioned":
+        out = df.cache()
+    elif mode in ("lazy", "eager"):
+        with job_description(df.sparkSession, name):
+            out = df.localCheckpoint(eager=mode == "eager")
+        _checkpoint_rdd(out).setName(name)
+    else:
+        raise ValueError(f"pin: mode must be lazy, eager or partitioned, got {mode!r}")
+    if _scopes():
+        _scopes()[-1].append((out, mode))
+    return out
+
+
+@contextmanager
+def pinned():
+    """Release every pin made on this thread while the block runs, when it
+    exits. Scopes nest: a pin belongs to the innermost open scope. The
+    scope yields its list of ``(frame, mode)`` pins; an owner that outlives
+    the block (a session memo) empties that list to keep its pins. The
+    stack is per thread, so a ``foreachBatch`` body on the streaming
+    callback thread never releases the pins of a scope open on the
+    driver's main thread."""
+    pins: list = []
+    _scopes().append(pins)
+    try:
+        yield pins
+    finally:
+        _scopes().pop()
+        for df, mode in reversed(pins):
+            if mode == "partitioned":
+                df.unpersist(False)
+            else:
+                release_pin(df)
 
 
 # Resolved-relation cache: the unexecuted DataFrame handle per

@@ -62,19 +62,13 @@ import datetime
 import hashlib
 import json
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StringType
 
 from semantic_index_spark.functions.text import md5_bigint
-from semantic_index_spark.sources.versioned import (
-    CommitConflictError,
-    _pointer_lock,
-    _staged_path,
-    _write_pointer,
-)
+from semantic_index_spark.sources.versioned import _publish_staged, _staged_path
 
 _SPEC = "_hidden_spec.json"
 _LATEST = "_latest.json"
@@ -227,33 +221,6 @@ def create_hidden(df: DataFrame, table: str, spec: list) -> int:
     with open(_spec_path(table), "w") as f:
         json.dump({"spec": entries, "time_zone": _session_tz(df.sparkSession)}, f)
     return commit_hidden(df, table)
-
-
-def _publish_staged(
-    table: str, staged: str, expected: "int | None", before_pointer=None
-) -> int:
-    """The shared optimistic-commit tail (r9 — same contract as
-    ``versioned.commit_version``): inside the pointer critical section,
-    verify the committed latest still equals the version this commit was
-    planned against, rename the staged layout to ``v=<n+1>``, advance the
-    pointer. A concurrent winner fails the loser with retryable
-    :class:`versioned.CommitConflictError` and the staging is removed —
-    hidden tables share the versioned store's multi-writer semantics."""
-    with _pointer_lock(table):
-        cur = current_version(table)
-        if cur != expected:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise CommitConflictError(
-                f"cannot commit to {table}: expected latest version "
-                f"{expected}, found {cur} — a concurrent writer committed "
-                "first; re-read and retry"
-            )
-        nxt = 0 if cur is None else cur + 1
-        os.rename(staged, os.path.join(table, f"v={nxt}"))
-        if before_pointer is not None:
-            before_pointer(nxt)  # e.g. the version's zone-map manifest
-        _write_pointer(table, nxt)
-    return nxt
 
 
 def commit_hidden(df: DataFrame, table: str) -> int:

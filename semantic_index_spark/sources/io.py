@@ -20,6 +20,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from semantic_index_spark.session import pin
+
 
 def read_parquet(
     spark: SparkSession,
@@ -233,7 +235,7 @@ def read_jsonl_quarantine(
 
     The corrupt-record column must be part of the read schema, and Spark
     refuses a query that selects ONLY that column from an uncached scan —
-    the parsed frame is cached here (documented Spark requirement), which
+    the parsed frame is pinned here (documented Spark requirement), which
     also makes the two returned branches share one parse of the input.
     """
     import pyspark.sql.functions as F
@@ -246,7 +248,7 @@ def read_jsonl_quarantine(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt)
         .json(path)
-        .cache()
+        .transform(pin, "read_jsonl_quarantine: parsed")
     )
     good = parsed.where(F.col(corrupt).isNull()).drop(corrupt)
     bad = parsed.where(F.col(corrupt).isNotNull()).select(

@@ -143,17 +143,14 @@ def _staged_path(table: str) -> str:
     return os.path.join(table, _STAGED_PREFIX + uuid.uuid4().hex)
 
 
-def _pointer_lock(table: str, timeout: float = 60.0, stale_after: float = 300.0):
+def _pointer_lock(table: str, timeout: float = 60.0):
     """Filesystem mutex around the check-pointer-then-rename critical
     section — the local-FS stand-in for an object store's conditional
     PUT. The mechanism (``flock`` on a persistent, never-unlinked lock
     file — kernel-released on holder death, so no stale-lock breaking
     step and none of its TOCTOU races) lives in
     :func:`semantic_index_spark.locking.flock_mutex`, shared with the
-    ANN index layouts' commit locks. ``stale_after`` is retained for
-    signature compatibility but unused: a crashed writer's lock
-    evaporates with its process."""
-    del stale_after  # kernel-released locks cannot go stale
+    ANN index layouts' commit locks."""
     from semantic_index_spark.locking import flock_mutex
 
     return flock_mutex(os.path.join(table, _LOCK), timeout=timeout)
@@ -166,6 +163,32 @@ def current_version(table: str) -> int | None:
             return int(json.load(f)["version"])
     except FileNotFoundError:
         return None
+
+
+def _publish_staged(
+    table: str, staged: str, expected: "int | None", before_pointer=None
+) -> int:
+    """The optimistic-commit tail every snapshot writer shares: inside the
+    pointer critical section, verify the committed latest still equals
+    ``expected`` (the version this commit was planned against), rename the
+    staged layout to ``v=<n+1>`` and advance the pointer. A concurrent
+    winner fails the loser with retryable :class:`CommitConflictError`
+    and the staging is removed."""
+    with _pointer_lock(table):
+        cur = current_version(table)
+        if cur != expected:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise CommitConflictError(
+                f"cannot commit to {table}: expected latest version "
+                f"{expected}, found {cur} — a concurrent writer committed "
+                "first; re-read and retry"
+            )
+        nxt = 0 if cur is None else cur + 1
+        os.rename(staged, os.path.join(table, f"v={nxt}"))
+        if before_pointer is not None:
+            before_pointer(nxt)  # e.g. the version's zone-map manifest
+        _write_pointer(table, nxt)
+    return nxt
 
 
 _OBSERVED = object()  # sentinel: condition on the version seen at entry
@@ -194,19 +217,7 @@ def commit_version(
     )
     staged = _staged_path(table)
     df.write.mode("errorifexists").parquet(staged)
-    with _pointer_lock(table):
-        cur = current_version(table)
-        if cur != expected:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise CommitConflictError(
-                f"cannot commit to {table}: expected latest version "
-                f"{expected}, found {cur} — a concurrent writer committed "
-                "first; re-read and retry"
-            )
-        nxt = 0 if cur is None else cur + 1
-        os.rename(staged, os.path.join(table, f"v={nxt}"))
-        _write_pointer(table, nxt)
-    return nxt
+    return _publish_staged(table, staged, expected)
 
 
 def read_version(
@@ -339,18 +350,7 @@ def restore_version(table: str, to_version: int) -> int:
             f"version {to_version} of {table} was expired concurrently "
             "during the restore — nothing was committed"
         )
-    with _pointer_lock(table):
-        now = current_version(table)
-        if now != cur:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise CommitConflictError(
-                f"cannot restore {table}: expected latest version {cur}, "
-                f"found {now} — a concurrent writer committed first"
-            )
-        nxt = cur + 1
-        os.rename(staged, os.path.join(table, f"v={nxt}"))
-        _write_pointer(table, nxt)
-    return nxt
+    return _publish_staged(table, staged, cur)
 
 
 def clone_table(src_table: str, dst_table: str, version: int | None = None) -> int:
@@ -1164,7 +1164,7 @@ def merge_into_bucketed(
     never evolve — the bucket hash is type-sensitive."""
     import pyspark.sql.functions as F
 
-    from semantic_index_spark.session import collect_bounded, job_description, release_pin
+    from semantic_index_spark.session import collect_bounded, job_description, pin, pinned
 
     def described(what: str):
         return job_description(spark, f"merge_into_bucketed: {what}")
@@ -1234,12 +1234,10 @@ def merge_into_bucketed(
         src = source.withColumn("__op", F.lit(when_matched))
     else:
         src = source.withColumnRenamed(op_col, "__op")
-    with described("pin source"):
-        src = src.withColumn("__bucket", _bucket_expr(keys, n_buckets)).localCheckpoint(
-            eager=True
-        )
-    pins = [src]
-    try:
+    # nothing reads the pins once the commit returned or raised
+    with pinned():
+        src = src.withColumn("__bucket", _bucket_expr(keys, n_buckets))
+        src = pin(src, "merge_into_bucketed: pin source", "eager")
         # ONE bounded aggregation over the checkpointed source yields BOTH the
         # affected-bucket list and the unique-source-key validation (r13: the
         # dup check was previously a SEPARATE action over the raw source
@@ -1315,9 +1313,7 @@ def merge_into_bucketed(
             # data if any input were non-deterministic (round 12)
             from semantic_index_spark.sources.indexed import _stage_merge_index
 
-            with described("pin result"):
-                result = result.localCheckpoint(eager=True)
-            pins.append(result)
+            result = pin(result, "merge_into_bucketed: pin result", "eager")
             stage_index, finalize = _stage_merge_index(man, result, affected)
 
             def stage_extra(staged: str) -> None:
@@ -1332,10 +1328,6 @@ def merge_into_bucketed(
                 table, result, base, man, dv_clear=affected,
                 stage_extra=stage_extra, finalize_manifest=finalize,
             )
-    finally:
-        # nothing reads the pins once the commit returned or raised
-        for pin in pins:
-            release_pin(pin)
 
 
 def delete_bucketed(
@@ -1978,7 +1970,7 @@ def optimize_bucketed(
     change: same contract, same bit-identical logical table."""
     import pyspark.sql.functions as F
 
-    from semantic_index_spark.session import release_pin
+    from semantic_index_spark.session import pin, pinned
 
     man = _read_manifest(table)
     keys, n_buckets = man["key_cols"], man["n_buckets"]
@@ -2020,27 +2012,24 @@ def optimize_bucketed(
         rows = spark.createDataFrame(
             [], StructType.fromJson(json.loads(man["schema"]))
         ).withColumn("__bucket", F.lit(0).cast("bigint"))
-    stage_extra = finalize = pin = None
-    if _indexes(man):
-        # co-committed indexes: OPTIMIZE is the compaction half of the DV
-        # trade for the index too — the rewritten buckets' shard graphs
-        # rebuild from the DV-FOLDED content in the SAME commit, so when
-        # this manifest clears the DV lists the serve (which would stop
-        # applying those keys as tombstones) finds the deleted nodes
-        # physically gone from the graph, never resurrected
-        from semantic_index_spark.sources.indexed import _stage_merge_index
+    stage_extra = finalize = None
+    with pinned():
+        if _indexes(man):
+            # co-committed indexes: OPTIMIZE is the compaction half of the DV
+            # trade for the index too — the rewritten buckets' shard graphs
+            # rebuild from the DV-FOLDED content in the SAME commit, so when
+            # this manifest clears the DV lists the serve (which would stop
+            # applying those keys as tombstones) finds the deleted nodes
+            # physically gone from the graph, never resurrected
+            from semantic_index_spark.sources.indexed import _stage_merge_index
 
-        # one evaluation feeds both the data write and the shard build
-        # (checkpoint preserves the zorder sortWithinPartitions layout)
-        rows = pin = rows.localCheckpoint(eager=True)
-        stage_extra, finalize = _stage_merge_index(
-            man, rows, list(affected) + list(dv_only)
-        )
-    try:
+            # one evaluation feeds both the data write and the shard build
+            # (the pin keeps the zorder sortWithinPartitions layout)
+            rows = pin(rows, "optimize_bucketed: rows", "eager")
+            stage_extra, finalize = _stage_merge_index(
+                man, rows, list(affected) + list(dv_only)
+            )
         return _commit_bucketed(
             table, rows, base, man, dv_clear=set(affected) | set(dv_only),
             stage_extra=stage_extra, finalize_manifest=finalize,
         )
-    finally:
-        if pin is not None:
-            release_pin(pin)

@@ -829,22 +829,13 @@ class PlainAppendWriter(DataSourceArrowWriter):
         if not names:  # empty INSERT: no version bump
             shutil.rmtree(self.staged, ignore_errors=True)
             return
-        with VER._pointer_lock(self.table):
-            cur = VER.current_version(self.table)
-            if cur != self.version:
-                shutil.rmtree(self.staged, ignore_errors=True)
-                raise VER.CommitConflictError(
-                    f"cannot commit to {self.table}: expected latest version "
-                    f"{self.version}, found {cur} — a concurrent writer "
-                    "committed first; re-read and retry"
-                )
-            nxt = cur + 1
-            dest = os.path.join(self.table, f"v={nxt}")
-            VER._link_tree(os.path.join(self.table, f"v={cur}"), dest)
-            for n in names:
-                os.rename(os.path.join(self.staged, n), os.path.join(dest, n))
-            shutil.rmtree(self.staged, ignore_errors=True)
-            VER._write_pointer(self.table, nxt)
+        # the new version = the prior version's files (hardlinked) plus the
+        # inserted ones that a committed task reported (a failed attempt's
+        # file is dropped), published under the shared conditional swap
+        for orphan in set(os.listdir(self.staged)) - set(names):
+            os.remove(os.path.join(self.staged, orphan))
+        VER._link_tree(os.path.join(self.table, f"v={self.version}"), self.staged)
+        VER._publish_staged(self.table, self.staged, self.version)
 
     def abort(self, messages):
         import shutil

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import TimestampNTZType
 
+from semantic_index_spark.session import pin
+
 # stream_upsert_into_index: how many micro-batches between full index
 # compactions (each compact is O(index); between them lineage grows one
 # join/union layer per batch, which analysis handles fine at this depth).
@@ -78,10 +80,10 @@ def stream_upsert_into_index(stream_df: DataFrame, index, checkpoint: str) -> Da
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         # foreachBatch contract: batch_df is only valid INSIDE this call,
-        # so pin THIS batch with an eager localCheckpoint — O(batch) work —
+        # so pin THIS batch eagerly — O(batch) work —
         # and the index's lineage never re-reads the streaming source
         # (non-replayable with Kafka retention).
-        pinned = batch_df.localCheckpoint(eager=True)
+        pinned = pin(batch_df, "stream_upsert_into_index: batch", "eager")
         # stays distributed: the micro-batch DataFrame is embedded via the
         # vectorized pandas_udf and upserted with the same broadcast
         # anti-join program the batch path uses — no collect() to the

@@ -77,3 +77,34 @@ def test_named_queries_print_one_line_and_write_no_summary(tmp_path):
     assert set(out["errors"]) == {"boom"}
     assert {p: os.stat(p).st_mtime_ns for p in glob.glob(os.path.join(REPO, "BENCH_SUMMARY*.json"))} == summaries
     assert not glob.glob(os.path.join(tmp_path, "BENCH_SUMMARY*.json"))
+
+
+def test_bench_compare_flags_only_outside_the_old_runs_band(tmp_path):
+    """Spark-free: with two summaries per side, a query is flagged only
+    when every NEW median leaves the OLD runs' min–max band and the ratio
+    passes the threshold; job-count changes are listed either way."""
+    from tools import bench_compare
+
+    def summary(name, medians, jobs):
+        path = tmp_path / name
+        path.write_text(json.dumps({"queries": {
+            q: {"median": m, "jobs": jobs.get(q, 5)} for q, m in medians.items()}}))
+        return str(path)
+
+    old = [
+        summary("old1.json", {"drift": 1.0, "slow": 1.0, "fast": 4.0, "same": 2.0}, {}),
+        summary("old2.json", {"drift": 4.0, "slow": 1.1, "fast": 4.2, "same": 2.1}, {}),
+    ]
+    new = [
+        # drift: the NEW median is 1.54x the OLD one, but inside the OLD band
+        summary("new1.json", {"drift": 3.8, "slow": 2.0, "fast": 1.0, "same": 2.0},
+                {"same": 7}),
+        summary("new2.json", {"drift": 3.9, "slow": 1.9, "fast": 1.1, "same": 2.1},
+                {"same": 7}),
+    ]
+    r = bench_compare.compare(old, new, threshold=1.5)
+    assert [(v, k) for v, _, k, _, _ in r["flagged"]] == [("FASTER", "fast"), ("SLOWER", "slow")]
+    assert r["jobs"] == {"same": ([5], [7])}
+    # one NEW run inside the band is enough to keep a query unflagged
+    new[1] = summary("new2.json", {"drift": 3.9, "slow": 1.05, "fast": 1.1, "same": 2.1}, {})
+    assert [k for _, _, k, _, _ in bench_compare.compare(old, new)["flagged"]] == ["fast"]

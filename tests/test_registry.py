@@ -109,6 +109,112 @@ def test_oracle_matches(spark, duck, sf_dir, name):
     assert check_one(spark, duck, name, sf_dir) == []
 
 
+# the rows whose operators held ``cache()`` frames past the call
+FORMER_CACHE_ROWS = [
+    "pagerank", "personalized_pagerank", "triangle_count", "adamic_adar",
+    "khop_frontier", "autocorrelation", "jsonl_quarantine",
+]
+
+
+def test_pinned_scope_leaves_nothing_persisted(spark, sf_dir):
+    """A row built and collected inside ``pinned()`` leaves the CacheManager
+    empty and no new persisted RDD behind, with no GC. The co-purchase
+    session memo is built first: it is meant to outlive the scope."""
+    from semantic_index_spark.session import pinned
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persisted() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    spark.catalog.clearCache()
+    entrymod._copurchase_edges(spark, sf_dir)
+    for name in FORMER_CACHE_ROWS:
+        before = persisted()
+        with pinned():
+            assert entrymod.queries()[name](spark, sf_dir).collect(), name
+        assert cache.isEmpty(), name
+        # a subset, not an equal size: the ContextCleaner may free an
+        # older test's RDD meanwhile
+        assert persisted() <= before, name
+
+
+def test_lsh_pairs_memo_outlives_the_scope_that_built_it(spark, duck, sf_dir):
+    """The LSH-pairs memo is built inside the first consumer's scope; a
+    second consumer, in a scope of its own, still reads its pin."""
+    from tools.check_oracles import check_one
+
+    entrymod._SESSION_MEMO.pop((spark.sparkContext.applicationId, sf_dir, "lsh_pairs"), None)
+    assert check_one(spark, duck, "dup_degree", sf_dir) == []
+    assert check_one(spark, duck, "cross_source_dup", sf_dir) == []
+
+
+RETRY_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import __spark_entry__ as E
+from semantic_index_spark.session import get_spark, pinned
+
+spark = get_spark(master="local[4,2]", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("OFF")
+sf_dir, names = sys.argv[2], sys.argv[3:]
+
+
+def fail_first_attempt(batches):
+    from pyspark import TaskContext
+
+    if TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("injected first-attempt failure")
+    yield from batches
+
+
+def run(group):
+    E._SESSION_MEMO.clear()
+    spark.sparkContext.setJobGroup(group, group)
+    out = {}
+    for name in names:
+        with pinned():
+            out[name] = sorted(repr(tuple(r)) for r in E.queries()[name](spark, sf_dir).collect())
+    return out
+
+
+clean = run("clean")
+load = E.load_table
+E.load_table = lambda spark, sf_dir, name: load(spark, sf_dir, name).transform(
+    lambda df: df.mapInArrow(fail_first_attempt, df.schema)
+)
+retried = run("retried")
+tracker = spark.sparkContext.statusTracker()
+failed = sum(
+    tracker.getStageInfo(s).numFailedTasks
+    for j in tracker.getJobIdsForGroup("retried")
+    for s in tracker.getJobInfo(j).stageIds
+    if tracker.getStageInfo(s) is not None
+)
+print(json.dumps({"failed_tasks": failed, "same": {n: clean[n] == retried[n] for n in names}}))
+"""
+
+
+def test_graph_rows_survive_task_retries(sf_dir):
+    """Retry safety: on ``local[4,2]`` every task that reads a table fails
+    its first attempt (a pass-through ``mapInArrow``), and pagerank, label
+    propagation and connected components still return byte-identical
+    rounded rows."""
+    import subprocess
+    import sys
+
+    names = ["pagerank", "label_propagation", "dedup_components"]
+    proc = subprocess.run(
+        [sys.executable, "-c", RETRY_SCRIPT, str(REPO), sf_dir, *names],
+        env=dict(os.environ, SPARK_DRIVER_MEMORY="2g"),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["failed_tasks"] > 0
+    assert out["same"] == {n: True for n in names}
+
+
 def test_tool_name_lists_name_registry_rows():
     """The hand-written per-query tables of the audit and scaling tools
     name only registry rows, so a rename fails here rather than at audit

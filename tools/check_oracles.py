@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from semantic_index_spark.session import get_spark
+from semantic_index_spark.session import get_spark, pinned
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -102,9 +102,10 @@ def compare(spark, con, name: str, sf_dir: str) -> tuple[list[str] | None, int]:
     has no oracle (rows-only)."""
     qs, oracles = _registry()
     try:
-        sdf = qs[name](spark, sf_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
+        with pinned():  # the pins of one row are freed before the next
+            sdf = qs[name](spark, sf_dir)
+            s_cols = sdf.columns
+            s_rows = [tuple(r) for r in sdf.collect()]
     except Exception as e:
         return [f"spark error: {e}"], 0
     if name not in oracles:
