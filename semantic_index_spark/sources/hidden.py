@@ -68,21 +68,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StringType
 
 from semantic_index_spark.functions.text import md5_bigint
-from semantic_index_spark.sources.versioned import _publish_staged, _staged_path
+from semantic_index_spark.sources import skipping
+from semantic_index_spark.sources.versioned import (
+    _hidden_spec_path,
+    _publish_staged,
+    _resolve_version,
+    _staged_path,
+    _version_dir,
+    current_version,
+)
 
-_SPEC = "_hidden_spec.json"
-_LATEST = "_latest.json"
 _BUCKET_SALT = "hpart:"
 
 _RANGE_OPS = {"=", "<", "<=", ">", ">="}
-
-
-def _spec_path(table: str) -> str:
-    return os.path.join(table, _SPEC)
-
-
-def _latest_path(table: str) -> str:
-    return os.path.join(table, _LATEST)
 
 
 def _norm_spec(spec: list) -> list[dict]:
@@ -171,8 +169,7 @@ def _check_tz(table: str, spark: SparkSession, meta: dict, action: str) -> None:
         )
 
 
-_BUCKET_OK_DTYPES = ("tinyint", "smallint", "int", "bigint", "string")
-_INT_DTYPES = ("tinyint", "smallint", "int", "bigint")
+_BUCKET_OK_DTYPES = skipping._INT_DTYPES + ("string",)
 
 
 def _record_dtypes(df: DataFrame, entries: list[dict]) -> None:
@@ -213,12 +210,12 @@ def create_hidden(df: DataFrame, table: str, spec: list) -> int:
     creating session's time zone is pinned alongside the spec (see module
     docstring); bucket source columns must be int/string typed."""
     os.makedirs(table, exist_ok=True)
-    if os.path.exists(_spec_path(table)):
+    if os.path.exists(_hidden_spec_path(table)):
         raise FileExistsError(f"hidden-partitioned table {table} already exists")
     entries = _norm_spec(spec)
     _check_bucket_dtypes(df, entries)
     _record_dtypes(df, entries)
-    with open(_spec_path(table), "w") as f:
+    with open(_hidden_spec_path(table), "w") as f:
         json.dump({"spec": entries, "time_zone": _session_tz(df.sparkSession)}, f)
     return commit_hidden(df, table)
 
@@ -248,7 +245,7 @@ def commit_hidden(df: DataFrame, table: str) -> int:
 
 
 def _read_meta(table: str) -> dict:
-    with open(_spec_path(table)) as f:
+    with open(_hidden_spec_path(table)) as f:
         return json.load(f)
 
 
@@ -268,14 +265,6 @@ def expire_hidden(
     return _ver.expire_versions(
         table, keep_last=keep_last, orphan_ttl_seconds=orphan_ttl_seconds
     )
-
-
-def current_version(table: str) -> int | None:
-    try:
-        with open(_latest_path(table)) as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError:
-        return None
 
 
 def _range_push_sound(e: dict, inferred, value) -> bool:
@@ -302,7 +291,7 @@ def _range_push_sound(e: dict, inferred, value) -> bool:
     if isinstance(value, bool) or not isinstance(value, str):
         return True  # numeric/temporal literal: residual is non-lexicographic
     dtype = e.get("dtype")
-    if dtype in _INT_DTYPES:
+    if dtype in skipping._INT_DTYPES:
         return True  # numeric residual on an int column
     if dtype in ("string", None):
         # string (or unknown pre-r10) source: sound only when inference
@@ -336,13 +325,11 @@ def read_hidden(
         if version is not None:
             raise ValueError("pass version OR as_of_ts, not both")
         version = resolve_as_of(table, as_of_ts)
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"hidden-partitioned table {table} has no commits")
+    v = _resolve_version(table, version)
     meta = _read_meta(table)
     entries = meta["spec"]
     _check_tz(table, spark, meta, "read")
-    df = spark.read.parquet(os.path.join(table, f"v={v}"))
+    df = spark.read.parquet(_version_dir(table, v))
     for col, op, value in filters or []:
         # partition-predicate rewrite
         for e in entries:
@@ -373,15 +360,8 @@ def read_hidden(
                         df = df.filter(p <= lit)
                     else:
                         df = df.filter(p >= lit)
-        # residual: the user's actual predicate, verbatim
-        c = F.col(col)
-        if op == "in":
-            df = df.filter(c.isin(list(value)))
-        else:
-            df = df.filter(
-                {"=": c.__eq__, "<": c.__lt__, "<=": c.__le__, ">": c.__gt__, ">=": c.__ge__}[op](value)
-            )
-    return df.drop(*[e["name"] for e in entries])
+    # residual: the user's actual predicates, verbatim
+    return skipping._residual(df, filters).drop(*[e["name"] for e in entries])
 
 
 # --------------------------------------------------------------------------
@@ -415,13 +395,23 @@ def _skip_meta(meta: dict) -> dict:
     if not sk:
         raise ValueError(
             "table was not created with create_hidden_skipping (no skipping "
-            "config in _hidden_spec.json)"
+            "config in its partition spec)"
         )
     return sk
 
 
 def _zonemap_path(table: str, version: int) -> str:
-    return os.path.join(table, f"v={version}", "_zonemaps.json")
+    return skipping._manifest_path(_version_dir(table, version))
+
+
+def _zone_maps(table: str, version: int) -> "dict | None":
+    """A composed snapshot's per-file [min, max] ranges keyed by path
+    relative to the version directory; None when the version has none."""
+    path = _zonemap_path(table, version)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)["files"]
 
 
 def create_hidden_skipping(
@@ -440,12 +430,12 @@ def create_hidden_skipping(
     ``skipping.write_skipping``. Config is fixed at create time so every
     commit's files skip identically."""
     os.makedirs(table, exist_ok=True)
-    if os.path.exists(_spec_path(table)):
+    if os.path.exists(_hidden_spec_path(table)):
         raise FileExistsError(f"hidden-partitioned table {table} already exists")
     entries = _norm_spec(spec)
     _check_bucket_dtypes(df, entries)
     _record_dtypes(df, entries)
-    with open(_spec_path(table), "w") as f:
+    with open(_hidden_spec_path(table), "w") as f:
         json.dump(
             {
                 "spec": entries,
@@ -522,7 +512,7 @@ def commit_hidden_skipping(df: DataFrame, table: str) -> int:
     return _publish_staged(table, staged, expected, before_pointer=_write_zonemap)
 
 
-def _parse_partition_values(relpath: str, entries: list[dict]) -> dict[str, str]:
+def _parse_partition_values(relpath: str) -> dict[str, str]:
     """``_p0=a/_p1=b/part-x.parquet`` → {"_p0": "a", "_p1": "b"} (values as
     the directory-name strings Spark rendered)."""
     from urllib.parse import unquote
@@ -562,7 +552,7 @@ def _identity_prunable(pval: str, value, dtype: "str | None" = None):
       str() nor orders lexicographically."""
     if isinstance(value, bool) or not isinstance(value, (int, str)):
         return None
-    if isinstance(value, int) or (dtype in _INT_DTYPES):
+    if isinstance(value, int) or (dtype in skipping._INT_DTYPES):
         try:
             return int(pval), int(value)
         except (TypeError, ValueError):
@@ -618,6 +608,28 @@ def _pval_matches(entry: dict, pval: str, op: str, value) -> bool:
     return a >= b
 
 
+def _file_may_hold(by_col: dict, relpath: str, ranges: "dict | None", filters) -> bool:
+    """The one per-file keep predicate of hidden-partitioned reads: can
+    the file at ``relpath`` (relative to its version directory) hold rows
+    matching every filter? Directory level: its partition values against
+    the transformed literals (:func:`_pval_matches`); file level: its
+    zone-map ``ranges`` (None = no zone maps). A rewrite that cannot
+    evaluate a literal (e.g. a float against a bucket transform) keeps
+    the file — pruning is IO-only and the residual filters every row."""
+    pvals = _parse_partition_values(relpath)
+    for col, op, value in filters:
+        e = by_col.get(col)
+        if e is not None and op not in ("is_null", "is_not_null"):
+            try:
+                if not _pval_matches(e, pvals[e["name"]], op, value):
+                    return False
+            except (TypeError, ValueError, KeyError):
+                pass
+        if ranges is not None and not skipping._file_may_match(ranges, col, op, value):
+            return False
+    return True
+
+
 def candidate_files_hidden(
     table: str, filters: list[tuple] | None = None, version: int | None = None
 ) -> list[str]:
@@ -625,32 +637,17 @@ def candidate_files_hidden(
     prunings — exposed so tests can assert each level's selectivity
     independently (directory prune via the path prefix, file prune via
     the count within surviving directories)."""
-    from semantic_index_spark.sources.skipping import _file_may_match
-
     meta = _read_meta(table)
-    entries = meta["spec"]
     _skip_meta(meta)
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"table {table} has no commits")
-    with open(_zonemap_path(table, v)) as f:
-        man = json.load(f)
-    by_col = {e["col"]: e for e in entries}
-    keep = []
-    for relpath, ranges in man["files"].items():
-        pvals = _parse_partition_values(relpath, entries)
-        ok = True
-        for col, op, value in filters or []:
-            e = by_col.get(col)
-            if e is not None and not _pval_matches(e, pvals[e["name"]], op, value):
-                ok = False  # directory-level prune
-                break
-            if not _file_may_match(ranges, col, op, value):
-                ok = False  # file-level prune
-                break
-        if ok:
-            keep.append(relpath)
-    return sorted(keep)
+    v = _resolve_version(table, version)
+    zmap = _zone_maps(table, v)
+    if zmap is None:
+        raise FileNotFoundError(f"version {v} of {table} has no zone maps")
+    by_col = {e["col"]: e for e in meta["spec"]}
+    return sorted(
+        rel for rel, ranges in zmap.items()
+        if _file_may_hold(by_col, rel, ranges, filters or [])
+    )
 
 
 def read_hidden_skipping(
@@ -668,10 +665,8 @@ def read_hidden_skipping(
     meta = _read_meta(table)
     entries = meta["spec"]
     _check_tz(table, spark, meta, "read")
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"table {table} has no commits")
-    vdir = os.path.join(table, f"v={v}")
+    v = _resolve_version(table, version)
+    vdir = _version_dir(table, v)
     keep = candidate_files_hidden(table, filters, version=v)
     if not keep:
         df = spark.read.parquet(vdir).filter(F.lit(False))
@@ -679,12 +674,4 @@ def read_hidden_skipping(
         df = spark.read.option("basePath", vdir).parquet(
             *[os.path.join(vdir, fn) for fn in keep]
         )
-    for col, op, value in filters or []:
-        c = F.col(col)
-        if op == "in":
-            df = df.filter(c.isin(list(value)))
-        else:
-            df = df.filter(
-                {"=": c.__eq__, "<": c.__lt__, "<=": c.__le__, ">": c.__gt__, ">=": c.__ge__}[op](value)
-            )
-    return df.drop(*[e["name"] for e in entries])
+    return skipping._residual(df, filters).drop(*[e["name"] for e in entries])

@@ -84,7 +84,6 @@ boundary: a single key column (no composite keys).
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
@@ -134,7 +133,7 @@ def _check_attachable(
             f"column, table has {keys}"
         )
     key = keys[0]
-    fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
+    fields = VER._manifest_fields(man)
     if emb_col not in fields:
         raise ValueError(f"attach index: no column {emb_col!r} on {table}")
     ktype = fields[key].get("type")
@@ -445,7 +444,7 @@ def indexed_ivfpq_topk(
     _, spec = _resolve_index(man, name, "ivfpq")
     p = spec["params"]
     key = man["key_cols"][0]
-    fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
+    fields = VER._manifest_fields(man)
     ktype = fields[key].get("type")
     idx = _read_index_shards(spark, table, man, name=name, kind="ivfpq")
     if idx is None:
@@ -609,7 +608,7 @@ def _read_index_shards(
             by_version.setdefault(int(v), []).append(int(b))
     parts = []
     for v, bs in sorted(by_version.items()):
-        base = os.path.join(table, f"v={v}", idx_dir)
+        base = os.path.join(VER._version_dir(table, v), idx_dir)
         parts.append(
             spark.read.option("basePath", base).parquet(
                 *[os.path.join(base, f"shard={b}") for b in sorted(bs)]
@@ -664,7 +663,7 @@ def indexed_ivfsq_topk(
     _, spec = _resolve_index(man, name, "ivfsq")
     p = spec["params"]
     key = man["key_cols"][0]
-    fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
+    fields = VER._manifest_fields(man)
     ktype = fields[key].get("type")
     idx = _read_index_shards(spark, table, man, name=name, kind="ivfsq")
     if idx is None:

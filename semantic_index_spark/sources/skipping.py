@@ -45,10 +45,17 @@ from pyspark.sql import DataFrame, SparkSession
 from semantic_index_spark.functions.bloom import _positions
 
 _MANIFEST = "_zonemaps.json"
+_INT_DTYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def _manifest_path(table: str) -> str:
-    return os.path.join(table, _MANIFEST)
+def _manifest_path(root: str) -> str:
+    """The zone-map manifest of a skipping table, or of a composed hidden
+    snapshot when ``root`` is its version directory."""
+    return os.path.join(root, _MANIFEST)
+
+
+def _data_dir(table: str) -> str:
+    return os.path.join(table, "data")
 
 
 def write_skipping(
@@ -84,11 +91,14 @@ def write_skipping(
     data, evaluated driver-side on probe literals), packed to an m-bit
     bitmap per (file, column) and base64-embedded in the manifest; real
     formats store the same bitmap in the file footer. Size ``bloom_m``
-    for the per-file distinct count (fp ≈ (1−e^(−k·n/m))^k)."""
+    for the per-file distinct count (fp ≈ (1−e^(−k·n/m))^k). Each bloom
+    column's Spark type is recorded next to its bitmaps, because the bits
+    hash Spark's string rendering of the value (see
+    :func:`_bloom_may_match`)."""
     os.makedirs(table, exist_ok=True)
     if os.path.exists(_manifest_path(table)):
         raise FileExistsError(f"skipping table {table} already exists")
-    data = os.path.join(table, "data")
+    data = _data_dir(table)
     ck = F.col(cluster_by) if isinstance(cluster_by, str) else cluster_by
     shaped = (
         df.repartitionByRange(n_files, ck)
@@ -131,8 +141,10 @@ def write_skipping(
             blooms.setdefault(r["_f"], {})[c] = base64.b64encode(bytes(bm)).decode()
     man = {"stats_cols": stats_cols, "files": files, "nulls": nulls}
     if bloom_cols:
+        dtypes = dict(df.dtypes)
         man["bloom"] = {
             "cols": bloom_cols,
+            "types": {c: dtypes[c] for c in bloom_cols},
             "m": bloom_m,
             "k": bloom_k,
             "files": blooms,
@@ -188,14 +200,28 @@ def _bloom_positions_literal(value, m: int, k: int) -> list[int]:
 
 
 def _bloom_may_match(man: dict, fn: str, col: str, op: str, value) -> bool:
+    """Bloom pruning of a point lookup. The bitmap hashed Spark's
+    ``cast(col AS STRING)``, and a Python literal renders the same only
+    as an int (not a bool) against an integral column or a str against a
+    string column (``5`` vs ``'5.0'`` for a double, ``True`` vs
+    ``'true'``); every other literal, and a manifest with no recorded
+    column types, keeps the file."""
     bl = man.get("bloom")
     if not bl or col not in bl["cols"] or op not in ("=", "in"):
+        return True
+    dtype = bl.get("types", {}).get(col)
+    vals = value if op == "in" else [value]
+    if not all(
+        not isinstance(v, bool)
+        and (isinstance(v, int) and dtype in _INT_DTYPES
+             or isinstance(v, str) and dtype == "string")
+        for v in vals
+    ):
         return True
     enc = bl["files"].get(fn, {}).get(col)
     if enc is None:
         return True  # no bitmap recorded (e.g. all-null file): can't rule out
     bm = base64.b64decode(enc)
-    vals = value if op == "in" else [value]
     for v in vals:
         if all(
             bm[p >> 3] & (1 << (p & 7))
@@ -272,22 +298,18 @@ def read_skipping(
     the scan; the original predicates always apply as residuals on the
     survivors, so results are identical with skipping on or off. Returns
     an empty DataFrame (correct schema) when every file is skipped."""
-    with open(_manifest_path(table)) as f:
-        man = json.load(f)
-    data = os.path.join(table, "data")
-    keep = [
-        fn
-        for fn, ranges in man["files"].items()
-        if all(
-            _file_may_match(ranges, c, op, v)
-            and _bloom_may_match(man, fn, c, op, v)
-            and _null_may_match(man, fn, c, op)
-            for c, op, v in (filters or [])
-        )
-    ]
+    data = _data_dir(table)
+    keep = candidate_files(table, filters)
     if not keep:
         return spark.read.parquet(data).filter(F.lit(False))
-    df = spark.read.parquet(*[os.path.join(data, fn) for fn in sorted(keep)])
+    df = spark.read.parquet(*[os.path.join(data, fn) for fn in keep])
+    return _residual(df, filters)
+
+
+def _residual(df: DataFrame, filters: list[tuple] | None) -> DataFrame:
+    """Apply ``(col, op, value)`` filters verbatim: the residual every
+    pruned read (skipping and hidden-partitioned) ends with, so results
+    never depend on which files were pruned."""
     for col, op, value in filters or []:
         c = F.col(col)
         if op == "in":
@@ -354,7 +376,7 @@ def append_skipping(
         man = json.load(f)
     stats_cols = man["stats_cols"]
     bl = man.get("bloom")
-    data = os.path.join(table, "data")
+    data = _data_dir(table)
     staged = os.path.join(table, f"_staged_append_{uuid.uuid4().hex}")
     ck = F.col(cluster_by) if isinstance(cluster_by, str) else cluster_by
     shaped = (

@@ -10,6 +10,10 @@ minimal honest core of that contract on a plain filesystem:
   layout:  <table>/v=<n>/ ...parquet...   (immutable once committed)
            <table>/_latest.json           ({"version": n}, atomic rename)
 
+Every path under ``<table>/`` is built by the layout functions below
+(see the "on-disk layout" block); no other module spells a file or
+directory name of this layout.
+
 Scale notes: data files are written ONCE and never rewritten — a commit
 is one tiny manifest rename, so writers never block readers and a reader
 holding version n is immune to later commits (no read-write races, the
@@ -53,6 +57,10 @@ from pyspark.sql import DataFrame, SparkSession
 _LATEST = "_latest.json"
 _LOCK = "_commit.lock"
 _STAGED_PREFIX = "_staged_"
+_VERSION_PREFIX = "v="
+_BUCKET_PREFIX = "__bucket="
+_DV = "__dv"
+_HIDDEN_SPEC = "_hidden_spec.json"
 
 
 class ConstraintViolationError(ValueError):
@@ -68,8 +76,96 @@ class CommitConflictError(RuntimeError):
     Delta's ConcurrentModificationException family."""
 
 
+# --- on-disk layout: every path under <table>/ is built here -------------
+#
+#   <table>/_latest.json               pointer          current_version
+#   <table>/_manifest_v<n>.json        bucket manifest  _read_manifest
+#   <table>/_hidden_spec.json          hidden spec      hidden._read_meta
+#   <table>/v=<n>/                     snapshot         _version_dir
+#   <table>/v=<n>/__bucket=<b>/        bucket data      _bucket_dir
+#   <table>/v=<n>/__dv/__bucket=<b>/   deletion keys    _dv_dir
+#   <table>/v=<n>/_zonemaps.json       zone maps        skipping._manifest_path
+
+
 def _latest_path(table: str) -> str:
     return os.path.join(table, _LATEST)
+
+
+def _hidden_spec_path(table: str) -> str:
+    return os.path.join(table, _HIDDEN_SPEC)
+
+
+def _version_dir(table: str, version: int) -> str:
+    return os.path.join(table, f"{_VERSION_PREFIX}{version}")
+
+
+def _bucket_dir(root: str, bucket) -> str:
+    """Bucket ``bucket``'s directory under ``root``: a version directory,
+    a staged commit, or a deletion-vector root (:func:`_dv_dir`)."""
+    return os.path.join(root, f"{_BUCKET_PREFIX}{bucket}")
+
+
+def _dv_dir(root: str) -> str:
+    """The deletion-vector root under a version (or staged) directory;
+    each bucket's DV keys sit in ``_bucket_dir(_dv_dir(root), b)``."""
+    return os.path.join(root, _DV)
+
+
+def _written_buckets(root: str) -> "set[int]":
+    """The buckets that have a directory under ``root`` (empty if absent)."""
+    if not os.path.isdir(root):
+        return set()
+    return {
+        int(d[len(_BUCKET_PREFIX):])
+        for d in os.listdir(root)
+        if d.startswith(_BUCKET_PREFIX)
+    }
+
+
+def _live_bucket_dirs(
+    table: str, man: dict, buckets: "set[int] | None" = None
+) -> "dict[int, str]":
+    """``{bucket: owning directory}`` of a manifest's live buckets in
+    bucket order, optionally restricted to ``buckets``."""
+    return {
+        int(b): _bucket_dir(_version_dir(table, owner), b)
+        for b, owner in sorted(man["buckets"].items(), key=lambda kv: int(kv[0]))
+        if owner is not None and (buckets is None or int(b) in buckets)
+    }
+
+
+def _data_files(root: str) -> list[str]:
+    """All data files under ``root`` recursively, skipping `_`/`.`
+    metadata and the deletion-vector subtree."""
+    out = []
+    for cur, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if d != _DV and not d.startswith((".", "_"))
+                   or d.startswith("_p")]  # hidden-partition dirs are _p<i>=...
+        for f in files:
+            if not f.startswith((".", "_")):
+                out.append(os.path.join(cur, f))
+    return sorted(out)
+
+
+def _files_schema(root: str):
+    """The schema of the first data file under ``root``."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = _data_files(root)
+    if not files:
+        raise FileNotFoundError(f"{root} has no data files")
+    return from_arrow_schema(pq.read_schema(files[0]))
+
+
+def _snapshot_schema(table: str, version: int):
+    """Schema of snapshot ``version``: its manifest's, or else its first
+    data file's (plain and hidden-partitioned snapshots)."""
+    man = _manifest_or_none(table, version)
+    if man is not None:
+        return _manifest_schema(man)
+    return _files_schema(_version_dir(table, version))
 
 
 def _write_pointer(table: str, version: int) -> None:
@@ -165,6 +261,15 @@ def current_version(table: str) -> int | None:
         return None
 
 
+def _resolve_version(table: str, version: "int | None" = None) -> int:
+    """``version``, or the committed latest when None; raises for a table
+    with no commits."""
+    v = current_version(table) if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"versioned table {table} has no commits")
+    return v
+
+
 def _publish_staged(
     table: str, staged: str, expected: "int | None", before_pointer=None
 ) -> int:
@@ -184,7 +289,7 @@ def _publish_staged(
                 "first; re-read and retry"
             )
         nxt = 0 if cur is None else cur + 1
-        os.rename(staged, os.path.join(table, f"v={nxt}"))
+        os.rename(staged, _version_dir(table, nxt))
         if before_pointer is not None:
             before_pointer(nxt)  # e.g. the version's zone-map manifest
         _write_pointer(table, nxt)
@@ -236,10 +341,8 @@ def read_version(
         if version is not None:
             raise ValueError("pass version OR as_of_ts, not both")
         version = resolve_as_of(table, as_of_ts)
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"versioned table {table} has no commits")
-    path = os.path.join(table, f"v={v}")
+    v = _resolve_version(table, version)
+    path = _version_dir(table, v)
     if not os.path.isdir(path):
         raise FileNotFoundError(
             f"version {v} of {table} does not exist (expired or never committed)"
@@ -251,10 +354,11 @@ def list_versions(table: str) -> list[int]:
     """Retained snapshot versions, ascending (committed or orphaned)."""
     if not os.path.isdir(table):
         return []
+    n = len(_VERSION_PREFIX)
     return sorted(
-        int(d.split("=", 1)[1])
+        int(d[n:])
         for d in os.listdir(table)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
+        if d.startswith(_VERSION_PREFIX) and d[n:].isdigit()
     )
 
 
@@ -289,7 +393,7 @@ def expire_versions(
     for v in list_versions(table):
         if v in keep:
             continue
-        path = os.path.join(table, f"v={v}")
+        path = _version_dir(table, v)
         if cur is not None and v > cur:
             try:
                 age = now - os.path.getmtime(path)
@@ -330,10 +434,8 @@ def restore_version(table: str, to_version: int) -> int:
     metadata work at any table size. Conditional on the pointer not
     moving (the standard OCC contract); restoring to the current version
     is allowed and commits an explicit no-op rollback point."""
-    cur = current_version(table)
-    if cur is None:
-        raise FileNotFoundError(f"versioned table {table} has no commits")
-    src = os.path.join(table, f"v={to_version}")
+    cur = _resolve_version(table)
+    src = _version_dir(table, to_version)
     if not os.path.isdir(src):
         raise FileNotFoundError(
             f"version {to_version} of {table} does not exist (expired or "
@@ -368,25 +470,21 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
     interleave their files into one mixed ``v=0``; a source version (or
     bucket dir) expired mid-link fails loud rather than publishing a
     truncated clone."""
-    src_cur = current_version(src_table)
-    if src_cur is None:
-        raise FileNotFoundError(f"versioned table {src_table} has no commits")
+    src_cur = _resolve_version(src_table)
     v = src_cur if version is None else version
     if os.path.exists(_latest_path(dst_table)):
         raise FileExistsError(f"clone target {dst_table} already exists")
-    man = None
-    if os.path.exists(_manifest_path(src_table, v)):
-        man = _read_manifest(src_table, v)
+    man = _manifest_or_none(src_table, v)
     os.makedirs(dst_table, exist_ok=True)
     # hidden-partitioned tables carry their transform spec as a side file —
     # the clone needs it for its read path to be self-contained
-    spec = os.path.join(src_table, "_hidden_spec.json")
+    spec = _hidden_spec_path(src_table)
     if os.path.exists(spec):
-        shutil.copy2(spec, os.path.join(dst_table, "_hidden_spec.json"))
+        shutil.copy2(spec, _hidden_spec_path(dst_table))
     staged = _staged_path(dst_table)
     new_man = None
     if man is None:
-        src_dir = os.path.join(src_table, f"v={v}")
+        src_dir = _version_dir(src_table, v)
         if not os.path.isdir(src_dir):
             raise FileNotFoundError(
                 f"version {v} of {src_table} does not exist (expired?)"
@@ -403,25 +501,22 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
         # version dirs — consolidate them (and any referenced DV files)
         # under the clone's v=0 and renumber the manifest accordingly
         os.makedirs(staged, exist_ok=True)
-        for b, owner in man["buckets"].items():
-            if owner is None:
-                continue
-            bsrc = os.path.join(src_table, f"v={owner}", f"__bucket={b}")
-            _link_tree(bsrc, os.path.join(staged, f"__bucket={b}"))
+        for b, bsrc in _live_bucket_dirs(src_table, man).items():
+            _link_tree(bsrc, _bucket_dir(staged, b))
             if not os.path.isdir(bsrc):  # reclaimed mid-link
                 shutil.rmtree(staged, ignore_errors=True)
                 raise FileNotFoundError(
-                    f"bucket {b} of {src_table} v={owner} was reclaimed "
+                    f"bucket {b} of {src_table} ({bsrc}) was reclaimed "
                     "concurrently during the clone — nothing was published"
                 )
         # DV files for one bucket can live under SEVERAL source versions;
         # consolidate them under v=0 with version-prefixed file names so
         # same-named parquet parts never collide
         for b, versions in man.get("dv", {}).items():
-            out = os.path.join(staged, "__dv", f"__bucket={b}")
+            out = _bucket_dir(_dv_dir(staged), b)
             os.makedirs(out, exist_ok=True)
             for vv in versions:
-                src_dv = os.path.join(src_table, f"v={vv}", "__dv", f"__bucket={b}")
+                src_dv = _bucket_dir(_dv_dir(_version_dir(src_table, vv)), b)
                 for name in os.listdir(src_dv):
                     s = os.path.join(src_dv, name)
                     # prefixing would UN-hide `.crc`/`_SUCCESS` sidecars —
@@ -445,14 +540,14 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
                     if owner is None:
                         continue
                     ssrc = os.path.join(
-                        src_table, f"v={owner}", idx_dir, f"shard={b}"
+                        _version_dir(src_table, owner), idx_dir, f"shard={b}"
                     )
                     _link_tree(ssrc, os.path.join(staged, idx_dir, f"shard={b}"))
                     if not os.path.isdir(ssrc):  # reclaimed mid-link
                         shutil.rmtree(staged, ignore_errors=True)
                         raise FileNotFoundError(
                             f"index {iname!r} shard {b} of {src_table} "
-                            f"v={owner} was reclaimed concurrently during "
+                            f"({ssrc}) was reclaimed concurrently during "
                             "the clone — nothing was published"
                         )
         new_man = {
@@ -477,7 +572,7 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
                 }
                 for iname, spec in _indexes(man).items()
             }
-    dst_v0 = os.path.join(dst_table, "v=0")
+    dst_v0 = _version_dir(dst_table, 0)
     with _pointer_lock(dst_table):
         if current_version(dst_table) is not None or os.path.exists(dst_v0):
             shutil.rmtree(staged, ignore_errors=True)
@@ -535,17 +630,28 @@ def _manifest_path(table: str, version: int) -> str:
 
 
 def _read_manifest(table: str, version: int | None = None) -> dict:
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"bucketed table {table} has no commits")
-    with open(_manifest_path(table, v)) as f:
+    with open(_manifest_path(table, _resolve_version(table, version))) as f:
         return json.load(f)
+
+
+def _manifest_or_none(table: str, version: int) -> "dict | None":
+    """Version ``version``'s manifest, or None when it has none (plain and
+    hidden-partitioned snapshots)."""
+    try:
+        return _read_manifest(table, version)
+    except FileNotFoundError:
+        return None
 
 
 def _manifest_schema(man: dict):
     from pyspark.sql.types import StructType
 
     return StructType.fromJson(json.loads(man["schema"]))
+
+
+def _manifest_fields(man: dict) -> dict:
+    """``{name: field JSON}`` of the manifest's logical schema, in order."""
+    return {f["name"]: f for f in json.loads(man["schema"])["fields"]}
 
 
 #: Type-widening lattice (Delta ``typeWidening`` semantics): a column may
@@ -681,7 +787,7 @@ def _read_bucket_files(spark: SparkSession, man: dict, paths: list[str]) -> Data
     if not cm:
         return spark.read.schema(_manifest_schema(man)).parquet(*paths)
     phys = StructType.fromJson(json.loads(_physical_schema_json(man)))
-    logical = [f["name"] for f in json.loads(man["schema"])["fields"]]
+    logical = list(_manifest_fields(man))
     return spark.read.schema(phys).parquet(*paths).select(
         *[F.col(cm.get(l, l)).alias(l) for l in logical]
     )
@@ -870,7 +976,7 @@ def _publish_bucketed(table, staged, read_man, affected, build_manifest,
                 )
             base_man = cur_man  # disjoint buckets, same metadata: both win
         final = 0 if cur is None else cur + 1
-        dest = os.path.join(table, f"v={final}")
+        dest = _version_dir(table, final)
         os.rename(staged, dest)
         manifest = build_manifest(final, base_man, dest)
         with open(_manifest_path(table, final), "w") as f:
@@ -925,11 +1031,7 @@ def _commit_staged_bucketed(
     cleared = {str(b) for b in dv_clear}
 
     def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(dest)
-            if d.startswith("__bucket=")
-        }
+        written = _written_buckets(dest)
         buckets = (
             dict(base_man["buckets"])
             if base_man is not None
@@ -1051,14 +1153,11 @@ def create_bucketed(
 
 def _dv_paths(table: str, man: dict, buckets: "set[int] | None" = None) -> list[str]:
     """Paths of the deletion-vector key files a manifest references,
-    optionally restricted to a bucket subset."""
-    out = []
-    for b, versions in man.get("dv", {}).items():
-        if buckets is not None and int(b) not in buckets:
-            continue
-        for v in versions:
-            out.append(os.path.join(table, f"v={v}", "__dv", f"__bucket={b}"))
-    return out
+    optionally restricted to a bucket subset (looked up per bucket, so a
+    one-bucket call costs O(1) however many buckets carry DVs)."""
+    dv = man.get("dv", {})
+    keys = dv if buckets is None else [str(b) for b in sorted(buckets) if str(b) in dv]
+    return [_bucket_dir(_dv_dir(_version_dir(table, v)), b) for b in keys for v in dv[b]]
 
 
 def _apply_dv(
@@ -1106,10 +1205,10 @@ def read_bucketed(
             raise ValueError("pass version OR as_of_ts, not both")
         version = resolve_as_of(table, as_of_ts)
     man = _read_manifest(table, version)
-    live = {int(b): v for b, v in man["buckets"].items() if v is not None}
+    wanted = None
     if key_values is not None:
         keys = man["key_cols"]
-        full = StructType.fromJson(json.loads(man["schema"]))
+        full = _manifest_schema(man)
         probe = spark.createDataFrame(
             key_values, schema=StructType([full[k] for k in keys])
         )
@@ -1117,13 +1216,14 @@ def read_bucketed(
             r["__b"]
             for r in probe.select(_bucket_expr(keys, man["n_buckets"]).alias("__b")).collect()
         }
-        live = {b: v for b, v in live.items() if b in wanted}
-    paths = [os.path.join(table, f"v={v}", f"__bucket={b}") for b, v in sorted(live.items())]
-    if not paths:
+    live = _live_bucket_dirs(table, man, wanted)
+    if not live:
         return spark.createDataFrame([], _manifest_schema(man))
     # manifest-schema read: buckets untouched since a schema-evolving merge
     # hold old-schema files and null-fill the added columns
-    return _apply_dv(spark, _read_bucket_files(spark, man, paths), table, man, set(live))
+    return _apply_dv(
+        spark, _read_bucket_files(spark, man, list(live.values())), table, man, set(live)
+    )
 
 
 def merge_into_bucketed(
@@ -1263,11 +1363,7 @@ def merge_into_bucketed(
                     f"merge_into_bucketed: source has multiple rows for key "
                     f"{tuple(dup[0][k] for k in keys)}; MERGE requires unique source keys"
                 )
-        tgt_paths = [
-            os.path.join(table, f"v={man['buckets'][str(b)]}", f"__bucket={b}")
-            for b in affected
-            if man["buckets"].get(str(b)) is not None
-        ]
+        tgt_paths = list(_live_bucket_dirs(table, man, set(affected)).values())
         if tgt_paths:
             # outstanding deletion vectors must apply BEFORE the rewrite, or
             # the rewrite would resurrect DV-deleted rows into the new bucket
@@ -1361,30 +1457,18 @@ def delete_bucketed(
     staged = _staged_path(table)
     _to_physical(keyed, man).write.mode("errorifexists").partitionBy(
         "__bucket"
-    ).parquet(os.path.join(staged, "__dv"))
-    # the affected-bucket set IS the set of staged __bucket= dirs the write
+    ).parquet(_dv_dir(staged))
+    # the affected-bucket set IS the set of staged bucket dirs the write
     # just produced — read it from the filesystem instead of paying a
     # localCheckpoint + distinct-collect action pair over the key lineage
-    # (r13: a DV delete is now ONE Spark action; same derivation build()
-    # uses post-publish)
-    dv_root = os.path.join(staged, "__dv")
-    affected = sorted(
-        int(d.split("=", 1)[1])
-        for d in (os.listdir(dv_root) if os.path.isdir(dv_root) else [])
-        if d.startswith("__bucket=")
-    )
+    # (r13: a DV delete is now ONE Spark action); the publish renames this
+    # same directory, so every affected bucket gains a DV file
+    affected = sorted(_written_buckets(_dv_dir(staged)))
 
     def build(final: int, base_man: dict, dest: str) -> dict:
-        dv_dir = os.path.join(dest, "__dv")
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(dv_dir)
-            if d.startswith("__bucket=")
-        }
         dv = {b: list(v) for b, v in base_man.get("dv", {}).items()}
         for b in affected:
-            if b in written:
-                dv.setdefault(str(b), []).append(final)
+            dv.setdefault(str(b), []).append(final)
         out = {
             "key_cols": kc,
             "n_buckets": n_buckets,
@@ -1430,7 +1514,7 @@ def expire_bucketed(
         return []
     reclaimed = []
     for v in reclaimable:
-        shutil.rmtree(os.path.join(table, f"v={v}"), ignore_errors=True)
+        shutil.rmtree(_version_dir(table, v), ignore_errors=True)
         mp = _manifest_path(table, v)
         if os.path.exists(mp):
             os.remove(mp)
@@ -1516,8 +1600,7 @@ def vacuum_report(
         }
     nbytes = 0
     for v in reclaimable:
-        vdir = os.path.join(table, f"v={v}")
-        for root, _dirs, files in os.walk(vdir):
+        for root, _dirs, files in os.walk(_version_dir(table, v)):
             for f in files:
                 try:
                     nbytes += os.path.getsize(os.path.join(root, f))
@@ -1582,8 +1665,8 @@ def diff_bucketed(
     p2l: dict[str, str] = {}
     for man in (man_a, man_b):  # v_to's logical names override v_from's
         cm = _colmap(man)
-        for f in json.loads(man["schema"])["fields"]:
-            p2l[cm.get(f["name"], f["name"])] = f["name"]
+        for name in _manifest_fields(man):
+            p2l[cm.get(name, name)] = name
     logical_by_phys = [p2l[f.name] for f in phys_schema.fields]
     schema = StructType(
         [
@@ -1595,20 +1678,10 @@ def diff_bucketed(
     data_cols = [f.name for f in schema.fields if f.name not in keys]
     # a bucket changed if its owning version moved OR its deletion-vector
     # list did (a DV-only commit moves no data but deletes rows)
-    dv_a, dv_b = man_a.get("dv", {}), man_b.get("dv", {})
-    changed = sorted(
-        int(b)
-        for b in man_a["buckets"]
-        if man_a["buckets"][b] != man_b["buckets"][b]
-        or dv_a.get(b, []) != dv_b.get(b, [])
-    )
+    changed = _changed_buckets(man_a, man_b)
 
     def _side(man: dict) -> DataFrame:
-        paths = [
-            os.path.join(table, f"v={man['buckets'][str(b)]}", f"__bucket={b}")
-            for b in changed
-            if man["buckets"][str(b)] is not None
-        ]
+        paths = list(_live_bucket_dirs(table, man, changed).values())
         if not paths:
             return spark.createDataFrame([], schema)
         rows = spark.read.schema(phys_schema).parquet(*paths).select(
@@ -1622,7 +1695,7 @@ def diff_bucketed(
         adj = dict(man)
         adj["key_cols"] = keys
         adj["colmap"] = dict(zip(keys, pk_b))
-        return _apply_dv(spark, rows, table, adj, set(changed))
+        return _apply_dv(spark, rows, table, adj, changed)
 
     a = _side(man_a).select(
         *keys, *[F.col(c).alias(f"{c}_old") for c in data_cols], F.lit(1).alias("_in_a")
@@ -1982,10 +2055,7 @@ def optimize_bucketed(
         return man["version"]
     rows = None
     if affected:
-        paths = [
-            os.path.join(table, f"v={man['buckets'][str(b)]}", f"__bucket={b}")
-            for b in affected
-        ]
+        paths = list(_live_bucket_dirs(table, man, set(affected)).values())
         rows = _apply_dv(
             spark, _read_bucket_files(spark, man, paths), table, man, set(affected)
         ).withColumn("__bucket", _bucket_expr(keys, n_buckets))
@@ -2007,11 +2077,9 @@ def optimize_bucketed(
         "meta": dict(meta) if meta else {},
     }
     if rows is None:
-        from pyspark.sql.types import StructType
-
-        rows = spark.createDataFrame(
-            [], StructType.fromJson(json.loads(man["schema"]))
-        ).withColumn("__bucket", F.lit(0).cast("bigint"))
+        rows = spark.createDataFrame([], _manifest_schema(man)).withColumn(
+            "__bucket", F.lit(0).cast("bigint")
+        )
     stage_extra = finalize = None
     with pinned():
         if _indexes(man):

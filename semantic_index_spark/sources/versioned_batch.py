@@ -37,8 +37,9 @@ stay unread. ``pushFilters`` prunes at every level the Python API does
 
 - **bucketed tables** — manifest-level bucket pruning for point lookups:
   an ``id = k`` / ``id IN (...)`` predicate on a single integral or
-  string bucket key computes the key's bucket with a pure-Python XXH64 that
-  bit-matches Spark's ``xxhash64`` expression (seed 42; verified
+  string bucket key computes the key's bucket with the numpy XXH64 of
+  :func:`buckets_np`, which bit-matches Spark's ``xxhash64`` expression
+  (seed 42; verified
   value-for-value in pytest — the prune MUST agree with the writer's
   placement or it would silently drop matching rows) and plans only that
   bucket's files — the ~n_buckets-fold point-lookup saving of
@@ -51,9 +52,10 @@ stay unread. ``pushFilters`` prunes at every level the Python API does
   the table's PINNED zone, so day/month pruning needs no session-zone
   equality (unlike the Python path's naive literals).
 - **zone-mapped layouts** — the composed hidden+skipping table's
-  per-file [min, max] manifest and the unversioned ``write_skipping``
-  layout's zone maps, null counts and bloom bitmaps all evaluate
-  driver-side per file (``skipping._file_may_match`` et al.), so a SQL
+  per-file [min, max] manifest (``hidden._file_may_hold``) and the
+  unversioned ``write_skipping`` layout's zone maps, null counts and
+  bloom bitmaps (``skipping.candidate_files``) evaluate driver-side per
+  file through the same functions the Python readers call, so a SQL
   range predicate plans only candidate files.
 
 All filters are returned to Spark for re-evaluation: pruning is pure IO
@@ -65,7 +67,6 @@ pruning-independent).
 from __future__ import annotations
 
 import datetime
-import json
 import os
 import re
 
@@ -87,7 +88,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from semantic_index_spark.sources.versioned_stream import _data_files
+from semantic_index_spark.sources import versioned as VER
 
 # ---- Spark-exact XXH64 (org.apache.spark XxHash64, seed 42) -------------
 _M64 = (1 << 64) - 1
@@ -339,27 +340,6 @@ def _to_triples(filters, pinned_tz: "str | None") -> list[tuple]:
 # ---- the data source -----------------------------------------------------
 
 
-def _latest(table: str) -> int:
-    with open(os.path.join(table, "_latest.json")) as f:
-        return int(json.load(f)["version"])
-
-
-def _manifest(table: str, version: int) -> "dict | None":
-    p = os.path.join(table, f"_manifest_v{version}.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _hidden_meta(table: str) -> "dict | None":
-    p = os.path.join(table, "_hidden_spec.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
 class _Part(InputPartition):
     def __init__(self, path: str, dv_paths: "tuple[str, ...]" = ()):
         self.path = path
@@ -371,8 +351,12 @@ class VersionedTableReader(DataSourceReader):
         self.schema = schema
         self.table = table
         self.version = version
-        self.man = _manifest(table, version) if version is not None else None
-        self.hidden = _hidden_meta(table)  # _hidden_spec.json, when present
+        self.man = VER._manifest_or_none(table, version) if version is not None else None
+        self.hidden = None  # the hidden-partition spec, when present
+        if self.man is None and os.path.exists(VER._hidden_spec_path(table)):
+            from semantic_index_spark.sources.hidden import _read_meta
+
+            self.hidden = _read_meta(table)
         self._wanted: "set[int] | None" = None  # bucket prune from filters
         self._triples: list[tuple] = []  # hidden/zone-map prune from filters
 
@@ -386,8 +370,7 @@ class VersionedTableReader(DataSourceReader):
         man = self.man
         if man is not None and len(man["key_cols"]) == 1:
             key = man["key_cols"][0]
-            fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
-            dtype = fields.get(key, {}).get("type")
+            dtype = VER._manifest_fields(man).get(key, {}).get("type")
             if dtype in _KEY_PYTYPES:
                 n = int(man["n_buckets"])
                 pytype = _KEY_PYTYPES[dtype]
@@ -417,108 +400,45 @@ class VersionedTableReader(DataSourceReader):
         # never depends on it (rows are re-filtered post-scan)
         return filters
 
-    def _skipping_partitions(self) -> list:
-        """Unversioned skipping table (``write_skipping`` layout): plan only
-        the files whose zone maps / null counts / bloom bitmaps cannot rule
-        out a match — the same per-file checks ``read_skipping`` runs,
-        now fed by SQL predicates."""
-        from semantic_index_spark.sources.skipping import (
-            _bloom_may_match,
-            _file_may_match,
-            _null_may_match,
-        )
+    def _snapshot_files(self) -> list[str]:
+        """Data files of a manifest-less layout the pushed filters leave to
+        scan — chosen by the same functions the Python readers call."""
+        from semantic_index_spark.sources import skipping
 
-        with open(os.path.join(self.table, "_zonemaps.json")) as f:
-            man = json.load(f)
-        data = os.path.join(self.table, "data")
-        keep = []
-        for fn, ranges in sorted(man["files"].items()):
-            ok = True
-            for c, op, v in self._triples:
-                # bloom bitmaps hashed the SPARK string rendering; only
-                # int/str literals provably render identically in Python
-                vals = v if isinstance(v, list) else [v]
-                bloom_safe = all(isinstance(x, (int, str)) for x in vals)
-                if not (
-                    _file_may_match(ranges, c, op, v)
-                    and _null_may_match(man, fn, c, op)
-                    and (not bloom_safe or _bloom_may_match(man, fn, c, op, v))
-                ):
-                    ok = False
-                    break
-            if ok:
-                keep.append(fn)
-        return [_Part(os.path.join(data, fn)) for fn in keep] or [_Part("")]
+        if self.version is None:
+            # unversioned skipping layout: zone maps, null counts, blooms
+            data = skipping._data_dir(self.table)
+            return [
+                os.path.join(data, fn)
+                for fn in skipping.candidate_files(self.table, self._triples)
+            ]
+        # plain / hidden snapshot: every file of the version, minus what the
+        # hidden-partition transforms and (composed layout) zone maps rule out
+        vdir = VER._version_dir(self.table, self.version)
+        files = VER._data_files(vdir)
+        if self.hidden is None or not self._triples:
+            return files
+        from semantic_index_spark.sources.hidden import _file_may_hold, _zone_maps
 
-    def _hidden_partitions(self, vdir: str, files: list[str]) -> list:
-        """Hidden-partitioned snapshot: directory-level transform pruning
-        (``hidden._pval_matches`` — identical soundness rules to
-        read_hidden's plan rewrite, inclusive range relaxation, dtype-
-        dispatched identity, bucket =/in only) plus, on the composed
-        layout, per-file zone-map pruning from the version's manifest.
-        A transform that cannot evaluate the literal (TypeError — e.g. a
-        float against a bucket transform) keeps the file; pruning is
-        IO-only and Spark re-applies every filter."""
-        from semantic_index_spark.sources.hidden import (
-            _parse_partition_values,
-            _pval_matches,
-        )
-        from semantic_index_spark.sources.skipping import _file_may_match
-
-        entries = self.hidden["spec"]
-        by_col = {e["col"]: e for e in entries}
-        zmap = None
-        zpath = os.path.join(vdir, "_zonemaps.json")
-        if os.path.exists(zpath):
-            with open(zpath) as f:
-                zmap = json.load(f)["files"]
-        keep = []
-        for p in files:
-            rel = os.path.relpath(p, vdir)
-            pvals = _parse_partition_values(rel, entries)
-            ok = True
-            for col, op, value in self._triples:
-                e = by_col.get(col)
-                if e is not None and op not in ("is_null", "is_not_null"):
-                    try:
-                        if not _pval_matches(e, pvals[e["name"]], op, value):
-                            ok = False
-                            break
-                    except (TypeError, ValueError, KeyError):
-                        pass  # unevaluable rewrite: keep the directory
-                if zmap is not None and rel in zmap:
-                    if not _file_may_match(zmap[rel], col, op, value):
-                        ok = False
-                        break
-            if ok:
-                keep.append(p)
-        return [_Part(p) for p in keep] or [_Part("")]
+        zmap = _zone_maps(self.table, self.version) or {}
+        by_col = {e["col"]: e for e in self.hidden["spec"]}
+        rels = [os.path.relpath(p, vdir) for p in files]
+        return [
+            p
+            for p, rel in zip(files, rels)
+            if _file_may_hold(by_col, rel, zmap.get(rel), self._triples)
+        ]
 
     def partitions(self):
         man = self.man
         if man is None:
-            if self.version is None:  # unversioned skipping layout
-                return self._skipping_partitions()
-            # plain / hidden snapshot: every file under v=<n>, minus what
-            # the hidden-partition transforms and zone maps rule out
-            vdir = os.path.join(self.table, f"v={self.version}")
-            files = _data_files(vdir)
-            if self.hidden is not None and self._triples:
-                return self._hidden_partitions(vdir, files)
-            return [_Part(p) for p in files] or [_Part("")]
-        parts = []
-        dv = man.get("dv", {})
-        for b, owner in sorted(man["buckets"].items(), key=lambda kv: int(kv[0])):
-            if owner is None:
-                continue
-            if self._wanted is not None and int(b) not in self._wanted:
-                continue
-            dv_paths = tuple(
-                os.path.join(self.table, f"v={v}", "__dv", f"__bucket={b}")
-                for v in dv.get(b, [])
-            )
-            bdir = os.path.join(self.table, f"v={owner}", f"__bucket={b}")
-            parts.extend(_Part(p, dv_paths) for p in _data_files(bdir))
+            parts = [_Part(p) for p in self._snapshot_files()]
+        else:
+            parts = [
+                _Part(p, tuple(VER._dv_paths(self.table, man, {b})))
+                for b, bdir in VER._live_bucket_dirs(self.table, man, self._wanted).items()
+                for p in VER._data_files(bdir)
+            ]
         # Spark requires a non-empty partition list
         return parts or [_Part("")]
 
@@ -641,8 +561,7 @@ class BucketedMergeWriter(DataSourceArrowWriter):
         self.man = man
         self.staged = staged
         self.key = man["key_cols"][0]
-        fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
-        self.key_dtype = fields[self.key]["type"]
+        self.key_dtype = VER._manifest_fields(man)[self.key]["type"]
         self.n_buckets = int(man["n_buckets"])
 
     def write(self, iterator):
@@ -684,8 +603,6 @@ class BucketedMergeWriter(DataSourceArrowWriter):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        from semantic_index_spark.sources import versioned as VER
-
         man = self.man
         by_bucket: dict[int, list[str]] = {}
         for m in messages:
@@ -696,9 +613,10 @@ class BucketedMergeWriter(DataSourceArrowWriter):
             shutil.rmtree(self.staged, ignore_errors=True)
             return
         fields = VER._manifest_schema(man).fields
-        colmap = man.get("colmap") or {}
+        colmap = VER._colmap(man)
         phys_key = colmap.get(self.key, self.key)
         affected = sorted(by_bucket)
+        live = VER._live_bucket_dirs(self.table, man, set(affected))
         logical_by_bucket: dict[int, "pa.Table"] = {}
         for b in affected:
             inc = pa.concat_tables(
@@ -711,21 +629,19 @@ class BucketedMergeWriter(DataSourceArrowWriter):
                     "INSERT source has multiple rows for the same key; "
                     "upsert requires unique source keys"
                 )
-            owner = man["buckets"].get(str(b))
             parts = []
-            if owner is not None:
-                bdir = os.path.join(self.table, f"v={owner}", f"__bucket={b}")
+            bdir = live.get(b)
+            if bdir is not None:
                 cur = pa.concat_tables(
                     _project_logical(pq.read_table(p), colmap, fields)
-                    for p in _data_files(bdir)
+                    for p in VER._data_files(bdir)
                 )
                 # outstanding DVs fold into the rewrite (then clear), the
                 # merge contract — DV files store PHYSICAL key names
-                for v in man.get("dv", {}).get(str(b), ()):
-                    dvdir = os.path.join(self.table, f"v={v}", "__dv", f"__bucket={b}")
+                for dvdir in VER._dv_paths(self.table, man, {b}):
                     dead = pa.concat_tables(
                         pq.read_table(p, columns=[phys_key])
-                        for p in _data_files(dvdir)
+                        for p in VER._data_files(dvdir)
                     )
                     cur = cur.filter(
                         pc.invert(
@@ -747,7 +663,7 @@ class BucketedMergeWriter(DataSourceArrowWriter):
             merged = logical.rename_columns(
                 [colmap.get(f.name, f.name) for f in fields]
             )
-            outd = os.path.join(self.staged, f"__bucket={b}")
+            outd = VER._bucket_dir(self.staged, b)
             os.makedirs(outd, exist_ok=True)
             pq.write_table(merged, os.path.join(outd, "part-00000.parquet"))
         shutil.rmtree(os.path.join(self.staged, "__incoming"), ignore_errors=True)
@@ -823,8 +739,6 @@ class PlainAppendWriter(DataSourceArrowWriter):
     def commit(self, messages):
         import shutil
 
-        from semantic_index_spark.sources import versioned as VER
-
         names = [n for m in messages for n in (getattr(m, "files", ()) or ())]
         if not names:  # empty INSERT: no version bump
             shutil.rmtree(self.staged, ignore_errors=True)
@@ -834,7 +748,7 @@ class PlainAppendWriter(DataSourceArrowWriter):
         # file is dropped), published under the shared conditional swap
         for orphan in set(os.listdir(self.staged)) - set(names):
             os.remove(os.path.join(self.staged, orphan))
-        VER._link_tree(os.path.join(self.table, f"v={self.version}"), self.staged)
+        VER._link_tree(VER._version_dir(self.table, self.version), self.staged)
         VER._publish_staged(self.table, self.staged, self.version)
 
     def abort(self, messages):
@@ -855,9 +769,11 @@ class VersionedTableDataSource(DataSource):
         # resolve ONCE: schema() and reader() must describe the same
         # snapshot even if a concurrent commit advances the pointer
         # between planning steps
+        from semantic_index_spark.sources import skipping
+
         pinned = options.get("version"), options.get("as_of_ts")
-        if not os.path.exists(os.path.join(self.table, "_latest.json")) and (
-            os.path.exists(os.path.join(self.table, "_zonemaps.json"))
+        if VER.current_version(self.table) is None and (
+            os.path.exists(skipping._manifest_path(self.table))
         ):
             # write_skipping layout: unversioned (<table>/data + root
             # manifest) — version pins don't apply, reads are zone-map,
@@ -870,38 +786,22 @@ class VersionedTableDataSource(DataSource):
         elif options.get("as_of_ts") is not None:
             if options.get("version") is not None:
                 raise ValueError("pass version OR as_of_ts, not both")
-            from semantic_index_spark.sources.versioned import resolve_as_of
-
-            self.version = resolve_as_of(self.table, options["as_of_ts"])
+            self.version = VER.resolve_as_of(self.table, options["as_of_ts"])
         elif options.get("version") is not None:
             self.version = int(options["version"])
         else:
-            self.version = _latest(self.table)
+            self.version = VER._resolve_version(self.table)
 
     @classmethod
     def name(cls) -> str:
         return "versioned_table"
 
     def schema(self) -> StructType:
-        if self.version is not None:
-            man = _manifest(self.table, self.version)
-            if man is not None:
-                return StructType.fromJson(json.loads(man["schema"]))
-        import pyarrow.parquet as pq
+        if self.version is None:
+            from semantic_index_spark.sources.skipping import _data_dir
 
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        root = (
-            os.path.join(self.table, "data")
-            if self.version is None
-            else os.path.join(self.table, f"v={self.version}")
-        )
-        files = _data_files(root)
-        if not files:
-            raise FileNotFoundError(
-                f"version {self.version} of {self.table} has no data files"
-            )
-        return from_arrow_schema(pq.read_schema(files[0]))
+            return VER._files_schema(_data_dir(self.table))
+        return VER._snapshot_schema(self.table, self.version)
 
     def reader(self, schema: StructType) -> VersionedTableReader:
         return VersionedTableReader(schema, self.table, self.version)
@@ -909,8 +809,6 @@ class VersionedTableDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool):
         """``INSERT INTO`` support (round 12) — see the writer section
         comment for semantics and refused boundaries."""
-        from semantic_index_spark.sources.versioned import _staged_path
-
         if overwrite:
             raise ValueError(
                 "INSERT OVERWRITE is not supported on versioned tables — "
@@ -921,15 +819,15 @@ class VersionedTableDataSource(DataSource):
                 "skipping tables are read-only through SQL — use "
                 "append_skipping"
             )
-        man = _manifest(self.table, self.version)
+        man = VER._manifest_or_none(self.table, self.version)
         if man is None:
-            if _hidden_meta(self.table) is not None:
+            if os.path.exists(VER._hidden_spec_path(self.table)):
                 raise ValueError(
                     "hidden-partitioned tables are read-only through SQL — "
                     "use commit_hidden (deriving partition transforms needs "
                     "Spark and the table's pinned time zone)"
                 )
-            staged = _staged_path(self.table)
+            staged = VER._staged_path(self.table)
             os.makedirs(staged)
             return PlainAppendWriter(self.table, self.version, staged)
         # co-committed indexes no longer block (round 13): the commit
@@ -947,20 +845,20 @@ class VersionedTableDataSource(DataSource):
                     f"INSERT INTO refuses tables with {blocker} — use {verb}"
                 )
         keys = man["key_cols"]
-        fields = {f["name"]: f for f in json.loads(man["schema"])["fields"]}
+        fields = VER._manifest_fields(man)
         if len(keys) != 1 or fields[keys[0]].get("type") not in _KEY_PYTYPES:
             raise ValueError(
                 "INSERT INTO supports single integral- or string-key "
                 f"bucketed tables (got keys {keys}) — use merge_into_bucketed"
             )
-        logical = [f["name"] for f in json.loads(man["schema"])["fields"]]
+        logical = list(fields)
         if [f.name for f in schema.fields] != logical:
             raise ValueError(
                 f"INSERT schema {[f.name for f in schema.fields]} must match "
                 f"the table schema {logical} exactly — schema evolution goes "
                 "through merge_into_bucketed(schema_evolution=True)"
             )
-        staged = _staged_path(self.table)
+        staged = VER._staged_path(self.table)
         os.makedirs(staged)
         return BucketedMergeWriter(self.table, man, staged)
 

@@ -38,7 +38,6 @@ Usage::
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -48,43 +47,29 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
+from semantic_index_spark.sources import versioned as VER
+
 _VERSION_COL = "_version"
-
-
-def _data_files(root: str) -> list[str]:
-    """All data files under ``root`` recursively, skipping `_`/`.`
-    metadata and the ``__dv`` deletion-vector subtree."""
-    out = []
-    for cur, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if d != "__dv" and not d.startswith((".", "_"))
-                   or d.startswith("_p")]  # hidden-partition dirs are _p<i>=...
-        for f in files:
-            if not f.startswith((".", "_")):
-                out.append(os.path.join(cur, f))
-    return sorted(out)
 
 
 def _commit_files(table: str, version: int) -> list[str]:
     """The data files commit ``version`` ADDED (see module docstring)."""
-    man_path = os.path.join(table, f"_manifest_v{version}.json")
-    if os.path.exists(man_path):
-        with open(man_path) as f:
-            man = json.load(f)
-        files: list[str] = []
-        for b, owner in sorted(man["buckets"].items(), key=lambda kv: int(kv[0])):
-            if owner == version:
-                files.extend(
-                    _data_files(os.path.join(table, f"v={version}", f"__bucket={b}"))
-                )
-        return files
-    vdir = os.path.join(table, f"v={version}")
+    man = VER._manifest_or_none(table, version)
+    if man is not None:
+        owned = {int(b) for b, owner in man["buckets"].items() if owner == version}
+        return [
+            f
+            for bdir in VER._live_bucket_dirs(table, man, owned).values()
+            for f in VER._data_files(bdir)
+        ]
+    vdir = VER._version_dir(table, version)
     if not os.path.isdir(vdir):
         raise FileNotFoundError(
             f"version {version} of {table} is gone (expired before the "
             "stream consumed it) — increase retention or restart from a "
             "newer starting_version"
         )
-    return _data_files(vdir)
+    return VER._data_files(vdir)
 
 
 class _FilePartition(InputPartition):
@@ -113,25 +98,16 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         # birth, stable across renames), the declared schema is logical —
         # snapshot the mapping at stream start (schema is fixed per run,
         # same restart-on-rename contract as Delta sources)
-        self.colmap: dict = {}
-        try:
-            with open(os.path.join(self.table, "_latest.json")) as f:
-                cur = int(json.load(f)["version"])
-            man_path = os.path.join(self.table, f"_manifest_v{cur}.json")
-            if os.path.exists(man_path):
-                with open(man_path) as f:
-                    self.colmap = json.load(f).get("colmap") or {}
-        except FileNotFoundError:
-            pass
+        cur = VER.current_version(self.table)
+        man = None if cur is None else VER._manifest_or_none(self.table, cur)
+        self.colmap: dict = {} if man is None else VER._colmap(man)
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        try:
-            with open(os.path.join(self.table, "_latest.json")) as f:
-                cur = int(json.load(f)["version"])
-        except FileNotFoundError:
+        cur = VER.current_version(self.table)
+        if cur is None:
             return {"version": self.start_version}
         end = max(cur + 1, self.start_version)
         if self.max_versions and self._progress is not None:
@@ -158,27 +134,17 @@ class VersionedFeedStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_type
+        from semantic_index_spark.sources.versioned_batch import _project_logical
 
         if not partition.path:
             return iter(())
-        tbl = pq.read_table(partition.path)
+        # renamed columns read by physical name; schema-evolved bucketed
+        # layouts' untouched old files null-fill added columns, as in
+        # read_bucketed
         data_fields = [f for f in self.schema.fields if f.name != _VERSION_COL]
-        cols = []
-        n = tbl.num_rows
-        for f in data_fields:
-            t = to_arrow_type(f.dataType)
-            phys = self.colmap.get(f.name, f.name)
-            if phys in tbl.column_names:
-                col = tbl.column(phys)
-                cols.append(col if col.type == t else col.cast(t))
-            else:
-                # schema-evolved bucketed layouts: untouched old files
-                # null-fill added columns, same as read_bucketed
-                cols.append(pa.nulls(n, type=t))
-        cols.append(pa.array([partition.version] * n, type=pa.int64()))
-        names = [f.name for f in data_fields] + [_VERSION_COL]
-        return iter(pa.Table.from_arrays(cols, names=names).to_batches())
+        tbl = _project_logical(pq.read_table(partition.path), self.colmap, data_fields)
+        version = pa.array([partition.version] * tbl.num_rows, type=pa.int64())
+        return iter(tbl.append_column(_VERSION_COL, version).to_batches())
 
     def commit(self, end: dict) -> None:
         # offsets are durable in the checkpoint; the rate-limit anchor
@@ -197,21 +163,7 @@ class VersionedFeedDataSource(DataSource):
 
     def schema(self) -> StructType:
         table = self.options["table"]
-        with open(os.path.join(table, "_latest.json")) as f:
-            cur = int(json.load(f)["version"])
-        man_path = os.path.join(table, f"_manifest_v{cur}.json")
-        if os.path.exists(man_path):
-            with open(man_path) as f:
-                base = StructType.fromJson(json.loads(json.load(f)["schema"]))
-        else:
-            import pyarrow.parquet as pq
-
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            files = _data_files(os.path.join(table, f"v={cur}"))
-            if not files:
-                raise FileNotFoundError(f"version {cur} of {table} has no data files")
-            base = from_arrow_schema(pq.read_schema(files[0]))
+        base = VER._snapshot_schema(table, VER._resolve_version(table))
         return StructType(base.fields + [StructField(_VERSION_COL, LongType())])
 
     def streamReader(self, schema: StructType):

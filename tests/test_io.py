@@ -412,6 +412,9 @@ def test_hidden_commit_conflict_fails_loser_cleanly(spark, tmp_path, monkeypatch
     H.create_hidden(df, t, [("identity", "p")])  # v0
     H.commit_hidden(df.filter("id < 10"), t)  # competitor wins: v1
 
+    # hidden reads the pointer through versioned's one reader, bound into
+    # its namespace: patching it there stales only hidden's planning read
+    assert H.current_version is VER.current_version
     real_cv = H.current_version
     stale = {"used": False}
 
@@ -1034,6 +1037,68 @@ def test_bloom_skipping_point_lookup_on_unclustered(spark, tmp_path):
     assert len(Z.candidate_files(t, [("code", ">", 0)])) == 16
 
 
+@pytest.fixture(scope="module")
+def mixed_bloom_table(spark, tmp_path_factory):
+    """40 rows, bloom bitmaps over a double, a double holding 1e20 and a
+    boolean column: none of their Spark string renderings equals Python's
+    ``str`` of the literal a caller filters with."""
+    from semantic_index_spark.sources import skipping as Z
+
+    df = spark.range(0, 40).selectExpr(
+        "id",
+        "CAST(id AS DOUBLE) AS x",
+        "CASE WHEN id = 7 THEN 1e20 ELSE CAST(id AS DOUBLE) END AS big",
+        "id % 2 = 0 AS flag",
+    )
+    t = str(tmp_path_factory.mktemp("bloom_mixed") / "t")
+    Z.write_skipping(df, t, ["id"], n_files=4, bloom_cols=["x", "big", "flag"])
+    return df, t
+
+
+BLOOM_TYPE_CASES = [
+    (("x", "=", 5), "x = 5", 1),
+    (("big", "=", 1e20), "big = 1e20", 1),
+    (("flag", "=", True), "flag = true", 20),
+]
+
+
+@pytest.mark.parametrize("filt,where,n", BLOOM_TYPE_CASES, ids=["double", "big_double", "boolean"])
+def test_bloom_keeps_files_for_literals_spark_renders_differently(
+    spark, mixed_bloom_table, filt, where, n
+):
+    # the bitmap hashed cast(col AS STRING) ('5.0', '1.0E20', 'true'); a
+    # probe of str(literal) ('5', '1e+20', 'True') would rule out every file
+    from semantic_index_spark.sources import skipping as Z
+
+    df, t = mixed_bloom_table
+    assert Z.read_skipping(spark, t, [filt]).count() == df.filter(where).count() == n
+    assert len(Z.candidate_files(t, [filt])) == 4
+    assert Z.read_skipping(spark, t, [(filt[0], "in", [filt[2]])]).count() == n
+
+
+def test_bloom_sql_view_agrees_with_python_reader(spark, mixed_bloom_table):
+    # the SQL reader plans the Python reader's candidate files and both
+    # return the rows of the plain filter
+    import os
+
+    from pyspark.sql.datasource import EqualTo
+
+    from semantic_index_spark.sources import skipping as Z
+    from semantic_index_spark.sources import versioned_batch as VB
+
+    df, t = mixed_bloom_table
+    VB.sql_view(spark, "bloom_mixed_v", t)
+    schema = spark.table("bloom_mixed_v").schema
+    for filt, where, n in BLOOM_TYPE_CASES:
+        sql_n = spark.sql(f"SELECT count(*) FROM bloom_mixed_v WHERE {where}").collect()[0][0]
+        assert sql_n == Z.read_skipping(spark, t, [filt]).count() == n, where
+        r = VB.VersionedTableReader(schema, t, None)
+        r.pushFilters([EqualTo((filt[0],), filt[2])])
+        planned = sorted(os.path.basename(p.path) for p in r.partitions() if p.path)
+        assert planned == Z.candidate_files(t, [filt]), where
+    spark.catalog.dropTempView("bloom_mixed_v")
+
+
 def test_bloom_literal_positions_match_spark(spark):
     # the driver-side md5 position twin must agree with the JVM expression
     from semantic_index_spark.functions.bloom import _positions
@@ -1436,11 +1501,11 @@ def test_hidden_legacy_spec_without_dtype_keeps_ambiguous_dirs(spark, tmp_path):
     df = spark.createDataFrame([(1, "5"), (2, "9"), (3, "10")], "id bigint, s string")
     t = str(tmp_path / "hidden_legacy")
     H.create_hidden_skipping(df, t, [("identity", "s")], stats_cols=["id"], n_files=4)
-    with open(H._spec_path(t)) as f:
+    with open(H._hidden_spec_path(t)) as f:
         meta = json.load(f)
     for e in meta["spec"]:
         e.pop("dtype", None)  # simulate a pre-r10 spec
-    with open(H._spec_path(t), "w") as f:
+    with open(H._hidden_spec_path(t), "w") as f:
         json.dump(meta, f)
     # no directory is pruned for a str-literal range...
     assert H.candidate_files_hidden(t, [("s", ">=", "10")]) == H.candidate_files_hidden(t)

@@ -232,6 +232,57 @@ def test_tool_name_lists_name_registry_rows():
     assert not stale, f"names that are not queries() rows: {stale}"
 
 
+# File and directory names of the versioned table layout, each with the one
+# package module allowed to spell it ("v=" is the version-directory prefix).
+LAYOUT_OWNERS = {
+    "_latest.json": "semantic_index_spark/sources/versioned.py",
+    "_manifest_v": "semantic_index_spark/sources/versioned.py",
+    "__bucket=": "semantic_index_spark/sources/versioned.py",
+    "__dv": "semantic_index_spark/sources/versioned.py",
+    "_hidden_spec.json": "semantic_index_spark/sources/versioned.py",
+    "v=": "semantic_index_spark/sources/versioned.py",
+    "_zonemaps.json": "semantic_index_spark/sources/skipping.py",
+}
+
+
+def _string_constants(tree: ast.AST):
+    """``(line, text)`` of every string constant that is not a docstring;
+    each literal part of an f-string counts on its own."""
+    docs = set()
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            first = n.body[0] if n.body else None
+            if isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant):
+                docs.add(id(first.value))
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
+            yield n.lineno, n.value
+
+
+def layout_names_outside_owner() -> dict[str, list[str]]:
+    """``{layout name: [module:line, ...]}`` of the package sites that spell
+    a layout name outside the module that owns it."""
+    out: dict[str, list[str]] = {}
+    for f in sorted((REPO / "semantic_index_spark").rglob("*.py")):
+        where = str(f.relative_to(REPO))
+        for line, text in _string_constants(ast.parse(f.read_text())):
+            for name, owner in LAYOUT_OWNERS.items():
+                if name == "v=":  # a path prefix, not a substring
+                    spelled = text.startswith(name) or "/" + name in text
+                else:
+                    spelled = name in text
+                if spelled and where != owner:
+                    out.setdefault(name, []).append(f"{where}:{line}")
+    return out
+
+
+def test_table_layout_is_spelled_in_one_module():
+    """Every path under a versioned table's directory is built by one
+    module: a second spelling of a file or directory name is a second
+    reader or writer of the layout that can drift from the first."""
+    assert layout_names_outside_owner() == {}
+
+
 # Package definitions no caller reaches, each with the reason it stays.
 KEEP = {
     # reference-parity surface (SURVEY.md §1-2)

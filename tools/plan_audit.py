@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from semantic_index_spark.plans.explain import formatted_plan
-from semantic_index_spark.session import get_spark
+from semantic_index_spark.session import get_spark, pinned
 
 # queries whose plan shape IS the scale story, with expectations:
 #   prune: columns that must NOT be read by any scan
@@ -776,8 +776,9 @@ def main() -> int:
     ]
     n_fail = 0
     for name, spec in AUDITS.items():
-        df = qs[name](spark, sf_dir)
-        plan = formatted_plan(df)
+        # the row's pins are released once its plan is read, as in bench
+        with pinned():
+            plan = formatted_plan(qs[name](spark, sf_dir))
         ops = _ops(plan)
         schemas = _read_schemas(plan)
         problems = []

@@ -9,6 +9,11 @@ small-data timings. Fixed overheads (session, planning, codegen) dominate
 tiny SFs and DEFLATE the exponent — read the sf0.01→sf0.1 column as the
 honest one.
 
+Each cell is timed by ``bench.time_queries`` with no warm-up rep, the one
+loop that times registry queries: every rep runs in its own
+``session.pinned()`` scope, and a query that fails on any rep fails the
+probe with its name.
+
 Writes SCALING.md at the repo root and prints one JSON line.
 
 Usage: python tools/scaling_probe.py [reps]
@@ -19,13 +24,12 @@ from __future__ import annotations
 import json
 import math
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import time_queries
 from semantic_index_spark.session import get_spark
 
 SF_DIRS = [
@@ -185,15 +189,14 @@ def main() -> int:
     timings: dict[str, dict[str, float]] = {}
     mins: dict[str, dict[str, float]] = {}
     for sf_dir in SF_DIRS:
+        print(os.path.basename(sf_dir), file=sys.stderr)
+        detail, errors = time_queries(spark, qs, PANEL, sf_dir, reps, warmup=0)
+        if errors:
+            spark.stop()
+            raise SystemExit(f"scaling probe: failed at {sf_dir}: {json.dumps(errors)}")
         for name in PANEL:
-            ts = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).collect()
-                ts.append(time.perf_counter() - t0)
-            timings.setdefault(name, {})[sf_dir] = statistics.median(ts)
-            mins.setdefault(name, {})[sf_dir] = min(ts)
-            print(f"{os.path.basename(sf_dir)} {name:24s} {min(ts):.2f}s", file=sys.stderr)
+            timings.setdefault(name, {})[sf_dir] = detail[name]["median"]
+            mins.setdefault(name, {})[sf_dir] = detail[name]["min"]
 
     lines = [
         "# SCALING — per-operator runtime vs scale factor",
