@@ -368,14 +368,16 @@ class SemanticIndex:
             shutil.rmtree(tmp)
             return
         tmp = path + ".__tmp__"
+        schema = self._df.schema
         self._df.write.mode("overwrite").parquet(tmp)
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
         # re-point the lineage at the persisted snapshot: truncates the
         # logical plan accumulated by prior mutations (the Spark analogue of
-        # the reference's full-file rewrite).
-        self._df = self.spark.read.parquet(path)
+        # the reference's full-file rewrite). The schema just written is
+        # known, so the read skips the footer-inference job.
+        self._df = self.spark.read.schema(schema).parquet(path)
 
     def load(self, path: str, fmt: str = "parquet") -> None:
         """`LoadAsync` (`SemanticDatabase.cs:484-501`) — the store snapshot

@@ -879,17 +879,37 @@ def pq_train_encode(
     codebook floats ever reach the driver. Returns
     ``(codes_df (id, sub, code), codebooks[sub][code] -> list[float])``.
     """
-    first = collect_bounded(df.select(emb_col).limit(1), 1, "pq dim probe")
-    if not first:
-        raise ValueError("pq_train_encode: input DataFrame is empty")
-    dim = len(first[0][emb_col])
-    if dim % m_sub != 0:
-        raise ValueError(f"pq_train_encode: dim {dim} not divisible by {m_sub}")
-    subdim = dim // m_sub
+    codebooks = pq_train(
+        df, m_sub=m_sub, k=k, iters=iters, emb_col=emb_col, id_col=id_col
+    )
+    # final assignment = the standalone frozen-codebook encoder, so the
+    # training path and the incremental-maintenance path (pq_encode on new
+    # batches) can never diverge in formula or tie-break
+    codes = pq_encode(df, codebooks, emb_col=emb_col, id_col=id_col)
+    return codes, codebooks
 
+
+def pq_train(
+    df: DataFrame,
+    m_sub: int = 4,
+    k: int = 16,
+    iters: int = 2,
+    emb_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> list:
+    """The training half of :func:`pq_train_encode`: its per-subspace
+    codebooks (``codebooks[sub][code] -> list[float]``) without building
+    the codes frame — for callers that encode elsewhere (the co-committed
+    IVF-PQ index encodes per bucket in ``indexed_np``)."""
     init = collect_bounded(
         df.select(id_col, emb_col).orderBy(id_col).limit(k), k, "pq init"
     )
+    if not init:
+        raise ValueError("pq_train: input DataFrame is empty")
+    dim = len(init[0][emb_col])
+    if dim % m_sub != 0:
+        raise ValueError(f"pq_train: dim {dim} not divisible by {m_sub}")
+    subdim = dim // m_sub
     codebooks = [
         [
             [float(x) for x in r[emb_col][s * subdim : (s + 1) * subdim]]
@@ -933,11 +953,7 @@ def pq_train_encode(
             codebooks[s][c] = [
                 dims.get(i, codebooks[s][c][i]) for i in range(subdim)
             ]
-    # final assignment = the standalone frozen-codebook encoder, so the
-    # training path and the incremental-maintenance path (pq_encode on new
-    # batches) can never diverge in formula or tie-break
-    codes = pq_encode(df, codebooks, emb_col=emb_col, id_col=id_col)
-    return codes, codebooks
+    return codebooks
 
 
 def pq_codes_array(codebooks, emb_col: str = "embedding"):

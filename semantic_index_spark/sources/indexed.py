@@ -19,14 +19,19 @@ Design:
     bucket's rows, which the merge has already computed — zero extra
     table reads — and at cluster scale the shard is co-located with its
     bucket.
-  * **One shard pass, one encoder per kind.** Attach, merge and
-    OPTIMIZE build their shards in ONE ``groupBy(bucket).applyInArrow``
-    pass (:func:`_write_shards`): each task holds one bucket's (key,
-    embedding) rows and runs ``indexed_np.write_bucket_shards`` for
-    every index the manifest carries, writing fixed-name files straight
-    into the staged directory. The SQL ``INSERT INTO`` worker runs the
-    same function, so no Spark-side encoder is kept in step with it.
-    One bucket must fit in one Python worker.
+  * **One pass per commit, one task per bucket, one encoder per kind.**
+    Attach, merge and OPTIMIZE run ONE ``groupBy(part).applyInArrow``
+    pass (:func:`_write_shards`) whose partition key gives every
+    rewritten bucket a task of its own. A merge or OPTIMIZE task sorts
+    its bucket's rows by key, writes the bucket's single data file, and
+    then, from the same Arrow table, runs
+    ``indexed_np.write_bucket_shards`` for every index the manifest
+    carries; attach writes the shards only. All files have fixed names
+    in the staged directory, and data and shards come from one
+    evaluation of the rows, so nothing is pinned between two consumers.
+    The SQL ``INSERT INTO`` worker runs the same encoder, so no
+    Spark-side encoder is kept in step with it. One bucket must fit in
+    one Python worker; tables without an index keep Spark's writer.
   * **One staged directory, one publish.** The merge's rebuilt shards
     are written into the SAME ``_staged_<uuid>`` directory as its
     bucket data (under ``__idx_<name>/shard=<b>``), and the manifest's
@@ -183,44 +188,112 @@ def _resolve_index(man: dict, name: "str | None", kind: str) -> tuple:
     return next(iter(of_kind.items()))
 
 
+def _partition_keys(buckets) -> dict:
+    """``{bucket: long}`` over the rewritten ``buckets``: each bucket's
+    long is one that Spark's hash partitioning (``pmod(hash(x), n)``,
+    Murmur3 seed 42) sends to partition ``rank(bucket)`` of ``n =
+    len(buckets)``. The map is a bijection onto the partitions, so a
+    ``repartition(n)`` on it gives every bucket a task of its own.
+    Candidate longs are hashed in numpy blocks until every rank has one:
+    about n·ln n hashes, no per-bucket loop."""
+    import numpy as np
+
+    from semantic_index_spark.sources.versioned_batch import murmur3_long_np
+
+    order = sorted(int(b) for b in buckets)
+    n = len(order)
+    keys = np.zeros(n, dtype=np.int64)
+    found = np.zeros(n, dtype=bool)
+    start = 0
+    while not found.all():
+        cand = np.arange(start, start + 4 * n + 64, dtype=np.int64)
+        ranks, first = np.unique(
+            murmur3_long_np(cand).astype(np.int64) % n, return_index=True
+        )
+        new = ~found[ranks]
+        keys[ranks[new]] = cand[first[new]]
+        found[ranks[new]] = True
+        start += len(cand)
+    return dict(zip(order, keys.tolist()))
+
+
 def _write_shards(
-    rows: DataFrame, man: dict, specs: dict, staged: str, buckets
+    rows: DataFrame, man: dict, specs: dict, staged: str, buckets,
+    data: bool = False,
 ) -> None:
-    """Build shards for every Spark-side verb (attach, merge,
-    OPTIMIZE) in ONE ``groupBy(bucket).applyInArrow`` pass over the table
-    rows of the rewritten ``buckets``. Each group is one bucket's (key,
-    embedding) rows; its task calls ``indexed_np.write_bucket_shards`` —
-    one ``write_index_shard_np`` per index in ``specs`` — and writes
-    straight into ``staged`` under fixed file names, so a retried task
+    """The one grouped pass of every Spark-side verb on an indexed table
+    (attach, merge, OPTIMIZE): ``groupBy(part).applyInArrow`` over the
+    table rows of the rewritten ``buckets``, one task per bucket. With
+    ``data`` (merge and OPTIMIZE, through ``versioned._commit_bucketed``)
+    the task first writes the bucket's single data file — rows sorted by
+    the ``__zkey`` Morton column when present, then by key, physical
+    column names — and then, from the same Arrow table, every index's
+    shard through ``indexed_np.write_bucket_shards``, so data and shards
+    come from one evaluation of ``rows``. Attach writes shards only.
+    Every file has a fixed name under ``staged``, so a retried task
     overwrites its own files byte for byte. Shard ``b`` IS bucket ``b``
-    (``_bucket_expr`` on the key's manifest dtype). The SQL ``INSERT
-    INTO`` worker writes shards through the same function, so every
-    shard on disk comes from one encoder per kind. Bound: one bucket's
-    rows must fit in one Python worker — the bound HNSW shards always
-    had. The rows are first hash-partitioned on the bucket into as many
-    partitions as there are rewritten buckets: left to AQE, a merge's
-    few hundred KB would coalesce into one task that builds every
-    bucket's shards one after another."""
+    (``_bucket_expr`` on the key's manifest dtype); the SQL ``INSERT
+    INTO`` worker writes shards through the same encoder.
+
+    Bound: one bucket's rows must fit in one Python worker — the bound
+    HNSW shards always had. Placement: hash-partitioning on the bucket
+    itself collides (``pmod(hash(b), n)`` put buckets 0 and 1 of 4 in
+    one task, which then built both HNSW graphs one after the other),
+    and left to AQE a merge's few hundred KB would coalesce into a
+    single task. So each bucket maps to its :func:`_partition_keys`
+    long, passed as ONE parsed array literal indexed by bucket, and the
+    rows repartition on it into exactly ``len(buckets)`` tasks."""
     import pyarrow as pa
+    import pyspark.sql.functions as F
 
-    from semantic_index_spark.sources.indexed_np import write_bucket_shards
+    from semantic_index_spark.sources.indexed_np import (
+        _write_parquet,
+        write_bucket_shards,
+    )
 
+    buckets = sorted(int(b) for b in buckets)
+    if not buckets:
+        return
     key = man["key_cols"][0]
-    emb_cols = sorted({s["params"]["emb_col"] for s in specs.values()} - {key})
+    if data:
+        cols = [c for c in rows.columns if c != "__bucket"]
+    else:
+        emb = {s["params"]["emb_col"] for s in specs.values()} - {key}
+        cols = [key, *sorted(emb)]
+    colmap = VER._colmap(man)
     plan = {_idx_dir(n, s["params"]): s["params"] for n, s in specs.items()}
     dest = os.path.abspath(staged)
+    part_of = _partition_keys(buckets)
+    bucket_of = {p: b for b, p in part_of.items()}
+    lo = buckets[0]
+    lookup = F.expr(
+        "array("
+        + ",".join(str(part_of.get(b, "NULL")) for b in range(lo, buckets[-1] + 1))
+        + ")"
+    ).cast("array<bigint>")
+    zkey = VER._ZKEY
 
     def build(group, tbl):
-        bucket = int(group[0].as_py())
+        bucket = bucket_of[group[0].as_py()]
+        tbl = tbl.drop_columns(["__part"])
+        if data:
+            names = [c for c in tbl.column_names if c != zkey]
+            tbl = tbl.sort_by(
+                [(c, "ascending") for c in (zkey, key) if c in tbl.column_names]
+            )
+            _write_parquet(
+                tbl.select(names).rename_columns([colmap.get(c, c) for c in names]),
+                VER._bucket_dir(dest, bucket),
+            )
         write_bucket_shards(dest, plan, bucket, tbl, key)
         return pa.table({"shard": pa.array([bucket], pa.int64())})
 
+    bucket = VER._bucket_expr([key], int(man["n_buckets"]))
     rows.select(
-        key, *emb_cols,
-        VER._bucket_expr([key], int(man["n_buckets"])).alias("__bucket"),
-    ).repartition(max(len(buckets), 1), "__bucket").groupBy(
-        "__bucket"
-    ).applyInArrow(build, "shard long").collect()
+        *cols, F.get(lookup, (bucket - lo).cast("int")).alias("__part")
+    ).repartition(len(buckets), "__part").groupBy("__part").applyInArrow(
+        build, "shard long"
+    ).collect()
 
 
 def _shard_finalizer(specs: dict, affected):
@@ -339,15 +412,14 @@ def attach_ivfsq_index(
     man = VER._read_manifest(table)
     key = _check_attachable(man, table, emb_col, name, allow_string=True)
     rows = VER.read_bucketed(spark, table).select(key, emb_col)
-    first = rows.select(F.size(emb_col).alias("d")).limit(1).collect()
-    if not first:
-        raise ValueError(f"attach_ivfsq_index: table {table} is empty")
-    dim = int(first[0]["d"])
-    model = sq_train(rows, emb_col=emb_col)
+    try:  # sq_train's per-dim bounds give the dim and refuse an empty table
+        model = sq_train(rows, emb_col=emb_col)
+    except ValueError as e:
+        raise ValueError(f"attach_ivfsq_index: table {table}: {e}") from e
     params = {
         "kind": "ivfsq",
         "emb_col": emb_col,
-        "centroids": make_centroids(int(n_cells), dim, seed),
+        "centroids": make_centroids(int(n_cells), len(model["lo"]), seed),
         "model": model,
         "seed": int(seed),
     }
@@ -368,7 +440,7 @@ def attach_ivfpq_index(
     """Attach a co-committed IVF-PQ index (round 13 — the THIRD index
     kind, FAISS ``IVF,PQ`` on the table-artifact contract; VERDICT r12
     task #3): the current table state trains per-subspace PQ codebooks
-    (``pq_train_encode``'s Lloyd's loop) and fixes deterministic
+    (``pq_train``'s Lloyd's loop) and fixes deterministic
     centroids; rows land as ``__idx_<name>/shard=<b>/_cell=<c>``
     long-form (vec_id, sub, code) partitions — ``m_sub`` small codes per
     vector, the best-compression family (16x+ vs floats), previously
@@ -379,10 +451,7 @@ def attach_ivfpq_index(
     under, and a time-travel serve decodes version n with version n's
     own params. String keys ride (codes carry vec_id opaquely). Same
     crash/OCC contract as the other kinds."""
-    from semantic_index_spark.operators.similarity import (
-        make_centroids,
-        pq_train_encode,
-    )
+    from semantic_index_spark.operators.similarity import make_centroids, pq_train
 
     man = VER._read_manifest(table)
     key = _check_attachable(man, table, emb_col, name, allow_string=True)
@@ -391,19 +460,16 @@ def attach_ivfpq_index(
     rows = tbl.select(
         F.col(key).alias("vec_id"), F.col(emb_col).alias("embedding")
     )
-    first = rows.select(F.size("embedding").alias("d")).limit(1).collect()
-    if not first:
-        raise ValueError(f"attach_ivfpq_index: table {table} is empty")
-    dim = int(first[0]["d"])
-    if dim % m_sub != 0:
-        raise ValueError(
-            f"attach_ivfpq_index: dim {dim} not divisible by m_sub {m_sub}"
-        )
-    _, codebooks = pq_train_encode(rows, m_sub=m_sub, k=pq_k, iters=iters)
+    try:  # pq_train's init rows give the dim and refuse an empty table
+        codebooks = pq_train(rows, m_sub=m_sub, k=pq_k, iters=iters)
+    except ValueError as e:
+        raise ValueError(f"attach_ivfpq_index: table {table}: {e}") from e
     params = {
         "kind": "ivfpq",
         "emb_col": emb_col,
-        "centroids": make_centroids(int(n_cells), dim, seed),
+        "centroids": make_centroids(
+            int(n_cells), m_sub * len(codebooks[0][0]), seed
+        ),
         "codebooks": codebooks,
         "seed": int(seed),
     }
@@ -518,23 +584,6 @@ def detach_index(table: str, name: "str | None" = None) -> int:
 detach_hnsw_index = detach_index
 
 
-def _stage_merge_index(man: dict, result: DataFrame, affected):
-    """The merge-side maintenance hook (called by ``merge_into_bucketed``
-    and ``optimize_bucketed`` when the manifest carries an index): return
-    (stage, finalize) callbacks for ``_commit_bucketed``. ``stage`` runs
-    the one grouped shard pass (:func:`_write_shards`) over the commit's
-    OWN rewritten-bucket rows, rebuilding EVERY index the manifest
-    carries into the staged directory; ``finalize`` advances each
-    index's shard map for the affected buckets in the same manifest
-    (:func:`_shard_finalizer`)."""
-    specs = VER._indexes(man)
-
-    def stage(staged: str) -> None:
-        _write_shards(result, man, specs, staged, affected)
-
-    return stage, _shard_finalizer(specs, affected)
-
-
 def indexed_hnsw_topk(
     spark: SparkSession,
     table: str,
@@ -565,20 +614,13 @@ def indexed_hnsw_topk(
     if idx is None:
         return _empty_serve(spark)
     blocked = None
-    dv_paths = VER._dv_paths(table, man)
-    if dv_paths:
-        import pyspark.sql.functions as _F
-
+    dv_keys = VER._dv_keys(spark, table, man)
+    if dv_keys is not None:
         from semantic_index_spark.session import collect_bounded
 
         key = man["key_cols"][0]
-        phys = VER._colmap(man).get(key, key)  # DV files store PHYSICAL names
         rows = collect_bounded(
-            spark.read.parquet(*dv_paths)
-            .select(_F.col(phys).alias(key))
-            .distinct(),
-            max_blocked,
-            "indexed_hnsw_topk DV tombstones",
+            dv_keys, max_blocked, "indexed_hnsw_topk DV tombstones"
         )
         blocked = {int(r[key]) for r in rows}
     return hnsw_topk(idx, query, k=k, ef=ef, blocked=blocked)
@@ -599,9 +641,21 @@ def _read_index_shards(
     """Union ONE index's shard partitions ACROSS owning versions — one
     read per owning version with basePath (recovering the partition
     columns), exactly the grouping ``read_bucketed`` does for buckets.
-    Returns None when no shard has an owner (empty table)."""
+    Every read takes the schema ``indexed_np`` writes for the index's
+    kind, with ``vec_id`` typed as the manifest's key, so no read runs a
+    footer-inference job. Returns None when no shard has an owner (empty
+    table)."""
+    from pyspark.sql.types import StructType
+
+    from semantic_index_spark.sources.indexed_np import SHARD_DDL
+
     iname, spec = _resolve_index(man, name, kind)
     idx_dir = _idx_dir(iname, spec["params"])
+    key = man["key_cols"][0]
+    ddl = SHARD_DDL[spec["params"].get("kind", "hnsw")].format(
+        key=VER._manifest_schema(man)[key].dataType.simpleString()
+    )
+    schema = StructType.fromDDL(ddl)
     by_version: dict = {}
     for b, v in spec["shards"].items():
         if v is not None:
@@ -610,7 +664,7 @@ def _read_index_shards(
     for v, bs in sorted(by_version.items()):
         base = os.path.join(VER._version_dir(table, v), idx_dir)
         parts.append(
-            spark.read.option("basePath", base).parquet(
+            spark.read.schema(schema).option("basePath", base).parquet(
                 *[os.path.join(base, f"shard={b}") for b in sorted(bs)]
             )
         )

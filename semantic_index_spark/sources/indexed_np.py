@@ -1,9 +1,11 @@
 """The co-committed index shard encoders: numpy/pyarrow only, no
 SparkSession. Every table shard on disk comes from here — the Spark
 verbs (attach, merge, OPTIMIZE) run :func:`write_bucket_shards` inside one
-``groupBy(bucket).applyInArrow`` task per bucket
+``groupBy(part).applyInArrow`` task per bucket
 (``indexed._write_shards``), and the SQL front door's ``INSERT INTO``
-commit worker calls it directly. One encoder per kind:
+commit worker calls it directly. Both also write their bucket data
+files through :func:`_write_parquet`, the one fixed-name writer with one
+dictionary policy. One encoder per kind:
 
 - IVF cell assignment, SQ8 codes and PQ codes reproduce the standalone
   Spark expressions (``similarity.ivf_assign`` / ``sq_encode`` /
@@ -27,6 +29,16 @@ pytest locks it (``test_table_index_codes_match_standalone_encoders``).
 from __future__ import annotations
 
 import os
+
+#: index kind → the Spark schema of the shard files this module writes,
+#: plus the partition columns of the ``shard=<b>[/_cell=<c>]`` layout the
+#: serves read them under; ``{key}`` is the table key's type
+SHARD_DDL = {
+    "hnsw": "id long, embedding array<double>, max_level int, "
+            "neighbors array<array<long>>, shard int",
+    "ivfsq": "vec_id {key}, codes array<tinyint>, shard int, _cell int",
+    "ivfpq": "vec_id {key}, sub int, code int, shard int, _cell int",
+}
 
 
 def _fold_dot(mat, vec):
@@ -116,21 +128,37 @@ def _emb_matrix(tbl, emb_col):
     return flat.astype(np.float64).reshape(len(col), -1)
 
 
-# dictionary pages pay off for ids, levels and codes but bloat float
-# lists (a 500-row HNSW ``embedding`` column: 257 KB dictionary-encoded,
-# 197 KB plain — Spark's writer falls back to plain there on its own)
-_HNSW_DICT_COLS = ["id", "max_level", "neighbors.list.element.list.element"]
+def _dictionary_columns(schema) -> list:
+    """The parquet leaf paths that keep dictionary pages: every top-level
+    and list leaf but the floats inside a list (struct and map leaves are
+    written plain). Dictionary pages pay off for ids, levels and codes
+    but bloat float lists (a 500-row HNSW ``embedding`` column: 257 KB
+    dictionary-encoded, 197 KB plain — Spark's writer falls back to
+    plain there on its own)."""
+    import pyarrow as pa
+
+    out = []
+
+    def walk(t, path, in_list):
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            walk(t.value_type, path + ".list.element", True)
+        elif not (in_list and pa.types.is_floating(t)):
+            out.append(path)  # a struct or map path matches no leaf: plain
+
+    for f in schema:
+        walk(f.type, f.name, False)
+    return out
 
 
-def _write_parquet(out, d: str, use_dictionary=True) -> None:
-    """One fixed-name file per shard leaf, so a retried task overwrites
-    it byte for byte."""
+def _write_parquet(out, d: str) -> None:
+    """One fixed-name file per leaf directory (index shard leaf or table
+    bucket), so a retried task overwrites it byte for byte."""
     import pyarrow.parquet as pq
 
     os.makedirs(d, exist_ok=True)
     pq.write_table(
         out, os.path.join(d, "part-00000.parquet"),
-        use_dictionary=use_dictionary,
+        use_dictionary=_dictionary_columns(out.schema),
     )
 
 
@@ -191,8 +219,7 @@ def write_index_shard_np(
             }
         )
         _write_parquet(
-            out, os.path.join(staged, idx_dir, f"shard={int(bucket)}"),
-            use_dictionary=_HNSW_DICT_COLS,
+            out, os.path.join(staged, idx_dir, f"shard={int(bucket)}")
         )
         return
     cells = ivf_cells_np(mat, params["centroids"])

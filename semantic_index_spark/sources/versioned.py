@@ -61,6 +61,7 @@ _VERSION_PREFIX = "v="
 _BUCKET_PREFIX = "__bucket="
 _DV = "__dv"
 _HIDDEN_SPEC = "_hidden_spec.json"
+_ZKEY = "__zkey"  # Morton-key column an indexed OPTIMIZE ZORDER sorts buckets by
 
 
 class ConstraintViolationError(ValueError):
@@ -987,36 +988,52 @@ def _publish_bucketed(table, staged, read_man, affected, build_manifest,
 
 def _commit_bucketed(
     table: str, df: DataFrame, base: dict, read_man: "dict | None", dv_clear=(),
-    stage_extra=None, finalize_manifest=None,
 ) -> int:
-    """Stage ``df`` partitioned by ``__bucket``, then conditionally publish
-    (see ``_publish_bucketed``). ``base`` carries key_cols / n_buckets /
-    schema / meta plus ``__affected``; affected buckets that produced no
-    files become ``None`` tombstones. DV lists for ``dv_clear`` buckets
-    are dropped (the rewrite folded them in); all other bucket ownership
-    and DV state is inherited from the manifest the commit lands on —
-    which under a disjoint-bucket rebase is the concurrent winner's, so
-    neither commit's buckets are lost. Crash before the critical section
-    leaves an invisible ``_staged_*`` orphan, same contract as
+    """Stage ``df`` (logical columns plus ``__bucket``) one directory per
+    bucket, then conditionally publish (see ``_publish_bucketed``).
+    ``base`` carries key_cols / n_buckets / schema / meta plus
+    ``__affected``; affected buckets that produced no files become
+    ``None`` tombstones. DV lists for ``dv_clear`` buckets are dropped
+    (the rewrite folded them in); all other bucket ownership and DV state
+    is inherited from the manifest the commit lands on — which under a
+    disjoint-bucket rebase is the concurrent winner's, so neither
+    commit's buckets are lost. Crash before the critical section leaves
+    an invisible ``_staged_*`` orphan, same contract as
     ``commit_version``.
 
-    ``stage_extra(staged_dir)`` writes additional artifacts into the SAME
-    staged directory and ``finalize_manifest(manifest, final, base_man,
-    dest)`` amends the manifest in the SAME publish — the co-committed
-    index (``sources/indexed.py``) rides these so table data and index
-    shards land in one rename + one pointer swap, never separately."""
+    On a table that carries co-committed indexes the staging is ONE
+    grouped pass (``indexed._write_shards``): each task takes one
+    rewritten bucket, writes its single data file (ordered by a
+    ``__zkey`` column when ``df`` has one) and, from the same Arrow
+    table, every index's shard; the manifest's shard map advances in the
+    same publish. Data and shards therefore come from one evaluation of
+    ``df`` and land in one rename + one pointer swap. Other tables stage
+    through Spark's ``partitionBy`` writer."""
     staged = _staged_path(table)
-    if read_man is not None:  # files persist PHYSICAL names (column mapping)
-        df = _to_physical(df, read_man)
-    df.write.mode("errorifexists").partitionBy("__bucket").parquet(staged)
+    specs = _indexes(read_man)
+    finalize = None
+    if specs:
+        from semantic_index_spark.sources.indexed import (
+            _shard_finalizer,
+            _write_shards,
+        )
+
+        # exists even when every rewritten bucket came out empty
+        os.makedirs(staged)
+        _write_shards(df, read_man, specs, staged, base["__affected"], data=True)
+        finalize = _shard_finalizer(specs, base["__affected"])
+    else:
+        if read_man is not None:  # files persist PHYSICAL names (column mapping)
+            df = _to_physical(df, read_man)
+        df.write.mode("errorifexists").partitionBy("__bucket").parquet(staged)
     return _commit_staged_bucketed(
-        table, staged, base, read_man, dv_clear, stage_extra, finalize_manifest
+        table, staged, base, read_man, dv_clear, finalize
     )
 
 
 def _commit_staged_bucketed(
     table: str, staged: str, base: dict, read_man: "dict | None", dv_clear=(),
-    stage_extra=None, finalize_manifest=None,
+    finalize_manifest=None,
 ) -> int:
     """The Spark-FREE tail of :func:`_commit_bucketed`: publish an
     already-staged ``__bucket=<b>`` directory layout (physical column
@@ -1024,9 +1041,10 @@ def _commit_staged_bucketed(
     out in round 12 so the SQL front door's ``DataSourceWriter`` — whose
     ``commit()`` runs in a Python worker with no SparkSession — commits
     through the IDENTICAL path as every Spark-side verb, instead of a
-    re-implementation that could drift."""
-    if stage_extra is not None:
-        stage_extra(staged)
+    re-implementation that could drift. ``finalize_manifest(manifest,
+    final, base_man, dest)`` amends the manifest in the SAME publish —
+    the co-committed indexes' shard maps ride it
+    (``indexed._shard_finalizer``)."""
     affected = base.pop("__affected")
     cleared = {str(b) for b in dv_clear}
 
@@ -1160,24 +1178,41 @@ def _dv_paths(table: str, man: dict, buckets: "set[int] | None" = None) -> list[
     return [_bucket_dir(_dv_dir(_version_dir(table, v)), b) for b in keys for v in dv[b]]
 
 
+def _dv_keys(
+    spark: SparkSession, table: str, man: dict, buckets: "set[int] | None" = None
+) -> "DataFrame | None":
+    """The distinct keys (logical names) of the manifest's deletion
+    vectors, or None when none apply. DV files store the PHYSICAL key
+    names (stable across renames) under the key types the manifest fixes
+    (keys never widen), so the read takes that schema instead of running
+    a footer-inference job."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import StructField, StructType
+
+    paths = _dv_paths(table, man, buckets)
+    if not paths:
+        return None
+    cm = _colmap(man)
+    fields = _manifest_schema(man)
+    phys = StructType(
+        [StructField(cm.get(k, k), fields[k].dataType) for k in man["key_cols"]]
+    )
+    return (
+        spark.read.schema(phys).parquet(*paths)
+        .select(*[F.col(cm.get(k, k)).alias(k) for k in man["key_cols"]])
+        .distinct()
+    )
+
+
 def _apply_dv(
     spark: SparkSession, df: DataFrame, table: str, man: dict, buckets: "set[int] | None" = None
 ) -> DataFrame:
     """Anti-join out rows whose key appears in the manifest's deletion
     vectors. Keys hash to exactly one bucket, so applying the DV keys
     globally equals applying them per bucket."""
-    import pyspark.sql.functions as F
-
-    paths = _dv_paths(table, man, buckets)
-    if not paths:
+    dv_keys = _dv_keys(spark, table, man, buckets)
+    if dv_keys is None:
         return df
-    cm = _colmap(man)
-    # DV files store PHYSICAL key names (stable across renames)
-    dv_keys = (
-        spark.read.parquet(*paths)
-        .select(*[F.col(cm.get(k, k)).alias(k) for k in man["key_cols"]])
-        .distinct()
-    )
     return df.join(dv_keys, man["key_cols"], "left_anti")
 
 
@@ -1398,32 +1433,14 @@ def merge_into_bucketed(
             "__affected": affected,
             "meta": dict(meta) if meta else {},
         }
-        stage_extra = finalize = None
-        if _indexes(man):
-            # co-committed indexes (sources/indexed.py): every index's affected
-            # shards' replacements ride THIS commit's staged directory and
-            # manifest — table and indexes can never publish separately.
-            # Materialize `result` FIRST: it feeds two consumers (the staged
-            # data write and the shard build), and a lazy plan evaluated
-            # twice could publish index shards disagreeing with the bucket
-            # data if any input were non-deterministic (round 12)
-            from semantic_index_spark.sources.indexed import _stage_merge_index
-
-            result = pin(result, "merge_into_bucketed: pin result", "eager")
-            stage_index, finalize = _stage_merge_index(man, result, affected)
-
-            def stage_extra(staged: str) -> None:
-                with described("index shard pass"):
-                    stage_index(staged)
-
         # a rewritten bucket has its DVs folded into the data — clear them;
         # the commit is conditional on `man` and rebases over concurrent
-        # commits that touched only DISJOINT buckets (_publish_bucketed)
+        # commits that touched only DISJOINT buckets (_publish_bucketed).
+        # On an indexed table the commit's one grouped pass writes each
+        # rewritten bucket's data file AND every index shard from one
+        # evaluation of `result`, so table and indexes never disagree
         with described("commit"):
-            return _commit_bucketed(
-                table, result, base, man, dv_clear=affected,
-                stage_extra=stage_extra, finalize_manifest=finalize,
-            )
+            return _commit_bucketed(table, result, base, man, dv_clear=affected)
 
 
 def delete_bucketed(
@@ -2043,8 +2060,6 @@ def optimize_bucketed(
     change: same contract, same bit-identical logical table."""
     import pyspark.sql.functions as F
 
-    from semantic_index_spark.session import pin, pinned
-
     man = _read_manifest(table)
     keys, n_buckets = man["key_cols"], man["n_buckets"]
     if buckets is None:
@@ -2062,13 +2077,16 @@ def optimize_bucketed(
         if zorder_by:
             from semantic_index_spark.sources.io import zorder_key
 
-            # one task per rewritten bucket, rows z-ordered inside it —
-            # partitionBy then writes each bucket's file in z-key order
-            rows = rows.repartition(
-                max(len(affected), 1), F.col("__bucket")
-            ).sortWithinPartitions(
-                F.col("__bucket"), zorder_key(zorder_by, bits=zorder_bits)
-            )
+            zkey = zorder_key(zorder_by, bits=zorder_bits)
+            if _indexes(man):
+                # the indexed commit's grouped pass sorts each bucket by it
+                rows = rows.withColumn(_ZKEY, zkey)
+            else:
+                # one task per rewritten bucket, rows z-ordered inside it —
+                # partitionBy then writes each bucket's file in z-key order
+                rows = rows.repartition(
+                    max(len(affected), 1), F.col("__bucket")
+                ).sortWithinPartitions(F.col("__bucket"), zkey)
     base = {
         "key_cols": keys,
         "n_buckets": n_buckets,
@@ -2080,24 +2098,11 @@ def optimize_bucketed(
         rows = spark.createDataFrame([], _manifest_schema(man)).withColumn(
             "__bucket", F.lit(0).cast("bigint")
         )
-    stage_extra = finalize = None
-    with pinned():
-        if _indexes(man):
-            # co-committed indexes: OPTIMIZE is the compaction half of the DV
-            # trade for the index too — the rewritten buckets' shard graphs
-            # rebuild from the DV-FOLDED content in the SAME commit, so when
-            # this manifest clears the DV lists the serve (which would stop
-            # applying those keys as tombstones) finds the deleted nodes
-            # physically gone from the graph, never resurrected
-            from semantic_index_spark.sources.indexed import _stage_merge_index
-
-            # one evaluation feeds both the data write and the shard build
-            # (the pin keeps the zorder sortWithinPartitions layout)
-            rows = pin(rows, "optimize_bucketed: rows", "eager")
-            stage_extra, finalize = _stage_merge_index(
-                man, rows, list(affected) + list(dv_only)
-            )
-        return _commit_bucketed(
-            table, rows, base, man, dv_clear=set(affected) | set(dv_only),
-            stage_extra=stage_extra, finalize_manifest=finalize,
-        )
+    # co-committed indexes: OPTIMIZE is the compaction half of the DV trade
+    # for the index too — the commit rebuilds the rewritten buckets' shards
+    # from the DV-FOLDED content, so when this manifest clears the DV lists
+    # the serve (which stops applying those keys as tombstones) finds the
+    # deleted nodes physically gone from the graph, never resurrected
+    return _commit_bucketed(
+        table, rows, base, man, dv_clear=set(affected) | set(dv_only)
+    )

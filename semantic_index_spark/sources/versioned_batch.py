@@ -262,6 +262,36 @@ def xxhash64_np(values, dtype: str):
     return h.view(np.int64)
 
 
+def murmur3_long_np(values):
+    """Spark ``hash()`` (``Murmur3_x86_32.hashLong``, seed 42, signed
+    int32) of a whole long array with numpy uint32 wraparound arithmetic
+    — the hash ``repartition(n, col)`` takes ``pmod`` of to place a long
+    key. Bit-exact with ``F.hash`` (pytest-locked on edge longs)."""
+    import numpy as np
+
+    v = np.asarray(values, dtype=np.int64).view(np.uint64)
+    c1, c2 = np.uint32(0xCC9E2D51), np.uint32(0x1B873593)
+
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    def mix(h, k):
+        k = rotl(k * c1, 15) * c2
+        return rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+    with np.errstate(over="ignore"):
+        h = np.full(v.shape, 42, dtype=np.uint32)
+        h = mix(h, (v & np.uint64(0xFFFFFFFF)).astype(np.uint32))
+        h = mix(h, (v >> np.uint64(32)).astype(np.uint32))
+        h ^= np.uint32(8)
+        h ^= h >> np.uint32(16)
+        h *= np.uint32(0x85EBCA6B)
+        h ^= h >> np.uint32(13)
+        h *= np.uint32(0xC2B2AE35)
+        h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
 def buckets_np(values, dtype: str, n_buckets: int):
     """Vectorized bucket assignment ``pmod(xxhash64(v), n_buckets)``:
     what lets the SQL writer's executor tasks route a batch to buckets in
@@ -603,6 +633,8 @@ class BucketedMergeWriter(DataSourceArrowWriter):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        from semantic_index_spark.sources.indexed_np import _write_parquet
+
         man = self.man
         by_bucket: dict[int, list[str]] = {}
         for m in messages:
@@ -660,12 +692,10 @@ class BucketedMergeWriter(DataSourceArrowWriter):
             parts.append(inc)
             logical = pa.concat_tables(parts)
             logical_by_bucket[b] = logical
-            merged = logical.rename_columns(
-                [colmap.get(f.name, f.name) for f in fields]
+            _write_parquet(
+                logical.rename_columns([colmap.get(f.name, f.name) for f in fields]),
+                VER._bucket_dir(self.staged, b),
             )
-            outd = VER._bucket_dir(self.staged, b)
-            os.makedirs(outd, exist_ok=True)
-            pq.write_table(merged, os.path.join(outd, "part-00000.parquet"))
         shutil.rmtree(os.path.join(self.staged, "__incoming"), ignore_errors=True)
         # co-committed indexes (round 13): rebuild every index's affected
         # shards from the SAME merged bucket content, Spark-free, through

@@ -4131,10 +4131,11 @@ def test_merge_emptying_bucket_clears_every_index_shard(spark, tmp_path):
 
 
 def test_grouped_shard_pass_is_retry_safe(spark, tmp_path):
-    """The grouped shard pass writes fixed file names from rows sorted by
-    key, so running it twice into one staged directory — as a retried
-    task would, here with the rows arriving in a different partition
-    layout — leaves byte-identical files."""
+    """The grouped pass writes each bucket's data file and its index
+    shards under fixed file names from rows sorted by key, so running it
+    twice into one staged directory — as a retried task would, here with
+    the rows arriving in a different partition layout — leaves
+    byte-identical files."""
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
 
@@ -4143,19 +4144,25 @@ def test_grouped_shard_pass_is_retry_safe(spark, tmp_path):
     man = VER._read_manifest(t)
     rows = VER.read_bucketed(spark, t)
     staged = str(tmp_path / "staged")
-    IDX._write_shards(rows, man, VER._indexes(man), staged, range(4))
+    IDX._write_shards(rows, man, VER._indexes(man), staged, range(4), data=True)
     first = _tree_bytes(staged)
-    assert len(first) > 0
+    assert sorted(p for p in first if p.startswith("__bucket=")) == [
+        f"__bucket={b}/part-00000.parquet" for b in range(4)
+    ]
+    assert any(p.startswith("__idx_") for p in first)
     IDX._write_shards(
-        rows.repartition(7), man, VER._indexes(man), staged, range(4)
+        rows.repartition(7), man, VER._indexes(man), staged, range(4),
+        data=True,
     )
     assert _tree_bytes(staged) == first
 
 
 def test_merge_writes_one_file_per_index_leaf(spark, tmp_path):
-    """A merge writes exactly one file per (index, shard) for HNSW and
+    """A merge and an OPTIMIZE on an indexed table write exactly one data
+    file per rewritten bucket, one file per (index, shard) for HNSW and
     per (index, shard, cell) for the IVF kinds — no per-task fan-out and
-    no writer sidecars — and only for the buckets the merge rewrote."""
+    no writer sidecars — and only for the buckets the commit rewrote. A
+    z-ordered OPTIMIZE writes each bucket's rows in Morton-key order."""
     import os
 
     from semantic_index_spark.sources import versioned as VER
@@ -4170,6 +4177,36 @@ def test_merge_writes_one_file_per_index_leaf(spark, tmp_path):
     man = VER._read_manifest(t)
     rewritten = {b for b, owner in man["buckets"].items() if owner == v}
     assert rewritten
+    _assert_one_file_per_leaf(t, v, man, rewritten)
+    VER.delete_bucketed(spark, t, spark.createDataFrame([(5,), (6,)], "id long"))
+    v = VER.optimize_bucketed(spark, t, zorder_by=[("id", 0.0, 256.0)])
+    man = VER._read_manifest(t)
+    rewritten = {b for b, owner in man["buckets"].items() if owner == v}
+    assert rewritten and not man.get("dv")
+    _assert_one_file_per_leaf(t, v, man, rewritten)
+    import pyarrow.parquet as pq
+
+    for b in rewritten:
+        ids = pq.read_table(
+            os.path.join(t, f"v={v}", f"__bucket={b}", "part-00000.parquet")
+        ).column("id").to_pylist()
+        assert ids == sorted(ids) and 5 not in ids and 6 not in ids
+
+
+def _assert_one_file_per_leaf(t, v, man, rewritten):
+    import os
+
+    from semantic_index_spark.sources import versioned as VER
+
+    vdir = os.path.join(t, f"v={v}")
+    assert sorted(os.listdir(vdir)) == sorted(
+        [f"__bucket={b}" for b in rewritten]
+        + [f"__idx_{name}" for name in VER._indexes(man)]
+    )
+    for b in rewritten:
+        assert os.listdir(os.path.join(vdir, f"__bucket={b}")) == [
+            "part-00000.parquet"
+        ]
     for name, spec in VER._indexes(man).items():
         root = os.path.join(t, f"v={v}", f"__idx_{name}")
         shards = sorted(os.listdir(root))
@@ -4186,6 +4223,54 @@ def test_merge_writes_one_file_per_index_leaf(spark, tmp_path):
             for leaf in leaves:
                 assert os.listdir(leaf) == ["part-00000.parquet"], leaf
 
+
+
+def test_murmur3_long_np_matches_spark_hash(spark):
+    """The numpy Murmur3 that places buckets on tasks is Spark's
+    ``hash()`` of a long, bit for bit, on edge and random longs."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from semantic_index_spark.sources import versioned_batch as VB
+
+    rng = np.random.default_rng(3)
+    panel = [0, 1, -1, 2, -2, 2**63 - 1, -(2**63 - 1), -(2**63),
+             2**31 - 1, -(2**31), 2**32, 2**32 - 1, 42]
+    panel += rng.integers(-(2**63), 2**63 - 1, 200, dtype=np.int64).tolist()
+    rows = spark.createDataFrame([(v,) for v in panel], "x long").select(
+        "x", F.hash("x").alias("h")
+    ).collect()
+    got = VB.murmur3_long_np([r["x"] for r in rows])
+    assert [int(h) for h in got] == [r["h"] for r in rows]
+
+
+def test_partition_keys_give_each_bucket_its_own_task(spark):
+    """The bucket → partition-key map is a bijection onto the partitions
+    of ``repartition(n)``: rank i lands in partition i for every n from
+    1 to 64 and for random bucket subsets up to 4,096, and Spark places
+    the keys where the numpy hash says."""
+    import numpy as np
+
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned_batch as VB
+
+    def placed(part_of):
+        keys = [part_of[b] for b in sorted(part_of)]
+        return (VB.murmur3_long_np(keys).astype(np.int64) % len(keys)).tolist()
+
+    for n in range(1, 65):
+        assert placed(IDX._partition_keys(range(n))) == list(range(n)), n
+    rng = np.random.default_rng(9)
+    for size in (2, 17, 500, 4096):
+        buckets = rng.choice(65536, size, replace=False).tolist()
+        assert placed(IDX._partition_keys(buckets)) == list(range(size)), size
+    part_of = IDX._partition_keys([3, 9, 10, 42, 77])
+    df = spark.createDataFrame(
+        sorted(part_of.items()), "b long, k long"
+    ).repartition(5, "k")
+    assert df.rdd.glom().map(lambda rs: [r["b"] for r in rs]).collect() == [
+        [3], [9], [10], [42], [77]
+    ]
 
 
 def test_merge_and_optimize_release_their_pins(spark, tmp_path):

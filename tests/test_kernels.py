@@ -251,7 +251,8 @@ def _helper_frames(spark, sf_dir):
         "relational.array_hof": R.array_hof(spark, sf_dir),
         "relational.session_paths": R.session_paths(spark, sf_dir),
         "relational.map_functions": R.map_functions(spark, sf_dir),
-        "similarity.pq_train_encode": S.pq_train_encode(vecs, m_sub=2, k=2, iters=1)[0],
+        # pq_train's rounds build the same _pq_sub_code lambdas as pq_encode
+        "similarity.pq_train": S.pq_encode(vecs, codebooks),
         "similarity.pq_codes_array": col(S.pq_codes_array(codebooks)),
         "similarity.mrl_truncate": S.mrl_truncate(vecs, 2),
         "similarity.sq_codes_column": col(S.sq_codes_column(model)),
