@@ -4192,7 +4192,7 @@ def q_ivf_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are exact integers. Tie-safe: if the own distance equals the global
     # min shared with another centroid, b picks the same value and s = 0.
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = S.ivf_assign(emb, CENTROIDS, method="expr")
+    assigned = S.ivf_assign(emb, CENTROIDS)
 
     def _dist(c: list[float]):
         return F.sqrt(

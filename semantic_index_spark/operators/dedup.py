@@ -538,15 +538,16 @@ def semantic_cluster_dedup(
     broadcast-nested-loop), so the pair count is Σ|cell|² instead of N² and
     the number of centroids is the lever that bounds it (SemDeDup's own
     scaling argument; they run k ≈ 50k clusters on LAION-scale data).
-    Norms are computed once per row before the join; cell assignment is a
-    pure JVM dot fold per centroid inside whole-stage codegen."""
+    Norms are computed once per row before the join; cell assignment is
+    ``ivf_assign``'s, so a JVM dot fold per centroid for k ≤ 16 and one
+    numpy matmul + argmax per Arrow batch beyond (SemDeDup's k)."""
     from semantic_index_spark.operators.similarity import ivf_assign
 
-    # materialize the assignment ONCE: the k-dot argmin is a wide codegen
-    # expression, and without pinning it would re-evaluate on BOTH sides of
+    # materialize the assignment ONCE: the k-centroid argmax (a Python
+    # matmul stage at k > 16) would otherwise re-evaluate on BOTH sides of
     # the self-join plus the final keep-join (3× the dominant per-row
     # cost); ensure_parallelism first so a single-file input doesn't
-    # serialize the fold on one core.
+    # serialize the assignment on one core.
     base = (
         ivf_assign(ensure_parallelism(df.select(id_col, emb_col)), centroids, emb_col)
         .withColumn("nrm", V.l2_norm(emb_col))

@@ -25,7 +25,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-import pandas as pd  # module-level so pandas_udf can resolve postponed hints
+import pandas as pd  # module-level so applyInPandas can resolve postponed hints
 import pyspark.sql.functions as F
 from semantic_index_spark.session import collect_bounded, pin
 from pyspark.sql import DataFrame, Window
@@ -355,51 +355,76 @@ def make_centroids(k: int, dim: int, seed: int = 11) -> list[list[float]]:
     return [[float(x) for x in row] for row in c]
 
 
+def _np_column(fn, dtype, emb_col: str):
+    """``fn`` over each Arrow batch's (n, d) float64 embedding matrix, as
+    one column of Spark type ``dtype`` (an Arrow UDF): how the standalone
+    operators run the ``indexed_np`` encoders every table shard runs.
+    The matrix is ``indexed_np._emb_matrix``'s (a flattened Arrow list,
+    so float32 widens exactly as ``cast("array<double>")`` does); ``fn``
+    returns one value per row (1-D) or one fixed-width array per row
+    (2-D). An empty batch returns an empty column without calling
+    ``fn``."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from semantic_index_spark.sources.indexed_np import _emb_matrix
+
+    out_type = to_arrow_type(dtype)
+
+    @arrow_udf(dtype)  # no type hints: a scalar Arrow UDF by default
+    def _encode(emb):
+        if len(emb) == 0:
+            return pa.array([], out_type)
+        out = fn(_emb_matrix(emb))
+        if out.ndim == 1:
+            return pa.array(out, out_type)
+        n, w = out.shape
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * w),
+            pa.array(out.reshape(-1), out_type.value_type),
+        )
+
+    return _encode(F.col(emb_col))
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: Sequence[Sequence[float]],
     emb_col: str = "embedding",
-    method: str = "auto",
 ) -> DataFrame:
     """IVF cell assignment: each row gets the index of its max-dot centroid
     (``_cell``). At ingest time this is the partition/cluster key the
     index is written with, so queries prune to probed cells at the
     parquet-partition level.
 
-    Two physical strategies, picked by ``method``:
+    Two physical strategies, picked by k:
 
-    * ``"expr"`` — one JVM dot fold per centroid inside whole-stage
-      codegen (zero Python). Right for small k (the serving index's
-      nprobe-style k≈8-16): no Arrow boundary, composes with partition
-      pruning.
-    * ``"arrow"`` — one BLAS ``matmul + argmax`` per Arrow batch in a
-      pandas_udf. Right for large k: the expression tree grows (and its
-      codegen COMPILE time, ~2.5s at k=32, dominates small jobs), while a
-      (batch, d) @ (d, k) matmul is O(1) in planning cost and the only
-      strategy that reaches SemDeDup-scale k≈50k. ``np.argmax`` takes the
-      first max index — the same tie-break as ``array_position``.
-    * ``"auto"`` — expr for k ≤ 16, arrow beyond.
+    * k ≤ 16 — one JVM dot fold per centroid inside whole-stage codegen
+      (zero Python): no Arrow boundary, composes with partition pruning
+      (the serving index's nprobe-style k≈8-16).
+    * k > 16 — ``indexed_np.ivf_cells_np``'s float64 ``matmul + argmax``
+      per Arrow batch, the encoder table shards use. The expression tree
+      grows with k (its codegen COMPILE time, ~2.5s at k=32, dominates
+      small jobs), while a (batch, d) @ (d, k) matmul is O(1) in
+      planning cost and the only strategy that reaches SemDeDup-scale
+      k≈50k. ``np.argmax`` takes the first max index — the same
+      tie-break as ``array_position``.
     """
-    k = len(centroids)
-    if method == "auto":
-        method = "expr" if k <= 16 else "arrow"
-    if method == "expr":
+    if len(centroids) <= 16:
         dots = F.array(*[V.dot_literal(F.col(emb_col), c) for c in centroids])
         return df.withColumn(
             "_cell", (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
         )
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import IntegerType
 
-    C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64).T
+    from semantic_index_spark.sources.indexed_np import ivf_cells_np
 
-    @pandas_udf("int")
-    def _cell(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        return pd.Series(np.argmax(mat @ C, axis=1).astype(np.int32))
-
-    return df.withColumn("_cell", _cell(F.col(emb_col)))
+    return df.withColumn(
+        "_cell",
+        _np_column(lambda m: ivf_cells_np(m, centroids), IntegerType(), emb_col),
+    )
 
 
 def ivf_topk(
@@ -483,19 +508,7 @@ def write_ivf_index(
     serialize on the layout's sibling commit lock (``locking.
     index_lock``): two concurrent writers' jobs would otherwise race
     each other's ``_temporary`` staging inside the target directory."""
-    from semantic_index_spark.locking import index_lock
-
-    assigned = ivf_assign(df, centroids, emb_col)
-    salt = F.pmod(F.abs(F.hash(F.col(emb_col))), F.lit(max(1, files_per_cell)))
-    with index_lock(path):
-        (
-            assigned.repartition(
-                max(1, files_per_cell) * max(1, len(centroids)), F.col("_cell"), salt
-            )
-            .write.mode("overwrite")
-            .partitionBy("_cell")
-            .parquet(path)
-        )
+    _write_ivf_cells(df, centroids, path, emb_col, files_per_cell, "overwrite")
 
 
 def append_ivf_index(
@@ -521,6 +534,12 @@ def append_ivf_index(
     staging directory could otherwise clobber each other's in-flight
     files (round 11; committed files were always safe, the race was in
     the job-commit protocol)."""
+    _write_ivf_cells(df, centroids, path, emb_col, files_per_cell, "append")
+
+
+def _write_ivf_cells(df, centroids, path, emb_col, files_per_cell, mode) -> None:
+    """The body of :func:`write_ivf_index` (``mode="overwrite"``) and
+    :func:`append_ivf_index` (``mode="append"``)."""
     from semantic_index_spark.locking import index_lock
 
     assigned = ivf_assign(df, centroids, emb_col)
@@ -530,7 +549,7 @@ def append_ivf_index(
             assigned.repartition(
                 max(1, files_per_cell) * max(1, len(centroids)), F.col("_cell"), salt
             )
-            .write.mode("append")
+            .write.mode(mode)
             .partitionBy("_cell")
             .parquet(path)
         )
@@ -837,21 +856,6 @@ def rrf_fuse(
     )
 
 
-def _sq_dist(a, b):
-    # squared L2 — l2_distance's fold without the sqrt (PQ sums SQUARED
-    # subspace distances; identical element order on both engines)
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_train_encode(
     df: DataFrame,
     m_sub: int = 4,
@@ -873,10 +877,10 @@ def pq_train_encode(
     ROUNDED to 1e-6 on both engines so the oracle's unrolled CTE rounds
     re-enter bitwise; assignment tie-breaks to the smallest code.
 
-    Scale shape: the corpus explodes ×m_sub in-JVM, each round is ONE
-    broadcast join against the (m_sub·k)-row codebook + a min_by argmin
-    partial-agg + a (sub, code, dim)-keyed mean; only the m_sub·k·subdim
-    codebook floats ever reach the driver. Returns
+    Scale shape: each round is one narrow pass that encodes every row
+    with ``indexed_np.pq_codes_np`` per Arrow batch, then ONE shuffle for
+    the (sub, code, dim)-keyed mean; only the m_sub·k·subdim codebook
+    floats ever reach the driver. Returns
     ``(codes_df (id, sub, code), codebooks[sub][code] -> list[float])``.
     """
     codebooks = pq_train(
@@ -920,18 +924,16 @@ def pq_train(
     k = min(k, len(init))
 
     for _ in range(iters):
-        # Each round's assignment is the SAME projection expression the
-        # frozen-codebook encoder uses (pq_codes_array over the round's
-        # current codebooks) — one narrow pass over the corpus and ONE
-        # shuffle (the (sub, code, dim) mean), where the former shape
-        # cached the ×m_sub exploded corpus and paid a broadcast join +
-        # two shuffles per round (r13, guide §2.3/§2.4). Argmin formula
-        # and smallest-code tie-break unchanged, so every round's means —
-        # and therefore the trained codebooks — are bit-identical.
+        # one narrow pass per round: the frozen-codebook encoder's codes
+        # (pq_codes_np, computed once per row in their own projection),
+        # then each subspace's (code, subvector) pair for the mean
+        coded = df.select(
+            _pq_codes(codebooks, emb_col).alias("_codes"), F.col(emb_col)
+        )
         parts = F.array(
             *[
                 F.struct(
-                    _pq_sub_code(codebooks, s, subdim, emb_col).alias("code"),
+                    F.col("_codes")[s].alias("code"),
                     F.slice(F.col(emb_col), s * subdim + 1, subdim)
                     .cast("array<double>")
                     .alias("sv"),
@@ -940,7 +942,7 @@ def pq_train(
             ]
         )
         means = (
-            df.select(F.posexplode(parts).alias("sub", "p"))
+            coded.select(F.posexplode(parts).alias("sub", "p"))
             .select("sub", F.col("p.code").alias("code"), F.posexplode("p.sv").alias("dim0", "v"))
             .groupBy("sub", "code", "dim0")
             .agg(F.round(F.avg("v"), 6).alias("m"))
@@ -956,34 +958,16 @@ def pq_train(
     return codebooks
 
 
-def pq_codes_array(codebooks, emb_col: str = "embedding"):
-    """The m_sub PQ codes of one vector as a single ARRAY<INT> projection
-    expression — zero joins, zero shuffles, zero Python (r13 optimization;
-    guide §2.4 "remove shuffles outright"). Per subspace s the k candidate
-    distances are a ``transform`` over the LITERAL codebook (the identical
-    ``_sq_dist`` double fold, element order unchanged, so the distances are
-    bit-identical to the former broadcast-join shape) and the code is
-    ``array_position(dists, array_min(dists)) - 1`` — the FIRST index
-    holding the minimum, i.e. exactly the smallest-code tie-break the
-    former ``min_by(code, struct(d, code))`` aggregate implemented. At
-    100 TB this turns encoding from [explode ×m_sub → broadcast join ×k →
-    full shuffle of m_sub·N rows] into a map-only pass over N rows."""
-    m_sub = len(codebooks)
-    subdim = len(codebooks[0][0])
-    return F.array(
-        *[_pq_sub_code(codebooks, s, subdim, emb_col) for s in range(m_sub)]
+def _pq_codes(codebooks, emb_col: str):
+    """The m_sub PQ codes of each row as one ``array<int>`` column —
+    ``indexed_np.pq_codes_np`` per Arrow batch."""
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    from semantic_index_spark.sources.indexed_np import pq_codes_np
+
+    return _np_column(
+        lambda m: pq_codes_np(m, codebooks), ArrayType(IntegerType()), emb_col
     )
-
-
-def _pq_sub_code(codebooks, s: int, subdim: int, emb_col: str):
-    """Argmin code of subspace ``s`` as one expression — see
-    :func:`pq_codes_array` for the equivalence argument."""
-    sv = F.slice(F.col(emb_col), s * subdim + 1, subdim).cast("array<double>")
-    # one parsed literal, not k·subdim py4j lit() calls (V.lit_double_array;
-    # same IEEE doubles, so distances and codes are bit-identical)
-    cb_s = V.lit_double_array([list(cvec) for cvec in codebooks[s]])
-    dists = F.transform(cb_s, lambda c: _sq_dist(sv, c))
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def pq_encode(
@@ -1001,15 +985,12 @@ def pq_encode(
     that function's final assignment IS this function. Returns
     (id, sub, code) long-form code rows.
 
-    Physical shape (r13): ONE narrow projection — the per-subspace argmin
-    runs inside :func:`pq_codes_array`'s expression tree and ``posexplode``
-    emits the long form. The former shape exploded the corpus ×m_sub,
-    broadcast-joined the codebook and re-aggregated with a full shuffle of
-    m_sub·N rows; values and tie-breaks are unchanged (pytest-locked
-    against the training loop's assignment)."""
+    Physical shape: ONE narrow projection — ``indexed_np.pq_codes_np``
+    (the encoder every table shard runs) per Arrow batch, and
+    ``posexplode`` emits the long form."""
     return df.select(
         F.col(id_col),
-        F.posexplode(pq_codes_array(codebooks, emb_col)).alias("sub", "code"),
+        F.posexplode(_pq_codes(codebooks, emb_col)).alias("sub", "code"),
     )
 
 
@@ -1101,30 +1082,33 @@ def write_ivfpq_index(
     vector are stored — the corpus floats never enter the serving path.
     ``batch_id`` is the ingest epoch (-1 = the base build); see
     :func:`append_ivfpq_index` for why it is a partition column."""
-    # ONE narrow projection computes cell AND codes per row (r13: the former
-    # pq_encode ⋈ cells join re-shuffled the corpus by id just to reunite two
-    # pure functions of the same row — guide §2.4). Column order matches the
-    # former join output: (id, sub, code, _cell, batch_id).
-    rows = (
-        ivf_assign(df, centroids, emb_col)
-        .select(
-            F.col(id_col),
-            F.posexplode(pq_codes_array(codebooks, emb_col)).alias("sub", "code"),
-            F.col("_cell"),
-        )
-        .withColumn("batch_id", F.lit(int(batch_id)))
+    rows = ivf_assign(df, centroids, emb_col).select(
+        F.col(id_col),
+        F.posexplode(_pq_codes(codebooks, emb_col)).alias("sub", "code"),
+        F.col("_cell"),
     )
-    # batch_id=-1 is a BASE build (the re-train rebuild event): it must
-    # truncate the whole path — a dynamic overwrite would leave streamed
-    # batch_id>=0 partitions encoded under the OLD codebooks/centroids in
-    # place, poisoning served candidates. Dynamic overwrite is reserved for
-    # epoch appends, where replacing only the replayed epoch's partitions is
-    # exactly the exactly-once contract.
-    # the layout commit lock serializes concurrent mutators (appends of
-    # DIFFERENT epochs write disjoint partitions, but their jobs share
-    # the target's _temporary staging; a base rebuild racing an append
-    # is a true conflict either way). append_ivfpq_index inherits this
-    # lock by delegation — the lock is NOT reentrant per layout.
+    _write_epoch_layout(
+        rows, path, batch_id, max(1, len(centroids)), F.col("_cell")
+    )
+
+
+def _write_epoch_layout(rows, path: str, batch_id: int, n_parts: int, *keys) -> None:
+    """The shared tail of :func:`write_ivfpq_index` and
+    :func:`write_ivfsq_index`: ``rows`` (id, codes…, ``_cell``) land as
+    ``_cell=<i>/batch_id=<e>/`` partitions, ``repartition(n_parts,
+    *keys)`` first.
+
+    batch_id=-1 is a BASE build (the re-train rebuild event): it must
+    truncate the whole path — a dynamic overwrite would leave streamed
+    batch_id>=0 partitions encoded under the OLD artifacts in place,
+    poisoning served candidates. Dynamic overwrite is reserved for epoch
+    appends, where replacing only the replayed epoch's partitions is
+    exactly the exactly-once contract. The layout commit lock serializes
+    concurrent mutators (appends of DIFFERENT epochs write disjoint
+    partitions, but their jobs share the target's _temporary staging; a
+    base rebuild racing an append is a true conflict either way); the
+    ``append_*`` verbs inherit it by delegation — the lock is NOT
+    reentrant per layout."""
     from semantic_index_spark.locking import index_lock
 
     with index_lock(path):
@@ -1136,7 +1120,8 @@ def write_ivfpq_index(
         if batch_id < 0:
             _clear_ivf_meta(path)  # base rebuild resets epoch history
         (
-            rows.repartition(max(1, len(centroids)), F.col("_cell"))
+            rows.withColumn("batch_id", F.lit(int(batch_id)))
+            .repartition(n_parts, *keys)
             .write.mode("overwrite")
             .option(
                 "partitionOverwriteMode", "dynamic" if batch_id >= 0 else "static"
@@ -1327,42 +1312,22 @@ def sq_encode(
     contract as :func:`pq_encode`): code = clamp(floor((v-lo)/step+0.5),
     0..255) stored SHIFTED by -128 as ``array<tinyint>`` — parquet then
     holds byte arrays, the real 4x memory/IO cut that is this operator's
-    point. The half-up rounding is written as floor(x+0.5) so Spark and
-    the DuckDB oracle run the identical double expression; constant
-    dimensions (step=0) encode to 0. Keeps (id, codes)."""
-    return df.select(
-        F.col(id_col),
-        sq_codes_column(model, emb_col).alias(out_col),
-    )
+    point. The half-up rounding is written as floor(x+0.5) so
+    ``indexed_np.sq_codes_np`` (run per Arrow batch, the encoder every
+    table shard runs) and the DuckDB oracle compute the identical double
+    expression; constant dimensions (step=0) encode to 0. Keeps (id,
+    codes)."""
+    return df.select(F.col(id_col), _sq_codes(model, emb_col).alias(out_col))
 
 
-def sq_codes_column(model: dict, emb_col: str = "embedding"):
-    """The int8 code array of one vector as a single projection expression
-    (the body of :func:`sq_encode`, exposed so callers that already carry
-    other per-row columns — cell assignment, bucket/shard — can compute the
-    codes in the SAME narrow projection instead of re-joining two
-    derivations of one row on the id; r13, guide §2.4)."""
-    lo = V.lit_double_array(model["lo"])
-    step = V.lit_double_array(model["step"])
-    idx = F.sequence(F.lit(0), F.lit(len(model["lo"]) - 1))
-    v = F.col(emb_col)
-    code = F.transform(
-        idx,
-        lambda i: F.when(F.element_at(step, i + 1) == 0, F.lit(0)).otherwise(
-            F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(255),
-                    F.floor(
-                        (v[i].cast("double") - F.element_at(lo, i + 1))
-                        / F.element_at(step, i + 1)
-                        + F.lit(0.5)
-                    ).cast("int"),
-                ),
-            )
-        ),
-    )
-    return F.transform(code, lambda c: (c - 128).cast("tinyint"))
+def _sq_codes(model: dict, emb_col: str):
+    """The int8 code array of each row as one ``array<tinyint>`` column —
+    ``indexed_np.sq_codes_np`` per Arrow batch."""
+    from pyspark.sql.types import ArrayType, ByteType
+
+    from semantic_index_spark.sources.indexed_np import sq_codes_np
+
+    return _np_column(lambda m: sq_codes_np(m, model), ArrayType(ByteType()), emb_col)
 
 
 def sq_topk_rescore(
@@ -1390,14 +1355,11 @@ def sq_topk_rescore(
     step = V.lit_double_array(model["step"])
     q = V.lit_double_array(list(query))
     c = F.col(codes_col)
-    # zip_with chain so the codes array is referenced ONCE (r13): the former
-    # transform-over-indices referenced c[i] per dimension, and when the
-    # caller composes encode+rescore in one plan Catalyst inlines the whole
-    # sq_encode expression into EVERY c[i] — a d-fold evaluation blowup in
-    # the interpreted HOF path (measured 4.6 s -> the candidate stage was
-    # ~d× the work it needed). Per-element term keeps the identical double
-    # op order q[i]*(lo[i]+step[i]*(code[i]+128.0)) and the fold keeps
-    # ascending-index order, so the ADC score is bit-identical.
+    # zip_with chain so the codes array is referenced ONCE: a
+    # transform-over-indices would read c[i] once per dimension. Per-element
+    # term keeps the double op order q[i]*(lo[i]+step[i]*(code[i]+128.0))
+    # and the fold keeps ascending-index order, so the ADC score matches
+    # the oracle bit for bit.
     inner = F.zip_with(
         step, c, lambda s, ci: s * (ci.cast("double") + F.lit(128.0))
     )
@@ -1526,45 +1488,14 @@ def write_ivfsq_index(
     (-1 = the base build); see :func:`append_ivfsq_index` for why it is a
     partition column — the same exactly-once recipe as
     :func:`write_ivfpq_index`."""
-    # ONE narrow projection computes cell AND codes per row (r13: the former
-    # sq_encode ⋈ assigned join re-shuffled the batch by id just to reunite
-    # two pure functions of the same row — guide §2.4). Column order matches
-    # the former join output: (id, codes, _cell, batch_id).
-    codes = (
-        ivf_assign(df, centroids, emb_col)
-        .select(
-            F.col(id_col),
-            sq_codes_column(model, emb_col).alias("codes"),
-            F.col("_cell"),
-        )
-        .withColumn("batch_id", F.lit(int(batch_id)))
+    codes = ivf_assign(df, centroids, emb_col).select(
+        F.col(id_col), _sq_codes(model, emb_col).alias("codes"), F.col("_cell")
     )
     salt = F.pmod(F.abs(F.hash(F.col(id_col))), F.lit(max(1, files_per_cell)))
-    # same base-vs-epoch overwrite split as write_ivfpq_index: a base build
-    # (batch_id=-1, the quantizer re-train event) truncates the path so no
-    # stale epoch partitions encoded under the old quantizer survive;
-    # dynamic overwrite applies only to epoch appends (replay idempotence).
-    # layout commit lock: same serialization contract as write_ivfpq_index
-    # (append_ivfsq_index inherits it by delegation)
-    from semantic_index_spark.locking import index_lock
-
-    with index_lock(path):
-        # replay ledger: folded epochs skip (see write_ivfpq_index)
-        if batch_id >= 0 and _epoch_folded(path, batch_id):
-            return
-        if batch_id < 0:
-            _clear_ivf_meta(path)  # base rebuild resets epoch history
-        (
-            codes.repartition(
-                max(1, files_per_cell) * max(1, len(centroids)), F.col("_cell"), salt
-            )
-            .write.mode("overwrite")
-            .option(
-                "partitionOverwriteMode", "dynamic" if batch_id >= 0 else "static"
-            )
-            .partitionBy("_cell", "batch_id")
-            .parquet(path)
-        )
+    _write_epoch_layout(
+        codes, path, batch_id,
+        max(1, files_per_cell) * max(1, len(centroids)), F.col("_cell"), salt,
+    )
 
 
 def append_ivfsq_index(

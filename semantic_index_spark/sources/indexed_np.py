@@ -1,29 +1,34 @@
-"""The co-committed index shard encoders: numpy/pyarrow only, no
-SparkSession. Every table shard on disk comes from here — the Spark
-verbs (attach, merge, OPTIMIZE) run :func:`write_bucket_shards` inside one
-``groupBy(part).applyInArrow`` task per bucket
-(``indexed._write_shards``), and the SQL front door's ``INSERT INTO``
-commit worker calls it directly. Both also write their bucket data
-files through :func:`_write_parquet`, the one fixed-name writer with one
-dictionary policy. One encoder per kind:
+"""The index encoders: numpy/pyarrow only, no SparkSession. Every
+IVF-SQ8 and IVF-PQ code comes from here, for table shards and
+standalone layouts alike:
 
-- IVF cell assignment, SQ8 codes and PQ codes reproduce the standalone
-  Spark expressions (``similarity.ivf_assign`` / ``sq_encode`` /
-  ``pq_encode``) that the query rows and their DuckDB oracles use —
-  dots and squared distances are SEQUENTIAL per-dimension folds
-  (``acc = (acc + x_d * y_d)``, ``functions.vector.dot``'s
-  ``F.aggregate`` left fold; a BLAS ``matmul`` would reassociate the
-  sum and could flip a near-tie cell), ``ivf_assign``'s
-  ``method="auto"`` split is kept (k ≤ 16 → fold dots + first-max
-  argmax, k > 16 → float64 ``matmul`` + argmax), SQ8 runs the identical
-  clamped ``floor((v - lo)/step + 0.5)`` double arithmetic, and PQ takes
-  the first minimum (= smallest code) over folded subspace distances;
-- HNSW shards call the pure-Python ``hnsw._build_shard`` the standalone
-  ``build_hnsw`` task calls (the graph is a function of the id set, not
-  insertion order).
+- table shards: the Spark verbs (attach, merge, OPTIMIZE) run
+  :func:`write_bucket_shards` inside one ``groupBy(part).applyInArrow``
+  task per bucket (``indexed._write_shards``), and the SQL front door's
+  ``INSERT INTO`` commit worker calls it directly. Both also write their
+  bucket data files through :func:`_write_parquet`, the one fixed-name
+  writer with one dictionary policy;
+- standalone rows: ``similarity.sq_encode`` / ``pq_encode``, the
+  ``write_ivfsq_index`` / ``write_ivfpq_index`` layouts, each of
+  ``pq_train``'s Lloyd rounds and ``ivf_assign`` for k > 16 run
+  :func:`sq_codes_np` / :func:`pq_codes_np` / :func:`ivf_cells_np` per
+  Arrow batch (``similarity._np_column``).
 
-That parity with the standalone expressions is the one lockstep left;
-pytest locks it (``test_table_index_codes_match_standalone_encoders``).
+Fold dots and squared distances are SEQUENTIAL per-dimension sums
+(``acc = (acc + x_d * y_d)``, the left-fold order of
+``functions.vector.dot``'s ``F.aggregate``; a BLAS ``matmul`` would
+reassociate the sum and could flip a near tie); SQ8 runs the clamped
+``floor((v - lo)/step + 0.5)`` double arithmetic the oracles run, and PQ
+takes the first minimum (= smallest code), the oracles' ``ORDER BY
+distance, code`` tie-break. HNSW shards call the pure-Python
+``hnsw._build_shard`` the standalone ``build_hnsw`` task calls (the
+graph is a function of the id set, not insertion order).
+
+One encoder stays mirrored: IVF cells for k ≤ 16 are also a JVM dot fold
+in ``similarity.ivf_assign`` (the ``ivf_silhouette`` row keeps Python
+out of its plan, and DuckDB's ``_duck_ivf_cell`` mirrors it).
+:func:`ivf_cells_np` reproduces that fold bit for bit, and pytest locks
+the pair (``test_table_index_codes_match_standalone_encoders``).
 """
 
 from __future__ import annotations
@@ -53,7 +58,7 @@ def _fold_dot(mat, vec):
 
 
 def _fold_sqdist(mat, vec):
-    """Sequential fold of sum((x-y)^2) — ``similarity._sq_dist``."""
+    """Sequential fold of sum((x-y)^2), the PQ subspace distance."""
     import numpy as np
 
     acc = np.zeros(mat.shape[0], dtype=np.float64)
@@ -64,10 +69,11 @@ def _fold_sqdist(mat, vec):
 
 
 def ivf_cells_np(mat, centroids):
-    """``ivf_assign(method="auto")`` in numpy: k ≤ 16 mirrors the expr
-    path (per-centroid fold dots, first-max argmax == array_position of
-    array_max), k > 16 mirrors the arrow path (float64 matmul + argmax
-    — that path's OWN formula, so parity holds per k regime)."""
+    """IVF cell = index of the max-dot centroid. k ≤ 16 mirrors
+    ``similarity.ivf_assign``'s JVM fold (per-centroid fold dots,
+    first-max argmax == array_position of array_max); k > 16 is a
+    float64 matmul + argmax, which ``ivf_assign`` runs through this
+    function."""
     import numpy as np
 
     k = len(centroids)
@@ -80,9 +86,9 @@ def ivf_cells_np(mat, centroids):
 
 
 def sq_codes_np(mat, model):
-    """``similarity.sq_encode`` in numpy: code = clamp(floor((v - lo) /
-    step + 0.5), 0..255) - 128 as int8; step == 0 dims encode to 0
-    (stored -128) — the identical double expression."""
+    """SQ8 codes: code = clamp(floor((v - lo) / step + 0.5), 0..255) -
+    128 as int8; step == 0 dims encode to 0 (stored -128) — the double
+    expression the DuckDB oracle runs. (n, d) int8."""
     import numpy as np
 
     lo = np.asarray(model["lo"], dtype=np.float64)
@@ -95,10 +101,10 @@ def sq_codes_np(mat, model):
 
 
 def pq_codes_np(mat, codebooks):
-    """``similarity.pq_encode`` in numpy: per subspace, the argmin over
-    codebook entries of the sequentially-folded squared distance;
-    ``np.argmin`` takes the FIRST minimum = the smallest code, the
-    ``min_by(struct(d, code))`` tie-break. Returns (n, m_sub) int32."""
+    """PQ codes: per subspace, the argmin over codebook entries of the
+    sequentially-folded squared distance; ``np.argmin`` takes the FIRST
+    minimum = the smallest code, the DuckDB oracle's ``ORDER BY
+    distance, code`` tie-break. Returns (n, m_sub) int32."""
     import numpy as np
 
     m_sub = len(codebooks)
@@ -118,12 +124,15 @@ def pq_codes_np(mat, codebooks):
     return out
 
 
-def _emb_matrix(tbl, emb_col):
-    """(n, d) float64 matrix from an arrow list column — float32 source
-    columns widen exactly, matching Spark's ``cast("array<double>")``."""
+def _emb_matrix(col):
+    """(n, d) float64 matrix from an arrow list column (chunked or not)
+    — float32 source columns widen exactly, matching Spark's
+    ``cast("array<double>")``."""
     import numpy as np
+    import pyarrow as pa
 
-    col = tbl.column(emb_col).combine_chunks()
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return flat.astype(np.float64).reshape(len(col), -1)
 
@@ -192,7 +201,7 @@ def write_index_shard_np(
     import pyarrow as pa
 
     kind = params.get("kind", "hnsw")
-    mat = _emb_matrix(tbl, params["emb_col"])
+    mat = _emb_matrix(tbl.column(params["emb_col"]))
     ids = tbl.column(key)
     if kind == "hnsw":
         from semantic_index_spark.operators.hnsw import _build_shard

@@ -228,7 +228,6 @@ def _helper_frames(spark, sf_dir):
     )
     model = S.sq_train(vecs)
     codes = S.sq_encode(vecs, model)
-    codebooks = [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [2.0, -1.0]]]
     col = lambda c: vecs.select(c)  # noqa: E731
     txt = lambda c: docs.select(c)  # noqa: E731
     return {
@@ -251,11 +250,7 @@ def _helper_frames(spark, sf_dir):
         "relational.array_hof": R.array_hof(spark, sf_dir),
         "relational.session_paths": R.session_paths(spark, sf_dir),
         "relational.map_functions": R.map_functions(spark, sf_dir),
-        # pq_train's rounds build the same _pq_sub_code lambdas as pq_encode
-        "similarity.pq_train": S.pq_encode(vecs, codebooks),
-        "similarity.pq_codes_array": col(S.pq_codes_array(codebooks)),
         "similarity.mrl_truncate": S.mrl_truncate(vecs, 2),
-        "similarity.sq_codes_column": col(S.sq_codes_column(model)),
         "similarity.sq_topk_rescore": S.sq_topk_rescore(codes, vecs, model, [1.0, 0.0, 0.0, 1.0]),
         "similarity.late_interaction_topk": S.late_interaction_topk(
             vecs.withColumnRenamed("vec_id", "doc_id"), [[1.0, 0.0, 0.0, 0.0]]

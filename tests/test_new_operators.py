@@ -2249,6 +2249,33 @@ def test_pq_encode_shape_and_determinism(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, codes2.collect()))
 
 
+def test_pq_tie_break_takes_the_smallest_code(spark, tmp_path):
+    """Codebook entries duplicated at codes 1 and 3 (subspace 0) and 0
+    and 1 (subspace 1) tie exactly on every vector nearest them: both
+    ``pq_encode`` and a ``write_ivfpq_index`` read-back take the smaller
+    code — ``pq_codes_np``'s first minimum and the DuckDB oracle's
+    ``ORDER BY distance, code``."""
+    import numpy as np
+
+    from semantic_index_spark.sources.indexed_np import pq_codes_np
+
+    cb = [
+        [[0.0, 0.0], [1.0, 1.0], [-1.0, 2.0], [1.0, 1.0]],
+        [[5.0, 5.0], [5.0, 5.0], [0.0, 0.0], [-3.0, 1.0]],
+    ]
+    vecs = [[1.0 + 0.01 * i, 1.0, 5.0, 5.0 - 0.01 * i] for i in range(6)]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    want = sorted((i, s, c) for i in range(6) for s, c in ((0, 1), (1, 0)))
+    assert pq_codes_np(np.asarray(vecs), cb).tolist() == [[1, 0]] * 6
+    assert sorted(map(tuple, S.pq_encode(df, cb).collect())) == want
+    idx = str(tmp_path / "ivfpq_ties")
+    S.write_ivfpq_index(df, cb, S.make_centroids(2, 4, seed=5), idx)
+    got = spark.read.parquet(idx).select("vec_id", "sub", "code").collect()
+    assert sorted(map(tuple, got)) == want
+
+
 def test_pq_topk_finds_query_cluster(spark):
     df = _pq_fixture(spark)
     codes, cb = S.pq_train_encode(df, m_sub=2, k=4, iters=2)
