@@ -89,3 +89,65 @@ def index_lock(path: str, timeout: float = 300.0):
     — wrap the call in ``sources.versioned.retry_commit`` only for
     conflict-style retries, not timeouts."""
     return flock_mutex(path.rstrip("/") + ".__lock__", timeout=timeout)
+
+
+def _swap_paths(path: str, tag: str) -> tuple:
+    """The two siblings of a layout swap: ``<path>.__<tag>_tmp__`` holds
+    the layout being written, ``<path>.__<tag>_old__`` the one moved
+    aside."""
+    base = path.rstrip("/")
+    return f"{base}.__{tag}_tmp__", f"{base}.__{tag}_old__"
+
+
+def _swap_in(path: str, tag: str, write) -> None:
+    """Replace the layout at ``path`` so that a crash at any point leaves
+    a complete layout on disk; the caller holds ``index_lock(path)``.
+    Debris of an earlier crash goes first, ``write(tmp)`` writes the
+    whole new layout into the tmp sibling (its completeness marker last),
+    then two renames swap it in: the old layout aside, tmp into place.
+    :func:`_recover_swap` repairs the one-rename window."""
+    import shutil
+
+    tmp, old = _swap_paths(path, tag)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    write(tmp)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover_swap(path: str, tag: str, what: str, tmp_complete, old_complete) -> str:
+    """Put a complete layout back at ``path`` after a crash inside
+    :func:`_swap_in`, under the layout commit lock. Three states:
+
+      * ``path`` exists: the swap never started or completed; tmp/old
+        siblings are debris and go. Returns ``"ok"``.
+      * ``path`` missing and ``tmp_complete(tmp)``: the crash hit between
+        the renames with the new layout fully written; finish the swap
+        and drop the old one. Returns ``"recovered-new"``.
+      * ``path`` missing and ``old_complete(old)``: the old layout moved
+        aside but the new one never landed; rename it back. Returns
+        ``"recovered-old"``.
+
+    Raises ``FileNotFoundError`` when no complete layout exists."""
+    import shutil
+
+    tmp, old = _swap_paths(path, tag)
+    with index_lock(path):
+        if os.path.isdir(path):
+            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
+            return "ok"
+        if os.path.isdir(tmp) and tmp_complete(tmp):
+            os.rename(tmp, path)
+            shutil.rmtree(old, ignore_errors=True)
+            return "recovered-new"
+        if os.path.isdir(old) and old_complete(old):
+            os.rename(old, path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            return "recovered-old"
+        raise FileNotFoundError(
+            f"no complete {what} layout found at {path} (nor in its "
+            f"{tag} swap directories) — nothing to recover"
+        )

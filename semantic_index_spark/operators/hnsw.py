@@ -6,25 +6,32 @@ the one mainstream ANN family the repo did not yet cover (IVF/PQ/SQ8/LSH
 live in ``operators/similarity.py``). The design is the standard
 distributed-ANN serving shape (Milvus/Vespa segments): the corpus is hash-
 sharded, each shard builds an INDEPENDENT small-world graph inside one
-``applyInPandas`` task, and a query scatter-gathers — every shard answers
+``applyInArrow`` task, and a query scatter-gathers — every shard answers
 from its own graph in parallel and a bounded global top-k merge
 (``TakeOrderedAndProject``) picks the winners. Nothing about a shard's
 graph depends on any other shard, so build parallelism, incremental
 re-shard, and query fan-out all come for free from Spark's partitioning.
 
+This module owns the shard row format, :data:`SHARD_SCHEMA`: one row per
+node. :func:`_graph_rows` is its one writer and :func:`_graph_state` its
+one parser. Build, append and the co-committed table shards
+(``indexed_np``) are one operation, :func:`_grow`: insert new ids into a
+graph that is empty or was read back from disk. Every serve runs one
+shard-search task, :func:`_search_task`.
+
 Scale notes (100 TB):
   * build: one graph per shard, each O(n_shard · ef_c · M) — pick
     ``n_shards`` so a shard's vectors + adjacency fit one executor's
     memory (the same sizing rule as IVF ``files_per_cell``). Shards never
-    co-reside; ``applyInPandas`` streams one group per task.
+    co-reside; ``applyInArrow`` streams one group per task.
   * query: cost is n_shards parallel beam searches of O(ef · M · log n)
     plus a k-row-per-shard merge — per-query latency is flat in corpus
     size at fixed shard size, the property IVF probing cannot offer when
     cells skew.
-  * storage: one row per node ``(shard, id, embedding, max_level,
-    neighbors[layer][...])`` written ``partitionBy(_shard)`` so a search
-    scans shards in parallel and a single-shard rebuild rewrites one
-    directory.
+  * storage: one row per node ``(id, embedding, max_level,
+    neighbors[layer][...], shard)`` written ``partitionBy(shard)`` so a
+    search scans shards in parallel and a single-shard rebuild rewrites
+    one directory.
 
 Determinism contract (what the oracle + tests rely on):
   * shard assignment ``pmod(xxhash64(id), n_shards)`` — engine-stable;
@@ -59,13 +66,16 @@ from pyspark.sql.types import (
 
 from semantic_index_spark.session import collect_bounded, pin
 
-_INDEX_SCHEMA = StructType(
+#: The HNSW shard row format: one row per node, ``neighbors[l]`` its
+#: layer-l adjacency. ``shard`` is the partition column of the
+#: ``shard=<b>`` layout (a table shard's file leaves it to its directory).
+SHARD_SCHEMA = StructType(
     [
-        StructField("shard", IntegerType()),
         StructField("id", LongType()),
         StructField("embedding", ArrayType(DoubleType())),
         StructField("max_level", IntegerType()),
         StructField("neighbors", ArrayType(ArrayType(LongType()))),
+        StructField("shard", IntegerType()),
     ]
 )
 
@@ -183,25 +193,6 @@ def _insert_nodes(adj, levels, vecs, new_ids, m, ef_construction):
             entry_id, entry_level = nid, lvl
 
 
-def _build_shard(ids, vec_mat, m, ef_construction, seed):
-    """Insert nodes in ascending-id order with the standard HNSW procedure;
-    returns ({id: [layer0_neighbors, ...]}, {id: level}). The stored graph
-    is PURE HNSW adjacency — the connectivity chain is applied at search
-    time (see :func:`_chain_layer0`), never persisted, so incremental
-    appends resume from exactly the state a from-scratch build had."""
-    m_l = 1.0 / math.log(m)
-    order = sorted(int(i) for i in ids)
-    vecs = {int(ids[i]): vec_mat[i] for i in range(len(ids))}
-    levels = {int(i): _node_level(int(i), seed, m_l) for i in ids}
-    adj: list[dict] = [{}]
-    _insert_nodes(adj, levels, vecs, order, m, ef_construction)
-    out = {}
-    for nid in order:
-        lvl = levels[nid]
-        out[nid] = [list(adj[layer].get(nid, [])) for layer in range(lvl + 1)]
-    return out, levels
-
-
 def _chain_layer0(adj0, ids):
     """Connectivity guarantee at SEARCH time: chain id-adjacent nodes at
     layer 0 so the base layer is ONE component — exhaustive search is
@@ -217,6 +208,114 @@ def _chain_layer0(adj0, ids):
             lb.append(a)
 
 
+def _graph_rows(vecs, levels, adj, shard=None):
+    """Graph state → its :data:`SHARD_SCHEMA` Arrow rows, ascending id:
+    the one writer of the format. The stored graph is PURE HNSW adjacency
+    (the layer-0 chain is applied at search time, see
+    :func:`_chain_layer0`), so an append resumes from exactly the state a
+    from-scratch build had. ``shard=None`` leaves the partition column
+    off."""
+    import pyarrow as pa
+
+    ids = sorted(vecs)
+    cols = {
+        "id": pa.array(ids, pa.int64()),
+        "embedding": pa.array([vecs[i] for i in ids], pa.list_(pa.float64())),
+        "max_level": pa.array([levels[i] for i in ids], pa.int32()),
+        "neighbors": pa.array(
+            [[adj[layer].get(i, []) for layer in range(levels[i] + 1)] for i in ids],
+            pa.list_(pa.list_(pa.int64())),
+        ),
+    }
+    if shard is not None:
+        cols["shard"] = pa.array([shard] * len(ids), pa.int32())
+    return pa.table(cols)
+
+
+def _graph_state(tbl):
+    """:data:`SHARD_SCHEMA` Arrow rows → graph state ``(vecs, levels,
+    adj)``: ``{id: vector}``, ``{id: level}`` and one ``{id: [nbr]}`` dict
+    per layer. The one parser of the format."""
+    from semantic_index_spark.sources.indexed_np import _emb_matrix
+
+    ids = tbl.column("id").to_pylist()
+    vecs = dict(zip(ids, _emb_matrix(tbl.column("embedding"))))
+    levels = dict(zip(ids, tbl.column("max_level").to_pylist()))
+    adj: list[dict] = [{}]
+    for node, layers in zip(ids, tbl.column("neighbors").to_pylist()):
+        for layer, lst in enumerate(layers):
+            while len(adj) <= layer:
+                adj.append({})
+            adj[layer][node] = lst
+    return vecs, levels, adj
+
+
+def _grow(old, ids, mat, m, ef_construction, seed, shard=None):
+    """Insert ``ids`` (Arrow column; vectors the rows of ``mat``) into the
+    graph whose rows are ``old`` (None: an empty graph) in ascending-id
+    order, and return the grown graph's rows (:func:`_graph_rows`). Build,
+    append and every co-committed table shard run this one operation; the
+    entry point derives from the levels, so resuming from stored rows
+    replays the insertion sequence a from-scratch build would have run.
+    An id already in the graph, or given twice, is an error."""
+    if old is not None and old.num_rows:
+        vecs, levels, adj = _graph_state(old)
+    else:
+        vecs, levels, adj = {}, {}, [{}]
+    new_ids = ids.to_pylist()
+    dup = set(vecs) & set(new_ids)
+    if dup or len(new_ids) != len(set(new_ids)):
+        raise ValueError(
+            f"duplicate ids in HNSW shard {shard}: {sorted(dup)[:5]}"
+        )
+    m_l = 1.0 / math.log(m)
+    vecs.update(zip(new_ids, mat))
+    levels.update((i, _node_level(i, seed, m_l)) for i in new_ids)
+    _insert_nodes(adj, levels, vecs, sorted(new_ids), m, ef_construction)
+    return _graph_rows(vecs, levels, adj, shard)
+
+
+def _grow_task(m, ef_construction, seed):
+    """The ``groupBy("shard").applyInArrow`` body of build and append: a
+    shard's stored rows plus its new ones (null ``max_level``) in, the
+    grown graph's :data:`SHARD_SCHEMA` rows out."""
+
+    def grow(tbl):
+        import pyarrow.compute as pc
+
+        from semantic_index_spark.sources.indexed_np import _emb_matrix
+
+        new = pc.is_null(tbl.column("max_level"))
+        fresh = tbl.filter(new)
+        return _grow(
+            tbl.filter(pc.invert(new)),
+            fresh.column("id"),
+            _emb_matrix(fresh.column("embedding")),
+            m, ef_construction, seed,
+            shard=tbl.column("shard")[0].as_py(),
+        )
+
+    return grow
+
+
+def _new_rows(df: DataFrame, id_col: str, emb_col: str, n_shards: int) -> DataFrame:
+    """``df``'s vectors as :data:`SHARD_SCHEMA` rows not yet in a graph
+    (null ``max_level``), each in its hash shard."""
+    return df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(emb_col).cast("array<double>").alias("embedding"),
+        F.lit(None).cast("int").alias("max_level"),
+        F.lit(None).cast("array<array<long>>").alias("neighbors"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
+    )
+
+
+def _read_layout(spark: SparkSession, path: str) -> DataFrame:
+    """A persisted layout's rows, read with the format's schema (no
+    footer-inference job)."""
+    return spark.read.schema(SHARD_SCHEMA).parquet(path)
+
+
 def build_hnsw(
     df: DataFrame,
     n_shards: int = 4,
@@ -227,36 +326,13 @@ def build_hnsw(
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Build the sharded index: one independent HNSW graph per hash shard,
-    each inside a single ``applyInPandas`` task. Output schema:
-    ``(shard, id, embedding, max_level, neighbors array<array<long>>)``
-    with ``neighbors[l]`` the layer-l adjacency of the node."""
-
-    def _build(pdf):
-        import numpy as np
-        import pandas as pd
-
-        shard = int(pdf["shard"].iloc[0])
-        ids = pdf["id"].to_numpy()
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-        adj, levels = _build_shard(ids, mat, m, ef_construction, seed)
-        vecs = {int(ids[i]): pdf["emb"].iloc[i] for i in range(len(ids))}
-        rows = sorted(adj)
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(rows),
-                "id": rows,
-                "embedding": [list(map(float, vecs[i])) for i in rows],
-                "max_level": [levels[i] for i in rows],
-                "neighbors": [adj[i] for i in rows],
-            }
-        )
-
-    prepared = df.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-        F.col(id_col).cast("long").alias("id"),
-        F.col(emb_col).cast("array<double>").alias("emb"),
+    each grown from empty inside a single ``applyInArrow`` task. Output
+    schema: :data:`SHARD_SCHEMA`, ``(id, embedding, max_level, neighbors
+    array<array<long>>, shard)`` with ``neighbors[l]`` the layer-l
+    adjacency of the node."""
+    return _new_rows(df, id_col, emb_col, n_shards).groupBy("shard").applyInArrow(
+        _grow_task(m, ef_construction, seed), SHARD_SCHEMA
     )
-    return prepared.groupBy("shard").applyInPandas(_build, _INDEX_SCHEMA)
 
 
 def _meta_path(path: str) -> str:
@@ -337,7 +413,8 @@ def append_hnsw_index(
     read back ONLY those shards' graphs (planning-time partition pruning),
     resume the standard insertion procedure inside each (the stored graph
     is pure adjacency and the entry point is derivable, so insertion
-    continues from exactly the state a from-scratch build had), and
+    continues from exactly the state a from-scratch build had — build and
+    append are the same :func:`_grow` task), and
     rewrite just the affected shard directories with DYNAMIC partition
     overwrite — untouched shards' files are never listed, read, or
     replaced. Because a build inserts in ascending-id order, appending a
@@ -371,89 +448,21 @@ def append_hnsw_index(
 
 def _append_hnsw_locked(new_df, path, id_col, emb_col, epoch_id):
     import json
-    import math as _math
 
     with open(_meta_path(path)) as f:
         meta = json.load(f)
     if epoch_id is not None and epoch_id in meta.get("applied_epochs", []):
         return  # replayed micro-batch: already folded into the graph
-    n_shards, m = meta["n_shards"], meta["m"]
-    ef_construction, seed = meta["ef_construction"], meta["seed"]
-    spark = new_df.sparkSession
-
-    prepared = new_df.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-        F.col(id_col).cast("long").alias("id"),
-        F.col(emb_col).cast("array<double>").alias("emb"),
-    )
-    affected = sorted(r["shard"] for r in prepared.select("shard").distinct().collect())
+    fresh = _new_rows(new_df, id_col, emb_col, meta["n_shards"])
+    affected = sorted(r["shard"] for r in fresh.select("shard").distinct().collect())
     if not affected:
         return
-    existing = (
-        spark.read.parquet(path)
-        .filter(F.col("shard").isin(affected))
-        .select(
-            "shard",
-            "id",
-            F.col("embedding").alias("emb"),
-            "max_level",
-            "neighbors",
-        )
+    existing = _read_layout(new_df.sparkSession, path).filter(
+        F.col("shard").isin(affected)
     )
-    combined = existing.unionByName(
-        prepared.select(
-            "shard",
-            "id",
-            "emb",
-            F.lit(None).cast("int").alias("max_level"),
-            F.lit(None).cast("array<array<long>>").alias("neighbors"),
-        )
+    rebuilt = existing.unionByName(fresh).groupBy("shard").applyInArrow(
+        _grow_task(meta["m"], meta["ef_construction"], meta["seed"]), SHARD_SCHEMA
     )
-
-    def _resume(pdf):
-        import numpy as np
-        import pandas as pd
-
-        shard = int(pdf["shard"].iloc[0])
-        is_new = pdf["max_level"].isna()
-        old, new = pdf[~is_new], pdf[is_new]
-        old_ids = {int(i) for i in old["id"]}
-        new_ids = sorted(int(i) for i in new["id"])
-        dup = old_ids & set(new_ids)
-        if dup or len(new_ids) != len(set(new_ids)):
-            raise ValueError(
-                f"append_hnsw_index: duplicate ids in shard {shard}: "
-                f"{sorted(dup)[:5]}"
-            )
-        m_l = 1.0 / _math.log(m)
-        vecs = {
-            int(pdf["id"].iloc[i]): np.asarray(pdf["emb"].iloc[i], dtype=np.float64)
-            for i in range(len(pdf))
-        }
-        levels = {i: _node_level(i, seed, m_l) for i in vecs}
-        adj: list[dict] = [{}]
-        for i in range(len(old)):
-            node = int(old["id"].iloc[i])
-            for layer, lst in enumerate(old["neighbors"].iloc[i]):
-                while len(adj) <= layer:
-                    adj.append({})
-                adj[layer][node] = [int(x) for x in lst]
-        _insert_nodes(adj, levels, vecs, new_ids, m, ef_construction)
-        rows = sorted(vecs)
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(rows),
-                "id": rows,
-                "embedding": [list(map(float, vecs[i])) for i in rows],
-                "max_level": [levels[i] for i in rows],
-                "neighbors": [
-                    [list(adj[layer].get(i, [])) for layer in range(levels[i] + 1)]
-                    for i in rows
-                ],
-            }
-        )
-
-    rebuilt = combined.groupBy("shard").applyInPandas(_resume, _INDEX_SCHEMA)
     (
         rebuilt.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -466,33 +475,6 @@ def _append_hnsw_locked(new_df, path, id_col, emb_col, epoch_id):
         # error rather than a silent double-insert
         meta.setdefault("applied_epochs", []).append(int(epoch_id))
         _write_meta(path, meta)
-
-
-def _load_shard(pdf):
-    """Reconstruct one shard's in-memory search state from its stored
-    rows: (vecs, adj_by_layer, entry_point, top_layer). The layer-0
-    connectivity chain is applied here (never persisted)."""
-    import numpy as np
-
-    ids = pdf["id"].to_numpy()
-    vecs = {
-        int(ids[i]): np.asarray(pdf["embedding"].iloc[i], dtype=np.float64)
-        for i in range(len(ids))
-    }
-    levels = pdf["max_level"].to_numpy()
-    nbrs = pdf["neighbors"]
-    adj_by_layer: list[dict] = [{}]
-    for i in range(len(ids)):
-        node = int(ids[i])
-        for layer, lst in enumerate(nbrs.iloc[i]):
-            while len(adj_by_layer) <= layer:
-                adj_by_layer.append({})
-            adj_by_layer[layer][node] = [int(x) for x in lst]
-    _chain_layer0(adj_by_layer[0], ids)
-    # entry point: max level, then min id — derivable, not stored
-    top = min(int(levels.max()), len(adj_by_layer) - 1)
-    ep = min(int(ids[i]) for i in range(len(ids)) if levels[i] >= top)
-    return vecs, adj_by_layer, ep, top
 
 
 def _query_shard(vecs, adj_by_layer, ep0, top, q, k, ef, allowed=None, blocked=None):
@@ -531,10 +513,65 @@ def _query_shard(vecs, adj_by_layer, ep0, top, q, k, ef, allowed=None, blocked=N
     return out
 
 
-def _search_shard_pdf(pdf, q, k, ef, blocked=None):
-    """Search ONE shard's graph for one query; returns [(id, score)]."""
-    vecs, adj_by_layer, ep, top = _load_shard(pdf)
-    return _query_shard(vecs, adj_by_layer, ep, top, q, k, ef, blocked=blocked)
+def _shipped(sc, value, broadcast: bool):
+    """A getter for ``value`` on the executors: through a broadcast (one
+    copy per executor) or in the task closure."""
+    if broadcast:
+        b = sc.broadcast(value)
+        return lambda: b.value
+    return lambda: value
+
+
+def _search_task(
+    index: DataFrame,
+    panel: list,
+    k: int,
+    ef: "int | None",
+    allowed: "set | None" = None,
+    blocked: "set | None" = None,
+    q_field: StructField = StructField("q_id", IntegerType()),
+) -> DataFrame:
+    """The one shard-search task behind every serve: a
+    ``groupBy("shard").applyInArrow`` that loads each shard's graph once
+    (:func:`_graph_state` plus the layer-0 chain) and answers every
+    ``(q_id, vector)`` of ``panel`` from it. Only ``allowed`` ids rank
+    (when given) and ``blocked`` ids never do; both stay routing
+    waypoints. Returns each shard's top-k per query as ``(q_field,
+    vec_id, score)``. One query rides the task closure; a panel of
+    several, and the id sets, ship as broadcasts."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    sc = index.sparkSession.sparkContext
+    queries = _shipped(sc, panel, len(panel) > 1)
+    ok = _shipped(sc, allowed, allowed is not None)
+    no = _shipped(sc, blocked, bool(blocked))
+    schema = StructType(
+        [q_field, StructField("vec_id", LongType()), StructField("score", DoubleType())]
+    )
+    arrow_schema = to_arrow_schema(schema)
+
+    def search(tbl):
+        import numpy as np
+        import pyarrow as pa
+
+        vecs, levels, adj = _graph_state(tbl)
+        _chain_layer0(adj[0], vecs)
+        # entry point: max level, then min id — derivable, not stored
+        top = min(max(levels.values()), len(adj) - 1)
+        ep = min(i for i, lv in levels.items() if lv >= top)
+        allowed_ids, blocked_ids = ok(), no()
+        out = ([], [], [])
+        for qid, qv in queries():
+            q = np.asarray(qv, dtype=np.float64)
+            for i, s in _query_shard(
+                vecs, adj, ep, top, q, k, ef, allowed_ids, blocked_ids
+            ):
+                out[0].append(qid)
+                out[1].append(i)
+                out[2].append(s)
+        return pa.Table.from_pydict(dict(zip(arrow_schema.names, out)), arrow_schema)
+
+    return index.groupBy("shard").applyInArrow(search, schema)
 
 
 def hnsw_topk(
@@ -549,31 +586,12 @@ def hnsw_topk(
     dot scores, and a global ``orderBy(score desc, id).limit(k)`` merge
     (``TakeOrderedAndProject`` over n_shards·k rows) picks the answer.
     Columns: ``(vec_id, score)`` — same contract as ``similarity.topk``."""
-    import numpy as np
-    import pandas as pd
-
-    qv = [float(x) for x in query]
-    out_schema = StructType(
-        [StructField("vec_id", LongType()), StructField("score", DoubleType())]
+    per_shard = _search_task(
+        index, [(0, [float(x) for x in query])], k, ef, blocked=blocked
     )
-
-    spark = index.sparkSession
-    bblocked = spark.sparkContext.broadcast(blocked) if blocked else None
-
-    def _search(pdf):
-        hits = _search_shard_pdf(
-            pdf,
-            np.asarray(qv, dtype=np.float64),
-            k,
-            ef,
-            blocked=bblocked.value if bblocked else None,
-        )
-        return pd.DataFrame(
-            {"vec_id": [i for i, _ in hits], "score": [s for _, s in hits]}
-        )
-
-    per_shard = index.groupBy("shard").applyInPandas(_search, out_schema)
-    return per_shard.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
+    return per_shard.select("vec_id", "score").orderBy(
+        F.desc("score"), F.asc("vec_id")
+    ).limit(k)
 
 
 def _tombstone_dir(path: str) -> str:
@@ -638,20 +656,16 @@ def compact_hnsw_index(spark: SparkSession, path: str) -> int:
 
     Crash contract (round 11): the compacted layout is fully written to
     a sibling temp directory FIRST, then swapped in by two renames (old
-    aside, new into place) — a crash at any point leaves a complete
-    layout on disk: before the swap the original is untouched at
-    ``path`` (plus a reclaimable ``<path>.__compact_tmp__``); in the
-    one-rename window the finished new layout sits at
-    ``<path>.__compact_tmp__`` and the original at
-    ``<path>.__compact_old__`` (recover by renaming either back). The
-    old ``rmtree-then-rebuild-in-place`` shape could lose the index
+    aside, new into place) through ``locking._swap_in`` — a crash at any
+    point leaves a complete layout on disk, which
+    :func:`recover_hnsw_layout` puts back at ``path``. The old
+    ``rmtree-then-rebuild-in-place`` shape could lose the index
     forever. Runs under the layout commit lock, serializing against
     appends and deletes."""
     import json
     import os
-    import shutil
 
-    from semantic_index_spark.locking import index_lock
+    from semantic_index_spark.locking import _swap_in, index_lock
 
     with index_lock(path):
         tomb = _tombstone_dir(path)
@@ -676,41 +690,26 @@ def compact_hnsw_index(spark: SparkSession, path: str) -> int:
         # freezes the live set (it reads the pinned `dead`), it just
         # materializes inside the write action instead of its own job
         live = (
-            spark.read.parquet(path)
+            _read_layout(spark, path)
             .join(dead, "id", "left_anti")
             .select(F.col("id").alias("vec_id"), "embedding")
             .transform(pin, "compact_hnsw_index: live")
         )
-        rebuilt = build_hnsw(
-            live,
-            n_shards=meta["n_shards"],
-            m=meta["m"],
-            ef_construction=meta["ef_construction"],
-            seed=meta["seed"],
-            id_col="vec_id",
-            emb_col="embedding",
-        )
-        tmp = path.rstrip("/") + ".__compact_tmp__"
-        old = path.rstrip("/") + ".__compact_old__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
+        params = {k: meta[k] for k in ("n_shards", "m", "ef_construction", "seed")}
+        rebuilt = build_hnsw(live, **params)
         # applied epochs describe batches folded into the PRE-compaction
         # graph; they remain true history (replays must still skip), and
         # they ride tmp's SINGLE meta write so meta presence always means
         # a fully complete layout — recovery can never install tmp with
-        # the ledger missing (round 12, closes the r11 crash window)
-        _write_hnsw_unlocked(
-            rebuilt,
-            tmp,
-            n_shards=meta["n_shards"],
-            m=meta["m"],
-            ef_construction=meta["ef_construction"],
-            seed=meta["seed"],
-            applied_epochs=meta.get("applied_epochs"),
+        # the ledger missing (round 12, closes the r11 crash window).
+        # Tombstones swap aside with the old layout.
+        _swap_in(
+            path,
+            "compact",
+            lambda tmp: _write_hnsw_unlocked(
+                rebuilt, tmp, **params, applied_epochs=meta.get("applied_epochs")
+            ),
         )
-        os.rename(path, old)  # tombstones swap aside with the old layout
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
         return n_dead
 
 
@@ -718,11 +717,12 @@ def recover_hnsw_layout(path: str) -> str:
     """Repair a layout after a crash inside :func:`compact_hnsw_index`'s
     swap window — the operational verb completing that function's crash
     contract (a crash always leaves a complete layout on disk; this puts
-    it back at ``path``). States, checked under the layout commit lock:
+    it back at ``path``). States, checked under the layout commit lock
+    by ``locking._recover_swap``:
 
       * ``path`` exists → the swap either never started or completed;
-        any ``__compact_tmp__`` / ``__compact_old__`` leftovers are
-        debris from a pre-swap crash and are removed. Returns ``"ok"``.
+        leftover tmp/old siblings are debris from a pre-swap crash and
+        are removed. Returns ``"ok"``.
       * ``path`` missing, tmp COMPLETE (its meta file exists — the base
         writer writes meta last, so meta presence marks completeness) →
         the crash hit between the two renames; the compaction had fully
@@ -737,29 +737,13 @@ def recover_hnsw_layout(path: str) -> str:
     Raises if no complete layout can be found (true data loss — never
     produced by the compaction protocol)."""
     import os
-    import shutil
 
-    from semantic_index_spark.locking import index_lock
+    from semantic_index_spark.locking import _recover_swap
 
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    old = path.rstrip("/") + ".__compact_old__"
-    with index_lock(path):
-        if os.path.isdir(path):
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return "ok"
-        if os.path.isdir(tmp) and os.path.exists(_meta_path(tmp)):
-            os.rename(tmp, path)
-            shutil.rmtree(old, ignore_errors=True)
-            return "recovered-new"
-        if os.path.isdir(old) and os.path.exists(_meta_path(old)):
-            os.rename(old, path)
-            shutil.rmtree(tmp, ignore_errors=True)
-            return "recovered-old"
-        raise FileNotFoundError(
-            f"no complete HNSW layout found at {path} (nor in its compact "
-            "swap directories) — nothing to recover"
-        )
+    def complete(d):
+        return os.path.exists(_meta_path(d))
+
+    return _recover_swap(path, "compact", "HNSW", complete, complete)
 
 
 def hnsw_topk_indexed(
@@ -772,7 +756,7 @@ def hnsw_topk_indexed(
     """Search a persisted :func:`write_hnsw_index` layout, applying any
     deletion tombstones the layout carries."""
     return hnsw_topk(
-        spark.read.parquet(path),
+        _read_layout(spark, path),
         query,
         k=k,
         ef=ef,
@@ -802,31 +786,18 @@ def hnsw_topk_filtered(
     the brute-force filtered top-k (the registry's hash-checked
     contract). The allowed set broadcasts as a plain Python set — ids,
     not vectors, so even 10^6 survivors are a few MB."""
-    import numpy as np
-    import pandas as pd
-
     rows = collect_bounded(
         allowed.select(id_col).distinct(), max_allowed, "hnsw_topk_filtered allowed set"
     )
     allowed_set = {int(r[id_col]) for r in rows}
-    qv = np.asarray([float(x) for x in query], dtype=np.float64)
-    spark = index.sparkSession
-    out_schema = StructType(
-        [StructField("vec_id", LongType()), StructField("score", DoubleType())]
-    )
     if not allowed_set:
-        return spark.createDataFrame([], out_schema)
-    ballowed = spark.sparkContext.broadcast(allowed_set)
-
-    def _search(pdf):
-        vecs, adj, ep, top = _load_shard(pdf)
-        hits = _query_shard(vecs, adj, ep, top, qv, k, ef, allowed=ballowed.value)
-        return pd.DataFrame(
-            {"vec_id": [i for i, _ in hits], "score": [s for _, s in hits]}
-        )
-
-    per_shard = index.groupBy("shard").applyInPandas(_search, out_schema)
-    return per_shard.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
+        return index.sparkSession.createDataFrame([], "vec_id long, score double")
+    per_shard = _search_task(
+        index, [(0, [float(x) for x in query])], k, ef, allowed=allowed_set
+    )
+    return per_shard.select("vec_id", "score").orderBy(
+        F.desc("score"), F.asc("vec_id")
+    ).limit(k)
 
 
 def hnsw_topk_multi(
@@ -846,46 +817,17 @@ def hnsw_topk_multi(
     repeating per query). Only the ≤ n_shards·Q·k per-shard winners ever
     shuffle; a window over them ranks per query. Columns:
     ``(q_id, vec_id, score, rank)``."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
     q_rows = collect_bounded(
         queries.select(q_id_col, q_emb_col), max_queries, "hnsw_topk_multi query set"
     )
-    out_schema = StructType(
-        [
-            StructField(q_id_col, queries.schema[q_id_col].dataType),
-            StructField("vec_id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    spark = index.sparkSession
+    q_field = StructField(q_id_col, queries.schema[q_id_col].dataType)
     if not q_rows:
-        empty = spark.createDataFrame([], out_schema)
+        empty = index.sparkSession.createDataFrame(
+            [], StructType([q_field]).add("vec_id", LongType()).add("score", DoubleType())
+        )
         return empty.withColumn("rank", F.lit(1).cast("int")).limit(0)
     panel = [(r[q_id_col], [float(x) for x in r[q_emb_col]]) for r in q_rows]
-    bpanel = spark.sparkContext.broadcast(panel)
-
-    def _search(pdf):
-        import numpy as np
-
-        vecs, adj, ep, top = _load_shard(pdf)
-        qids, out_ids, scores = [], [], []
-        for qid, qv in bpanel.value:
-            for i, s in _query_shard(
-                vecs, adj, ep, top, np.asarray(qv, dtype=np.float64), k, ef
-            ):
-                qids.append(qid)
-                out_ids.append(i)
-                scores.append(s)
-        return pd.DataFrame({q_id_col: qids, "vec_id": out_ids, "score": scores})
-
-    per_shard = index.groupBy("shard").applyInPandas(_search, out_schema)
+    per_shard = _search_task(index, panel, k, ef, q_field=q_field)
     w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         per_shard.withColumn("rank", F.row_number().over(w))
@@ -917,7 +859,7 @@ def hnsw_maintenance_status(
     # both counts ride ONE action (r14, guide §1.2): a crossJoin of the
     # two 1-row aggregates collects (n_nodes, n_tombstones) in a single
     # job instead of two sequential cluster round-trips per status probe
-    nodes_agg = spark.read.parquet(path).agg(F.count("*").alias("_n"))
+    nodes_agg = _read_layout(spark, path).agg(F.count("*").alias("_n"))
     tomb = _tombstone_dir(path)
     if os.path.isdir(tomb):
         tomb_agg = (

@@ -1667,10 +1667,8 @@ def consolidate_ivf_epochs(spark, path: str, files_per_cell: int = 1) -> int:
     the layout commit lock; crash-safe via write-to-temp + two renames
     (``recover_ivf_layout`` repairs the swap window)."""
     import json
-    import os
-    import shutil
 
-    from semantic_index_spark.locking import index_lock
+    from semantic_index_spark.locking import _swap_in, index_lock
 
     with index_lock(path):
         cells, epochs, _nf, _mx = _ivf_layout_listing(path)
@@ -1687,64 +1685,46 @@ def consolidate_ivf_epochs(spark, path: str, files_per_cell: int = 1) -> int:
         folded = sorted(
             set(_read_ivf_meta(path).get("folded_epochs", [])) | epochs
         )
-        tmp = path.rstrip("/") + ".__consolidate_tmp__"
-        old = path.rstrip("/") + ".__consolidate_old__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
         salt = F.pmod(
             F.abs(F.hash(F.col(payload[0]))), F.lit(max(1, files_per_cell))
         )
-        (
-            df.select(*payload, "_cell")
-            .withColumn("batch_id", F.lit(-1))
-            .repartition(
-                max(1, files_per_cell) * max(1, len(cells)), F.col("_cell"), salt
+
+        def write(tmp):
+            (
+                df.select(*payload, "_cell")
+                .withColumn("batch_id", F.lit(-1))
+                .repartition(
+                    max(1, files_per_cell) * max(1, len(cells)),
+                    F.col("_cell"), salt,
+                )
+                .write.mode("errorifexists")
+                .partitionBy("_cell", "batch_id")
+                .parquet(tmp)
             )
-            .write.mode("errorifexists")
-            .partitionBy("_cell", "batch_id")
-            .parquet(tmp)
-        )
-        # the ledger is tmp's LAST write: meta presence marks a COMPLETE
-        # consolidated layout (the recover verb's completeness test)
-        with open(_ivf_meta_path(tmp), "w") as f:
-            json.dump({"folded_epochs": folded}, f)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
+            # the ledger is tmp's LAST write: meta presence marks a
+            # COMPLETE consolidated layout (the recover verb's test)
+            with open(_ivf_meta_path(tmp), "w") as f:
+                json.dump({"folded_epochs": folded}, f)
+
+        _swap_in(path, "consolidate", write)
         return len(epochs)
 
 
 def recover_ivf_layout(path: str) -> str:
     """Repair a layout after a crash inside
-    :func:`consolidate_ivf_epochs`'s swap window — same protocol as
-    ``hnsw.recover_hnsw_layout``: ``path`` present → debris cleanup
+    :func:`consolidate_ivf_epochs`'s swap window — the protocol
+    ``hnsw.recover_hnsw_layout`` shares (``locking._recover_swap``):
+    ``path`` present → debris cleanup
     ("ok"); ``path`` missing + complete temp (its meta exists, written
     last) → finish the swap ("recovered-new"); ``path`` missing + the
     old layout aside (complete by construction — it was live) → rename
     back ("recovered-old"). Raises when no complete layout exists."""
     import os
-    import shutil
 
-    from semantic_index_spark.locking import index_lock
+    from semantic_index_spark.locking import _recover_swap
 
-    tmp = path.rstrip("/") + ".__consolidate_tmp__"
-    old = path.rstrip("/") + ".__consolidate_old__"
-    with index_lock(path):
-        if os.path.isdir(path):
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return "ok"
-        if os.path.isdir(tmp) and os.path.exists(_ivf_meta_path(tmp)):
-            os.rename(tmp, path)
-            shutil.rmtree(old, ignore_errors=True)
-            return "recovered-new"
-        if os.path.isdir(old) and any(
-            d.startswith("_cell=") for d in os.listdir(old)
-        ):
-            os.rename(old, path)
-            shutil.rmtree(tmp, ignore_errors=True)
-            return "recovered-old"
-        raise FileNotFoundError(
-            f"no complete IVF layout found at {path} (nor in its "
-            "consolidation swap directories) — nothing to recover"
-        )
+    return _recover_swap(
+        path, "consolidate", "IVF",
+        lambda tmp: os.path.exists(_ivf_meta_path(tmp)),
+        lambda old: any(d.startswith("_cell=") for d in os.listdir(old)),
+    )

@@ -500,36 +500,15 @@ def indexed_ivfpq_topk(
     while the rescore maximizes dot — consistent for the unit-norm-ish
     embeddings PQ serves; the exhaustive configuration is metric-
     independent."""
-    from semantic_index_spark.operators.similarity import (
-        _probe_cells,
-        pq_topk,
-        rerank_exact,
-    )
+    from semantic_index_spark.operators.similarity import pq_topk, rerank_exact
 
-    man = VER._read_manifest(table, version)
-    _, spec = _resolve_index(man, name, "ivfpq")
-    p = spec["params"]
-    key = man["key_cols"][0]
-    fields = VER._manifest_fields(man)
-    ktype = fields[key].get("type")
-    idx = _read_index_shards(spark, table, man, name=name, kind="ivfpq")
-    if idx is None:
-        return _empty_serve(
-            spark, "string" if ktype == "string" else "long"
-        )
-    probe = _probe_cells(query, p["centroids"], nprobe)
-    codes = idx.filter(F.col("_cell").isin(probe))
-    cand = pq_topk(codes, p["codebooks"], query, k_results=candidates).select(
-        "vec_id"
-    )
-    kc = F.col(key)
-    if ktype in _INTEGRAL:
-        kc = kc.cast("long")
-    vectors = VER.read_bucketed(spark, table, version=version).select(
-        kc.alias("vec_id"),
-        F.col(p["emb_col"]).alias("embedding"),
-    )
-    return rerank_exact(vectors, cand, query, k=k)
+    def rank(p, codes, vectors):
+        cand = pq_topk(
+            codes, p["codebooks"], query, k_results=candidates
+        ).select("vec_id")
+        return rerank_exact(vectors, cand, query, k=k)
+
+    return _ivf_serve(spark, table, query, nprobe, version, name, "ivfpq", rank)
 
 
 def detach_index(table: str, name: "str | None" = None) -> int:
@@ -610,7 +589,9 @@ def indexed_hnsw_topk(
         raise ValueError(
             f"table {table} has no co-committed index (attach_hnsw_index)"
         )
-    idx = _read_index_shards(spark, table, man, name=name, kind="hnsw")
+    idx = _read_index_shards(
+        spark, table, man, _resolve_index(man, name, "hnsw")
+    )
     if idx is None:
         return _empty_serve(spark)
     blocked = None
@@ -635,27 +616,31 @@ def _empty_serve(spark: SparkSession, id_type: str = "long") -> DataFrame:
 
 
 def _read_index_shards(
-    spark: SparkSession, table: str, man: dict, name: "str | None" = None,
-    kind: str = "ivfsq",
+    spark: SparkSession, table: str, man: dict, resolved: tuple
 ):
     """Union ONE index's shard partitions ACROSS owning versions — one
     read per owning version with basePath (recovering the partition
     columns), exactly the grouping ``read_bucketed`` does for buckets.
-    Every read takes the schema ``indexed_np`` writes for the index's
-    kind, with ``vec_id`` typed as the manifest's key, so no read runs a
-    footer-inference job. Returns None when no shard has an owner (empty
-    table)."""
+    ``resolved`` is the ``(name, spec)`` :func:`_resolve_index` picked.
+    Every read takes the schema the index's kind writes
+    (``hnsw.SHARD_SCHEMA``; ``indexed_np.SHARD_DDL`` with ``vec_id``
+    typed as the manifest's key), so no read runs a footer-inference
+    job. Returns None when no shard has an owner (empty table)."""
     from pyspark.sql.types import StructType
 
+    from semantic_index_spark.operators.hnsw import SHARD_SCHEMA
     from semantic_index_spark.sources.indexed_np import SHARD_DDL
 
-    iname, spec = _resolve_index(man, name, kind)
+    iname, spec = resolved
     idx_dir = _idx_dir(iname, spec["params"])
-    key = man["key_cols"][0]
-    ddl = SHARD_DDL[spec["params"].get("kind", "hnsw")].format(
-        key=VER._manifest_schema(man)[key].dataType.simpleString()
-    )
-    schema = StructType.fromDDL(ddl)
+    kind = spec["params"].get("kind", "hnsw")
+    if kind == "hnsw":
+        schema = SHARD_SCHEMA
+    else:
+        key = man["key_cols"][0]
+        schema = StructType.fromDDL(SHARD_DDL[kind].format(
+            key=VER._manifest_schema(man)[key].dataType.simpleString()
+        ))
     by_version: dict = {}
     for b, v in spec["shards"].items():
         if v is not None:
@@ -674,6 +659,49 @@ def _read_index_shards(
     for extra in parts[1:]:
         idx = idx.unionByName(extra)
     return idx
+
+
+def _ivf_serve(
+    spark: SparkSession, table: str, query, nprobe: int,
+    version: "int | None", name: "str | None", kind: str, rank,
+    missing: "str | None" = None,
+) -> DataFrame:
+    """The shared first half of the IVF serves: read the manifest at
+    ``version`` and resolve the index once (``missing``, when given, is
+    the error for a table with no index of ``kind``), read its shards
+    pruned to the ``nprobe`` probed cells at planning time, and the
+    version's rows as the ``(vec_id, embedding)`` rescore frame —
+    deletion vectors already applied, so a DV-deleted candidate drops at
+    the rescore join. Integral keys serve as longs (the historical
+    ``vec_id`` contract); string keys ride through as they are (a cast
+    to long would null every string doc id). ``rank(params, codes,
+    vectors)`` is the serve's second half; a table with no owned shard
+    serves the empty frame."""
+    from semantic_index_spark.operators.similarity import _probe_cells
+
+    man = VER._read_manifest(table, version)
+    if missing and not any(
+        s.get("params", {}).get("kind") == kind
+        for s in VER._indexes(man).values()
+    ):
+        raise ValueError(missing)
+    resolved = _resolve_index(man, name, kind)
+    key = man["key_cols"][0]
+    ktype = VER._manifest_fields(man)[key].get("type")
+    idx = _read_index_shards(spark, table, man, resolved)
+    if idx is None:
+        return _empty_serve(spark, "string" if ktype == "string" else "long")
+    p = resolved[1]["params"]
+    codes = idx.filter(
+        F.col("_cell").isin(_probe_cells(query, p["centroids"], nprobe))
+    )
+    kc = F.col(key)
+    if ktype in _INTEGRAL:
+        kc = kc.cast("long")
+    vectors = VER.read_bucketed(spark, table, version=version).select(
+        kc.alias("vec_id"), F.col(p["emb_col"]).alias("embedding")
+    )
+    return rank(p, codes, vectors)
 
 
 def indexed_ivfsq_topk(
@@ -700,42 +728,15 @@ def indexed_ivfsq_topk(
     ``(vec_id, score)``, exact-dot scores. Approximation contract =
     ``ivfsq_topk_indexed``'s (exact within probed cells given enough
     candidates; nprobe = n_cells ⇒ exhaustive-exact)."""
-    from semantic_index_spark.operators.similarity import (
-        _probe_cells,
-        sq_topk_rescore,
-    )
+    from semantic_index_spark.operators.similarity import sq_topk_rescore
 
-    man = VER._read_manifest(table, version)
-    if not any(
-        s.get("params", {}).get("kind") == "ivfsq"
-        for s in VER._indexes(man).values()
-    ):
-        raise ValueError(
-            f"table {table} has no co-committed IVF-SQ8 index "
-            "(attach_ivfsq_index)"
+    def rank(p, codes, vectors):
+        return sq_topk_rescore(
+            codes, vectors, p["model"], query, k=k, candidates=candidates
         )
-    _, spec = _resolve_index(man, name, "ivfsq")
-    p = spec["params"]
-    key = man["key_cols"][0]
-    fields = VER._manifest_fields(man)
-    ktype = fields[key].get("type")
-    idx = _read_index_shards(spark, table, man, name=name, kind="ivfsq")
-    if idx is None:
-        return _empty_serve(
-            spark, "string" if ktype == "string" else "long"
-        )
-    probe = _probe_cells(query, p["centroids"], nprobe)
-    codes = idx.filter(F.col("_cell").isin(probe))
-    # integral keys serve as longs (the historical vec_id contract);
-    # string keys ride through NATURALLY — the r13 string-key lane (a
-    # cast-to-long would null every string doc id)
-    kc = F.col(key)
-    if ktype in _INTEGRAL:
-        kc = kc.cast("long")
-    vectors = VER.read_bucketed(spark, table, version=version).select(
-        kc.alias("vec_id"),
-        F.col(p["emb_col"]).alias("embedding"),
-    )
-    return sq_topk_rescore(
-        codes, vectors, p["model"], query, k=k, candidates=candidates
+
+    return _ivf_serve(
+        spark, table, query, nprobe, version, name, "ivfsq", rank,
+        missing=f"table {table} has no co-committed IVF-SQ8 index "
+        "(attach_ivfsq_index)",
     )

@@ -20,9 +20,10 @@ Fold dots and squared distances are SEQUENTIAL per-dimension sums
 reassociate the sum and could flip a near tie); SQ8 runs the clamped
 ``floor((v - lo)/step + 0.5)`` double arithmetic the oracles run, and PQ
 takes the first minimum (= smallest code), the oracles' ``ORDER BY
-distance, code`` tie-break. HNSW shards call the pure-Python
-``hnsw._build_shard`` the standalone ``build_hnsw`` task calls (the
-graph is a function of the id set, not insertion order).
+distance, code`` tie-break. An HNSW shard is ``hnsw._grow`` from an
+empty graph, the operation the standalone ``build_hnsw`` and
+``append_hnsw_index`` tasks run, written in ``hnsw.SHARD_SCHEMA``'s row
+format (the graph is a function of the id set, not of row order).
 
 One encoder stays mirrored: IVF cells for k ≤ 16 are also a JVM dot fold
 in ``similarity.ivf_assign`` (the ``ivf_silhouette`` row keeps Python
@@ -35,12 +36,11 @@ from __future__ import annotations
 
 import os
 
-#: index kind → the Spark schema of the shard files this module writes,
-#: plus the partition columns of the ``shard=<b>[/_cell=<c>]`` layout the
-#: serves read them under; ``{key}`` is the table key's type
+#: IVF index kind → the Spark schema of the shard files this module
+#: writes, plus the partition columns of the ``shard=<b>/_cell=<c>``
+#: layout the serves read them under; ``{key}`` is the table key's type.
+#: HNSW shards are ``hnsw.SHARD_SCHEMA`` rows
 SHARD_DDL = {
-    "hnsw": "id long, embedding array<double>, max_level int, "
-            "neighbors array<array<long>>, shard int",
     "ivfsq": "vec_id {key}, codes array<tinyint>, shard int, _cell int",
     "ivfpq": "vec_id {key}, sub int, code int, shard int, _cell int",
 }
@@ -204,32 +204,12 @@ def write_index_shard_np(
     mat = _emb_matrix(tbl.column(params["emb_col"]))
     ids = tbl.column(key)
     if kind == "hnsw":
-        from semantic_index_spark.operators.hnsw import _build_shard
+        from semantic_index_spark.operators.hnsw import _grow
 
-        id64 = ids.to_numpy(zero_copy_only=False).astype("int64")
-        adj, levels = _build_shard(
-            id64, mat, params["m"], params["ef_construction"], params["seed"]
+        rows = _grow(
+            None, ids, mat, params["m"], params["ef_construction"], params["seed"]
         )
-        order = sorted(adj)
-        vecs = {int(id64[i]): mat[i] for i in range(len(id64))}
-        out = pa.table(
-            {
-                "id": pa.array(order, pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in vecs[i]] for i in order],
-                    pa.list_(pa.float64()),
-                ),
-                "max_level": pa.array(
-                    [levels[i] for i in order], pa.int32()
-                ),
-                "neighbors": pa.array(
-                    [adj[i] for i in order], pa.list_(pa.list_(pa.int64()))
-                ),
-            }
-        )
-        _write_parquet(
-            out, os.path.join(staged, idx_dir, f"shard={int(bucket)}")
-        )
+        _write_parquet(rows, os.path.join(staged, idx_dir, f"shard={int(bucket)}"))
         return
     cells = ivf_cells_np(mat, params["centroids"])
     if kind == "ivfsq":

@@ -3381,7 +3381,9 @@ def test_r12_indexed_table_ivfsq_lifecycle_and_crash(spark, tmp_path, monkeypatc
     man_opt = VER._read_manifest(t)
     assert not man_opt.get("dv")
     assert serve() == got_dv
-    idx = IDX._read_index_shards(spark, t, man_opt)
+    idx = IDX._read_index_shards(
+        spark, t, man_opt, IDX._resolve_index(man_opt, None, "ivfsq")
+    )
     assert idx.filter("vec_id = 5").count() == 0
     # clone consolidates shards; detach works for any kind
     t2 = str(tmp_path / "ivfsq_clone")
@@ -3964,8 +3966,12 @@ def test_r13_sql_insert_indexed_tables(spark, tmp_path, monkeypatch):
         ("ivfsq", ["shard", "_cell", "vec_id", "codes"]),
         ("ivfpq", ["shard", "_cell", "vec_id", "sub", "code"]),
     ):
-        a = IDX._read_index_shards(spark, t, man_a, kind=kind)
-        b = IDX._read_index_shards(spark, t2, man_b, kind=kind)
+        a = IDX._read_index_shards(
+            spark, t, man_a, IDX._resolve_index(man_a, None, kind)
+        )
+        b = IDX._read_index_shards(
+            spark, t2, man_b, IDX._resolve_index(man_b, None, kind)
+        )
         ra = sorted(tuple(r) for r in a.select(*cols).collect())
         rb = sorted(tuple(r) for r in b.select(*cols).collect())
         assert ra == rb, f"{kind} shards differ between SQL and Spark builds"
@@ -4030,14 +4036,16 @@ def _tree_bytes(root):
 
 def test_table_index_codes_match_standalone_encoders(spark, tmp_path):
     """Table shards are built by ``indexed_np``; the standalone query
-    rows and their DuckDB oracles encode with the Spark expressions
-    ``ivf_assign`` + ``sq_encode`` / ``pq_encode``. The two must agree
-    row for row — cell, codes and shard — after an attach AND after a
-    merge re-encodes rewritten buckets, on both sides of ``ivf_assign``'s
-    k ≤ 16 (expression fold) / k > 16 (matmul) split, over float32
-    embeddings that both sides widen to double."""
+    rows and their DuckDB oracles encode with ``ivf_assign`` +
+    ``sq_encode`` / ``pq_encode`` and build graphs with ``build_hnsw``.
+    The two must agree row for row — cell, codes and shard; graph node,
+    level and adjacency — after an attach AND after a merge re-encodes
+    rewritten buckets, on both sides of ``ivf_assign``'s k ≤ 16
+    (expression fold) / k > 16 (matmul) split, over float32 embeddings
+    that both sides widen to double."""
     import numpy as np
 
+    from semantic_index_spark.operators import hnsw as H
     from semantic_index_spark.operators import similarity as S
     from semantic_index_spark.sources import indexed as IDX
     from semantic_index_spark.sources import versioned as VER
@@ -4056,6 +4064,7 @@ def test_table_index_codes_match_standalone_encoders(spark, tmp_path):
     IDX.attach_ivfsq_index(spark, t, n_cells=20, name="sq_wide")
     IDX.attach_ivfpq_index(spark, t, m_sub=4, pq_k=8, n_cells=4, name="pq")
     IDX.attach_ivfpq_index(spark, t, m_sub=2, pq_k=8, n_cells=20, name="pq_wide")
+    IDX.attach_hnsw_index(spark, t, m=4, ef_construction=16, seed=3, name="hn")
 
     def check():
         man = VER._read_manifest(t)
@@ -4064,19 +4073,24 @@ def test_table_index_codes_match_standalone_encoders(spark, tmp_path):
         ).withColumn("shard", VER._bucket_expr(["vec_id"], 4))
         for name, spec in VER._indexes(man).items():
             p = spec["params"]
-            cells = S.ivf_assign(rows, p["centroids"]).select(
-                "vec_id", "_cell", "shard"
-            )
-            if p["kind"] == "ivfsq":
-                cols = ["vec_id", "codes", "_cell", "shard"]
-                enc = S.sq_encode(rows, p["model"])
+            if p["kind"] == "hnsw":
+                cols = ["id", "embedding", "max_level", "neighbors", "shard"]
+                want = H.build_hnsw(
+                    rows, n_shards=4, m=p["m"],
+                    ef_construction=p["ef_construction"], seed=p["seed"],
+                ).select(*cols)
             else:
-                cols = ["vec_id", "sub", "code", "_cell", "shard"]
-                enc = S.pq_encode(rows, p["codebooks"])
-            want = enc.join(cells, "vec_id").select(*cols)
-            got = IDX._read_index_shards(
-                spark, t, man, name=name, kind=p["kind"]
-            ).select(*cols)
+                cells = S.ivf_assign(rows, p["centroids"]).select(
+                    "vec_id", "_cell", "shard"
+                )
+                if p["kind"] == "ivfsq":
+                    cols = ["vec_id", "codes", "_cell", "shard"]
+                    enc = S.sq_encode(rows, p["model"])
+                else:
+                    cols = ["vec_id", "sub", "code", "_cell", "shard"]
+                    enc = S.pq_encode(rows, p["codebooks"])
+                want = enc.join(cells, "vec_id").select(*cols)
+            got = IDX._read_index_shards(spark, t, man, (name, spec)).select(*cols)
             assert sorted(tuple(r) for r in got.collect()) == sorted(
                 tuple(r) for r in want.collect()
             ), name

@@ -2795,6 +2795,46 @@ def test_hnsw_single_node_shard_and_small_corpus(spark):
     assert got == [4, 3, 2]
 
 
+def test_hnsw_golden_graph_build_and_interleaved_append():
+    """Spark-free guard on the graph kernel: a seeded 300x16 corpus grown
+    from an empty graph, then 100 further ids interleaved with it
+    inserted into the graph parsed back from those rows (the append
+    path), hash to the rows the builder emitted before build, append and
+    table shards shared one codec. Any change that moves one level or
+    neighbor fails here."""
+    import hashlib
+    import json
+
+    import numpy as np
+    import pyarrow as pa
+
+    from semantic_index_spark.operators import hnsw as H
+
+    mat = np.random.default_rng(7).standard_normal((400, 16))
+    ids = np.arange(400)
+    base = ids % 4 != 1
+
+    def sha(tbl):
+        rows = [
+            [r["id"], r["embedding"], r["max_level"], r["neighbors"]]
+            for r in tbl.to_pylist()
+        ]
+        return hashlib.sha256(
+            json.dumps(rows, separators=(",", ":")).encode()
+        ).hexdigest()
+
+    built = H._grow(None, pa.array(ids[base]), mat[base], 8, 64, 7)
+    assert built.num_rows == 300
+    assert sha(built) == (
+        "c744120c5b3e8a21846f6ca4ba2ef6868a3f47a0e1d59169c46690536996c230"
+    )
+    grown = H._grow(built, pa.array(ids[~base]), mat[~base], 8, 64, 7)
+    assert grown.num_rows == 400
+    assert sha(grown) == (
+        "338d306093e6831a5b75ebf46a4a1aabe9bc0e1ecfc9b5e64ae8a9d42d0b3c30"
+    )
+
+
 def test_hnsw_append_equals_rebuild_for_monotone_ids(spark, sf_dir, tmp_path):
     from semantic_index_spark.operators import hnsw as H
 

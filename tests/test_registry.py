@@ -311,6 +311,7 @@ KEEP = {
     "detach_hnsw_index": "inverse of attach_hnsw_index",
     "recover_hnsw_layout": "crash recovery of a standalone HNSW layout",
     "recover_ivf_layout": "crash recovery of a standalone IVF layout",
+    "_recover_swap": "the swap-recovery protocol the two recover verbs above share",
 }
 
 # Callers: the registry, the benchmarks, the tools and the examples.

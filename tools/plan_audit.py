@@ -673,7 +673,7 @@ AUDITS = {
     # of step checkpoints — audit forbids products end-to-end
     "graph_walks": {"forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     "motif_open_wedges": {"forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
-    # sharded HNSW serve: per-shard search in FlatMapGroupsInPandas, the
+    # sharded HNSW serve: per-shard search in FlatMapGroupsInArrow, the
     # global merge is a BOUNDED top-k (TakeOrderedAndProject over
     # n_shards*k rows) — never a full sort, never a product. The serve
     # plan shape is asserted on hnsw_filtered / hnsw_multi (same code
@@ -684,12 +684,12 @@ AUDITS = {
     "hnsw_topk": {"forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     "hnsw_incremental": {"forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"]},
     "hnsw_filtered": {
-        "expect": ["TakeOrderedAndProject", "FlatMapGroupsInPandas"],
+        "expect": ["TakeOrderedAndProject", "FlatMapGroupsInArrow"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
     },
     # multi-query merge is a per-query window rank over n_shards*Q*k rows
     "hnsw_multi": {
-        "expect": ["FlatMapGroupsInPandas", "Window"],
+        "expect": ["FlatMapGroupsInArrow", "Window"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
     },
     # hidden partitioning: source predicates must land on partition
