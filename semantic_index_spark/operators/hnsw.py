@@ -601,16 +601,22 @@ def _tombstone_dir(path: str) -> str:
     return os.path.join(path, "_deleted")
 
 
-def read_tombstones(spark: SparkSession, path: str, max_ids: int = 10_000_000) -> set:
-    """The layout's deleted-id set (empty if none were ever deleted)."""
+def _read_tombstone_ids(spark: SparkSession, path: str) -> "DataFrame | None":
+    """The layout's ``_deleted/`` ids, read under the type
+    :func:`delete_from_hnsw_index` writes (no footer-inference job), or
+    None when nothing was ever deleted."""
     import os
 
     d = _tombstone_dir(path)
-    if not os.path.isdir(d):
+    return spark.read.schema("id long").parquet(d) if os.path.isdir(d) else None
+
+
+def read_tombstones(spark: SparkSession, path: str, max_ids: int = 10_000_000) -> set:
+    """The layout's deleted-id set (empty if none were ever deleted)."""
+    dead = _read_tombstone_ids(spark, path)
+    if dead is None:
         return set()
-    rows = collect_bounded(
-        spark.read.parquet(d).select("id").distinct(), max_ids, "hnsw tombstones"
-    )
+    rows = collect_bounded(dead.distinct(), max_ids, "hnsw tombstones")
     return {int(r["id"]) for r in rows}
 
 
@@ -663,24 +669,18 @@ def compact_hnsw_index(spark: SparkSession, path: str) -> int:
     forever. Runs under the layout commit lock, serializing against
     appends and deletes."""
     import json
-    import os
 
     from semantic_index_spark.locking import _swap_in, index_lock
 
     with index_lock(path):
-        tomb = _tombstone_dir(path)
-        if not os.path.isdir(tomb):
+        dead = _read_tombstone_ids(spark, path)
+        if dead is None:
             return 0
         # lazy pin + count (r14): count() materializes every partition of
         # the pinned distinct-tombstone set in the SAME job, so the fold
         # count and the anti-join below still read one frozen set — one
         # action instead of checkpoint-then-count
-        dead = (
-            spark.read.parquet(tomb)
-            .select("id")
-            .distinct()
-            .transform(pin, "compact_hnsw_index: dead")
-        )
+        dead = dead.distinct().transform(pin, "compact_hnsw_index: dead")
         n_dead = dead.count()
         if not n_dead:
             return 0
@@ -852,7 +852,6 @@ def hnsw_maintenance_status(
     the driver); reads take no lock — advice may race a concurrent
     mutator by design, the same as any monitoring read."""
     import json
-    import os
 
     with open(_meta_path(path)) as f:
         meta = json.load(f)
@@ -860,11 +859,9 @@ def hnsw_maintenance_status(
     # two 1-row aggregates collects (n_nodes, n_tombstones) in a single
     # job instead of two sequential cluster round-trips per status probe
     nodes_agg = _read_layout(spark, path).agg(F.count("*").alias("_n"))
-    tomb = _tombstone_dir(path)
-    if os.path.isdir(tomb):
-        tomb_agg = (
-            spark.read.parquet(tomb).agg(F.count_distinct("id").alias("_t"))
-        )
+    dead = _read_tombstone_ids(spark, path)
+    if dead is not None:
+        tomb_agg = dead.agg(F.count_distinct("id").alias("_t"))
         row = nodes_agg.crossJoin(tomb_agg).collect()[0]
         n_nodes, n_tomb = int(row["_n"]), int(row["_t"])
     else:

@@ -271,11 +271,7 @@ def lsh_topk(
         if len(probes) == 1
         else sig.filter(F.col("bucket").isin(sorted(probes)))
     )
-    return (
-        cand.select(F.col(id_col), F.round(V.dot_literal(F.col(emb_col), query), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return topk(cand, query, k, emb_col, id_col)
 
 
 def ann_recall(
@@ -443,13 +439,8 @@ def ivf_topk(
     TakeOrderedAndProject. Recall tunes with nprobe — the standard
     IVF-flat trade, expressed as DataFrame ops."""
     probe = _probe_cells(query, centroids, nprobe)
-    return (
-        ivf_assign(df, centroids, emb_col)
-        .filter(F.col("_cell").isin(probe))
-        .select(F.col(id_col), F.round(V.dot_literal(F.col(emb_col), query), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    cand = ivf_assign(df, centroids, emb_col).filter(F.col("_cell").isin(probe))
+    return topk(cand, query, k, emb_col, id_col)
 
 
 def rerank_exact(
@@ -468,11 +459,7 @@ def rerank_exact(
     candidate side is tiny (k' rows) and broadcasts; ranking compiles to
     TakeOrderedAndProject. Deterministic: (score DESC, id ASC)."""
     cand = df.join(F.broadcast(candidates.select(id_col)), id_col, "left_semi")
-    return (
-        cand.select(F.col(id_col), F.round(V.dot_literal(F.col(emb_col), query), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return topk(cand, query, k, emb_col, id_col)
 
 
 def _probe_cells(
@@ -571,13 +558,8 @@ def ivf_topk_indexed(
     Same results as ``ivf_topk`` on the raw table with the same centroids
     (asserted in tests); this is the serving path, ivf_topk the ad-hoc one."""
     probe = _probe_cells(query, centroids, nprobe)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("_cell").isin(probe))
-        .select(F.col(id_col), F.round(V.dot_literal(F.col(emb_col), query), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    cand = spark.read.parquet(path).filter(F.col("_cell").isin(probe))
+    return topk(cand, query, k, emb_col, id_col)
 
 
 def kmeans_fit(
@@ -1345,10 +1327,11 @@ def sq_topk_rescore(
     scan over the int8 CODES only (score = sum_d q[d]*(lo[d]+step[d]*
     (code[d]+128)), a fold over bytes — the float corpus is never read),
     bounded top-``candidates`` via TakeOrderedAndProject; (2) join the
-    candidate ids back to the float vectors and rescore EXACTLY, top-k.
-    At 100 TB stage 1 reads 1/4 the bytes of a float scan and stage 2
-    touches ``candidates`` rows; the candidate join is a broadcast (the
-    candidate set is k-bounded driver-side knowledge, never the corpus).
+    candidate ids back to the float vectors and rescore EXACTLY, top-k
+    (:func:`rerank_exact`). At 100 TB stage 1 reads 1/4 the bytes of a
+    float scan and stage 2 touches ``candidates`` rows; the candidate
+    join is a broadcast left-semi (the candidate set is k-bounded
+    driver-side knowledge, never the corpus).
     Deterministic: both stages order by (rounded score DESC, id).
     Returns (id, score) with the EXACT dot score."""
     lo = V.lit_double_array(model["lo"])
@@ -1373,15 +1356,7 @@ def sq_topk_rescore(
         .orderBy(F.desc("_adc"), F.asc(id_col))
         .limit(candidates)
     )
-    return (
-        vectors.join(F.broadcast(cand.select(id_col)), id_col)
-        .select(
-            F.col(id_col),
-            F.round(V.dot_literal(F.col(emb_col), query), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return rerank_exact(vectors, cand, query, k, emb_col, id_col)
 
 
 def ivf_topk_filtered(
@@ -1406,17 +1381,12 @@ def ivf_topk_filtered(
     within the probed cells; raise ``nprobe`` when the filter is
     selective enough to starve the candidate pool."""
     probe = _probe_cells(query, centroids, nprobe)
-    return (
+    cand = (
         spark.read.parquet(path)
         .filter(F.col("_cell").isin(probe))
         .filter(F.expr(predicate))
-        .select(
-            F.col(id_col),
-            F.round(V.dot_literal(F.col(emb_col), query), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
     )
+    return topk(cand, query, k, emb_col, id_col)
 
 
 def late_interaction_topk(

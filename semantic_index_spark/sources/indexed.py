@@ -297,18 +297,19 @@ def _write_shards(
 
 
 def _shard_finalizer(specs: dict, affected):
-    """The manifest half of a shard build: ``finalize(manifest, final,
-    base_man, dest)`` advances ``indexes[*].shards`` for every index in
-    ``specs`` over the ``affected`` buckets — owner ``final`` where the
-    published directory holds a ``shard=<b>`` dir, ``None`` where the
-    bucket came out empty — and inherits every other shard's owner (and
-    every other index) from ``base_man``, the manifest the commit lands
-    on, so a disjoint-bucket rebase keeps both writers' shards exactly
-    like it keeps both writers' buckets. Shared by attach, merge,
-    OPTIMIZE and the SQL ``INSERT INTO`` commit."""
+    """The manifest half of a shard build, a ``versioned._publish_bucketed``
+    edit: ``finalize(manifest, final, dest)`` advances
+    ``indexes[*].shards`` for every index in ``specs`` over the
+    ``affected`` buckets — owner ``final`` where the published directory
+    holds a ``shard=<b>`` dir, ``None`` where the bucket came out empty —
+    and inherits every other shard's owner (and every other index) from
+    ``manifest``, the copy of the manifest the commit lands on, so a
+    disjoint-bucket rebase keeps both writers' shards exactly like it
+    keeps both writers' buckets. Shared by attach, merge, OPTIMIZE and
+    the SQL ``INSERT INTO`` commit."""
 
-    def finalize(manifest: dict, final: int, base_man, dest: str) -> dict:
-        base_idxs = VER._indexes(base_man)
+    def finalize(manifest: dict, final: int, dest: str) -> None:
+        base_idxs = VER._indexes(manifest)
         indexes = {n: dict(s) for n, s in base_idxs.items()}
         for iname, spec in specs.items():
             p = spec["params"]
@@ -324,7 +325,6 @@ def _shard_finalizer(specs: dict, affected):
             indexes[iname] = {"params": dict(p), "shards": shards}
         manifest.pop("index", None)  # legacy key re-keys under indexes
         manifest["indexes"] = indexes
-        return manifest
 
     return finalize
 
@@ -337,24 +337,17 @@ def _publish_index(
     Conditional on the pointer AND marked as touching every bucket, so a
     concurrent data commit conflicts (an index built from pre-commit rows
     must not publish over it); retryable via ``retry_commit``. Other
-    indexes on the table are untouched — their specs inherit through the
-    manifest build."""
+    indexes on the table are untouched — their specs carry over in the
+    manifest edit."""
     staged = VER._staged_path(table)
     os.makedirs(staged)
     specs = {name: {"params": params, "shards": {}}}
     all_buckets = range(int(man["n_buckets"]))
     _write_shards(rows, man, specs, staged, all_buckets)
-    finalize = _shard_finalizer(specs, all_buckets)
-
-    def build(final: int, base_man: dict, dest: str) -> dict:
-        manifest = {k: v for k, v in base_man.items() if k != "version"}
-        manifest["version"] = final
-        return finalize(manifest, final, base_man, dest)
-
-    final, _ = VER._publish_bucketed(
-        table, staged, man, set(all_buckets), build, strict_meta=True,
+    return VER._publish_bucketed(
+        table, staged, man, set(all_buckets), _shard_finalizer(specs, all_buckets),
+        strict_meta=True,
     )
-    return final
 
 
 def attach_hnsw_index(
@@ -535,28 +528,18 @@ def detach_index(table: str, name: "str | None" = None) -> int:
         name = next(iter(idxs))
     elif name not in idxs:
         raise ValueError(f"table {table} has no co-committed index named {name!r}")
-    staged = VER._staged_path(table)
-    os.makedirs(staged)
 
-    def build(final: int, base_man: dict, dest: str) -> dict:
-        manifest = {
-            k: v
-            for k, v in base_man.items()
-            if k not in ("version", "index", "indexes")
-        }
-        manifest["version"] = final
-        keep = {
-            n: dict(s) for n, s in VER._indexes(base_man).items() if n != name
-        }
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        keep = {n: s for n, s in VER._indexes(manifest).items() if n != name}
+        manifest.pop("index", None)
+        manifest.pop("indexes", None)
         if keep:
             manifest["indexes"] = keep
-        return manifest
 
-    final, _ = VER._publish_bucketed(
-        table, staged, man, set(range(int(man["n_buckets"]))), build,
+    return VER._publish_bucketed(
+        table, None, man, set(range(int(man["n_buckets"]))), edit,
         strict_meta=True,
     )
-    return final
 
 
 # kind-era alias (pre-r12 API): detaches by name like detach_index

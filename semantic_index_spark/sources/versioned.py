@@ -45,6 +45,7 @@ torn read.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import re
@@ -470,7 +471,8 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
     destination's pointer critical section — two racing clones cannot
     interleave their files into one mixed ``v=0``; a source version (or
     bucket dir) expired mid-link fails loud rather than publishing a
-    truncated clone."""
+    truncated clone. A bucketed clone publishes as a create whose manifest
+    edit is the renumbered source manifest."""
     src_cur = _resolve_version(src_table)
     v = src_cur if version is None else version
     if os.path.exists(_latest_path(dst_table)):
@@ -483,7 +485,6 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
     if os.path.exists(spec):
         shutil.copy2(spec, _hidden_spec_path(dst_table))
     staged = _staged_path(dst_table)
-    new_man = None
     if man is None:
         src_dir = _version_dir(src_table, v)
         if not os.path.isdir(src_dir):
@@ -554,7 +555,6 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
         new_man = {
             k: v2 for k, v2 in man.items() if k not in ("version", "buckets", "dv")
         }
-        new_man["version"] = 0
         new_man["buckets"] = {
             b: (0 if owner is not None else None)
             for b, owner in man["buckets"].items()
@@ -573,18 +573,20 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
                 }
                 for iname, spec in _indexes(man).items()
             }
-    dst_v0 = _version_dir(dst_table, 0)
-    with _pointer_lock(dst_table):
-        if current_version(dst_table) is not None or os.path.exists(dst_v0):
-            shutil.rmtree(staged, ignore_errors=True)
-            raise CommitConflictError(
-                f"clone target {dst_table} was created concurrently"
+    try:
+        if os.path.exists(_version_dir(dst_table, 0)):  # a crashed writer's v=0
+            raise CommitConflictError(dst_table)
+        if man is None:
+            _publish_staged(dst_table, staged, None)
+        else:
+            _publish_bucketed(
+                dst_table, staged, None, (), lambda m, final, dest: m.update(new_man)
             )
-        os.rename(staged, dst_v0)
-        if new_man is not None:
-            with open(_manifest_path(dst_table, 0), "w") as f:
-                json.dump(new_man, f)
-        _write_pointer(dst_table, 0)
+    except CommitConflictError:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise CommitConflictError(
+            f"clone target {dst_table} was created concurrently"
+        ) from None
     return 0
 
 
@@ -901,8 +903,8 @@ def _meta_diff(read_man: dict, cur_man: dict, strict: bool) -> list[str]:
     the new constraint. With ``strict=False`` (data commits) a pure
     APPEND-only schema widening is tolerated — the rebase's
     ``_schema_union_json`` keeps both sides' columns losslessly;
-    metadata-only commits pass ``strict=True`` because their build
-    closures precompute the mutated schema/colmap from ``read_man`` and
+    metadata-only commits pass ``strict=True`` because their manifest
+    edits precompute the mutated schema/colmap from ``read_man`` and
     must not publish it on top of ANY diverged metadata."""
     diff = [
         k
@@ -927,25 +929,34 @@ def _meta_diff(read_man: dict, cur_man: dict, strict: bool) -> list[str]:
     return diff
 
 
-def _publish_bucketed(table, staged, read_man, affected, build_manifest,
-                      strict_meta: bool = False):
-    """Publish a staged bucketed commit inside the pointer critical
-    section, with Delta-style conflict resolution: fast path when the
-    pointer still equals the planned-against version (``read_man``,
-    None = creating); REBASE onto the winner's manifest when concurrent
-    commits touched DISJOINT bucket sets (ownership and DV lists both
-    compared) AND the winner left the table METADATA this commit planned
-    under unchanged (schema / key_cols / constraints / generated /
-    colmap / retired_cols — see :func:`_meta_diff`; a metadata-only
-    winner changes no buckets, so without this check a data commit
-    would silently rebase over a drop/rename/add_constraint it never
-    planned for); :class:`CommitConflictError` otherwise.
-    ``build_manifest(final, base_man, dest)`` returns the manifest to
-    write, built on ``base_man`` — ``read_man`` on the fast path, the
-    winner's manifest on rebase. ``strict_meta=True`` (metadata-only
-    commits, whose builds precompute their mutation from ``read_man``)
-    additionally conflicts on append-only schema widening. Returns
-    (final_version, manifest)."""
+def _publish_bucketed(table, staged, read_man, affected, edit,
+                      strict_meta: bool = False) -> int:
+    """The one writer of a bucketed table's manifests: publish a staged
+    commit inside the pointer critical section, with Delta-style
+    conflict resolution: fast path when the pointer still equals the
+    planned-against version (``read_man``, None = creating); REBASE onto
+    the winner's manifest when concurrent commits touched DISJOINT
+    bucket sets (ownership and DV lists both compared) AND the winner
+    left the table METADATA this commit planned under unchanged (schema
+    / key_cols / constraints / generated / colmap / retired_cols — see
+    :func:`_meta_diff`; a metadata-only winner changes no buckets, so
+    without this check a data commit would silently rebase over a
+    drop/rename/add_constraint it never planned for);
+    :class:`CommitConflictError` otherwise.
+
+    ``edit(manifest, final, dest)`` changes, in place, only the keys its
+    verb means on a copy of the manifest the commit lands on —
+    ``read_man`` on the fast path, the winner's manifest on a rebase,
+    empty on create — whose ``version`` is already ``final``; ``dest`` is
+    the published version directory. Every key the edit leaves alone
+    carries over, so no verb lists the table metadata. ``staged=None``
+    (metadata-only commits) stages an empty version directory here.
+    ``strict_meta=True`` (metadata-only commits, whose edits precompute
+    their mutation from ``read_man``) additionally conflicts on
+    append-only schema widening. Returns the new version."""
+    if staged is None:
+        staged = _staged_path(table)
+        os.makedirs(staged)
     expected = None if read_man is None else read_man["version"]
     with _pointer_lock(table):
         cur = current_version(table)
@@ -979,11 +990,12 @@ def _publish_bucketed(table, staged, read_man, affected, build_manifest,
         final = 0 if cur is None else cur + 1
         dest = _version_dir(table, final)
         os.rename(staged, dest)
-        manifest = build_manifest(final, base_man, dest)
+        manifest = {**copy.deepcopy(base_man or {}), "version": final}
+        edit(manifest, final, dest)
         with open(_manifest_path(table, final), "w") as f:
             json.dump(manifest, f)
         _write_pointer(table, final)
-    return final, manifest
+    return final
 
 
 def _commit_bucketed(
@@ -991,15 +1003,15 @@ def _commit_bucketed(
 ) -> int:
     """Stage ``df`` (logical columns plus ``__bucket``) one directory per
     bucket, then conditionally publish (see ``_publish_bucketed``).
-    ``base`` carries key_cols / n_buckets / schema / meta plus
-    ``__affected``; affected buckets that produced no files become
-    ``None`` tombstones. DV lists for ``dv_clear`` buckets are dropped
-    (the rewrite folded them in); all other bucket ownership and DV state
-    is inherited from the manifest the commit lands on — which under a
-    disjoint-bucket rebase is the concurrent winner's, so neither
-    commit's buckets are lost. Crash before the critical section leaves
-    an invisible ``_staged_*`` orphan, same contract as
-    ``commit_version``.
+    ``base`` carries the manifest keys the commit sets plus
+    ``__affected`` (see :func:`_commit_staged_bucketed`); affected
+    buckets that produced no files become ``None`` tombstones. DV lists
+    for ``dv_clear`` buckets are dropped (the rewrite folded them in);
+    all other bucket ownership and DV state is inherited from the
+    manifest the commit lands on — which under a disjoint-bucket rebase
+    is the concurrent winner's, so neither commit's buckets are lost.
+    Crash before the critical section leaves an invisible ``_staged_*``
+    orphan, same contract as ``commit_version``.
 
     On a table that carries co-committed indexes the staging is ONE
     grouped pass (``indexed._write_shards``): each task takes one
@@ -1037,58 +1049,45 @@ def _commit_staged_bucketed(
 ) -> int:
     """The Spark-FREE tail of :func:`_commit_bucketed`: publish an
     already-staged ``__bucket=<b>`` directory layout (physical column
-    names) under the same manifest-build + OCC rebase semantics. Split
+    names) under the same manifest edit + OCC rebase semantics. Split
     out in round 12 so the SQL front door's ``DataSourceWriter`` — whose
     ``commit()`` runs in a Python worker with no SparkSession — commits
     through the IDENTICAL path as every Spark-side verb, instead of a
-    re-implementation that could drift. ``finalize_manifest(manifest,
-    final, base_man, dest)`` amends the manifest in the SAME publish —
-    the co-committed indexes' shard maps ride it
+    re-implementation that could drift.
+
+    The commit's edit of the manifest it lands on sets ``base``'s keys
+    (create: the whole table definition; merge, OPTIMIZE and ``INSERT
+    INTO``: ``schema`` and ``meta``), advances ``buckets`` over the
+    affected set and drops the ``dv_clear`` buckets' DV lists; every
+    other key — constraints, column mapping, index specs — carries over
+    (``_meta_diff`` keeps it identical between ``read_man`` and any
+    rebase winner). ``finalize_manifest(manifest, final, dest)`` then
+    amends the same edit — the co-committed indexes' shard maps ride it
     (``indexed._shard_finalizer``)."""
     affected = base.pop("__affected")
     cleared = {str(b) for b in dv_clear}
 
-    def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        written = _written_buckets(dest)
-        buckets = (
-            dict(base_man["buckets"])
-            if base_man is not None
-            else {str(b): None for b in range(base["n_buckets"])}
-        )
-        for b in affected:
-            buckets[str(b)] = final if b in written else None
-        manifest = {**base, "version": final, "buckets": buckets}
-        if base_man is not None:
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        landed_schema = manifest.get("schema")
+        manifest.update(base)
+        if landed_schema is not None:
             # rebase-lossless schema evolution: two concurrent commits that
             # each widened the schema (disjoint buckets) keep BOTH column
             # sets — ours in declared order, the winner's additions after
-            manifest["schema"] = _schema_union_json(
-                base["schema"], base_man["schema"]
-            )
-        dv = {
-            b: list(v)
-            for b, v in (base_man.get("dv", {}) if base_man else {}).items()
-            if b not in cleared
-        }
+            manifest["schema"] = _schema_union_json(base["schema"], landed_schema)
+        buckets = manifest.setdefault(
+            "buckets", {str(b): None for b in range(manifest["n_buckets"])}
+        )
+        written = _written_buckets(dest)
+        for b in affected:
+            buckets[str(b)] = final if b in written else None
+        dv = {b: v for b, v in manifest.pop("dv", {}).items() if b not in cleared}
         if dv:
             manifest["dv"] = dv
-        # constraints / generated columns / column mapping / retired
-        # physical names are table metadata: inherited from the manifest
-        # the commit lands on (identical between read_man and any rebase
-        # winner — _meta_diff conflicts the rebase otherwise); the index
-        # spec inherits too and is then ADVANCED by finalize_manifest
-        # (merges on indexed tables always pass one — inheritance alone
-        # would leave stale shards)
-        for meta_key in ("constraints", "generated", "colmap", "retired_cols", "index", "indexes"):
-            val = (base_man or {}).get(meta_key) or manifest.get(meta_key)
-            if val:
-                manifest[meta_key] = dict(val) if isinstance(val, dict) else list(val)
         if finalize_manifest is not None:
-            manifest = finalize_manifest(manifest, final, base_man, dest)
-        return manifest
+            finalize_manifest(manifest, final, dest)
 
-    final, _ = _publish_bucketed(table, staged, read_man, affected, build)
-    return final
+    return _publish_bucketed(table, staged, read_man, affected, edit)
 
 
 def _check_constraints(df: DataFrame, constraints: "dict | None", where: str) -> None:
@@ -1329,22 +1328,9 @@ def merge_into_bucketed(
     # could silently change that expression's result type (a generated
     # int computed from a now-long input writes longs under an int
     # manifest field) — refuse, mirroring drop/rename's guard
-    # identifier-token match, not substring: widening `id` must not be
-    # refused because a constraint reads `doc_id` (round 12)
-    for meta_key in ("constraints", "generated"):
-        for gname, expr in man.get(meta_key, {}).items():
-            hit = [
-                c
-                for c in widened
-                if re.search(rf"(?<![A-Za-z0-9_]){re.escape(c)}(?![A-Za-z0-9_])", expr)
-                or gname == c
-            ]
-            if hit:
-                raise ValueError(
-                    f"merge_into_bucketed: cannot widen column(s) {hit}: "
-                    f"referenced by {meta_key[:-1]} {gname!r} ({expr}) — "
-                    "drop that first"
-                )
+    _refuse_referenced(
+        man, widened, lambda hit: f"merge_into_bucketed: cannot widen column(s) {hit}"
+    )
     final_types = {f.name: f.dataType for f in tgt_fields}
     final_types.update(widened)
     for f in added:
@@ -1427,11 +1413,9 @@ def merge_into_bucketed(
         with described("check constraints"):
             _check_constraints(upserts, man.get("constraints"), "merge_into_bucketed")
         base = {
-            "key_cols": keys,
-            "n_buckets": n_buckets,
             "schema": json.dumps(new_schema),
-            "__affected": affected,
             "meta": dict(meta) if meta else {},
+            "__affected": affected,
         }
         # a rewritten bucket has its DVs folded into the data — clear them;
         # the commit is conditional on `man` and rebases over concurrent
@@ -1482,32 +1466,15 @@ def delete_bucketed(
     # same directory, so every affected bucket gains a DV file
     affected = sorted(_written_buckets(_dv_dir(staged)))
 
-    def build(final: int, base_man: dict, dest: str) -> dict:
-        dv = {b: list(v) for b, v in base_man.get("dv", {}).items()}
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        dv = manifest.setdefault("dv", {})
         for b in affected:
             dv.setdefault(str(b), []).append(final)
-        out = {
-            "key_cols": kc,
-            "n_buckets": n_buckets,
-            "schema": base_man["schema"],
-            "buckets": base_man["buckets"],
-            "version": final,
-            "dv": dv,
-            "meta": dict(meta) if meta else {},
-        }
-        # table metadata rides every commit — without this a DV delete
-        # would silently SHED the table's constraints/generated columns
-        # (the index spec rides too: DVs apply to it as serve tombstones)
-        for meta_key in ("constraints", "generated", "colmap", "retired_cols", "index", "indexes"):
-            val = base_man.get(meta_key)
-            if val:
-                out[meta_key] = dict(val) if isinstance(val, dict) else list(val)
-        return out
+        manifest["meta"] = dict(meta) if meta else {}
 
     # conditional on `man`; a concurrent commit touching only OTHER
     # buckets rebases (the DV lists append onto the winner's manifest)
-    final, _ = _publish_bucketed(table, staged, man, affected, build)
-    return final
+    return _publish_bucketed(table, staged, man, affected, edit)
 
 
 def expire_bucketed(
@@ -1742,6 +1709,36 @@ def diff_bucketed(
     )
 
 
+def _refuse_referenced(man: dict, cols, refused) -> None:
+    """Raise when a CHECK constraint or generated column reads any of
+    ``cols`` (or is one); ``refused(hit)`` names the refused change.
+    Identifier-token match, not substring: changing ``a`` must not be
+    refused because an expression reads ``aa`` or ``doc_a``."""
+    for meta_key in ("constraints", "generated"):
+        for name, expr in man.get(meta_key, {}).items():
+            hit = [
+                c
+                for c in cols
+                if re.search(rf"(?<![A-Za-z0-9_]){re.escape(c)}(?![A-Za-z0-9_])", expr)
+                or name == c
+            ]
+            if hit:
+                raise ValueError(
+                    f"{refused(hit)}: referenced by {meta_key[:-1]} {name!r} "
+                    f"({expr}) — drop that first"
+                )
+
+
+def _refuse_index_column(man: dict, col: str, verb: str) -> None:
+    """Raise when ``col`` is a co-committed ANN index's embedding column."""
+    if col in {s.get("params", {}).get("emb_col") for s in _indexes(man).values()}:
+        raise ValueError(
+            f"cannot {verb} {col!r}: it is a co-committed ANN index's "
+            "embedding column (sources/indexed.py) — detach or rebuild "
+            "that index first"
+        )
+
+
 def restore_bucketed(table: str, to_version: int) -> int:
     """Delta ``RESTORE`` on a bucketed table, and the reason the manifest
     layer exists: the new commit's manifest simply POINTS at the target
@@ -1757,24 +1754,17 @@ def restore_bucketed(table: str, to_version: int) -> int:
     ``_publish_bucketed`` OCC path."""
     man_t = _read_manifest(table, to_version)  # raises if expired/never committed
     read_man = _read_manifest(table, None)
-    staged = _staged_path(table)
-    os.makedirs(staged)
 
-    def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        manifest = {
-            k: v for k, v in man_t.items() if k not in ("version", "buckets", "dv")
-        }
-        manifest["version"] = final
-        manifest["buckets"] = dict(man_t["buckets"])
-        if man_t.get("dv"):
-            manifest["dv"] = {b: list(v) for b, v in man_t["dv"].items()}
-        return manifest
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        manifest.clear()
+        manifest.update(man_t, version=final)
+        if not man_t.get("dv"):
+            manifest.pop("dv", None)
 
-    final, _ = _publish_bucketed(
-        table, staged, read_man, set(range(int(man_t["n_buckets"]))), build,
+    return _publish_bucketed(
+        table, None, read_man, set(range(int(man_t["n_buckets"]))), edit,
         strict_meta=True,
     )
-    return final
 
 
 def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int:
@@ -1793,20 +1783,14 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
     _check_constraints(
         read_bucketed(spark, table), {name: expr}, f"add_constraint({name!r})"
     )
-    staged = _staged_path(table)
-    os.makedirs(staged)
 
-    def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        manifest = {k: v for k, v in base_man.items() if k != "version"}
-        manifest["version"] = final
-        manifest["constraints"] = {**base_man.get("constraints", {}), name: expr}
-        return manifest
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        manifest.setdefault("constraints", {})[name] = expr
 
-    final, _ = _publish_bucketed(
-        table, staged, read_man, set(range(int(read_man["n_buckets"]))), build,
+    return _publish_bucketed(
+        table, None, read_man, set(range(int(read_man["n_buckets"]))), edit,
         strict_meta=True,
     )
-    return final
 
 
 def drop_constraint(table: str, name: str) -> int:
@@ -1817,21 +1801,14 @@ def drop_constraint(table: str, name: str) -> int:
     read_man = _read_manifest(table, None)
     if name not in read_man.get("constraints", {}):
         raise ValueError(f"constraint {name!r} does not exist on {table}")
-    staged = _staged_path(table)
-    os.makedirs(staged)
 
-    def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        manifest = {k: v for k, v in base_man.items() if k != "version"}
-        manifest["version"] = final
-        cons = {k: v for k, v in base_man.get("constraints", {}).items() if k != name}
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        cons = manifest.pop("constraints", {})
+        cons.pop(name, None)
         if cons:
             manifest["constraints"] = cons
-        else:
-            manifest.pop("constraints", None)
-        return manifest
 
-    final, _ = _publish_bucketed(table, staged, read_man, set(), build)
-    return final
+    return _publish_bucketed(table, None, read_man, set(), edit)
 
 
 def drop_column(table: str, col: str) -> int:
@@ -1846,29 +1823,14 @@ def drop_column(table: str, col: str) -> int:
     columns and columns referenced by a CHECK constraint or generated-
     column expression cannot be dropped (drop the constraint first)."""
     read_man = _read_manifest(table, None)
-    idx_emb = {
-        spec.get("params", {}).get("emb_col")
-        for spec in _indexes(read_man).values()
-    }
-    if col in idx_emb:
-        raise ValueError(
-            f"cannot drop {col!r}: it is a co-committed ANN index's "
-            "embedding column (sources/indexed.py) — detach or rebuild "
-            "that index first"
-        )
+    _refuse_index_column(read_man, col, "drop")
     schema = json.loads(read_man["schema"])
     names = [f["name"] for f in schema["fields"]]
     if col not in names:
         raise ValueError(f"column {col!r} does not exist on {table}")
     if col in read_man["key_cols"]:
         raise ValueError(f"cannot drop key column {col!r}")
-    for meta_key in ("constraints", "generated"):
-        for name, expr in read_man.get(meta_key, {}).items():
-            if col in expr or name == col:
-                raise ValueError(
-                    f"cannot drop {col!r}: referenced by {meta_key[:-1]} "
-                    f"{name!r} ({expr}) — drop that first"
-                )
+    _refuse_referenced(read_man, [col], lambda _: f"cannot drop {col!r}")
     schema["fields"] = [f for f in schema["fields"] if f["name"] != col]
     # the dropped column's PHYSICAL name is retired forever: untouched
     # buckets' files still hold its bytes, so re-introducing the name via
@@ -1876,30 +1838,23 @@ def drop_column(table: str, col: str) -> int:
     # column on manifest-schema reads (Delta avoids this with col-uuid
     # physical ids; here the tombstone list is the guard)
     phys_dropped = _colmap(read_man).get(col, col)
-    staged = _staged_path(table)
-    os.makedirs(staged)
 
-    def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        manifest = {k: v for k, v in base_man.items() if k != "version"}
-        manifest["version"] = final
+    def edit(manifest: dict, final: int, dest: str) -> None:
         manifest["schema"] = json.dumps(schema)
-        cm = {k: v for k, v in _colmap(base_man).items() if k != col}
+        cm = manifest.pop("colmap", None) or {}
+        cm.pop(col, None)
         if cm:
             manifest["colmap"] = cm
-        else:
-            manifest.pop("colmap", None)
         manifest["retired_cols"] = sorted(
-            set(base_man.get("retired_cols", [])) | {phys_dropped}
+            set(manifest.get("retired_cols", [])) | {phys_dropped}
         )
-        return manifest
 
     # dropping conflicts with ANY concurrent data commit: a batch written
     # under the wide schema must not rebase under the narrow one unchecked
-    final, _ = _publish_bucketed(
-        table, staged, read_man, set(range(int(read_man["n_buckets"]))), build,
+    return _publish_bucketed(
+        table, None, read_man, set(range(int(read_man["n_buckets"]))), edit,
         strict_meta=True,
     )
-    return final
 
 
 def rename_column(table: str, old: str, new: str) -> int:
@@ -1918,16 +1873,7 @@ def rename_column(table: str, old: str, new: str) -> int:
     generated expression refuse to rename (drop that first — expressions
     are stored as text). Conflicts with any concurrent data commit."""
     read_man = _read_manifest(table, None)
-    idx_emb = {
-        spec.get("params", {}).get("emb_col")
-        for spec in _indexes(read_man).values()
-    }
-    if old in idx_emb:
-        raise ValueError(
-            f"cannot rename {old!r}: it is a co-committed ANN index's "
-            "embedding column (sources/indexed.py) — detach or rebuild "
-            "that index first"
-        )
+    _refuse_index_column(read_man, old, "rename")
     schema = json.loads(read_man["schema"])
     names = [f["name"] for f in schema["fields"]]
     if old not in names:
@@ -1939,34 +1885,20 @@ def rename_column(table: str, old: str, new: str) -> int:
             f"cannot rename {old!r} -> {new!r}: the name collides with a "
             "live logical, frozen physical, or retired (dropped) column name"
         )
-    for meta_key in ("constraints", "generated"):
-        for name, expr in read_man.get(meta_key, {}).items():
-            if old in expr or name == old:
-                raise ValueError(
-                    f"cannot rename {old!r}: referenced by {meta_key[:-1]} "
-                    f"{name!r} ({expr}) — drop that first"
-                )
+    _refuse_referenced(read_man, [old], lambda _: f"cannot rename {old!r}")
     for f in schema["fields"]:
         if f["name"] == old:
             f["name"] = new
     cm[new] = cm.pop(old, old)
     key_cols = [new if k == old else k for k in read_man["key_cols"]]
-    staged = _staged_path(table)
-    os.makedirs(staged)
 
-    def build(final: int, base_man: "dict | None", dest: str) -> dict:
-        manifest = {k: v for k, v in base_man.items() if k != "version"}
-        manifest["version"] = final
-        manifest["schema"] = json.dumps(schema)
-        manifest["colmap"] = cm
-        manifest["key_cols"] = key_cols
-        return manifest
+    def edit(manifest: dict, final: int, dest: str) -> None:
+        manifest.update(schema=json.dumps(schema), colmap=cm, key_cols=key_cols)
 
-    final, _ = _publish_bucketed(
-        table, staged, read_man, set(range(int(read_man["n_buckets"]))), build,
+    return _publish_bucketed(
+        table, None, read_man, set(range(int(read_man["n_buckets"]))), edit,
         strict_meta=True,
     )
-    return final
 
 
 def maintain_group_agg(
@@ -2088,11 +2020,9 @@ def optimize_bucketed(
                     max(len(affected), 1), F.col("__bucket")
                 ).sortWithinPartitions(F.col("__bucket"), zkey)
     base = {
-        "key_cols": keys,
-        "n_buckets": n_buckets,
         "schema": man["schema"],
-        "__affected": affected + dv_only,
         "meta": dict(meta) if meta else {},
+        "__affected": affected + dv_only,
     }
     if rows is None:
         rows = spark.createDataFrame([], _manifest_schema(man)).withColumn(

@@ -534,7 +534,7 @@ def _project_logical(tbl, colmap: dict, fields):
 # r11 #3). The Python DataSource write protocol runs ``write()`` on
 # executors and ``commit()`` in a driver-side Python worker that has NO
 # SparkSession — so the merge is pure pyarrow, and it publishes through
-# ``versioned._commit_staged_bucketed``: the EXACT manifest-build + OCC
+# ``versioned._commit_staged_bucketed``: the EXACT manifest edit + OCC
 # rebase + pointer-swap path every Spark-side verb uses (factored out for
 # this writer), never a reimplementation that could drift.
 #
@@ -721,16 +721,10 @@ class BucketedMergeWriter(DataSourceArrowWriter):
                 )
             finalize = _shard_finalizer(idxs, affected)
 
-        base = {
-            "key_cols": man["key_cols"],
-            "n_buckets": self.n_buckets,
-            "schema": man["schema"],
-            "__affected": affected,
-            "meta": {},
-        }
         VER._commit_staged_bucketed(
-            self.table, self.staged, base, man, dv_clear=affected,
-            finalize_manifest=finalize,
+            self.table, self.staged,
+            {"schema": man["schema"], "meta": {}, "__affected": affected},
+            man, dv_clear=affected, finalize_manifest=finalize,
         )
 
     def abort(self, messages):

@@ -2129,6 +2129,25 @@ def test_drop_column_blocked_by_constraint_reference(spark, tmp_path):
     assert VER.read_bucketed(spark, tb).columns == ["id"]
 
 
+def test_drop_and_rename_guard_matches_identifier_tokens(spark, tmp_path):
+    """A constraint that reads ``aa`` does not pin column ``a``: the
+    drop/rename guard matches whole identifiers, not substrings."""
+    from semantic_index_spark.sources import versioned as VER
+
+    tb = str(tmp_path / "tok")
+    VER.create_bucketed(
+        spark.createDataFrame([(1, 2, 3)], "id long, a long, aa long"),
+        tb, ["id"], n_buckets=2, constraints={"aa_pos": "aa > 0"},
+    )
+    VER.rename_column(tb, "a", "b")
+    VER.drop_column(tb, "b")
+    assert VER.read_bucketed(spark, tb).columns == ["id", "aa"]
+    for refuse in (lambda: VER.drop_column(tb, "aa"),
+                   lambda: VER.rename_column(tb, "aa", "c")):
+        with pytest.raises(ValueError, match="referenced by constraint 'aa_pos'"):
+            refuse()
+
+
 def test_table_metadata_survives_dv_delete_and_optimize(spark, tmp_path):
     """Regression: a DV-only delete (which builds its manifest explicitly)
     must inherit constraints/generated metadata, not shed it."""
@@ -4408,3 +4427,155 @@ def test_r13_vacuum_report_dry_run(spark, tmp_path):
     after = VER.vacuum_report(t, keep_manifests=2, orphan_ttl_seconds=3600)
     assert after["reclaimable"] == [] and after["staged_orphans"] == []
     assert after["kept"] == [1, 2]
+
+
+def _manifest_sha(man: dict) -> str:
+    import hashlib
+
+    return hashlib.sha256(json.dumps(man, sort_keys=True).encode()).hexdigest()
+
+
+# sha256 of json.dumps(manifest, sort_keys=True) for every manifest the
+# scripted lifecycle below writes, in commit order
+LIFECYCLE_MANIFEST_SHA = [
+    "aa054ed28e3893be17a319ec4bc3a3167761ca9875c6e2ec707f45f3fca03c5c",
+    "97ddbb0432a6c5c979c9c461c9cb157ee2edb085f69177c74f21e646254adff6",
+    "b6fad19d049c6831d923aec0b3b3d711d6e547a2c2eaacf1b84ccbd39956fccd",
+    "3e1f1555f88349643619d5ea2bf7320d1fedd094b2afddf249d0bd75407e5240",
+    "00ef1be3199549185b95fb1df62daeb4dc1cd4be5a1f30c17878d37f3d37f55e",
+    "251f5aed3d65f25a56679ac2c9e4a6107524275616cabe7b16c497dd8e6eed5d",
+    "765147a63e1e6d2378cada419682b757a36fa157c9ac5ee74a6de880aa5eedb4",
+    "90aa1abd2e54f791a560921010b484b8f3614b6f48357d8466ec607669f76ce7",
+    "f5b95b8e51a9b513e8ec82cfebe980671fd67e4113c1d84d0282c0bf5764eaa6",
+    "fa585e9b2aeebd994851ee5b864687c14aa8b31984b694ade18de3482b7b833c",
+    "45e134ad294d5f77b8b96e4cb4abda43afa897cfa1f68b79dc87791306a427d0",
+    "ee95612d3d72d56f0617d231659c49c331df1b74f0873a7ad89d02fbcfa47cf0",
+    "b66fab4e8389b51b911225f0234212be25712f4f46255210d0f7888cb98c31ef",
+    "721a620845644f21c90ef362af4fe8492d41d0e2fa7942a05a3dd6e71d3c1b9c",
+    "c3ae91bae1d9014f3f94aa95eaf893557d652daf1ef752c1b65f3a5d9f749604",
+    "08ad69c72f31fb0c8eb0da1b9abe2cda6a03df25606537cac678a280bc7107e3",
+    "5dfb58d931d0f4878b3c097febb7d30b5334e92f446654564fee4d2e03adad30",
+]
+
+
+def test_lifecycle_manifests_match_golden(spark, tmp_path):
+    """One scripted bucketed-table lifecycle — create with a constraint,
+    three co-committed indexes, merge, delete, OPTIMIZE, the metadata
+    verbs, SQL ``INSERT INTO``, restore, detach and clone — writes exactly
+    the manifests recorded in ``LIFECYCLE_MANIFEST_SHA``: every verb's
+    manifest, key for key."""
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+    from semantic_index_spark.sources import versioned_batch as VB
+
+    t = str(tmp_path / "life")
+    schema = "id long, embedding array<double>, val long, note string"
+    df = spark.createDataFrame(
+        [(i, _emb(i), i * 10, f"n{i}") for i in range(60)], schema
+    )
+    shas = []
+
+    def seen(table=t):
+        shas.append(_manifest_sha(VER._read_manifest(table)))
+
+    VER.create_bucketed(
+        df, t, ["id"], n_buckets=4, constraints={"val_pos": "val >= 0"}
+    )
+    seen()
+    IDX.attach_hnsw_index(spark, t, m=4, ef_construction=16)
+    seen()
+    IDX.attach_ivfsq_index(spark, t, n_cells=4)
+    seen()
+    IDX.attach_ivfpq_index(spark, t, m_sub=3, pq_k=8, n_cells=4)
+    seen()
+    src = spark.createDataFrame(
+        [(5, _emb(500), 1, "upd"), (70, _emb(70), 2, "new")], schema
+    )
+    v_merge = VER.merge_into_bucketed(spark, t, src, meta={"batch": 1})
+    seen()
+    VER.delete_bucketed(
+        spark, t, spark.createDataFrame([(7,), (21,)], "id long"),
+        meta={"op": "delete"},
+    )
+    seen()
+    VER.optimize_bucketed(spark, t, meta={"op": "optimize"})
+    seen()
+    VER.add_constraint(spark, t, "id_nonneg", "id >= 0")
+    seen()
+    VER.drop_constraint(t, "val_pos")
+    seen()
+    VER.drop_constraint(t, "id_nonneg")
+    seen()
+    VER.rename_column(t, "val", "v2")
+    seen()
+    VER.drop_column(t, "note")
+    seen()
+    VB.sql_view(spark, "lifecycle_t", t)
+    spark.sql(
+        "INSERT INTO lifecycle_t SELECT id, array(CAST(id AS DOUBLE), 1.0D, "
+        "2.0D) AS embedding, id AS v2 FROM range(58, 64)"
+    )
+    seen()
+    VER.restore_bucketed(t, v_merge)
+    seen()
+    IDX.detach_index(t, "ivfpq")
+    seen()
+    VER.delete_bucketed(spark, t, spark.createDataFrame([(30,)], "id long"))
+    seen()  # the clone renumbers a live deletion vector
+    t2 = str(tmp_path / "life_clone")
+    VER.clone_table(t, t2)
+    seen(t2)
+    assert shas == LIFECYCLE_MANIFEST_SHA
+
+
+def test_unknown_manifest_key_rides_every_commit(spark, tmp_path):
+    """A manifest key no verb knows about carries over through every later
+    commit: each verb edits only the keys it means, on a copy of the
+    manifest it lands on."""
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+
+    t = str(tmp_path / "unknown_key")
+    schema = "id long, embedding array<double>, val long, note string"
+    VER.create_bucketed(
+        spark.createDataFrame(
+            [(i, _emb(i), i, "x") for i in range(40)], schema
+        ),
+        t, ["id"], n_buckets=4,
+    )
+    path = VER._manifest_path(t, VER.current_version(t))
+    with open(path) as f:
+        man = json.load(f)
+    man["x_future"] = {"kept": [1, 2]}
+    with open(path, "w") as f:
+        json.dump(man, f)
+
+    def carried():
+        got = VER._read_manifest(t)
+        assert got.get("x_future") == {"kept": [1, 2]}, got.keys()
+
+    VER.merge_into_bucketed(
+        spark, t, spark.createDataFrame([(3, _emb(300), 3, "y")], schema)
+    )
+    carried()
+    VER.delete_bucketed(spark, t, spark.createDataFrame([(4,)], "id long"))
+    carried()
+    VER.optimize_bucketed(spark, t)
+    carried()
+    VER.add_constraint(spark, t, "val_pos", "val >= 0")
+    carried()
+    VER.drop_constraint(t, "val_pos")
+    carried()
+    VER.rename_column(t, "val", "v2")
+    carried()
+    VER.drop_column(t, "note")
+    carried()
+    IDX.attach_hnsw_index(spark, t, m=4, ef_construction=16)
+    carried()
+    VER.merge_into_bucketed(
+        spark, t,
+        spark.createDataFrame([(9, _emb(900), 9)], "id long, embedding array<double>, v2 long"),
+    )
+    carried()
+    IDX.detach_index(t)
+    carried()

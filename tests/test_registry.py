@@ -283,6 +283,61 @@ def test_table_layout_is_spelled_in_one_module():
     assert layout_names_outside_owner() == {}
 
 
+def _calls_by_function(node, fn: str = "<module>"):
+    """``(innermost enclosing function name, call)`` for every call."""
+    for child in ast.iter_child_nodes(node):
+        name = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+        if isinstance(child, ast.Call):
+            yield name, child
+        yield from _calls_by_function(child, name)
+
+
+def manifest_writers() -> list[str]:
+    """``module:function`` of every package function that opens a file
+    named by ``versioned._manifest_path(...)`` for writing (``skipping``
+    has a ``_manifest_path`` of its own, for zone maps)."""
+    owner = LAYOUT_OWNERS["_manifest_v"]
+    out = set()
+    for f in sorted((REPO / "semantic_index_spark").rglob("*.py")):
+        where = str(f.relative_to(REPO))
+        tree = ast.parse(f.read_text())
+        imports = [a for n in ast.walk(tree)
+                   if isinstance(n, (ast.Import, ast.ImportFrom)) for a in n.names]
+        bare = where == owner or any(
+            isinstance(n, ast.ImportFrom) and (n.module or "").endswith(".versioned")
+            and any(a.name == "_manifest_path" for a in n.names)
+            for n in ast.walk(tree)
+        )
+        aliases = {a.asname or a.name for a in imports if a.name.split(".")[-1] == "versioned"}
+
+        def names_manifest(call) -> bool:
+            fn = call.func
+            if isinstance(fn, ast.Name):
+                return bare and fn.id == "_manifest_path"
+            return (isinstance(fn, ast.Attribute) and fn.attr == "_manifest_path"
+                    and ast.unparse(fn.value) in aliases)
+
+        for fn, call in _calls_by_function(tree):
+            if not (isinstance(call.func, ast.Name) and call.func.id == "open"):
+                continue
+            mode = call.args[1] if len(call.args) > 1 else next(
+                (k.value for k in call.keywords if k.arg == "mode"), None)
+            writes = isinstance(mode, ast.Constant) and set(str(mode.value)) & set("wax+")
+            if writes and call.args and isinstance(call.args[0], ast.Call) \
+                    and names_manifest(call.args[0]):
+                out.add(f"{where}:{fn}")
+    return sorted(out)
+
+
+def test_bucketed_manifests_have_one_writer():
+    """Every bucketed commit is an edit of the manifest it lands on, and
+    one function publishes it: a second writer is a second manifest
+    builder that can drop keys the first one carries."""
+    assert manifest_writers() == [
+        "semantic_index_spark/sources/versioned.py:_publish_bucketed"
+    ]
+
+
 # Package definitions no caller reaches, each with the reason it stays.
 KEEP = {
     # reference-parity surface (SURVEY.md §1-2)
